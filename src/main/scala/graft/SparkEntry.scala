@@ -110,7 +110,7 @@ object SparkEntry {
     "q50_infer_cascade" -> Pipelines.inferCascade,
     "q51_csv_roundtrip" -> Pipelines.csvRoundtrip,
     "q52_tagged_inference" -> Pipelines.taggedInference,
-    "q53_dsv2_source_agg" -> Pipelines.dsv2SourceAgg,
+    "q53_dsv2_source_agg" -> Pipelines.verbIngestAgg,
     "q54_stream_ingest" -> Pipelines.streamIngestSummary,
     // stream-stream interval join as a real streaming query; single-file
     // source → one micro-batch → provably complete vs the batch oracle
@@ -1007,7 +1007,7 @@ object SparkEntry {
     // fixed by the construction; the quoted bit itself isn't SQL-visible).
     "q51_csv_roundtrip" -> Pipelines.csvRoundtripSql,
     "q52_tagged_inference" -> Pipelines.taggedInferenceSql,
-    "q53_dsv2_source_agg" -> Pipelines.dsv2SourceAggSql,
+    "q53_dsv2_source_agg" -> Pipelines.verbIngestAggSql,
     // q54: contract oracle (stream ≡ batch), both sides from orders —
     // the engine reports each side as measured; see streamIngestSummary.
     "q54_stream_ingest" -> Pipelines.streamIngestSummarySql,

@@ -51,12 +51,11 @@ object TypeInference {
   def formatter(goLayout: String): DateTimeFormatter =
     DateTimeFormatter.ofPattern(GoTimeFormat.toJavaPattern(goLayout))
 
-  /** Timestamp parse shared by the pure cascade and the DSv2 reader:
-    * zoned layouts parse as OffsetDateTime; zone-less layouts (which make
-    * OffsetDateTime.parse always throw) fall back to LocalDateTime in UTC
-    * — mirroring Catalyst try_to_timestamp under the UTC-pinned session
-    * zone. Returns epoch micros. */
-  def parseTimestampMicros(v: String, fmt: DateTimeFormatter): Option[Long] = {
+  /** Rule 5 of the pure cascade: zoned layouts parse as OffsetDateTime;
+    * zone-less layouts (which make OffsetDateTime.parse always throw) fall
+    * back to LocalDateTime in UTC — mirroring Catalyst try_to_timestamp
+    * under the UTC-pinned session zone. Returns epoch micros. */
+  private def parseTimestampMicros(v: String, fmt: DateTimeFormatter): Option[Long] = {
     def micros(inst: Instant): Long =
       inst.getEpochSecond * 1000000L + inst.getNano / 1000L
     (try Some(micros(OffsetDateTime.parse(v, fmt).toInstant))
@@ -102,18 +101,6 @@ object TypeInference {
     inferCell(cell, cfg.falseValue, cfg.trueValue, cfg.nullValue,
       formatter(cfg.timeFormat), cfg.withDoubles)
 
-  /** Schema of the tagged-union cell struct used by the exact-compat
-    * DataFrame representation: one struct per column with a type tag and
-    * per-type slots (exactly one non-null, or none for NULL). */
-  val cellStructType: StructType = StructType(Seq(
-    StructField("tag", StringType, nullable = false), // string|bool|ts|long|double|null
-    StructField("s", StringType, nullable = true),
-    StructField("b", BooleanType, nullable = true),
-    StructField("t", TimestampType, nullable = true),
-    StructField("l", LongType, nullable = true),
-    StructField("d", DoubleType, nullable = true)
-  ))
-
   /** External-row form of the tagged union (Instant for TimestampType). */
   def toRow(v: InferredValue)
       : (String, String, java.lang.Boolean, Instant, java.lang.Long, java.lang.Double) =
@@ -142,34 +129,12 @@ object TypeInference {
     def tryTs(v: Column, javaTsPattern: String): Column =
       try_to_timestamp(v, lit(javaTsPattern))
 
-    def tag(value: Column, quoted: Column, cfg: CopyConfig): Column = {
-      val pat = GoTimeFormat.toJavaPattern(cfg.timeFormat)
-      // a missing cell (ragged record: getItem past the end) is NULL input
-      // → tag 'null', so downstream rendering emits the NULL literal
-      // instead of a NULL string that would vanish in concat_ws
-      val base = when(value.isNull, "null")
-        .when(quoted, "string")
-        .when(value === cfg.falseValue, "bool")
-        .when(value === cfg.trueValue, "bool")
-        .when(value === cfg.nullValue, "null")
-        .when(tryTs(value, pat).isNotNull, "ts")
-        .when(longGuard(value) && value.cast(LongType).isNotNull, "long")
-      // rule 5.5 (engine ext): only non-integer shapes — an int64-OVERFLOW
-      // digit string must stay 'string' exactly like the pure cascade
-      // (longPattern matched → parse failed → string, never double)
-      val withExt =
-        if (cfg.withDoubles)
-          base.when(!longGuard(value) && doubleGuard(value) &&
-            value.cast(DoubleType).isNotNull, "double")
-        else base
-      withExt.otherwise("string")
-    }
-
     /** Full tagged-union struct for one (value, quoted) pair.
       *
-      * Shape matters for cost: the obvious encoding — compute [[tag]] and
-      * reference it from every slot (`when(t === "ts", ...)`) — inlines
-      * the whole cascade (timestamp try-parse included) once PER SLOT,
+      * Shape matters for cost: the obvious encoding — compute the tag as
+      * its own cascade and reference it from every slot
+      * (`when(t === "ts", ...)`) — inlines the whole cascade (timestamp
+      * try-parse included) once PER SLOT,
       * and codegen subexpression elimination does not rescue work hidden
       * inside conditional branches. Profiled at 6× the per-row cost on
       * the q50/q56 gate queries. Instead ONE when-cascade whose branches
@@ -194,8 +159,10 @@ object TypeInference {
         .when(value === cfg.trueValue, mk(lit("bool"), b = lit(true)))
         .when(value === cfg.nullValue, nullStruct)
         .when(tryTs(value, pat).isNotNull, mk(lit("ts"), t = tryTs(value, pat)))
-        .when(longGuard(value) && value.cast(LongType).isNotNull,
-          mk(lit("long"), l = value.cast(LongType)))
+        // try_cast: an int64-overflow digit string passes the guard but
+        // must fall through to rule 7; a plain cast throws on it under ANSI
+        .when(longGuard(value) && value.try_cast(LongType).isNotNull,
+          mk(lit("long"), l = value.try_cast(LongType)))
       val withExt =
         if (cfg.withDoubles)
           base.when(!longGuard(value) && doubleGuard(value) &&

@@ -27,6 +27,39 @@ object Pipelines {
     dir.getPath
   }
 
+  /** Runs independent driver-side jobs on a pool of `threads` and waits
+    * for all of them. On the first failure, in completion order, the
+    * siblings are stopped before the failure is rethrown: their Spark jobs
+    * are cancelled by a per-call job tag, their threads interrupted
+    * (`shutdownNow`) and awaited, so none is still writing under a base
+    * directory the caller already treats as failed. */
+  private[graft] def runConcurrently(s: SparkSession, threads: Int)(
+      jobs: Seq[() => Unit]): Unit = {
+    import java.util.concurrent.{Callable, ExecutionException, ExecutorCompletionService, Executors, TimeUnit}
+    val sc = s.sparkContext
+    val tag = s"graft-pool-${java.util.UUID.randomUUID()}"
+    val pool = Executors.newFixedThreadPool(threads)
+    val done = new ExecutorCompletionService[Unit](pool)
+    try {
+      jobs.foreach(job => done.submit(new Callable[Unit] {
+        def call(): Unit = {
+          sc.addJobTag(tag)
+          try job() finally sc.removeJobTag(tag)
+        }
+      }))
+      jobs.foreach(_ => done.take().get())
+    } catch {
+      case t: Throwable =>
+        sc.cancelJobsWithTag(tag)
+        pool.shutdownNow()
+        pool.awaitTermination(10, TimeUnit.MINUTES)
+        throw (t match {
+          case e: ExecutionException if e.getCause != null => e.getCause
+          case other => other
+        })
+    } finally pool.shutdown()
+  }
+
   /** State-partition width for the STATEFUL streaming faces, set via
     * `graft.stream.parts`. A streaming query pays a per-partition
     * state-store commit EVERY micro-batch, so the width must be sized
@@ -397,19 +430,17 @@ object Pipelines {
       "FROM src a FULL OUTER JOIN back b ON a.doc_id = b.doc_id\n" +
       "ORDER BY doc_id"
 
-  /** End-to-end through the DSv2 source: orders → typed CSV files →
-    * `format("graft-quotecsv")` with declared schema → range filter →
+  /** End-to-end through both verbs: orders → typed CSV files
+    * ([[CopyRead.run]]) → the write verb's schema'd ingest
+    * ([[CopyWrite.read]] with a declared schema, as q51) → range filter →
     * aggregate. Oracle: the same aggregate straight off the orders table —
-    * so the render → parse → infer → filter → agg chain must be
-    * value-exact.
+    * so the render → parse → decode → filter → agg chain must be
+    * value-exact. The gate id keeps its historical `dsv2` name.
     *
     * The data-derived bound comes in as a BROADCAST SCALAR (the q02
     * pattern) — no driver-side `.head` serializing scan → driver →
-    * re-plan. A literal bound (the reference's actual `--offset`
-    * contract, where the user supplies the constant) IS pushed into the
-    * DSv2 scan; that path is exercised by QuoteCsvSourceSpec's
-    * pushed-filter test. */
-  def dsv2SourceAgg(s: SparkSession, d: String): DataFrame = {
+    * re-plan. */
+  def verbIngestAgg(s: SparkSession, d: String): DataFrame = {
     val src = Tables.orders(s, d)
       .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
     // `div`: long division to match the oracle's `//` (plain `/` is double)
@@ -419,7 +450,8 @@ object Pipelines {
     val schema = StructType(Seq(
       StructField("o_orderkey", LongType), StructField("o_orderpriority", StringType),
       StructField("o_totalprice", DoubleType)))
-    s.read.format("graft-quotecsv").schema(schema).option("path", tmp).load()
+    val (typed, _) = CopyWrite.read(s, tmp, schema.fieldNames.toSeq, cfg, Some(schema))
+    typed
       .join(broadcast(bound))
       .where(col("o_orderkey") > col("bound"))
       .groupBy(col("o_orderpriority"))
@@ -427,7 +459,7 @@ object Pipelines {
       .orderBy(col("o_orderpriority"))
   }
 
-  val dsv2SourceAggSql: String =
+  val verbIngestAggSql: String =
     """SELECT o_orderpriority, count(*) AS n,
       |  round(sum(o_totalprice), 2) AS total
       |FROM orders
@@ -869,17 +901,10 @@ object Pipelines {
     // sf1 A/B vs the pre-r18 sequential-append + re-scan shape (one JVM,
     // alternating): new 11.95/12.34 s warm-min/med vs old 13.47/13.72
     // (−11%). The measurement-only legacy path is removed again.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    try {
-      tiers.zipWithIndex.map { case (t, i) =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = {
-            s.sparkContext.setJobDescription(s"q103: changelog tier $i")
-            t.coalesce(1).write.mode("overwrite").parquet(s"$base/stage_t$i")
-          }
-        })
-      }.foreach(_.get())
-    } finally pool.shutdown()
+    runConcurrently(s, 3)(tiers.zipWithIndex.map { case (t, i) => () =>
+      s.sparkContext.setJobDescription(s"q103: changelog tier $i")
+      t.coalesce(1).write.mode("overwrite").parquet(s"$base/stage_t$i")
+    })
     val logDir = new java.io.File(s"$base/log")
     logDir.mkdirs()
     tiers.indices.foreach { i =>
@@ -1380,15 +1405,7 @@ object Pipelines {
         .coalesce(1).write.mode("overwrite").parquet(s"$base/stage_w$i")
     }
     if (seqSetup) { chain(); (0 until 3).foreach(wave) }
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-      try {
-        val jobs = (() => chain()) +: (0 until 3).map(i => () => wave(i))
-        jobs.map(f => pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = f()
-        })).foreach(_.get())
-      } finally pool.shutdown()
-    }
+    else runConcurrently(s, 4)((() => chain()) +: (0 until 3).map(i => () => wave(i)))
     // wave move-in, mtimes strictly increasing (the q121 r9-advice fix:
     // the file source orders by modification time and sequential appends
     // can tie within stamp granularity)

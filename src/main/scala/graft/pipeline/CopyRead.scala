@@ -83,8 +83,10 @@ object CopyRead {
 
   /** Full verb: table → (offset-filtered, column-projected) CSV files.
     * `keyCol` plays token(): an exclusive lower bound pushed to the scan.
-    * Header emission is per-output-file (the reference emits one header
-    * per stream; a distributed sink has one stream per partition). */
+    * With `cfg.header`, every non-empty output part file starts with
+    * [[headerLine]] (the reference emits one header per stream; a
+    * distributed sink has one stream per partition), which is the
+    * per-file header [[CopyWrite.read]] drops. */
   def run(spark: SparkSession, source: DataFrame, cols: Seq[String],
       keyCol: String, cfg: CopyConfig, outPath: String): Unit = {
     cols.foreach(Identifiers.requireIdentifier(_, "column"))
@@ -100,6 +102,14 @@ object CopyRead {
         source.where(key > lit(cfg.offset))
       }
     val projected = filtered.select(cols.map(col): _*)
-    toCsvLines(projected, cfg).write.mode("overwrite").text(outPath)
+    val lines = toCsvLines(projected, cfg)
+    val withHeader =
+      if (!cfg.header) lines
+      else {
+        val header = headerLine(projected)
+        import spark.implicits._
+        lines.mapPartitions(it => if (it.hasNext) Iterator(header) ++ it else it)
+      }
+    withHeader.write.mode("overwrite").text(outPath)
   }
 }

@@ -123,10 +123,13 @@ object CopyWrite {
           when(!quoted && v === cfg.trueValue, lit(true))
             .when(!quoted && v === cfg.falseValue, lit(false))
         case TimestampType => when(!quoted, try_to_timestamp(v, lit(pat)))
+        // try_cast, not cast: a mismatched cell (int64 overflow, `abc` in
+        // a double column) decodes to NULL in every session mode instead
+        // of failing the job under ANSI
         case LongType =>
-          when(!quoted && v.rlike("^[+-]?[0-9]+$"), v.cast(LongType))
-        case DoubleType => when(!quoted, v.cast(DoubleType)) // engine ext (no float in ref)
-        case dt => v.cast(dt)
+          when(!quoted && v.rlike("^[+-]?[0-9]+$"), v.try_cast(LongType))
+        case DoubleType => when(!quoted, v.try_cast(DoubleType)) // engine ext (no float in ref)
+        case dt => v.try_cast(dt)
       }
       when(!quoted && v === cfg.nullValue, lit(null).cast(f.dataType))
         .otherwise(base).as(f.name)

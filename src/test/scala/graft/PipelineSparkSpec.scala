@@ -118,6 +118,49 @@ class PipelineSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     intercept[IllegalStateException](errs.check())
   }
 
+  test("pool failure: siblings are stopped before the failure surfaces") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    val running = new AtomicInteger(0)
+    val sleeperUp = new CountDownLatch(1)
+    @volatile var sparkOutcome = "not run"
+    def sibling(body: => Unit): () => Unit = () => {
+      running.incrementAndGet()
+      try body finally running.decrementAndGet()
+    }
+    val sleeper = sibling { sleeperUp.countDown(); Thread.sleep(120000L) }
+    // a Spark job whose one task runs until it is killed (or 120 s pass)
+    val sparkJob = sibling {
+      try {
+        spark.sparkContext.parallelize(Seq(1), 1).foreach { _ =>
+          PoolProbe.taskLive.incrementAndGet()
+          try {
+            PoolProbe.taskStarted.countDown()
+            val ctx = org.apache.spark.TaskContext.get()
+            val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(120)
+            while (!ctx.isInterrupted() && System.nanoTime() < deadline) Thread.sleep(20)
+          } finally PoolProbe.taskLive.decrementAndGet()
+        }
+        sparkOutcome = "completed"
+      } catch { case t: Throwable => sparkOutcome = t.getClass.getSimpleName; throw t }
+    }
+    val failing = () => {
+      sleeperUp.await(60, TimeUnit.SECONDS)
+      PoolProbe.taskStarted.await(60, TimeUnit.SECONDS)
+      throw new IllegalStateException("injected")
+    }
+    val e = intercept[IllegalStateException] {
+      Pipelines.runConcurrently(spark, 3)(Seq(sleeper, sparkJob, failing))
+    }
+    assert(e.getMessage == "injected")
+    assert(running.get == 0, "a sibling job was still running when the failure surfaced")
+    assert(sparkOutcome != "completed" && sparkOutcome != "not run", sparkOutcome)
+    // the cancelled Spark job's task is killed, not left to its 120 s bound
+    val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(30)
+    while (PoolProbe.taskLive.get > 0 && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(PoolProbe.taskLive.get == 0)
+  }
+
   test("CLI typed jdbc round-trip: CSV -> Derby typed DDL -> CSV preserves types") {
     val base = s"/root/repo/target/tmp/cli_typed_${java.util.UUID.randomUUID().toString.take(8)}"
     val csvIn = s"$base/in"
@@ -570,4 +613,11 @@ class PipelineSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows("c3").getAs[String]("type_b") == "ts")
     assert(!rows("c3").getAs[Boolean]("changed"))
   }
+}
+
+/** JVM-wide handles for the pool-failure spec's Spark task (a local
+  * master runs tasks in the driver JVM). */
+private object PoolProbe {
+  val taskStarted = new java.util.concurrent.CountDownLatch(1)
+  val taskLive = new java.util.concurrent.atomic.AtomicInteger(0)
 }

@@ -277,4 +277,5 @@ def main():
     print(f"== {ok} ok, {fail} fail ==")
     sys.exit(1 if fail else 0)
 
-main()
+if __name__ == "__main__":
+    main()

@@ -7,10 +7,9 @@
 #      rows ARE the eviction-exposed floor that hit 23.96 s in r14.
 #   2. Media faces (item 3): q64/q65/q66/q67 isolated with the decoded-
 #      stats artifact — target <= 1 s warm.
-#   3. q184 DEFAULT (self-sized sqrt-n stride) decade rows (item 4):
-#      run 1 at each SF pays the one-time corrupted-fixture build.
-#   4. q170 old-vs-new in-row-splice A/B at sf10/sf30, quiet (item 5).
-#   5. Streaming floor ledger at sf0.1 (item 7).
+#   3. Streaming floor ledger at sf0.1 (item 7).
+# The q184 default-stride decade rows and the q170 splice A/B it also ran
+# are settled (probe_r15.txt, BASELINE.md); their one-off mains are gone.
 cd /root/repo
 exec > >(tee probe_r15.txt) 2>&1
 echo "== probe_r15 $(date -u +%H:%M:%SZ) load=$(cut -d' ' -f1 /proc/loadavg) =="
@@ -26,19 +25,7 @@ scripts/run-tool.sh graft.tools.Profile /root/testdata/sf0.1 3 \
   q60_media_meta q61_media_decode_summary q64_image_decode \
   q65_audio_decode q66_image_resize q67_frame_sample 2>/dev/null
 
-echo "--- 3. q184 default sqrt-n stride: decade rows ---"
-for sf in /root/testdata/sf0.1 target/sf1 target/sf10; do
-  echo "-- $sf --"
-  scripts/run-tool.sh graft.tools.DigestDefaultProbe $sf 3 2>/dev/null
-done
-
-echo "--- 4. q170 old-vs-new splice A/B (interleaved, min-of-3) ---"
-for sf in target/sf10 target/sf30; do
-  echo "-- $sf --"
-  scripts/run-tool.sh graft.tools.BlockDedupAB $sf 3 2>/dev/null
-done
-
-echo "--- 5. streaming floor ledger (sf0.1) ---"
+echo "--- 3. streaming floor ledger (sf0.1) ---"
 scripts/run-tool.sh graft.tools.StreamFloorLedger /root/testdata/sf0.1 2 2>/dev/null
 
 echo "== done $(date -u +%H:%M:%SZ) load=$(cut -d' ' -f1 /proc/loadavg) =="

@@ -1,13 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): times every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints one JSON line.
   *
-  * Setup per the harness spec: local[32], shuffle.partitions=32 (not the
-  * 200 default — at local scale 200 tiny partitions is pure scheduling
-  * overhead), AQE on for runtime coalescing/skew handling. One untimed
+  * Session: the `bench` profile of [[Session]] — local[width] with width
+  * shuffle partitions (not the 200 default — at local scale 200 tiny
+  * partitions is pure scheduling overhead), AQE on for runtime
+  * coalescing/skew handling, and the engine confs listed there. One untimed
   * warm-up of the flagship query pays JIT/codegen + parquet footer costs
   * once, so timings measure the operators, not JVM warm-up.
   *
@@ -46,71 +45,13 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
     // q51's md5 source digest exists solely for the DuckDB oracle replay
     // (Verify's dump path); the r8 interleaved A/B (probe_ab_r8.txt)
     // priced it at 0.52 s median — skip it in timing passes, as the r7
     // verdict prescribed. Verify/check.py leave the default ON.
     System.setProperty("graft.q51.digest", "off")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // sketch aggregates (TypedImperativeAggregate) carry ~256B buffers;
-      // the 128-group sort-fallback default defeats them
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      // bench SFs carry tiny streaming state -> the measured small-state
-      // knee (r9 StreamPartsAB: q57 8.9->3.2 s at 32->8); the library
-      // default stays the session width, which is the scale-safe choice
-      .config("graft.stream.parts", graft.ops.Pipelines.StreamParts)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // AQE start width sized to the input volume: decade corpora get
-      // the 256-wide start that fixed the r10 sf30/sf100 spill
-      // superlinearity (q32 246 s fixed-32 vs 159 s, back-to-back A/B)
-      // while gate SFs keep the session width — the flat 256 was itself
-      // a measured ~1.5-2x tax on the LSH family at sf0.1 (r11 CcAB)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        Tables.aqeInitialPartitions(sfDir, cpus.toInt))
-      // RocksDB state store: the r9 A/B (probe_statestore_r9.txt) had it
-      // faster on every streaming face (q57/q103/q108/q111 total
-      // 21.6 -> 20.3 s at sf0.1); at real state sizes the gap widens —
-      // incremental snapshots vs HDFSBacked's full-map rewrite per commit
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // r18 (VERDICT r17 item 4, the state-store knob probe): changelog
-      // checkpointing commits the batch's CHANGELOG instead of a full
-      // RocksDB snapshot per store per batch. Two independent sf1
-      // interleaved A/Bs (ConfAB, AB/BA alternated) read it equal or
-      // faster on every stateful face (q57 −6%, q121 −7%, q108 −14% on
-      // warm-min; q103/q192 flat; never worse beyond noise), and the
-      // saving grows with state size — at 100 TB state the full-snapshot
-      // upload per commit is the dominant term this removes. Checkpoint
-      // format only; results and receipts are byte-identical (oracle
-      // re-gated). writeBufferSizeMB and the HDFSBacked provider were
-      // probed in the same pass: noise/flat, not adopted.
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true")
-      // r15 (r14 verdict item 1): the driver lost the ENTIRE r14 bench
-      // record ("parsed": null) because the state-store maintenance
-      // thread fired at shutdown — after spark.stop(), after the JSON
-      // contract line — and its 1,024-char WARN stack consumed half the
-      // driver's 2000-char stdout tail. Two independent guards: (a) the
-      // maintenance interval moves far past any bench duration so the
-      // thread never fires, (b) the state-store logger is capped at
-      // ERROR below, so even a stray fire can't print a WARN after the
-      // contract line.
-      .config("spark.sql.streaming.stateStore.maintenanceInterval", "3600s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.streaming.state",
-      org.apache.logging.log4j.Level.ERROR)
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] log4j level set failed: ${e.getMessage}") }
+    val spark = Session.bench(sfDir)
     // Clear only the UUID-named Derby dirs (the one scratch class that
     // still accumulates — booted databases can't reuse a fixed dir).
     // Gate queries clear their own fixed dirs on entry, and a wholesale

@@ -13,8 +13,10 @@ import org.apache.spark.sql.SparkSession
   * --bool-style, --time-format, --chunk-size, --max-batch-size,
   * --max-parse-errors, --max-insert-errors, --max-attempts, --backoff,
   * --num-processes, --offset. `--connect/--keyspace` have no meaning
-  * without a cluster; the table argument resolves to parquet here and to
-  * a catalog table in production (see Tables).
+  * without a cluster, and the server-side paging flags (`--page-size`,
+  * `--prefetch`, `--partition-key-size`) none over a partitioned scan:
+  * all are accepted and ignored. The table argument resolves to parquet
+  * here and to a catalog table in production (see Tables).
   *
   * TYPED COLUMNS: a column may carry a declared type —
   * `s_suppkey:long,s_name:string,s_acctbal:double` — playing exactly the
@@ -76,9 +78,6 @@ object Cli {
         case "--backoff" => c = c.copy(backoffMs = v.toLong); i += 2
         case "--num-processes" => c = c.copy(numProcesses = v.toInt); i += 2
         case "--offset" => c = c.copy(offset = v.toLong); i += 2
-        case "--page-size" => c = c.copy(pageSize = v.toInt); i += 2
-        case "--prefetch" => c = c.copy(prefetch = v.toInt); i += 2
-        case "--partition-key-size" => c = c.copy(partitionKeySize = v.toInt); i += 2
         case flag if flag.startsWith("--") => other(flag.drop(2)) = v; i += 2
         case _ => sys.error(s"unexpected argument: $k")
       }
@@ -92,12 +91,7 @@ object Cli {
       sys.exit(2)
     }
     val cfgPeek = parseFlags(args.drop(3).toSeq)._1
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[${math.max(cfgPeek.numProcesses, 1)}]"))
-      .appName(s"graft-${args(0)}-${args(1)}")
-      .config("spark.sql.shuffle.partitions", math.max(cfgPeek.numProcesses, 1))
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = Session.verb(math.max(cfgPeek.numProcesses, 1), s"graft-${args(0)}-${args(1)}")
     try run(args, spark) finally spark.stop()
   }
 

@@ -19,11 +19,9 @@ final case class CopyConfig(
     maxInsertErrors: Int = -1,            // --max-insert-errors (<0 unlimited)
     maxParseErrors: Int = -1,             // --max-parse-errors (<0 unlimited)
     backoffMs: Long = 1000,               // --backoff
-    // read-path flags (read.go:27-31)
-    pageSize: Int = 128,                  // --page-size
-    partitionKeySize: Int = 1,            // --partition-key-size
+    // read-path flags (read.go:27-31); --page-size, --prefetch and
+    // --partition-key-size are accepted and ignored by Cli.parseFlags
     offset: Long = Long.MinValue,         // --offset (exclusive lower bound)
-    prefetch: Int = 1024,                 // --prefetch
     // engine extension (NOT a reference flag): adds the double rule (5.5)
     // to the inference cascade. Default false = strict compat, where
     // "3.14" stays a string (the reference's admitted gap, README.md:11).

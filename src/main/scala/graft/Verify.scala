@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,33 +9,9 @@ object Verify {
     // check while iterating — the driver always passes exactly 2 args)
     val only: String => Boolean =
       if (args.length > 2) args.drop(2).toSet else (_ => true)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE start width sized to the input volume (r11: a flat 256 was
-      // a measured ~1.5-2x tax on the LSH family at gate SFs; decade
-      // dirs still get 256 — see Tables.aqeInitialPartitions)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        Tables.aqeInitialPartitions(sfDir, cpus.toInt))
-      .config("spark.sql.session.timeZone", "UTC")
-      // sketch aggregates (TypedImperativeAggregate) carry ~256B buffers;
-      // the 128-group sort-fallback default defeats them
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      // same state-store provider as Bench (r9 A/B): the gate must
-      // verify the provider the bench actually runs
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // r18: and its changelog-checkpointing mode (adopted this round —
-      // the gate must verify the adopted config; see Bench.scala)
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true")
-      // gate SF carries tiny streaming state -> the same small-state
-      // stream width the bench runs (the gate must verify that config)
-      .config("graft.stream.parts", graft.ops.Pipelines.StreamParts)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the verify profile carries the bench's engine confs: the gate
+    // must verify the configuration the bench actually runs
+    val spark = Session.verify(sfDir)
     new java.io.File(outDir).mkdirs()
     // wipe our scratch area (file-round-trip queries write here)
     scala.reflect.io.Path("target/tmp").deleteRecursively()

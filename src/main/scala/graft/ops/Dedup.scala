@@ -112,12 +112,8 @@ object Dedup {
     // memoized per (session, dir, cap): the keep-list (nearDedup/q37) is an
     // anti-join against these pairs — sharing the persisted result means the
     // capped self-join is paid once per run, not once per consumer
-    SharedPlans.cached(s, s"jaccardPairs|$d|$maxDf")(jaccardPairsPlan(s, d, maxDf))
-
-  // private[graft]: tools/PrefixJaccardAB times this un-memoized (the
-  // SharedPlans persist would turn repeat timings into cache reads)
-  private[graft] def jaccardPairsPlan(s: SparkSession, d: String, maxDf: Int): DataFrame =
-    jaccardPairsOf(Tables.documents(s, d), maxDf)
+    SharedPlans.cached(s, s"jaccardPairs|$d|$maxDf")(
+      jaccardPairsOf(Tables.documents(s, d), maxDf))
 
   // r18 NOTE (falsified, kept out): persisting the shingle postings
   // in-query so the df aggregate and the join side share one evaluation
@@ -186,7 +182,7 @@ object Dedup {
     * formulation — so gate equality proves the pruning lossless and the
     * verification exact (the q93/q100 convention).
     *
-    * Scale — measured scoping (PrefixJaccardAB, probe_q112_ab_r9.txt):
+    * Scale — measured scoping (probe_q112_ab_r9.txt):
     * the quadratic term Σ C(df,2) runs over PREFIX postings only, and
     * rarest-first ordering keeps hot shingles OUT of prefixes — but that
     * only pays when the df distribution is heavy-tailed. This harness's
@@ -234,8 +230,8 @@ object Dedup {
       // (sf10 56.9 → sf30 248 s = 4.4× at 3× data, probe_r10.txt):
       // candidate volume still tracks the df tail, while the capped
       // brute plan is linear by construction. Route on the measured
-      // tail ratio; `route = false` (specs, PrefixJaccardAB) pins the
-      // prefix machinery itself.
+      // tail ratio; `route = false` (specs) pins the prefix machinery
+      // itself.
       //
       // The stats come from a 1/4 HASH-SAMPLE OF SHINGLES, not the full
       // df table: sampling by shingle keeps each sampled shingle's df
@@ -343,12 +339,12 @@ object Dedup {
       .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
       .distinct()
     val counts = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("ns"))
-    // Verification — two equivalent legs, A/B'd in tools/PrefixJaccardAB
-    // (probe_q112_ab_r9.txt). The SET leg won EVERY measurement — natural
-    // corpus and constructed hot-shingle regime alike (e.g. 10.3 s vs the
-    // relational leg's 50.2 s at sf1 with 15k candidates): per-doc sets
-    // are bounded by doc length, ship ONCE per candidate side, and
-    // array_intersect runs in-memory per row, while the relational
+    // Verification — two equivalent legs, A/B'd in probe_q112_ab_r9.txt.
+    // The SET leg won EVERY measurement — natural corpus and constructed
+    // hot-shingle regime alike (e.g. 10.3 s vs the relational leg's
+    // 50.2 s at sf1 with 15k candidates): per-doc sets are bounded by
+    // doc length, ship ONCE per candidate side, and array_intersect
+    // runs in-memory per row, while the relational
     // candidates⋈postings⋈postings form pays a Σ_cand ns(d1) row
     // expansion through two shuffles plus a re-agg. Kept selectable:
     //  - set-based (default): collect_set per doc, array_intersect.
@@ -1064,12 +1060,9 @@ object Dedup {
     // evaluates twice (committed r17 q36 plan, nodes 1-12 ≍ 13-24). sf1
     // A/B (one JVM, alternating): persist 3.07/3.19 s warm-min/med vs
     // recompute 3.17/3.51. The persisted table is n×16 bytes — safe at
-    // any corpus size; graft.simhash.sigPersist=off restores recompute.
-    val sig0 = simhashSig(s, d)
-    val sig =
-      if (s.conf.getOption("graft.simhash.sigPersist").contains("off"))
-        sig0
-      else sig0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // any corpus size.
+    val sig = simhashSig(s, d)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val banded = sig.select(
       col("doc_id"), col("simhash"),
       posexplode(array(pairKeys: _*)).as(Seq("combo", "key")))
@@ -2405,8 +2398,7 @@ object Dedup {
     // each doc's surviving blocks), which is the floor for a
     // non-bucketed corpus — any splice must co-locate a doc's text with
     // its verdicts once. On a bucketed corpus (the q90 discipline) even
-    // that exchange disappears. The rework survives as a re-runnable
-    // replica in tools/BlockDedupAB.
+    // that exchange disappears. The A/B is recorded in probe_r15.txt.
     val flagged = blocks.join(hot, Seq("bh"), "left")
       .select(col("doc_id"), col("blk"), col("btext"),
         coalesce(col("hot"), lit(false)).as("hot"))

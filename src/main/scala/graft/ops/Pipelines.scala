@@ -27,27 +27,31 @@ object Pipelines {
     dir.getPath
   }
 
-  /** Runs independent driver-side jobs on a pool of `threads` and waits
-    * for all of them. On the first failure, in completion order, the
-    * siblings are stopped before the failure is rethrown: their Spark jobs
-    * are cancelled by a per-call job tag, their threads interrupted
-    * (`shutdownNow`) and awaited, so none is still writing under a base
-    * directory the caller already treats as failed. */
-  private[graft] def runConcurrently(s: SparkSession, threads: Int)(
-      jobs: Seq[() => Unit]): Unit = {
+  /** Runs independent driver-side jobs on a pool of `threads`, waits
+    * for all of them and returns their values in submission order. On
+    * the first failure, in completion order, the siblings are stopped
+    * before the failure is rethrown: their Spark jobs are cancelled by a
+    * per-call job tag, their threads interrupted (`shutdownNow`) and
+    * awaited, so none is still writing under a base directory the
+    * caller already treats as failed. */
+  private[graft] def runConcurrently[A](s: SparkSession, threads: Int)(
+      jobs: Seq[() => A]): Seq[A] = {
     import java.util.concurrent.{Callable, ExecutionException, ExecutorCompletionService, Executors, TimeUnit}
     val sc = s.sparkContext
     val tag = s"graft-pool-${java.util.UUID.randomUUID()}"
     val pool = Executors.newFixedThreadPool(threads)
-    val done = new ExecutorCompletionService[Unit](pool)
+    val done = new ExecutorCompletionService[(Int, A)](pool)
     try {
-      jobs.foreach(job => done.submit(new Callable[Unit] {
-        def call(): Unit = {
-          sc.addJobTag(tag)
-          try job() finally sc.removeJobTag(tag)
-        }
-      }))
-      jobs.foreach(_ => done.take().get())
+      jobs.zipWithIndex.foreach { case (job, i) =>
+        done.submit(new Callable[(Int, A)] {
+          def call(): (Int, A) = {
+            sc.addJobTag(tag)
+            try (i, job()) finally sc.removeJobTag(tag)
+          }
+        })
+      }
+      val values = jobs.map(_ => done.take().get()).toMap
+      jobs.indices.map(values)
     } catch {
       case t: Throwable =>
         sc.cancelJobsWithTag(tag)
@@ -66,14 +70,15 @@ object Pipelines {
     * to state VOLUME — and that is a deployment fact, not a library
     * guess, so the DEFAULT is the session's own shuffle width (scale-
     * safe) and the knob is opt-in where the caller knows its state is
-    * small. The r9 A/B (`StreamPartsAB`, probe_r9b.txt annex) measured
+    * small. The r9 A/B (probe_r9b.txt annex; re-run it as
+    * `ConfAB <sf> <rounds> graft.stream.parts=N <query>...`) measured
     * the knee MOVING with state size: at sf0.1 (tiny state) 8 wins —
-    * q57 8.9→3.2 s, q103 8.8→5.4 s — so Bench/Verify set
-    * `graft.stream.parts=8`; at sf30 (4.5M-key CDC state, two-sided
-    * join state) 16–32 wins — q103 160 s @16 vs 219 s @8, q108 44 s
-    * @32 vs 130 s @8 — so the default conf ships UNSET and the sf30
-    * probes run at the session width. */
-  private[graft] val StreamParts = 8 // measured small-state knee (Bench/Verify opt in)
+    * q57 8.9→3.2 s, q103 8.8→5.4 s — so the [[graft.Session]]
+    * profiles set `graft.stream.parts=8`; at sf30 (4.5M-key CDC state,
+    * two-sided join state) 16–32 wins — q103 160 s @16 vs 219 s @8,
+    * q108 44 s @32 vs 130 s @8 — so the library default (conf unset)
+    * stays the session width. */
+  private[graft] val StreamParts = 8 // measured small-state knee (the Session profiles opt in)
 
   /** Streaming-face completion deadline. MUST be generous and MUST fail
     * loud: `awaitTermination(timeout)` returns `false` on expiry with
@@ -956,8 +961,7 @@ object Pipelines {
       .agg(count(lit(1)).as("n"), expr("bit_xor(dg)").as("x"))
       .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2))))
       .toMap
-    // an absent tag = zero rows on that side (count 0, xor 0 — what the
-    // separate aggregates returned on an empty input)
+    // an absent tag = zero rows on that side: count 0, xor 0
     val (nB, xB) = sides.getOrElse("b", (0L, 0L))
     val (nS, xS) = sides.getOrElse("s", (0L, 0L))
     val nLog = log.count()
@@ -1377,9 +1381,7 @@ object Pipelines {
     // per-wave dirs whose part files are then MOVED into in/ with the
     // same ascending stamped mtimes as before — wave composition (one
     // file per wave, mtime order {t0,t1,t2}, maxFilesPerTrigger=1) is
-    // EXACTLY the sequential writer's. graft.q149.setupOverlap=off
-    // restores sequential (A/B seam).
-    val seqSetup = s.conf.getOption("graft.q149.setupOverlap").contains("off")
+    // EXACTLY the sequential writer's.
     def chain(): Unit = {
       s.sparkContext.setJobDescription("q149: corpus sig/bands/seed chain")
       // the "prior run": corpus signatures from the persisted artifact
@@ -1404,8 +1406,7 @@ object Pipelines {
       docs.where(col("doc_id") % 7 === 0 && pmod(col("doc_id"), lit(3)) === i)
         .coalesce(1).write.mode("overwrite").parquet(s"$base/stage_w$i")
     }
-    if (seqSetup) { chain(); (0 until 3).foreach(wave) }
-    else runConcurrently(s, 4)((() => chain()) +: (0 until 3).map(i => () => wave(i)))
+    runConcurrently(s, 4)((() => chain()) +: (0 until 3).map(i => () => wave(i)))
     // wave move-in, mtimes strictly increasing (the q121 r9-advice fix:
     // the file source orders by modification time and sequential appends
     // can tie within stamp granularity)

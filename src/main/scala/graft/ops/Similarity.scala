@@ -985,39 +985,8 @@ object Similarity {
 
   /** The Lloyd loop alone: trains and returns the converged centroids
     * over an already-quantized (vec_id, q8) frame; seeds are the first k
-    * vec_ids. Shared by [[kmeansIntOn]] (q94) and [[semDedup]] (q115).
-    *
-    * r18 (VERDICT r17 item 1's named candidate, guide §1.2 driver-action
-    * count): the separate seed collect is FOLDED into iteration 1's
-    * aggregate — iteration 1 assigns via a broadcast join against the
-    * IN-FRAME seed rows (the join regime of [[kmeansAssign]], whose
-    * score and tie-break the regime-equality spec pins to the literal
-    * regime), and ONE action returns both the k seed vectors (tagged
-    * marker rows, c = −1) and the per-cluster sums. iters=2 runs 2
-    * driver actions instead of 3, and the standalone seed scan
-    * disappears — at 100 TB that scan is a full metadata pass over the
-    * corpus parquet even when row-group stats prune it. Seed cluster
-    * ids come from vec_id itself (the oracle's own `CAST(vec_id AS INT)`
-    * convention, identical to positional while vec_ids 0..k−1 exist —
-    * which the k-seed require guards either way).
-    * `graft.kmeans.seedFold=off` restores the separate collect (A/B
-    * seam); the fold only applies in the literal regime (k ≤ 64) —
-    * the join regime already pays a per-iteration broadcast of driver
-    * cents, a different shape.
-    *
-    * The fold is COUNT-GATED (the CC/PageRank/q112 routing convention:
-    * both regimes measured, route on a cheap stat): at sf0.1 (n = 2k)
-    * the fold's join-regime iteration 1 LOSES (q115 1.87 vs 1.56 s
-    * warm-min — the ×k fan-out join + union costs more than the tiny
-    * seed scan it saves), at sf1 (n = 20k) it WINS (q115 2.81 vs 3.54)
-    * — the knee sits between; [[KmeansSeedFoldMinN]] = 2¹³. `nHint` is
-    * the corpus size from the caller's session-memoized metadata count
-    * (`SharedPlans.cachedCount`, shared with q159's self-sizer — paid
-    * once per session); −1 = unknown = legacy path (synthetic spec
-    * frames). */
-  private[graft] val KmeansSeedFoldMinN: Long = 8192L
-  private[graft] def kmeansFit(qe: DataFrame, k: Int, iters: Int,
-      nHint: Long = -1L): Array[Array[Long]] = {
+    * vec_ids. Shared by [[kmeansIntOn]] (q94) and [[semDedup]] (q115). */
+  private[graft] def kmeansFit(qe: DataFrame, k: Int, iters: Int): Array[Array[Long]] = {
     val viaJoin = k > KmeansMaxExprK
     // 64 per-dim sums as flat agg columns — map-side combined, k rows
     // out, NO 64× posexplode row multiplication through the shuffle
@@ -1036,52 +1005,10 @@ object Similarity {
       }
       next
     }
-    val fold = iters >= 1 && !viaJoin && nHint >= KmeansSeedFoldMinN &&
-      !qe.sparkSession.conf.getOption("graft.kmeans.seedFold").contains("off")
-    var cents: Array[Array[Long]] = null
-    var done = 0
-    if (fold) {
-      import graft.functions.VectorExprs.vecDot
-      val seedDf = qe.where(col("vec_id") < k)
-        .select(col("vec_id").cast("int").as("__cl"), col("q8").as("__cent"),
-          vecDot(col("q8"), col("q8")).as("__cn"))
-      // the join-regime assignment (kmeansAssign's k > 64 branch) with
-      // the seeds read in-frame instead of collected: ‖c‖² − 2·x·c is
-      // exact-integer in double on the int8 grid, so scores and the
-      // (score, cluster) first-min tie-break are identical to the
-      // literal regime's
-      val assigned = qe.join(broadcast(seedDf))
-        .withColumn("__score",
-          col("__cn") - lit(2.0d) * vecDot(col("q8"), col("__cent")))
-        .groupBy(col("vec_id"))
-        .agg(min(struct(col("__score"), col("__cl"))).as("__best"),
-          first(col("q8")).as("q8"))
-        .select(col("q8"), col("__best.__cl").cast("int").as("cluster"))
-      val sumRows = assigned.groupBy(col("cluster"))
-        .agg(count(lit(1)).as("c"), dimSums: _*)
-      val seedRows = seedDf.select(
-        col("__cl").as("cluster") +: lit(-1L).as("c") +:
-          (0 until 64).map(i =>
-            element_at(col("__cent"), i + 1).cast("long").as(s"s$i")): _*)
-      val rows = sumRows.unionByName(seedRows).collect()
-      val (tagged, sums) = rows.partition(_.getLong(1) == -1L)
-      require(tagged.length == k,
-        s"need $k seed vectors (vec_id < $k), got ${tagged.length}")
-      val seeds = Array.ofDim[Long](k, 64)
-      tagged.foreach { r =>
-        val cl = r.getInt(0)
-        var i = 0
-        while (i < 64) { seeds(cl)(i) = r.getLong(2 + i); i += 1 }
-      }
-      cents = applySums(seeds, scala.collection.immutable.ArraySeq.unsafeWrapArray(sums))
-      done = 1
-    } else {
-      cents = qe.where(col("vec_id") < k).orderBy(col("vec_id"))
-        .collect().map(_.getSeq[Double](1).map(_.toLong).toArray)
-      require(cents.length == k, s"need $k seed vectors (vec_id < $k), got ${cents.length}")
-    }
-
-    for (_ <- done + 1 to iters) {
+    var cents = qe.where(col("vec_id") < k).orderBy(col("vec_id"))
+      .collect().map(_.getSeq[Double](1).map(_.toLong).toArray)
+    require(cents.length == k, s"need $k seed vectors (vec_id < $k), got ${cents.length}")
+    for (_ <- 1 to iters) {
       val sums = kmeansAssign(qe, cents, viaJoin)
         .groupBy(col("cluster"))
         .agg(count(lit(1)).as("c"), dimSums: _*)
@@ -2734,23 +2661,8 @@ object Similarity {
       // straggler tail; both legs of a pair complete before the append
       // mutates the artifact (each action lists the index at its own
       // start, so the barrier keeps the before-legs' listings
-      // pre-append). graft.q159.overlap=off restores sequential (A/B
-      // seam). Values, legs, and the off-disk re-audit are unchanged.
-      val overlap = !s.conf.getOption("graft.q159.overlap").contains("off")
-      def par2[A, B](fa: () => A, fb: () => B): (A, B) =
-        if (!overlap) (fa(), fb())
-        else {
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-          try {
-            val ja = pool.submit(new java.util.concurrent.Callable[A] {
-              def call(): A = fa()
-            })
-            val jb = pool.submit(new java.util.concurrent.Callable[B] {
-              def call(): B = fb()
-            })
-            (ja.get(), jb.get())
-          } finally pool.shutdown()
-        }
+      // pre-append). Values, legs, and the off-disk re-audit are
+      // unchanged.
       // the repair: route ONLY the hole, append under its cells. The
       // routed set is persisted and COUNTED BEFORE the append (r13
       // advice): counting after relied on the earlier read having
@@ -2761,25 +2673,25 @@ object Similarity {
         Seq("vec_id"), "left_anti")
       val routed = assignCells(s, missing, cent)
         .select(col("vec_id"), col("cent_id")).persist()
-      val (beforeAgg, nRepaired) = par2(
-        () => {
-          s.sparkContext.setJobDescription("q159: before-audit")
-          ivfCoverageByCell(s, qe, cent, s.read.parquet(idx))
-            .agg(coalesce(sum(col("n_missing")), lit(0L)), count(lit(1)))
-            .collect().head
-        },
-        () => {
-          s.sparkContext.setJobDescription("q159: route the hole")
-          routed.count()
-        })
-      val nMissingBefore = beforeAgg.getLong(0)
-      val nCellsTouched = beforeAgg.getLong(1)
+      val Seq(Seq(nMissingBefore, nCellsTouched), Seq(nRepaired)) =
+        Pipelines.runConcurrently(s, 2)(Seq(
+          () => {
+            s.sparkContext.setJobDescription("q159: before-audit")
+            val r = ivfCoverageByCell(s, qe, cent, s.read.parquet(idx))
+              .agg(coalesce(sum(col("n_missing")), lit(0L)), count(lit(1)))
+              .collect().head
+            Seq(r.getLong(0), r.getLong(1))
+          },
+          () => {
+            s.sparkContext.setJobDescription("q159: route the hole")
+            Seq(routed.count())
+          }))
       routed.repartition(col("cent_id")).write.mode("append")
         .partitionBy("cent_id").parquet(idx)
       routed.unpersist()
       // re-audit OFF DISK: fresh read, fresh listing — the receipt states
       // what the artifact now holds, not what the repair assumes
-      val (nIndexedAfter, nMissingAfter) = par2(
+      val Seq(nIndexedAfter, nMissingAfter) = Pipelines.runConcurrently(s, 2)(Seq(
         () => {
           s.sparkContext.setJobDescription("q159: after-size")
           s.read.parquet(idx).count()
@@ -2788,7 +2700,7 @@ object Similarity {
           s.sparkContext.setJobDescription("q159: after-audit")
           ivfCoverageByCell(s, qe, cent, s.read.parquet(idx))
             .agg(coalesce(sum(col("n_missing")), lit(0L))).collect().head.getLong(0)
-        })
+        }))
       s.range(1).select(
         lit(nMissingBefore).as("n_missing_before"),
         lit(nRepaired).as("n_repaired"),
@@ -3652,23 +3564,16 @@ object Similarity {
     // (bounded: |probes|·k and the probe cells' occupancy) — run them
     // concurrently from driver threads so one scan's stragglers overlap
     // the other's start; wall-clock is the slower scan, not the sum.
-    val pool2 = java.util.concurrent.Executors.newFixedThreadPool(2)
-    implicit val ec2: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool2)
-    val (truth, cand) = try {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      val truthF = Future(quantizedTopK(s, d, k).select(col("qid"), col("cid"))
-        .localCheckpoint(true)) // feeds tot + per-level hits
+    val Seq(truth, cand) = Pipelines.runConcurrently(s, 2)(Seq(
+      () => quantizedTopK(s, d, k).select(col("qid"), col("cid"))
+        .localCheckpoint(true), // feeds tot + per-level hits
       // widest-level candidates, computed once (each corpus vector meets
       // a query at most once per ranked probe cell)
-      val candF = Future(assigned.join(broadcast(pcells),
+      () => assigned.join(broadcast(pcells),
           col("cent_id") === col("qcell") && col("vec_id") =!= col("qid"))
         .select(col("qid"), col("vec_id").as("cid"), col("pr"),
           vecDot(col("qv"), col("q8")).cast("long").as("dot"))
-        .localCheckpoint(true))
-      (Await.result(truthF, Duration.Inf), Await.result(candF, Duration.Inf))
-    } finally pool2.shutdown()
+        .localCheckpoint(true)))
     val lv = s.range(1, maxProbe + 1).select(col("id").as("nprobe"))
     val candL = cand.join(broadcast(lv), col("pr") <= col("nprobe"))
     val wTop = Window.partitionBy(col("nprobe"), col("qid"))
@@ -3887,20 +3792,11 @@ object Similarity {
       // driver threads — wall-clock is the slowest tier, not the sum.
       // eraseFromStore is thread-safe since the dynamic-overwrite mode
       // became a per-write option rather than a session-conf mutation.
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      val erasures = try {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        Await.result(Future.sequence(Seq(
-          Future(eraseFromStore(s, s"$work/store", "bkt", victimVec)),
-          Future(eraseFromStore(s, s"$work/index", "cent_id", victimVec)),
-          Future(eraseFromStore(s, s"$work/sig", "bkt", victimDoc)))),
-          Duration.Inf)
-      } finally pool.shutdown()
       val Seq((nStoreErased, nStoreBkts), (nIndexErased, nCells),
-        (nSigErased, nSigBkts)) = erasures
+        (nSigErased, nSigBkts)) = Pipelines.runConcurrently(s, 3)(Seq(
+          () => eraseFromStore(s, s"$work/store", "bkt", victimVec),
+          () => eraseFromStore(s, s"$work/index", "cent_id", victimVec),
+          () => eraseFromStore(s, s"$work/sig", "bkt", victimDoc)))
       // residual audit OFF DISK: fresh reads of the repaired artifacts.
       // r17 (§1.2 job-count): one job for the store+sig victim counts
       // (union of unit projections) and one per-index aggregate carrying

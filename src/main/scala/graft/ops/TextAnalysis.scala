@@ -1445,13 +1445,8 @@ object TextAnalysis {
     // alternating): persist 1.99/2.13 s warm-min/med vs recompute
     // 2.53/2.67 — −21%, consistent ordering; at 100 TB this halves the
     // tokenize CPU for one narrow materialization that spills to disk
-    // at worst. graft.dsir.featsPersist=off restores the two-scan shape
-    // (the scale dial if executor storage is the binding constraint).
-    val feats =
-      if (docs.sparkSession.conf.getOption("graft.dsir.featsPersist")
-            .contains("off"))
-        featsRaw
-      else featsRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // at worst.
+    val feats = featsRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // one pass builds BOTH models: raw count + filtered target count;
     // the ≤B-row model is COLLECTED into a LocalRelation (not .cache(),
     // which outlived the query and accumulated across invocations — r9

@@ -80,17 +80,6 @@ object CopyWrite {
     (renamed, errs)
   }
 
-  /** Header drop (`write.go:135-137`: skipped, never validated): removes
-    * the first record of the stream when cfg.header. Uses zipWithIndex,
-    * which is order-stable for text sources. */
-  def dropHeader(lines: Dataset[String], cfg: CopyConfig): Dataset[String] =
-    if (!cfg.header) lines
-    else {
-      val spark = lines.sparkSession
-      import spark.implicits._
-      lines.rdd.zipWithIndex.filter(_._2 > 0).map(_._1).toDS()
-    }
-
   /** Exact-compat typed projection: one tagged-union struct column per
     * target column (SURVEY.md §1.4), inference fully in codegen. */
   def inferTagged(parsed: DataFrame, cols: Seq[String], cfg: CopyConfig): DataFrame = {
@@ -145,9 +134,7 @@ object CopyWrite {
     * Header semantics are PER FILE here (each file written with
     * `header=true` — e.g. by our own CSV sink — carries its own header;
     * dropping only the globally-first record would leak the others into
-    * the data). Header'd reads therefore go whole-file per partition;
-    * the reference's single-stream semantics (header = first record of
-    * the stream) live in [[dropHeader]] for Dataset[String] callers. */
+    * the data). Header'd reads therefore go whole-file per partition. */
   def read(spark: SparkSession, path: String, cols: Seq[String], cfg: CopyConfig,
       schema: Option[StructType] = None, multiline: Boolean = false)
       : (DataFrame, ParseErrors) = {

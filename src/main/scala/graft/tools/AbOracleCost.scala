@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Controlled same-window A/B for the two bench deltas the r7
   * `--bench-diff` tool flagged (r7 verdict, next-round item 1):
   *
@@ -24,12 +22,7 @@ object AbOracleCost {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val passes = if (args.length > 1) args(1).toInt else 5
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.tool(sfDir)
 
     val variants: Seq[(String, () => Unit)] = Seq(
       ("q51_digest_on", () =>

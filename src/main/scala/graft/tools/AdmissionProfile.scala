@@ -2,7 +2,7 @@ package graft.tools
 
 import graft.Tables
 import graft.ops.Dedup
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** q149 floor decomposition (r12 verdict item 7), the q57
@@ -28,15 +28,7 @@ object AdmissionProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val reps = if (args.length > 1) args(1).toInt else 2
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("graft.stream.parts", graft.ops.Pipelines.StreamParts)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.tool(sfDir)
 
     def timeMin(label: String)(body: => Unit): Unit = {
       val ts = (1 to reps).map { _ =>

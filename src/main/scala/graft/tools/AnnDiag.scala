@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Diagnose ANN-LSH bucket skew: per corpus, report n, auto-sized band
@@ -9,10 +8,7 @@ import org.apache.spark.sql.functions._
   * Usage: graft.tools.AnnDiag <sfDir>... */
 object AnnDiag {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.tool(args.head)
     args.foreach { d =>
       val n = graft.ops.Similarity.corpusCount(spark, d)
       val bpb = graft.ops.Similarity.bitsForCorpus(n)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Decade probe for q152 (IVF balance audit) in its PRODUCTION
   * configuration: the gate face pins centStride = 100 for oracle parity
   * (cells ∝ n — the known fixed-stride knee), the default self-sizes to
@@ -11,14 +9,7 @@ import org.apache.spark.sql.SparkSession
 object BalanceProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val stride = args(1).toInt; val runs = args(2).toInt
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        graft.Tables.aqeInitialPartitions(sfDir, 32))
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.tool(sfDir)
     for (i <- 1 to runs) {
       val t0 = System.nanoTime()
       val r = graft.ops.Similarity.ivfBalanceAudit(spark, sfDir, stride).collect().head

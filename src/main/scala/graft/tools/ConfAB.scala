@@ -1,39 +1,27 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-/** One-JVM interleaved A/B of a session-conf-gated code path (the PrAB
-  * pattern generalized — VERDICT r17 item 2 asked for exactly this for
-  * the foreachBatch receipt merges, and r18 uses it for every
-  * conf-gated optimization candidate). Mode A = conf unset (shipped
+/** One-JVM interleaved A/B of a session-conf-gated code path — the one
+  * A/B tool. Mode A = the shipped setting (the value the `tool` session
+  * profile gives the key, or unset when the profile leaves it at Spark's
   * default), mode B = conf set to the given value; run order alternates
   * AB/BA each round so linear box drift cancels. Full face evaluation
-  * through the noop sink, same session confs as Bench (incl.
-  * graft.stream.parts and the RocksDB state store).
+  * through the noop sink, under the bench's engine confs ([[graft.Session]]).
   *
-  * Usage: ConfAB <sfDir> <rounds> <confKey=value> <query>... */
+  * Usage: ConfAB <sfDir> <rounds> <confKey=value> <query>...
+  *
+  * Recipes for the retired single-purpose A/B mains:
+  *  - q98 PageRank routes: `graft.graph.driverMaxEdges=0 q98_pagerank`
+  *  - streaming state width: `graft.stream.parts=N <streaming query>...`
+  *  - AQE start width on the LSH family:
+  *    `spark.sql.adaptive.coalescePartitions.initialPartitionNum=256 q38_dup_clusters` */
 object ConfAB {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val rounds = args(1).toInt
     val Array(confKey, confVal) = args(2).split("=", 2)
     val names = args.drop(3)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("graft.stream.parts", graft.ops.Pipelines.StreamParts)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        graft.Tables.aqeInitialPartitions(sfDir, 32).toString)
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true")
-      .config("spark.sql.streaming.stateStore.maintenanceInterval", "3600s")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.tool(sfDir)
+    val shipped = spark.conf.getAll.get(confKey)
+    println(s"[conf-ab] A: $confKey=${shipped.getOrElse("(unset)")}  B: $confKey=$confVal")
     val nJobs = new java.util.concurrent.atomic.AtomicInteger(0)
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
@@ -45,7 +33,7 @@ object ConfAB {
       scala.collection.mutable.Map[(String, String), List[(Double, Int)]]()
     def runOne(name: String, mode: String, round: Int): Unit = {
       if (mode == "B") spark.conf.set(confKey, confVal)
-      else spark.conf.unset(confKey)
+      else shipped.fold(spark.conf.unset(confKey))(spark.conf.set(confKey, _))
       val j0 = nJobs.get(); val t0 = System.nanoTime()
       graft.SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()

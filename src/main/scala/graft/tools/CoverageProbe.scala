@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Decade probe for the coverage pair (q156 audit / q159 repair) on the
   * LIBRARY default geometry (centStride = 0 → ≈ √n cells) — the gate
   * faces pin stride 100 for oracle parity, which makes cells ∝ n and
@@ -13,14 +11,7 @@ object CoverageProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val reps = if (args.length > 1) args(1).toInt else 2
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        graft.Tables.aqeInitialPartitions(sfDir, 32).toString)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.tool(sfDir)
     (1 to reps).foreach { i =>
       var t0 = System.nanoTime()
       val audit = graft.ops.Similarity.ivfCoverageAudit(spark, sfDir).collect().head

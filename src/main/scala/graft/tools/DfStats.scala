@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Quantifies the shingle df-tail shift across ScaleUp decades: the
@@ -15,11 +14,7 @@ import org.apache.spark.sql.functions._
   * Usage: DfStats <sfDir> [sfDir...] */
 object DfStats {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.tool(args.head)
     for (d <- args) {
       val dfreq = graft.ops.Dedup.shingles(graft.Tables.documents(spark, d))
         .groupBy(col("shingle")).agg(count(lit(1)).as("df"))

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-question probe for the q126 serve-path redesign (r11 verdict
@@ -12,12 +11,7 @@ import org.apache.spark.sql.functions._
 object DppProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.tool(sfDir)
     val base = "target/tmp/dpp_probe"
     scala.reflect.io.Path(new java.io.File(base)).deleteRecursively()
     val e = graft.Tables.embeddings(spark, sfDir)

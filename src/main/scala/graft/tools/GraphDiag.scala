@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Decompose q98's wall-clock at a given SF: edge build + cache
@@ -10,12 +10,8 @@ import org.apache.spark.sql.functions._
   */
 object GraphDiag {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     val d = args(0)
+    val spark = graft.Session.tool(d)
 
     def timed[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime(); val r = f

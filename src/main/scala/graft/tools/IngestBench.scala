@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.{CopyConfig, Tables}
 import graft.pipeline.{CopyRead, CopyWrite}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -15,11 +14,7 @@ import org.apache.spark.sql.types._
 object IngestBench {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.tool(sfDir)
     val cfg = CopyConfig() // reference defaults incl. numProcesses=8
     val base = s"target/tmp/ingestbench_${System.nanoTime()}"
 

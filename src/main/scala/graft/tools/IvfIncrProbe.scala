@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.Similarity
 
@@ -15,12 +14,7 @@ import graft.ops.Similarity
 object IvfIncrProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val stride = args(1).toInt; val runs = args(2).toInt
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.tool(sfDir)
     val n = graft.Tables.embeddings(spark, sfDir)
       .where(col("vec_id") % 10 =!= 0).count()
     val effStride = if (stride > 0) stride

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** r16 probe: PQ recall@10 vs the exact int8 top-10, unrotated vs
@@ -10,11 +9,7 @@ import org.apache.spark.sql.functions._
 object OpqRecallProbe {
   def main(args: Array[String]): Unit = {
     val sf = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.tool(sf)
     import graft.ops.Similarity
     val truth = Similarity.quantizedTopK(spark, sf, 10)
       .select(col("qid"), col("cid"))

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Dumps `explain("formatted")` for every SparkEntry query to PLANS.md —
   * the audit trail for the scale checklist: filters/projections reaching
@@ -11,11 +10,7 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val out = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.tool(sfDir)
     val sb = new StringBuilder
     sb.append("# PLANS — physical plans of every gate query (explain formatted)\n\n")
     sb.append(s"Generated against `$sfDir` (plan shape is SF-independent; AQE\n")

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc profiling entry: time one or more SparkEntry queries repeatedly.
   * Usage: graft.tools.Profile <sfDir> <repeat> <queryName>... */
 object Profile {
@@ -9,28 +7,7 @@ object Profile {
     val sfDir = args(0)
     val repeat = args(1).toInt
     val names = args.drop(2)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      // sketch aggregates (TypedImperativeAggregate) carry ~256B buffers;
-      // the 128-group sort-fallback default defeats them
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE start width sized to the input volume (the r11 Bench/Verify
-      // rule — flat 256 taxed gate SFs ~1.5-2x on the LSH family while
-      // decade dirs still need it; Tables.aqeInitialPartitions).
-      // Overridable for A/B via SPARK_GRAFT_INIT_PARTS.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INIT_PARTS",
-          graft.Tables.aqeInitialPartitions(sfDir, 32).toString))
-      // match the adopted Bench/Verify state store (r9 A/B) so streaming
-      // probes measure the shipped configuration
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.tool(sfDir)
     // r17: count Spark jobs per run — at gate SF most faces are
     // fixed-cost bound, so #jobs × per-job overhead is the cost model;
     // a face whose wall-clock is high relative to its job count is

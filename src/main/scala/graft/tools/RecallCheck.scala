@@ -1,17 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** One-off recall audit: do the approximate dedup paths (MinHash-LSH,
   * winnowing) recover the exact jaccard≥0.5 pairs at a given SF? */
 object RecallCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.tool(sfDir)
     def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.collect().map(r => (r.getAs[Long]("d1"), r.getAs[Long]("d2"))).toSet
     val exact = pairs(graft.ops.Dedup.jaccardPairs(spark, sfDir))

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthesize a larger scale factor from the driver's sf0.1 testdata for
@@ -55,14 +55,10 @@ object ScaleUp {
     val only: String => Boolean =
       if (args.length > 3) args(3).split(",").toSet else (_ => true)
 
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries TIMESTAMP(NANOS); keep it a long and write
-      // it back as a long — Tables.events does the div-1000 conversion
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.tool(src)
+    // events.parquet carries TIMESTAMP(NANOS); keep it a long and write
+    // it back as a long — Tables.events does the div-1000 conversion
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     def replicate(table: String, keyCols: Seq[String], outParts: Int)(
         perCopy: (DataFrame, Int) => DataFrame = (df, _) => df): Unit = {

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.Similarity
 
@@ -16,12 +15,7 @@ import graft.ops.Similarity
 object SemDedupProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val k = args(1).toInt; val runs = args(2).toInt
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.tool(sfDir)
     val n = graft.Tables.embeddings(spark, sfDir).count()
     println(s"[semdedup-probe] n=$n k=$k expected-occupancy=${n / k}")
     for (i <- 1 to runs) {

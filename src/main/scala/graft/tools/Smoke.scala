@@ -1,13 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-/** Mirrors the driver's t1 smoke: a bare session (no graft-side configs)
+/** Mirrors the driver's t1 smoke: the verb session (no engine conf —
+  * AQE, state store and aggregate fallback stay at Spark's defaults)
   * running SparkEntry.entry — proves the flagship query doesn't depend on
-  * any session setting we normally inject (UTC, shuffle partitions, AQE). */
+  * any engine conf the bench profile injects. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]").getOrCreate()
+    val spark = graft.Session.verb(4, "graft-smoke")
     spark.sparkContext.setLogLevel("ERROR")
     val n = graft.SparkEntry.entry(spark).count()
     println(s"entry rows=$n")

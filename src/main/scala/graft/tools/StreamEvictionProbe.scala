@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
 
@@ -32,11 +32,7 @@ object StreamEvictionProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val nFiles = if (args.length > 1) args(1).toInt else 16
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.tool(sfDir)
 
     // stage: time-range-ordered files with ascending mtimes (the file
     // source orders by modification time; equal stamps would leave the

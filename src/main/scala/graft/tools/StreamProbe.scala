@@ -2,7 +2,6 @@ package graft.tools
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Scale probe for the streaming gate family (r6 verdict item 3): time
@@ -22,11 +21,7 @@ object StreamProbe {
     val sfDir = args(0)
     val repeat = args(1).toInt
     val names = args.drop(2)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.tool(sfDir)
 
     // progress events arrive async on the listener bus; peak-tracking
     // atomics survive until the query terminates and the bus drains

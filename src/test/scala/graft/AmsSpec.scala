@@ -1,29 +1,16 @@
 package graft
 
 import graft.ops.Relational
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Specs for AMS join-size estimation (q110): the exact leg equals a
   * direct join count, the estimate is layout-independent (exact-integer
   * sums), positive (the integer-div precondition the gate relies on),
   * and lands within a sane error envelope of the truth on real data. */
-class AmsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class AmsSpec extends AnyFunSuite with SparkFixture {
 
-  private var spark: SparkSession = _
   private val sf = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("graft-ams-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("exact leg equals the executed join; estimate positive and within envelope") {
     val row = Relational.amsJoinSize(spark, sf).collect().head

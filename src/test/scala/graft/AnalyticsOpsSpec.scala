@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Specs for the round-10 analytics quartet (q132–q135): gap-fill
@@ -11,19 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * rules, and the integer-exact rolling z-test (variance-0, null-until-
   * full-frame). Hand fixtures pin the semantics; sf0.001 checks pin the
   * corpus-level invariants. */
-class AnalyticsOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("graft-analytics-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class AnalyticsOpsSpec extends AnyFunSuite with SparkFixture {
 
   /** Write (user, type, value, ts-ms) rows as an events table fixture. */
   private def eventsOf(dir: String, rows: Seq[(Long, String, Double, Long)]): String = {

@@ -2,9 +2,8 @@ package graft
 
 import graft.functions.{ArgmaxExprs, CentroidMatrix}
 import graft.ops.Similarity
-import org.apache.spark.sql.{Column, GraftBridge, SparkSession}
+import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** r13 (r12 verdict item 1): the IVF cell assignment must be a pure
@@ -15,20 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * replaced (including the tie → smallest-cent_id rule), and (b) the
   * physical plan shape: `argmax_dot_cell` in a codegen'd Project,
   * zero Sort/SortAggregate/Window/Join nodes in the assignment plan. */
-class ArgmaxAssignSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ArgmaxAssignSpec extends AnyFunSuite with SparkFixture {
 
-  private var spark: SparkSession = _
   private val sf = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("graft-argmax-assign-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def argmaxCol(c: Column, m: CentroidMatrix): Column =
     GraftBridge.column(ArgmaxExprs.ArgmaxDotCell(

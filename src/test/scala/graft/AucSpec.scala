@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Specs for the exact ROC-AUC evaluation (q122): hand-computed
@@ -10,19 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * brute-force pairwise Mann–Whitney definition on a generated corpus,
   * and face sanity at sf0.001 (both classes present, AUC in range,
   * better-than-chance for the stopword score on the en label). */
-class AucSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("graft-auc-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class AucSpec extends AnyFunSuite with SparkFixture {
 
   /** Run the q122 pipeline on synthetic docs whose stopword-bp score we
     * control exactly: k stopwords out of 10 words → score k·1000. */

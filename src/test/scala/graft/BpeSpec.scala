@@ -1,8 +1,6 @@
 package graft
 
 import graft.ops.TextAnalysis
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Specs for BPE tokenizer training (q109): hand fixtures pin the merge
@@ -10,19 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * tie-breaks, and the exact greedy left-to-right merge on a
   * self-overlapping pair (the case a naive string replace gets wrong) —
   * plus layout independence and gate shape at sf0.001. */
-class BpeSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("graft-bpe-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class BpeSpec extends AnyFunSuite with SparkFixture {
 
   private def train(docs: Seq[String], parts: Int = 4) = {
     val s = spark

@@ -3,7 +3,6 @@ package graft
 import graft.ops.Curation
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Specs for the curation suite (q81-q85): chunk coverage/overlap
@@ -11,19 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * allocation, and the Morton bijection + locality property. The gate
   * faces are DuckDB-hash-checked; these cover the semantics and edges the
   * oracle data never exercises. */
-class CurationSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("graft-curation-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class CurationSpec extends AnyFunSuite with SparkFixture {
 
   test("docChunks: coverage, overlap, short-tail, and single-short-doc invariants") {
     val s = spark

@@ -2,9 +2,7 @@ package graft
 
 import graft.streaming.DeadLetter
 import graft.streaming.DeadLetter.{Ev, Routed, WmState}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Specs for the late-data dead-letter router (q121): the pure keyed-
@@ -13,21 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * window assembly), and the end-to-end face invariants — multi-batch
   * delivery really happened, nothing was dropped (routed totals sum to
   * the corpus), and both channels are non-empty. */
-class DeadLetterSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("graft-dlq-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class DeadLetterSpec extends AnyFunSuite with SparkFixture {
 
   private def ev(ts: Long*): Iterator[Ev] =
     ts.iterator.zipWithIndex.map { case (t, i) => Ev("k", i.toLong, t) }

@@ -1,8 +1,6 @@
 package graft
 
 import graft.ops.TextAnalysis
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Specs for DSIR importance resampling (q118): an independent local
@@ -11,19 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * sentinel, layout independence, and the discrimination property the
   * method exists for: target-vocabulary docs must out-weigh off-target
   * ones. */
-class DsirSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("graft-dsir-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class DsirSpec extends AnyFunSuite with SparkFixture {
 
   private def run(docs: Seq[(Long, String, String)], parts: Int = 4)
       : Map[Long, (Long, Long, Boolean)] = {

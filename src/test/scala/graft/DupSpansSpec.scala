@@ -1,8 +1,6 @@
 package graft
 
 import graft.ops.Dedup
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Specs for exact substring-span dedup (q105): hand-built fixtures pin
@@ -10,19 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * runs yield ONE merged span per side, within-doc self-repeats count,
   * separated duplicated runs stay separate spans, clean docs zero-fill —
   * plus partition-layout independence of the whole pipeline. */
-class DupSpansSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("graft-dupspans-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class DupSpansSpec extends AnyFunSuite with SparkFixture {
 
   private def run(docs: Seq[(Long, String)], w: Int, parts: Int = 4) = {
     val s = spark

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Specs for the product-analytics pair (q123/q124): funnel ordering
@@ -10,19 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * out-of-order rejection), single-pass ≡ chained-scan equality on the
   * real corpus, and retention cohort algebra (cohort = first week,
   * delta-0 completeness, conservation). */
-class FunnelSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("graft-funnel-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class FunnelSpec extends AnyFunSuite with SparkFixture {
 
   /** Run the funnel pipeline on synthetic (user, type, ts-seconds). */
   private def funnelOf(rows: Seq[(Long, String, Long)]): (Long, Long, Long, Long) = {

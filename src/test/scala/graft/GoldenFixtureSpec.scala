@@ -1,27 +1,14 @@
 package graft
 
 import graft.pipeline.CopyWrite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Golden end-to-end checks of the FIXTURES.md §A fixtures through the
   * real file-based pipeline (every expectation cited there). */
-class GoldenFixtureSpec extends AnyFunSuite with BeforeAndAfterAll {
+class GoldenFixtureSpec extends AnyFunSuite with SparkFixture {
 
-  private var spark: SparkSession = _
   private val res = "src/test/resources"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[2]")
-      .appName("graft-golden-test")
-      .config("spark.sql.shuffle.partitions", 2)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("A1 infer_basic.csv: the 7-rule cascade, rule order asserted") {
     val cols = Seq("id", "name", "active", "score", "created", "note")

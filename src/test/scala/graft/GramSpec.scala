@@ -1,28 +1,14 @@
 package graft
 
 import graft.functions.GramAgg.gramUpper
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Specs for the one-pass Gram-matrix aggregate (q120): hand-computed
   * fixture, map-side merge correctness across partitions, the positional
   * upper-triangle layout contract the face unpacks by, and agreement
   * with the explode-and-groupBy formulation the DuckDB oracle runs. */
-class GramSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("graft-gram-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class GramSpec extends AnyFunSuite with SparkFixture {
 
   private def gram(vecs: Seq[Seq[Double]], d: Int, parts: Int = 4): Seq[Long] = {
     val s = spark

@@ -1,28 +1,14 @@
 package graft
 
 import graft.ops.Graph
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Specs for the iterative-graph family (q98): the integer PageRank
   * recurrence against a hand-computed fixture, and the structural
   * invariants (node retention, layout independence) the oracle data
   * can't isolate. */
-class GraphSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("graft-graph-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class GraphSpec extends AnyFunSuite with SparkFixture {
 
   test("pageRankInt: hand-computed 2-iteration fixture on a 4-node bipartite graph") {
     val s = spark

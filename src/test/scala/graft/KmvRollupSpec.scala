@@ -1,28 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Specs for the KMV sketch roll-up (q125): the roll-up theorem —
   * bottom-k of a union of bottom-ks equals bottom-k of the union —
   * checked on the face (rollup row ≡ direct row), per-group estimates
   * sane vs exacts, and the saturation/exact regimes both present. */
-class KmvRollupSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("graft-kmvrollup-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class KmvRollupSpec extends AnyFunSuite with SparkFixture {
 
   test("roll-up row is bit-equal to the direct global row") {
     val rows = graft.ops.Relational.kmvRollup(spark, "/root/testdata/sf0.01")

@@ -1,9 +1,7 @@
 package graft
 
 import graft.functions.KmvAgg.kmvSketch
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Specs for the KMV bottom-k distinct sketch (q101): the properties the
@@ -11,19 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * ONE slot, the whole point vs a plain top-k), layout independence of
   * the merged minima, exact passthrough below k, and the estimator's
   * accuracy envelope at the face's k. */
-class KmvSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("graft-kmv-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class KmvSpec extends AnyFunSuite with SparkFixture {
 
   private def hash(c: org.apache.spark.sql.Column) =
     conv(substring(md5(concat(lit("kmv|"), c.cast("string"))), 1, 15), 16, 10)

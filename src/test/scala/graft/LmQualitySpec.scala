@@ -1,8 +1,6 @@
 package graft
 
 import graft.ops.TextAnalysis
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Specs for the bigram-LM quality score (q113): each scoring path
@@ -10,19 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the short-doc sentinel, layout independence, and the end-to-end
   * discrimination property the operator exists for — training-like text
   * must score fewer bits/token than gibberish. */
-class LmQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("graft-lm-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class LmQualitySpec extends AnyFunSuite with SparkFixture {
 
   private def score(docs: Seq[(Long, String)], parts: Int = 4): Map[Long, (Long, Long)] = {
     val s = spark

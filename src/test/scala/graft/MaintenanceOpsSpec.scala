@@ -1,9 +1,7 @@
 package graft
 
 import graft.ops.{Dedup, Reconcile, Relational, Similarity}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Specs for the round-10 maintenance/governance operators: incremental
@@ -12,20 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * gate oracle checks values; these cover the semantics the oracle
   * can't see — the persisted-artifact contract (the batch path must
   * work off DISK, not lineage), internal consistency, and invariants. */
-class MaintenanceOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class MaintenanceOpsSpec extends AnyFunSuite with SparkFixture {
 
-  private var spark: SparkSession = _
   private val sf = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("graft-maintenance-ops-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("ivfIncremental (q126): persisted index is complete, batch neighbors come from the index only") {
     val out = Similarity.ivfIncremental(spark, sf).cache()

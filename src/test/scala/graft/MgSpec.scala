@@ -1,9 +1,7 @@
 package graft
 
 import graft.functions.MgAgg.mgSketch
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Specs for the Misra–Gries frequent-items sketch (q104): the theorem's
@@ -12,19 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * regime), the guaranteed-hit + underestimate + N/(cap+1) bound on an
   * adversarial Zipf stream across hostile partition layouts, and
   * serialization round-trip through real shuffles. */
-class MgSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("graft-mg-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class MgSpec extends AnyFunSuite with SparkFixture {
 
   private def sketch(keys: Seq[String], cap: Int, parts: Int = 4): Map[String, Long] = {
     val s = spark

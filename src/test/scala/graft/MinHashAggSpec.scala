@@ -2,26 +2,13 @@ package graft
 
 import graft.functions.MinHashAgg
 import graft.functions.MinHashAgg.minhashSig
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One-pass MinHash aggregate: signature correctness against a reference
   * computation, partition-invariance (merge correctness), and set
   * semantics (signature depends on the distinct element set). */
-class MinHashAggSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("graft-minhash-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class MinHashAggSpec extends AnyFunSuite with SparkFixture {
 
   private def sigOf(items: Seq[String], partitions: Int): Seq[Long] = {
     val s = spark

@@ -2,27 +2,14 @@ package graft
 
 import graft.ops.Multimodal
 import graft.ops.Multimodal.{Decoded, FakeCodec, JdkCodec, MediaRow}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Multimodal plumbing: schema, batched decode shape, deterministic fake
   * codec, and real feature math. */
-class MultimodalSpec extends AnyFunSuite with BeforeAndAfterAll {
+class MultimodalSpec extends AnyFunSuite with SparkFixture {
 
   private val sf = "/root/testdata/sf0.001"
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("graft-mm-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("media table schema: opaque binary + typed metadata") {
     val m = Multimodal.mediaTable(spark, sf)

@@ -1,9 +1,7 @@
 package graft
 
 import graft.streaming.StreamIngest
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins Spark's exact outer-row eviction boundary for the stream-stream
@@ -12,19 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * wm == ts + window. This is the rule the q108 oracle encodes
   * (ts + 24h <= watermark); if a Spark upgrade shifts the boundary,
   * this spec reds before the gate does. */
-class OuterJoinBoundarySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("graft-outer-boundary-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class OuterJoinBoundarySpec extends AnyFunSuite with SparkFixture {
 
   test("outer row emits exactly when wm reaches ts + window, not 1ms before") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream

@@ -2,31 +2,15 @@ package graft
 
 import graft.ops._
 import graft.pipeline.BatchingSink
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end Spark specs on sf0.001 (~6k lineitem rows) — pipelines,
   * dedup, similarity — asserting the invariants the DuckDB oracle can't
   * (file round-trips, quoted-bit semantics, LSH recall vs the exact
   * baseline, budget aborts). */
-class PipelineSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PipelineSparkSpec extends AnyFunSuite with SparkFixture {
 
   private val sf = "/root/testdata/sf0.001"
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("csv round-trip is lossless (internal signature check throws on mismatch)") {
     // csvRoundtrip REQUIREs src-signature == read-back-signature internally;
@@ -159,6 +143,14 @@ class PipelineSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(30)
     while (PoolProbe.taskLive.get > 0 && System.nanoTime() < deadline) Thread.sleep(50)
     assert(PoolProbe.taskLive.get == 0)
+    // without a failure, each job's value comes back in submission order,
+    // although the first job finishes last
+    val secondDone = new CountDownLatch(1)
+    val values = Pipelines.runConcurrently(spark, 3)(Seq(
+      () => { secondDone.await(60, TimeUnit.SECONDS); spark.range(10).count() },
+      () => try spark.range(3).count() finally secondDone.countDown(),
+      () => 7L))
+    assert(values == Seq(10L, 3L, 7L))
   }
 
   test("CLI typed jdbc round-trip: CSV -> Derby typed DDL -> CSV preserves types") {

@@ -1,8 +1,6 @@
 package graft
 
 import graft.ops.Similarity
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Specs for product quantization + ADC retrieval (q106): a plain-Scala
@@ -10,19 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * fixture must match the distributed pipeline row-for-row (encode,
   * distance table, ranking, tie-breaks), plus partition-layout
   * independence and gate-face shape at sf0.001. */
-class PqSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("graft-pq-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class PqSpec extends AnyFunSuite with SparkFixture {
 
   // deterministic fixture: 30 vectors x 64 dims, mixed-sign ints
   private val fix: Seq[(Long, Seq[Float])] = (0L until 30L).map { i =>

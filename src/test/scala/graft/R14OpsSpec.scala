@@ -2,9 +2,8 @@ package graft
 
 import graft.functions.{ArgmaxExprs, CentroidMatrix}
 import graft.ops.{Dedup, Sampling, Similarity}
-import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-14 operators: multi-probe IVF retrieval (q164), index
@@ -18,20 +17,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - erasure touches ONLY affected partitions (untouched partition
   *    files bit-unmoved by mtime+length) and leaves zero residual ids.
   */
-class R14OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class R14OpsSpec extends AnyFunSuite with SparkFixture {
 
-  private var spark: SparkSession = _
   private val sf = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("graft-r14-ops-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def topPCol(c: Column, m: CentroidMatrix, p: Int): Column =
     GraftBridge.column(ArgmaxExprs.TopPDotCells(

@@ -1,9 +1,7 @@
 package graft
 
 import graft.ops.{Curation, TextAnalysis}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-15 operators: temperature-scaled token mixture (q193) and the
@@ -18,20 +16,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *    zero-mismatch cells (the q180 degenerate-case rule: both engines
   *    must agree on the empty case, so the spec pins it).
   */
-class R15OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class R15OpsSpec extends AnyFunSuite with SparkFixture {
 
-  private var spark: SparkSession = _
   private val sf = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("graft-r15-ops-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("temperatureMixture: allocation sums to the budget exactly") {
     val out = Curation.temperatureMixture(spark, sf, budget = 50000L)

@@ -2,8 +2,7 @@ package graft
 
 import graft.ops.{Curation, Sampling, Similarity}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-16 operators: retrieval nDCG (q195), HTML strip (q196),
@@ -31,20 +30,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *    probe_r16.txt — which is exactly what the literature predicts
   *    (Ge et al. 2013 §5: gains come from anisotropy).
   */
-class R16OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class R16OpsSpec extends AnyFunSuite with SparkFixture {
 
-  private var spark: SparkSession = _
   private val sf = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("graft-r16-ops-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   // ---------------------------------------------------------------- q195
 

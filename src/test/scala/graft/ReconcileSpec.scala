@@ -1,28 +1,14 @@
 package graft
 
 import graft.ops.Reconcile
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Specs for the reconciliation digest (q99): the anti-entropy
   * properties — a corruption is DETECTED and LOCALIZED to its key's
   * bucket with counts intact, a loss shows in the counts, and identical
   * content digests identically under any row order or partitioning. */
-class ReconcileSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("graft-reconcile-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class ReconcileSpec extends AnyFunSuite with SparkFixture {
 
   private def digest(rows: Seq[(Long, String)], parts: Int = 4) = {
     val s = spark

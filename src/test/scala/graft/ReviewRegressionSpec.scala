@@ -3,30 +3,21 @@ package graft
 import graft.csv.RawCell
 import graft.infer.{GoTimeFormat, TypeInference}
 import graft.pipeline.{CopyRead, CopyWrite}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
 
 /** Regression pins for the round-1 code-review findings — each test
   * fails on the pre-fix behavior. */
-class ReviewRegressionSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ReviewRegressionSpec extends AnyFunSuite with SparkFixture {
 
-  private var spark: SparkSession = _
   private val base = s"/root/repo/target/tmp/rr_${java.util.UUID.randomUUID().toString.take(8)}"
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("graft-regression-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
     Files.createDirectories(Paths.get(base))
   }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   /** Runs `f` with `spark.sql.files.maxPartitionBytes` lowered, so the
     * text scan under [[CopyWrite.read]] cuts one small file into many

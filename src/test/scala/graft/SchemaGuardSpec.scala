@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The schema-drift guard (Tables.logicalSchemas + Tables.normalize).
@@ -22,19 +20,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - a non-fixable drift (e.g. a key narrowed to int32) must throw
   *    SchemaDriftException naming the column.
   */
-class SchemaGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("graft-schema-guard-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class SchemaGuardSpec extends AnyFunSuite with SparkFixture {
 
   private def tmp(name: String): String = {
     val dir = new java.io.File(s"target/tmp/schemaguard/$name")

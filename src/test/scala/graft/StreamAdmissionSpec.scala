@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Specs for streaming delta-dedup admission (q149, 11th streaming
@@ -13,19 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * other's verdict mid-batch), and REJECTED docs never enter state;
   * (3) the admitted-state artifact contains exactly the admitted signed
   * docs; (4) delivery really was multi-batch. */
-class StreamAdmissionSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("graft-sda-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class StreamAdmissionSpec extends AnyFunSuite with SparkFixture {
 
   /** 24 distinct words per seed; word sets across seeds are disjoint
     * (position-salted), so only identical-seed docs can near-dup. */

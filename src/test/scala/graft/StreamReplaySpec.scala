@@ -1,9 +1,8 @@
 package graft
 
 import graft.ops.{Pipelines, Similarity}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Crash-replay idempotence for the foreachBatch streams (r13 verdict
@@ -24,22 +23,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * bit-identical. These specs run each stream to completion, then call
   * the extracted batch body a SECOND time for the middle wave and
   * assert nothing moved. */
-class StreamReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
+class StreamReplaySpec extends AnyFunSuite with SparkFixture {
 
-  private var spark: SparkSession = _
   private val sf = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("graft-stream-replay-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def rowsOf(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq

@@ -2,33 +2,17 @@ package graft
 
 import graft.streaming.StreamIngest
 import graft.pipeline.CopyRead
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
 
 /** Streaming ingest: file-source CSV stream → parse → inference →
   * checkpointed parquet sink; restart resumes without reprocessing
   * (the reference's token-checkpoint semantics, `read.go:100-107`). */
-class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StreamingSpec extends AnyFunSuite with SparkFixture {
 
-  private var spark: SparkSession = _
   private val base = s"/root/repo/target/tmp/stream_${java.util.UUID.randomUUID().toString.take(8)}"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-stream-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private val schema = StructType(Seq(
     StructField("id", LongType), StructField("name", StringType),

@@ -3,9 +3,7 @@ package graft
 import java.sql.Timestamp
 
 import graft.ops.{Dedup, Sampling, Similarity, Temporal, TextAnalysis}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Specs for the round-5 training-pipeline operators: temporal joins
@@ -14,20 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * DuckDB (q27/q28/q45-q48); these specs cover the semantics the oracle
   * can't see — tie rules, window boundaries, partition-layout
   * independence, quantization error bounds. */
-class TrainingOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class TrainingOpsSpec extends AnyFunSuite with SparkFixture {
 
-  private var spark: SparkSession = _
   private val sf = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .appName("graft-training-ops-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def ts(ms: Long) = new Timestamp(ms)
 
@@ -577,34 +564,6 @@ class TrainingOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val b = Similarity.kmeansIntOn(qe, k = 128, iters = 2).collect()
     assert(a.map(r => (r.getInt(0), r.getLong(1), r.getString(2))).toSeq ==
       b.map(r => (r.getInt(0), r.getLong(1), r.getString(2))).toSeq)
-  }
-
-  test("kmeansFit: folded seed+iter-1 action matches the legacy separate-seed path exactly") {
-    // r18 (the seed-fold optimization, guide §1.2): iteration 1 assigns
-    // via a broadcast join against the in-frame seeds and ONE action
-    // returns seeds + sums. Every arithmetic step is integer-exact, so
-    // the converged centroids must be IDENTICAL to the legacy
-    // collect-seeds-then-iterate path — on the real corpus and on a
-    // synthetic frame with exact-tie opportunities.
-    val s = spark
-    import s.implicits._
-    def comp(v: Long, i: Int): Double = {
-      val h = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"${v}_$i".getBytes("UTF-8"))
-      (((h(0) & 0xFF) << 8 | (h(1) & 0xFF)) % 255 - 127).toDouble
-    }
-    val synth = (0L until 300L).map(v => (v, (0 until 64).map(comp(v, _))))
-      .toDF("vec_id", "q8")
-    for (qe <- Seq(Similarity.quantizedEmbeddings(spark, sf), synth);
-         iters <- Seq(1, 2)) {
-      val folded = Similarity.kmeansFit(qe, k = 8, iters = iters)
-      spark.conf.set("graft.kmeans.seedFold", "off")
-      val legacy =
-        try Similarity.kmeansFit(qe, k = 8, iters = iters)
-        finally spark.conf.unset("graft.kmeans.seedFold")
-      assert(folded.map(_.toSeq).toSeq == legacy.map(_.toSeq).toSeq,
-        s"iters=$iters: folded centroids diverged from the legacy path")
-    }
   }
 
   test("semDedup: is_dup == exists same-cluster smaller-id pair at cos >= 2/5; layout independent") {

@@ -22,13 +22,13 @@ the r8 verdict noted nothing watches for that class automatically.
 """
 import sys, os, json, subprocess, glob, math
 
-SF = sys.argv[1] if len(sys.argv) > 1 and not sys.argv[1].startswith("--") else "/root/testdata/sf0.01"
+SF = os.path.abspath(sys.argv[1] if len(sys.argv) > 1 and not sys.argv[1].startswith("--") else "/root/testdata/sf0.01")
 # Targeted iteration (builder-local, never the gate): GRAFT_ONLY="q178_x
 # q179_y" runs Verify for just those queries; pair it with a scratch
 # GRAFT_VERIFY_OUT so stale full-gate dumps don't masquerade as rows-only.
-OUT = os.environ.get("GRAFT_VERIFY_OUT", "/root/repo/target/verify_out")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+OUT = os.path.abspath(os.environ.get("GRAFT_VERIFY_OUT", os.path.join(REPO, "target", "verify_out")))
 ONLY = os.environ.get("GRAFT_ONLY", "").split()
-REPO = "/root/repo"
 
 def run_verify():
     cp = f"{REPO}/target/scala-2.13/classes:" + ":".join(glob.glob("/opt/spark/jars/*.jar"))
@@ -41,7 +41,7 @@ def run_verify():
     env = dict(os.environ, SPARK_GRAFT_CPUS="8")
     cmd = ["java"] + opens + ["-Xmx8g","-Dspark.ui.enabled=false",
            "-Dspark.sql.session.timeZone=UTC","-cp",cp,"graft.Verify",SF,OUT] + ONLY
-    r = subprocess.run(cmd, capture_output=True, text=True, env=env)
+    r = subprocess.run(cmd, capture_output=True, text=True, env=env, cwd=REPO)
     for line in r.stderr.splitlines():
         if "[verify]" in line or "Exception" in line: print(line)
     if r.returncode != 0:

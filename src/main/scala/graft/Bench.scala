@@ -55,11 +55,9 @@ object Bench {
     // Clear only the UUID-named Derby dirs (the one scratch class that
     // still accumulates — booted databases can't reuse a fixed dir).
     // Gate queries clear their own fixed dirs on entry, and a wholesale
-    // target/tmp wipe here would destroy the q51 CSV artifact that the
-    // driver's DuckDB oracle reads AFTER Verify — bench must not race it.
-    Option(new java.io.File("target/tmp").listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("derby_"))
-      .foreach(f => scala.reflect.io.Path(f).deleteRecursively())
+    // wipe here would destroy the q51 CSV artifact that the driver's
+    // DuckDB oracle reads AFTER Verify — bench must not race it.
+    Scratch.sweep("derby_")
     // untimed warm-up: JIT, codegen cache, parquet footers
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }
@@ -67,7 +65,7 @@ object Bench {
     // artifacts untimed — signature + pair tables (LSH family), encoded
     // media + decoded stats (media family), quantized corpus (ANN
     // family). They are build-once per source content, so on a warm
-    // target/tmp this is a few _OK stats; on a cold one it moves the
+    // scratch root this is a few marker stats; on a cold one it moves the
     // one-time builds out of pass-1 timings, making per-query mins
     // measure the operator rather than "which queries ran before me".
     try {

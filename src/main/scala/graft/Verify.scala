@@ -13,8 +13,8 @@ object Verify {
     // must verify the configuration the bench actually runs
     val spark = Session.verify(sfDir)
     new java.io.File(outDir).mkdirs()
-    // wipe our scratch area (file-round-trip queries write here)
-    scala.reflect.io.Path("target/tmp").deleteRecursively()
+    // wipe the scratch root (file-round-trip queries write here)
+    Scratch.wipe()
     SparkEntry.queries.filter(kv => only(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -48,7 +48,7 @@ object Verify {
     downgrades.foreach(k => System.err.println(
       s"[verify] $k: auto-sized parameter departs from oracle literal at this corpus — dumped rows-only"))
     // q51's oracle reads the CSV artifact the engine just wrote under
-    // target/tmp — but ANY later re-run of q51 at this SF (a Bench pass,
+    // the scratch root — but ANY later re-run of q51 at this SF (a Bench pass,
     // a probe tool, a manual Verify) deletes and rewrites that dir, and
     // the driver's DuckDB pass reads it from a separate process AFTER
     // this JVM exits (r7 ADVICE: the coupling spanned three entry points
@@ -59,7 +59,7 @@ object Verify {
     // treats every outDir subdirectory as a query's parquet result.
     val q51Dst = new java.io.File(s"${outDir.stripSuffix("/")}_q51_artifact").getAbsoluteFile
     try {
-      val src = new java.io.File(graft.ops.Pipelines.q51ArtifactDirAbs(sfDir))
+      val src = new java.io.File(Scratch.abs(graft.ops.Pipelines.q51ArtifactName(sfDir)))
       scala.reflect.io.Path(q51Dst).deleteRecursively()
       q51Dst.mkdirs()
       Option(src.listFiles()).getOrElse(Array.empty)
@@ -92,7 +92,7 @@ object Verify {
     }
     val packDst = snapshot("q197", graft.ops.Sampling.packAllocDir(spark, sfDir))
     val rotDst = snapshot("q199", graft.ops.Similarity.opqRotationDir(spark, sfDir))
-    val jsonlDst = snapshot("q204", graft.ops.Pipelines.q204ArtifactDirAbs(sfDir))
+    val jsonlDst = snapshot("q204", Scratch.abs(graft.ops.Pipelines.q204ArtifactName(sfDir)))
     val ahashDst = snapshot("q205", graft.ops.Multimodal.ahashArtifactDir(spark, sfDir))
     val afpDst = snapshot("q207", graft.ops.Multimodal.audioFpArtifactDir(spark, sfDir))
     val json = SparkEntry.oracleSql.view

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Scratch, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -652,18 +652,11 @@ object Dedup {
     * At 100 TB this is the production shape: the signature table lives
     * next to the corpus and the daily batch never re-shingles it. */
   private def sigArtifactDir(s: SparkSession, d: String): String =
-    synchronized {
-      val dir = new java.io.File(
-        s"target/tmp/mhsig_${Tables.sourceFingerprint(d, "documents")}")
-      if (!new java.io.File(dir, "_OK").exists()) {
-        scala.reflect.io.Path(dir).deleteRecursively()
-        minhashSig(Tables.documents(s, d).select(col("doc_id"), col("text")))
-          .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt)
-          .write.mode("overwrite").parquet(s"$dir/sig")
-        new java.io.File(dir, "_OK").createNewFile()
-      }
-      s"${dir.getPath}/sig"
-    }
+    Scratch.artifact(s"mhsig_${Tables.sourceFingerprint(d, "documents")}") { dir =>
+      minhashSig(Tables.documents(s, d).select(col("doc_id"), col("text")))
+        .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt)
+        .write.mode("overwrite").parquet(s"$dir/sig")
+    } + "/sig"
 
   /** The portable corpus signature table — a plain scan of the
     * fingerprint-keyed artifact (see [[sigArtifactDir]]). Signatures are
@@ -1296,11 +1289,7 @@ object Dedup {
     * batch; bands in production are bucketed by (band, bucket) so a
     * batch touches only its colliding buckets. */
   def deltaDedup(s: SparkSession, d: String): DataFrame = {
-    val base = {
-      val dir = new java.io.File("target/tmp/delta_q127")
-      scala.reflect.io.Path(dir).deleteRecursively()
-      dir.getPath
-    }
+    val base = Scratch.fresh("delta_q127")
     val docs = Tables.documents(s, d)
     // the "prior run": the corpus slice's signatures come from the
     // persisted signature ARTIFACT (r14 — filter commutes with the
@@ -1391,19 +1380,10 @@ object Dedup {
     * cluster / audit policy derives from it — a cache is a latency
     * optimization on top, never the thing that defines the floor. */
   private def pairsArtifactDir(s: SparkSession, d: String): String =
-    synchronized {
-      val dir = new java.io.File(
-        // v1 format tag (the r14-advice rule): the pair schema
-        // (d1, d2, est_jaccard) is a code contract — bump on change
-        s"target/tmp/mhpairs_v1_${Tables.sourceFingerprint(d, "documents")}")
-      if (!new java.io.File(dir, "_OK").exists()) {
-        scala.reflect.io.Path(dir).deleteRecursively()
-        pairsFromSig(minhashSigShared(s, d))
-          .write.mode("overwrite").parquet(s"$dir/pairs")
-        new java.io.File(dir, "_OK").createNewFile()
-      }
-      s"${dir.getPath}/pairs"
-    }
+    Scratch.artifact(s"mhpairs_v1_${Tables.sourceFingerprint(d, "documents")}") { dir =>
+      pairsFromSig(minhashSigShared(s, d))
+        .write.mode("overwrite").parquet(s"$dir/pairs")
+    } + "/pairs"
 
   /** [[minhashLshPairs]] (portable variant): the pair table feeds q34
     * AND the cluster/audit consumers (q38/q107/q128/q142/q145/q151/
@@ -1486,7 +1466,6 @@ object Dedup {
     * downstream) rather than return unconverged ids. With doubling, 64
     * iterations covers any plausible graph. */
   def connectedComponents(edges: DataFrame, maxIters: Int = 64): DataFrame = {
-    val debug = sys.props.get("graft.cc.debug").contains("on")
     val spark = edges.sparkSession
     // canonical directed edge list: (u = larger id, v = smaller id)
     var e = edges
@@ -1521,8 +1500,6 @@ object Dedup {
         }
       }
       val nodes = es.flatMap(r => Seq(r.getLong(0), r.getLong(1))).distinct
-      if (debug) System.err.println(
-        s"[cc] driver route: ${es.length} edges, ${nodes.length} nodes")
       // r18 (VERDICT r17 item 3): distribute via parallelize, NOT
       // createDataset — a Dataset of a driver Seq is a LocalRelation
       // literal embedded in every consumer plan (and serialized into
@@ -1579,7 +1556,6 @@ object Dedup {
       changed =
         if (cnt2 != cnt) 1L
         else e2.exceptAll(e).count()
-      if (debug) System.err.println(s"[cc] star iter ${iter + 1} edges=$cnt2 changed=$changed")
       e = e2
       cnt = cnt2
       iter += 1
@@ -2141,11 +2117,7 @@ object Dedup {
     * batch edges against the label artifact plus a closure over the
     * condensed graph (bounded by components touched by the batch). */
   def incrementalComponents(s: SparkSession, d: String): DataFrame = {
-    val base = {
-      val dir = new java.io.File("target/tmp/inccc_q145")
-      scala.reflect.io.Path(dir).deleteRecursively()
-      dir.getPath
-    }
+    val base = Scratch.fresh("inccc_q145")
     val pairs = minhashLshPairsShared(s, d).select(col("d1"), col("d2"))
     // the "prior run": yesterday's labels, persisted
     connectedComponents(

@@ -2,7 +2,7 @@ package graft.ops
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
-import graft.Tables
+import graft.{Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -502,18 +502,11 @@ object Multimodal {
     * synthesizing payloads is test-fixture construction, which belongs
     * in a build-once artifact, not in every measured decode. */
   private def mediaArtifact(s: SparkSession, d: String): String =
-    synchronized {
-      val dir = new java.io.File(
-        s"target/tmp/media_${Tables.sourceFingerprint(d, "documents")}")
-      if (!new java.io.File(dir, "_OK").exists()) {
-        scala.reflect.io.Path(dir).deleteRecursively()
-        realMediaPlan(s, d).toDF()
-          .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt)
-          .write.mode("overwrite").parquet(s"$dir/media")
-        new java.io.File(dir, "_OK").createNewFile()
-      }
-      s"${dir.getPath}/media"
-    }
+    Scratch.artifact(s"media_${Tables.sourceFingerprint(d, "documents")}") { dir =>
+      realMediaPlan(s, d).toDF()
+        .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt)
+        .write.mode("overwrite").parquet(s"$dir/media")
+    } + "/media"
 
   /** Build-once path of [[decodedStats]]: every payload through its
     * real decoder ONCE per source content, stats persisted
@@ -533,50 +526,40 @@ object Multimodal {
   private[graft] val VideoStride = 4
 
   private def statsArtifactDir(s: SparkSession, d: String): String =
-    synchronized {
-      val dir = new java.io.File(
-        // v1 format tag (the r14-advice rule): the MediaStats schema is
-        // a code contract — bump on change so a stale artifact can't
-        // serve old-format columns. r15 advice: the key additionally
-        // carries the codec revision and the video stride, the two
-        // code-derived inputs the stats are a function of, so a codec or
-        // stride change invalidates the artifact without a manual bump.
-        s"target/tmp/mediastats_v1_${JdkCodec.CodecRev}_s${VideoStride}_" +
-          Tables.sourceFingerprint(d, "documents"))
-      if (!new java.io.File(dir, "_OK").exists()) {
-        scala.reflect.io.Path(dir).deleteRecursively()
-        import s.implicits._
-        s.read.parquet(mediaArtifact(s, d)).as[MediaRow]
-          .mapPartitions { it =>
-            it.map { r =>
-              r.kind match {
-                case "image" =>
-                  val st = JdkCodec.decodeImage(r.payload)
-                  val rs = JdkCodec.decodeResize2(r.payload)
-                  MediaStats(r.media_id, r.kind,
-                    st.width, st.height, st.nChannels, st.sumPx,
-                    rs.width, rs.height, rs.sumPx,
-                    0, 0, 0L, 0L, 0L, 0, 0, 0L)
-                case "audio" =>
-                  val st = JdkCodec.decodeAudio(r.payload)
-                  MediaStats(r.media_id, r.kind,
-                    0, 0, 0, 0L, 0, 0, 0L,
-                    st.nChannels, st.sampleRate, st.nFrames, st.durationMs,
-                    st.sumSamples, 0, 0, 0L)
-                case _ =>
-                  val st = JdkCodec.sampleVideoFrames(r.payload, VideoStride)
-                  MediaStats(r.media_id, r.kind,
-                    0, 0, 0, 0L, 0, 0, 0L,
-                    0, 0, 0L, 0L, 0L,
-                    st.nFrames, st.nSampled, st.sumSampled)
-              }
+    // the key carries the codec revision and the video stride, the two
+    // code-derived inputs the stats are a function of, so a codec or
+    // stride change invalidates the artifact without a manual bump
+    Scratch.artifact(s"mediastats_v1_${JdkCodec.CodecRev}_s${VideoStride}_" +
+        Tables.sourceFingerprint(d, "documents")) { dir =>
+      import s.implicits._
+      s.read.parquet(mediaArtifact(s, d)).as[MediaRow]
+        .mapPartitions { it =>
+          it.map { r =>
+            r.kind match {
+              case "image" =>
+                val st = JdkCodec.decodeImage(r.payload)
+                val rs = JdkCodec.decodeResize2(r.payload)
+                MediaStats(r.media_id, r.kind,
+                  st.width, st.height, st.nChannels, st.sumPx,
+                  rs.width, rs.height, rs.sumPx,
+                  0, 0, 0L, 0L, 0L, 0, 0, 0L)
+              case "audio" =>
+                val st = JdkCodec.decodeAudio(r.payload)
+                MediaStats(r.media_id, r.kind,
+                  0, 0, 0, 0L, 0, 0, 0L,
+                  st.nChannels, st.sampleRate, st.nFrames, st.durationMs,
+                  st.sumSamples, 0, 0, 0L)
+              case _ =>
+                val st = JdkCodec.sampleVideoFrames(r.payload, VideoStride)
+                MediaStats(r.media_id, r.kind,
+                  0, 0, 0, 0L, 0, 0, 0L,
+                  0, 0, 0L, 0L, 0L,
+                  st.nFrames, st.nSampled, st.sumSampled)
             }
-          }.toDF()
-          .write.mode("overwrite").parquet(s"$dir/stats")
-        new java.io.File(dir, "_OK").createNewFile()
-      }
-      s"${dir.getPath}/stats"
-    }
+          }
+        }.toDF()
+        .write.mode("overwrite").parquet(s"$dir/stats")
+    } + "/stats"
 
   /** The decoded-stats table — a plain scan of the fingerprint-keyed
     * artifact (see [[statsArtifactDir]]). All values are exact ints/
@@ -823,29 +806,22 @@ object Multimodal {
     * once per source content; the gate face and the oracle both replay
     * PAIRING from this table. */
   private[graft] def ahashArtifactDir(s: SparkSession, d: String): String =
-    synchronized {
-      val dir = new java.io.File(
-        s"target/tmp/ahash_v1_${JdkCodec.CodecRev}_" +
-          Tables.sourceFingerprint(d, "documents"))
-      if (!new java.io.File(dir, "_OK").exists()) {
-        scala.reflect.io.Path(dir).deleteRecursively()
-        import s.implicits._
-        val corpus = s.read.parquet(mediaArtifact(s, d)).as[MediaRow]
-          .filter(_.kind == "image")
-          .mapPartitions(it =>
-            it.map(r => (r.media_id, JdkCodec.aHash(r.payload))))
-        val canaries = s.createDataset(AHashCanaryIds)
-          .mapPartitions(it => it.flatMap { id =>
-            Seq((-(id + 1L), JdkCodec.aHash(JdkCodec.encodeBmp(id))),
-              (-(id + 1001L), JdkCodec.aHash(JdkCodec.encodePngPerturbed(id))))
-          })
-        corpus.union(canaries).toDF("media_id", "ahash")
-          .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt)
-          .write.mode("overwrite").parquet(s"$dir/ahash")
-        new java.io.File(dir, "_OK").createNewFile()
-      }
-      s"${dir.getPath}/ahash"
-    }
+    Scratch.artifact(s"ahash_v1_${JdkCodec.CodecRev}_" +
+        Tables.sourceFingerprint(d, "documents")) { dir =>
+      import s.implicits._
+      val corpus = s.read.parquet(mediaArtifact(s, d)).as[MediaRow]
+        .filter(_.kind == "image")
+        .mapPartitions(it =>
+          it.map(r => (r.media_id, JdkCodec.aHash(r.payload))))
+      val canaries = s.createDataset(AHashCanaryIds)
+        .mapPartitions(it => it.flatMap { id =>
+          Seq((-(id + 1L), JdkCodec.aHash(JdkCodec.encodeBmp(id))),
+            (-(id + 1001L), JdkCodec.aHash(JdkCodec.encodePngPerturbed(id))))
+        })
+      corpus.union(canaries).toDF("media_id", "ahash")
+        .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt)
+        .write.mode("overwrite").parquet(s"$dir/ahash")
+    } + "/ahash"
 
   /** q205 — image near-duplicate pairs by perceptual hash, TWO-LEVEL
     * (the production image-dedup shape): first collapse EXACT hash
@@ -946,31 +922,24 @@ object Multimodal {
   /** Build-once per-audio fingerprint table — the [[ahashArtifactDir]]
     * convention for the audio leg. */
   private[graft] def audioFpArtifactDir(s: SparkSession, d: String): String =
-    synchronized {
-      val dir = new java.io.File(
-        s"target/tmp/afp_v1_${JdkCodec.CodecRev}_" +
-          Tables.sourceFingerprint(d, "documents"))
-      if (!new java.io.File(dir, "_OK").exists()) {
-        scala.reflect.io.Path(dir).deleteRecursively()
-        import s.implicits._
-        val corpus = s.read.parquet(mediaArtifact(s, d)).as[MediaRow]
-          .filter(_.kind == "audio")
-          .mapPartitions(it =>
-            it.map(r => (r.media_id, JdkCodec.audioFingerprint(r.payload))))
-        val canaries = s.createDataset(AudioFpCanaryIds)
-          .mapPartitions(it => it.flatMap { id =>
-            Seq((-(id + 1L),
-                JdkCodec.audioFingerprint(JdkCodec.encodeAiff(id))),
-              (-(id + 1001L),
-                JdkCodec.audioFingerprint(JdkCodec.encodeWavPerturbed(id))))
-          })
-        corpus.union(canaries).toDF("media_id", "afp")
-          .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt)
-          .write.mode("overwrite").parquet(s"$dir/afp")
-        new java.io.File(dir, "_OK").createNewFile()
-      }
-      s"${dir.getPath}/afp"
-    }
+    Scratch.artifact(s"afp_v1_${JdkCodec.CodecRev}_" +
+        Tables.sourceFingerprint(d, "documents")) { dir =>
+      import s.implicits._
+      val corpus = s.read.parquet(mediaArtifact(s, d)).as[MediaRow]
+        .filter(_.kind == "audio")
+        .mapPartitions(it =>
+          it.map(r => (r.media_id, JdkCodec.audioFingerprint(r.payload))))
+      val canaries = s.createDataset(AudioFpCanaryIds)
+        .mapPartitions(it => it.flatMap { id =>
+          Seq((-(id + 1L),
+              JdkCodec.audioFingerprint(JdkCodec.encodeAiff(id))),
+            (-(id + 1001L),
+              JdkCodec.audioFingerprint(JdkCodec.encodeWavPerturbed(id))))
+        })
+      corpus.union(canaries).toDF("media_id", "afp")
+        .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt)
+        .write.mode("overwrite").parquet(s"$dir/afp")
+    } + "/afp"
 
   /** q207 — audio near-duplicate pairs: [[imageDupPairs]]'s two-level
     * shape (exact-fingerprint collapse, then pigeonhole-complete

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{CopyConfig, Tables}
+import graft.{CopyConfig, Scratch, Tables}
 import graft.infer.TypeInference
 import graft.pipeline.{CopyRead, CopyWrite}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -14,18 +14,6 @@ import org.apache.spark.sql.types._
 object Pipelines {
 
   private val cfg = CopyConfig()
-
-  /** Per-query scratch dir, cwd-relative (`target/tmp`, same convention as
-    * Bench) so the library is portable off this box. Fixed name, CLEARED ON
-    * ENTRY: repeated correctness/bench runs can't accumulate sink/state
-    * data, and a stale streaming checkpoint can't mark the input
-    * already-processed. Safe because each gate query materializes its
-    * result before the next run of the same query re-enters. */
-  private def freshTmp(name: String): String = {
-    val dir = new java.io.File(s"target/tmp/$name")
-    scala.reflect.io.Path(dir).deleteRecursively()
-    dir.getPath
-  }
 
   /** Runs independent driver-side jobs on a pool of `threads`, waits
     * for all of them and returns their values in submission order. On
@@ -223,11 +211,6 @@ object Pipelines {
   def q51ArtifactName(d: String): String =
     s"roundtrip_q51_${d.replaceAll("[^A-Za-z0-9.]", "_")}"
 
-  /** Absolute artifact glob base for [[csvRoundtripSql]]'s placeholder —
-    * resolved by Verify at dump time (same JVM + cwd as the query run). */
-  def q51ArtifactDirAbs(d: String): String =
-    new java.io.File(s"target/tmp/${q51ArtifactName(d)}").getAbsolutePath
-
   /** Full write→read round-trip through real files: lineitem → typed CSV
     * (CopyRead rendering) → CopyWrite parse + schema'd inference → compare.
     *
@@ -242,7 +225,7 @@ object Pipelines {
     * the artifact and the engine consumes the source. Since r8 the
     * oracle no longer races later q51 re-runs: Verify SNAPSHOTS the part
     * files into its own outDir at dump time and substitutes that path,
-    * so Bench/probe re-runs rewriting target/tmp can't clobber what
+    * so Bench/probe re-runs rewriting the scratch dir can't clobber what
     * DuckDB reads. The internal write→read comparison (xxhash signature
     * over the read-back path) still runs and THROWS on mismatch, so the
     * engine's own parse path stays asserted too. */
@@ -261,7 +244,7 @@ object Pipelines {
     * those two columns and measures the bare round-trip. */
   private[graft] def csvRoundtripImpl(s: SparkSession, d: String,
       withDigest: Boolean): DataFrame = {
-    val tmp = freshTmp(q51ArtifactName(d))
+    val tmp = Scratch.fresh(q51ArtifactName(d))
     val src = Tables.lineitem(s, d)
       .select(col("l_orderkey"), col("l_linenumber").cast(LongType).as("l_linenumber"),
         col("l_returnflag"), col("l_shipdate").cast(TimestampType).as("l_shipdate"),
@@ -271,10 +254,9 @@ object Pipelines {
     // default parallelism, not a constant 32 (r18, VERDICT r17 item 6 /
     // guide §6): at local[32] this is the identical plan, on a cluster
     // the write side scales with the executors instead of being pinned
-    // to one node's worth of tasks. Overridable for probes.
-    val fanOut = s.conf.getOption("graft.q51.writeParts")
-      .map(_.toInt).getOrElse(s.sparkContext.defaultParallelism)
-    CopyRead.run(s, src.repartition(fanOut), src.columns.toSeq, "l_orderkey", cfg, tmp)
+    // to one node's worth of tasks.
+    CopyRead.run(s, src.repartition(s.sparkContext.defaultParallelism),
+      src.columns.toSeq, "l_orderkey", cfg, tmp)
     val schema = StructType(Seq(
       StructField("l_orderkey", LongType), StructField("l_linenumber", LongType),
       StructField("l_returnflag", StringType), StructField("l_shipdate", TimestampType),
@@ -319,7 +301,7 @@ object Pipelines {
   }
 
   /** Oracle for q51 — see [[csvRoundtrip]]. `__Q51_ARTIFACT__` is replaced
-    * by Verify with [[q51ArtifactDirAbs]] at oracle-dump time. */
+    * by Verify with the artifact's absolute path at oracle-dump time. */
   val csvRoundtripSql: String =
     """WITH back AS (
       |  SELECT l_orderkey, l_linenumber, l_returnflag,
@@ -349,9 +331,6 @@ object Pipelines {
   def q204ArtifactName(d: String): String =
     s"jsonl_q204_${d.replaceAll("[^A-Za-z0-9.]", "_")}"
 
-  def q204ArtifactDirAbs(d: String): String =
-    new java.io.File(s"target/tmp/${q204ArtifactName(d)}").getAbsolutePath
-
   /** JSONL (newline-delimited JSON) sink + re-read round-trip — the
     * interchange format every LLM-data pipeline actually ships beside
     * parquet. Where the reference's CSV sink must hand-build framing
@@ -379,7 +358,7 @@ object Pipelines {
     * valid JSONL, exactly like the CSV sink's part files). */
   def jsonlRoundtrip(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val tmp = freshTmp(q204ArtifactName(d))
+    val tmp = Scratch.fresh(q204ArtifactName(d))
     val subset = Tables.documents(s, d).where(col("doc_id") % 11 === 0)
       .select(col("doc_id"), col("text"), col("lang"), col("source"),
         col("n_chars"))
@@ -450,7 +429,7 @@ object Pipelines {
       .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
     // `div`: long division to match the oracle's `//` (plain `/` is double)
     val bound = src.agg(expr("max(o_orderkey) div 2").as("bound"))
-    val tmp = freshTmp("dsv2agg_q53")
+    val tmp = Scratch.fresh("dsv2agg_q53")
     CopyRead.run(s, src.repartition(8), src.columns.toSeq, "o_orderkey", cfg, tmp)
     val schema = StructType(Seq(
       StructField("o_orderkey", LongType), StructField("o_orderpriority", StringType),
@@ -494,7 +473,7 @@ object Pipelines {
     * and measures only the stream path + sink aggregation. */
   private[graft] def streamIngestSummaryImpl(s: SparkSession, d: String,
       measureSource: Boolean): DataFrame = {
-    val base = freshTmp("stream_q54")
+    val base = Scratch.fresh("stream_q54")
     val src = Tables.orders(s, d)
       .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
     CopyRead.run(s, src.repartition(8), src.columns.toSeq, "o_orderkey", cfg, s"$base/csv")
@@ -551,7 +530,7 @@ object Pipelines {
       .select(col("user_id"), col("ts"), col("event_id"))
     val views = src().where(col("event_type") === "view")
       .select(col("user_id"), col("ts").as("rts"), col("value"))
-    val base = freshTmp("sij_q57")
+    val base = Scratch.fresh("sij_q57")
     runStream(s) {
       graft.streaming.StreamIngest
       .intervalJoinStream(signups, views, "user_id") // [ts, ts+24h), q46's window
@@ -594,7 +573,7 @@ object Pipelines {
       .select(col("user_id"), col("ts"), col("event_id"))
     val views = src().where(col("event_type") === "view")
       .select(col("user_id"), col("ts").as("rts"), col("value"))
-    val base = freshTmp("soj_q108")
+    val base = Scratch.fresh("soj_q108")
     runStream(s) {
       graft.streaming.StreamIngest
       .intervalJoinStreamOuter(signups, views, "user_id")
@@ -654,14 +633,14 @@ object Pipelines {
     * tasks×cap partial entries, the q104 argument per batch. */
   /** Where [[streamHeavyHitters]] stages its delivery files — exposed for
     * the q111 spec's multi-batch assertion so the test doesn't re-derive
-    * freshTmp's internal layout (a rename here updates both sides). */
+    * Scratch.fresh's layout (a rename here updates both sides). */
   private[graft] def streamHeavyHittersInputDir: java.io.File =
-    new java.io.File(s"target/tmp/$ShhName/in")
+    new java.io.File(Scratch.path(s"$ShhName/in"))
   private val ShhName = "shh_q111"
 
   def streamHeavyHitters(s: SparkSession, d: String): DataFrame = {
     val cap = 64
-    val base = freshTmp(ShhName)
+    val base = Scratch.fresh(ShhName)
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
     (0 until 3).foreach(i => docs.where(pmod(col("doc_id"), lit(3)) === i)
       .coalesce(1).write.mode("append").parquet(s"$base/in"))
@@ -717,7 +696,7 @@ object Pipelines {
     * hand-waving — the inequality IS the assertion. */
   def streamWindows(s: SparkSession, d: String): DataFrame = {
     val ev = eventStream(s, d).select(col("ts"), col("event_type"), col("value"))
-    val base = freshTmp("swin_q58")
+    val base = Scratch.fresh("swin_q58")
     runStream(s) {
       graft.streaming.StreamIngest
       .windowedEventCounts(ev, watermark = "0 seconds", window_ = "10 minutes")
@@ -748,7 +727,7 @@ object Pipelines {
     * EVICTION is spec-tested in StreamingSpec with multi-batch input. */
   def streamDedup(s: SparkSession, d: String): DataFrame = {
     val ev = eventStream(s, d).select(col("ts"), col("user_id"), col("event_type"))
-    val base = freshTmp("sdd_q59")
+    val base = Scratch.fresh("sdd_q59")
     runStream(s) {
       graft.streaming.StreamIngest
       .dedupStream(ev, Seq("user_id", "event_type"), watermark = "10 minutes")
@@ -777,7 +756,7 @@ object Pipelines {
       .select(col("user_id"), col("event_type"), col("value"))
     val dim = Tables.customer(s, d)
       .select(col("c_custkey").as("user_id"), col("c_mktsegment").as("segment"))
-    val base = freshTmp("enr_q91")
+    val base = Scratch.fresh("enr_q91")
     runStream(s) {
       graft.streaming.StreamIngest.enrichStream(ev, dim, "user_id")
       .select(col("segment"), col("event_type"), col("value"))
@@ -803,11 +782,10 @@ object Pipelines {
     * parquet table, so typed fidelity through DDL + INSERT + JDBC scan
     * must be value-exact. */
   def jdbcRoundtrip(s: SparkSession, d: String): DataFrame = {
-    // UUID dir, NOT freshTmp: embedded Derby keeps each booted database
-    // open for the JVM's lifetime, so clearing a fixed dir on re-entry
-    // would yank files out from under a live engine. Bench/Verify clear
-    // target/tmp wholesale at startup, before any database boots.
-    val db = s"target/tmp/derby_${java.util.UUID.randomUUID().toString.take(8)}"
+    // a unique dir, never deleted here: embedded Derby keeps each booted
+    // database open for the JVM's lifetime. Bench sweeps the `derby_`
+    // dirs and Verify the whole root, at startup, before any boots.
+    val db = Scratch.unique("derby")
     val u = graft.sources.JdbcBackend.derbyUrl(db)
     val src = Tables.supplier(s, d)
       .select(col("s_suppkey"), col("s_nationkey"), col("s_acctbal"))
@@ -892,7 +870,7 @@ object Pipelines {
   def cdcApplyStreamSummary(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import graft.streaming.CdcApply
-    val base = freshTmp("cdc_q103")
+    val base = Scratch.fresh("cdc_q103")
     val tiers = Reconcile.changeLogTiers(Tables.orders(s, d))
     // r18 (§2.6 overlap independent jobs): the six tier builds are
     // independent filtered scans of orders — previously six SEQUENTIAL
@@ -1013,7 +991,7 @@ object Pipelines {
       |  (SELECT n FROM dig) AS n_batch, (SELECT n FROM dig) AS n_stream,
       |  (SELECT x FROM dig) AS xor_batch, (SELECT x FROM dig) AS xor_stream""".stripMargin
 
-  // staging dir name for q138's delivery files (freshTmp key)
+  // staging dir name for q138's delivery files (Scratch.fresh key)
   private val SraName = "sra_q138"
 
   /** Gate face (q138) for [[graft.streaming.RollingAnomaly]] — the
@@ -1030,7 +1008,7 @@ object Pipelines {
   def streamRollingAnomaly(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import graft.streaming.RollingAnomaly
-    val base = freshTmp(SraName)
+    val base = Scratch.fresh(SraName)
     val ev = Tables.events(s, d)
       .select(col("user_id"), expr("unix_timestamp(ts) div 86400").as("day"))
     val mm = ev.agg(min(col("day")), max(col("day"))).head
@@ -1066,9 +1044,9 @@ object Pipelines {
 
   /** Where [[streamDeadLetter]] stages its delivery files — exposed for
     * the q121 spec's multi-batch assertion (the q111 convention: the
-    * test must not re-derive freshTmp's internal layout). */
+    * test must not re-derive Scratch.fresh's layout). */
   private[graft] def streamDeadLetterInputDir: java.io.File =
-    new java.io.File(s"target/tmp/$DlqName/in")
+    new java.io.File(Scratch.path(s"$DlqName/in"))
   private val DlqName = "dlq_q121"
 
   /** Gate face (q121) — streaming late-data DEAD-LETTER routing
@@ -1088,7 +1066,7 @@ object Pipelines {
   def streamDeadLetter(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import graft.streaming.DeadLetter
-    val base = freshTmp(DlqName)
+    val base = Scratch.fresh(DlqName)
     val ev = Tables.events(s, d)
       .select(col("event_type"), col("event_id"),
         unix_timestamp(col("ts")).as("t"))
@@ -1315,7 +1293,7 @@ object Pipelines {
   /** Where [[streamDedupAdmission]] stages its delivery files — exposed
     * for the q149 spec's multi-batch assertion (the q111 convention). */
   private[graft] def streamDedupAdmissionInputDir: java.io.File =
-    new java.io.File(s"target/tmp/$SdaName/in")
+    new java.io.File(Scratch.path(s"$SdaName/in"))
   /** The admitted-state artifact, exposed for the spec's state growth
     * assertion. r13: ONE artifact (signatures; band buckets are derived
     * at read time — a cheap map over table-sized state beats a second
@@ -1323,7 +1301,7 @@ object Pipelines {
     * discovery keeps the parent readable while each batch's write stays
     * an idempotent per-batch overwrite. */
   private[graft] def streamDedupAdmissionStateDirs: Seq[java.io.File] =
-    Seq(new java.io.File(s"target/tmp/$SdaName/adm_sig"))
+    Seq(new java.io.File(Scratch.path(s"$SdaName/adm_sig")))
 
   /** q149 — STREAMING DELTA-DEDUP ADMISSION (11th streaming class):
     * q127's admission screening run as a real multi-batch stream. New
@@ -1369,7 +1347,7 @@ object Pipelines {
     * q138 convention; a verdict that leaked across the wrong wave
     * boundary, double-counted a dup, or lost state diverges the hash. */
   def streamDedupAdmission(s: SparkSession, d: String): DataFrame = {
-    val base = freshTmp(SdaName)
+    val base = Scratch.fresh(SdaName)
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
     // r18 (§2.6 overlap independent jobs, the q103 tier-write pattern):
     // the setup's two halves are independent — (a) the corpus index
@@ -1591,7 +1569,7 @@ object Pipelines {
   /** Where [[streamIndexMaintenance]] stages its delivery files —
     * exposed for the spec's multi-batch assertion. */
   private[graft] def streamIndexMaintenanceInputDir: java.io.File =
-    new java.io.File(s"target/tmp/$SimName/in")
+    new java.io.File(Scratch.path(s"$SimName/in"))
 
   /** q161 — STREAMING ANN INDEX MAINTENANCE (12th streaming class):
     * q126's daily-batch increment run as a real multi-batch stream, the
@@ -1615,11 +1593,10 @@ object Pipelines {
     * against the index — cost ∝ the wave, never the corpus; the
     * centroid grid is the q143 bounded-anchor literal. */
   def streamIndexMaintenance(s: SparkSession, d: String): DataFrame = {
-    val base = freshTmp(SimName)
+    val base = Scratch.fresh(SimName)
     val qe = Similarity.quantizedEmbeddings(s, d)
     val existing = qe.where(col("vec_id") % 10 =!= 0)
-    val cent = qe.where(col("vec_id") % 100 === 0 && col("vec_id") < 6400)
-      .select(col("vec_id").as("cent_id"), col("q8").as("cq"))
+    val cent = Similarity.fixedCells(qe)
     // the "prior run": existing corpus routed + persisted by cell
     Similarity.assignCells(s, existing, cent)
       .select(col("vec_id"), col("cent_id"))
@@ -1760,7 +1737,7 @@ object Pipelines {
   /** Where [[streamErasure]] stages its delivery files — exposed for
     * the spec's replay assertion. */
   private[graft] def streamErasureInputDir: java.io.File =
-    new java.io.File(s"target/tmp/$SeName/in")
+    new java.io.File(Scratch.path(s"$SeName/in"))
 
   /** q175 — STREAMING ERASURE PROPAGATION (13th streaming class): the
     * right-to-be-forgotten queue as a real multi-batch stream — q166's
@@ -1790,17 +1767,14 @@ object Pipelines {
     * affected cells' survivors — cost ∝ the requests and the cells
     * they name, never the index; the audit legs are id-only joins. */
   def streamErasure(s: SparkSession, d: String): DataFrame = {
-    val base = freshTmp(SeName)
+    val base = Scratch.fresh(SeName)
     val qe = Similarity.quantizedEmbeddings(s, d)
-    val cent = qe.where(col("vec_id") % 100 === 0 && col("vec_id") < 6400)
-      .select(col("vec_id").as("cent_id"), col("q8").as("cq"))
+    val cent = Similarity.fixedCells(qe)
     // the serving index: the FULL corpus routed + persisted by cell —
     // cloned from the pristine fingerprint-keyed artifact (hardlinks,
     // r14: the erasure mutates the clone, so the corpus-sized route +
     // write is paid once per source content, not per invocation)
-    Similarity.copyDir(
-      new java.io.File(Similarity.fullIndexArtifact(s, d, cent)),
-      new java.io.File(s"$base/index"))
+    Scratch.cloneDir(Similarity.fullIndexArtifact(s, d, cent), s"$base/index")
     // erasure requests: subjects vec_id % 10 = 0, delivered in three
     // waves by (vec_id div 10) % 3 (the q161 mtime trick)
     val subjects = qe.where(col("vec_id") % 10 === 0)
@@ -1954,7 +1928,7 @@ object Pipelines {
   /** Where [[streamDriftMonitor]] stages its delivery files — exposed
     * for the replay spec. */
   private[graft] def streamDriftMonitorInputDir: java.io.File =
-    new java.io.File(s"target/tmp/$SdrName/in")
+    new java.io.File(Scratch.path(s"$SdrName/in"))
 
   /** q182 — STREAMING CORPUS-DRIFT MONITOR (14th streaming class):
     * q139's distribution-drift audit as a CONTINUOUS property of an
@@ -1983,7 +1957,7 @@ object Pipelines {
     * the |langs|-bounded profile tables; the reference broadcast is
     * |langs| rows. Nothing corpus-sized shuffles per wave. */
   def streamDriftMonitor(s: SparkSession, d: String): DataFrame = {
-    val base = freshTmp(SdrName)
+    val base = Scratch.fresh(SdrName)
     val docs = Tables.documents(s, d).select(col("doc_id"), col("lang"))
     // the prior-release reference profile, persisted once (the artifact
     // a real monitor loads at start)
@@ -2092,7 +2066,7 @@ object Pipelines {
   /** Where [[streamBudgetAdmission]] stages its delivery files —
     * exposed for the replay spec. */
   private[graft] def streamBudgetAdmissionInputDir: java.io.File =
-    new java.io.File(s"target/tmp/$SbaName/in")
+    new java.io.File(Scratch.path(s"$SbaName/in"))
 
   /** Per-source token budget of [[streamBudgetAdmission]]'s gate face —
     * sized so sources close in DIFFERENT waves at sf0.01 (~65 tokens/
@@ -2126,7 +2100,7 @@ object Pipelines {
     * re-derivation here is what makes replay receipts bit-stable);
     * receipts are |1|-row. */
   def streamBudgetAdmission(s: SparkSession, d: String): DataFrame = {
-    val base = freshTmp(SbaName)
+    val base = Scratch.fresh(SbaName)
     val docs = graft.ops.TextAnalysis.sourceQualityFrame(s, d)
       .select(col("doc_id"), col("source"), col("nt"))
     val inDir = streamBudgetAdmissionInputDir

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Scratch, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, MapType, StringType}
@@ -994,21 +994,13 @@ object Relational {
           struct(lit(n).as("col_name"), col(s"arr_$n").as("arr"))): _*)).as("r"))
         .select(col("r.col_name").as("col_name"), col("r.arr").as("arr"))
     }
-    // yesterday's sketches: persisted once, keyed on source content +
-    // a format version (r14 advice: the sketch layout is coupled to
-    // KmvAgg's code — bump the tag on any schema/semantics change so a
-    // stale committed artifact can't serve old-format rows)
-    val art = new java.io.File(
-      s"target/tmp/kmvprof_v2_${Tables.sourceFingerprint(d, "orders")}")
-    this.synchronized {
-      if (!new java.io.File(art, "_OK").exists()) {
-        scala.reflect.io.Path(art).deleteRecursively()
-        sketchRows(orders.where(col("o_orderkey") % 10 =!= 0))
-          .coalesce(1).write.mode("overwrite").parquet(s"${art.getPath}/sk")
-        new java.io.File(art, "_OK").createNewFile()
-      }
+    // yesterday's sketches, persisted once (the layout is KmvAgg's, so
+    // the key's version tag moves with that code)
+    val art = Scratch.artifact(s"kmvprof_v2_${Tables.sourceFingerprint(d, "orders")}") { dir =>
+      sketchRows(orders.where(col("o_orderkey") % 10 =!= 0))
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/sk")
     }
-    val hist = s.read.parquet(s"${art.getPath}/sk")
+    val hist = s.read.parquet(s"$art/sk")
     val delta = sketchRows(orders.where(col("o_orderkey") % 10 === 0))
     def estOf(arr: Column): Column =
       when(size(arr) < KmvK, size(arr).cast("long"))
@@ -1743,11 +1735,7 @@ object Relational {
     * refresh. At 100 TB the artifact is |groups| rows; the refresh
     * cost is O(delta), independent of history size. */
   def incrementalAgg(s: SparkSession, d: String): DataFrame = {
-    val base = {
-      val dir = new java.io.File("target/tmp/incr_q137")
-      scala.reflect.io.Path(dir).deleteRecursively()
-      dir.getPath
-    }
+    val base = Scratch.fresh("incr_q137")
     val ev = Tables.events(s, d)
       .select(col("event_type"), col("event_id"), col("value"))
     def aggOf(df: DataFrame): DataFrame = df.groupBy(col("event_type"))

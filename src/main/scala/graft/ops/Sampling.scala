@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Scratch, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -565,29 +565,20 @@ object Sampling {
     * is inherently sequential: no SQL engine can express it, but both
     * engines can replay the interval arithmetic bit-for-bit. */
   private[graft] def packAllocDir(s: SparkSession, d: String): String =
-    synchronized {
-      val dir = new java.io.File(
-        // v1 format tag + cap in the key (the r15-advice rule: every
-        // code input the artifact is a function of keys the dir)
-        s"target/tmp/packalloc_v1_c${PackCap}_" +
-          Tables.sourceFingerprint(d, "documents"))
-      if (!new java.io.File(dir, "_OK").exists()) {
-        scala.reflect.io.Path(dir).deleteRecursively()
-        val hist = Tables.documents(s, d)
-          .select(packLen(col("text"), PackCap).as("len"))
-          .groupBy(col("len")).agg(count(lit(1)).as("cnt"))
-          .collect() // bounded: ≤ PackCap rows at ANY corpus size
-          .map(r => (r.getLong(0), r.getLong(1))).toSeq
-        val (alloc, _) = ffdPack(hist, PackCap)
-        import s.implicits._
-        alloc.map(a => (a.len, a.rankStart, a.rankEnd, a.binStart,
-          a.docsPerBin))
-          .toDF("len", "rank_start", "rank_end", "bin_start", "docs_per_bin")
-          .coalesce(1).write.mode("overwrite").parquet(s"$dir/alloc")
-        new java.io.File(dir, "_OK").createNewFile()
-      }
-      s"${dir.getPath}/alloc"
-    }
+    Scratch.artifact(s"packalloc_v1_c${PackCap}_" +
+        Tables.sourceFingerprint(d, "documents")) { dir =>
+      val hist = Tables.documents(s, d)
+        .select(packLen(col("text"), PackCap).as("len"))
+        .groupBy(col("len")).agg(count(lit(1)).as("cnt"))
+        .collect() // bounded: ≤ PackCap rows at ANY corpus size
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq
+      val (alloc, _) = ffdPack(hist, PackCap)
+      import s.implicits._
+      alloc.map(a => (a.len, a.rankStart, a.rankEnd, a.binStart,
+        a.docsPerBin))
+        .toDF("len", "rank_start", "rank_end", "bin_start", "docs_per_bin")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/alloc")
+    } + "/alloc"
 
   /** q197 — ATOMIC-DOCUMENT BIN PACKING (first-fit decreasing): the
     * packing discipline q49 deliberately trades away — q49

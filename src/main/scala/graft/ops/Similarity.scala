@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Scratch, Tables}
 import graft.functions.VectorExprs.{vecDot, vecNorm}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -234,10 +234,10 @@ object Similarity {
 
   /** Broadcast sizing for the ANN verify join: ~260 B per 64-float vector
     * row (id + array header + 64×4 B + norm), capped by estimated bytes —
-    * 512 MB default ≈ the 2M-vector line the old row-count gate drew, but
+    * 512 MiB ≈ the 2M-vector line the old row-count gate drew, but
     * honest about WHAT it bounds (driver/executor memory, not rows). */
   val BroadcastBytesPerVector = 260L
-  val DefaultBroadcastMaxBytes: Long = 512L * 1024 * 1024
+  val BroadcastMaxBytes: Long = 512L * 1024 * 1024
 
   /** Deterministic pseudo-random hyperplanes (±1 components from a
     * splitmix-style hash) — "training" reproducible with no driver
@@ -326,15 +326,12 @@ object Similarity {
     // Broadcast the embeddings while the ESTIMATED BYTES fit (r5 advice:
     // a row-count gate passes corpora whose byte size would OOM a
     // default-sized driver); past the cap the shuffled join is genuinely
-    // the right plan. Cap configurable via graft.ann.broadcastMaxBytes.
-    val n = corpusCount(s, d)
-    val estBytes = n * BroadcastBytesPerVector
-    val maxBytes = s.conf.getOption("graft.ann.broadcastMaxBytes")
-      .map(_.toLong).getOrElse(DefaultBroadcastMaxBytes)
+    // the right plan.
+    val estBytes = corpusCount(s, d) * BroadcastBytesPerVector
     def side(idCol: String, v: String, nm: String) = {
       val proj = e.select(col("vec_id").as(idCol),
         col("embedding").as(v), col("nrm").as(nm))
-      if (estBytes <= maxBytes) broadcast(proj) else proj
+      if (estBytes <= BroadcastMaxBytes) broadcast(proj) else proj
     }
     cand
       .join(side("id1", "v1", "n1"), "id1")
@@ -471,8 +468,7 @@ object Similarity {
     // unchanged, while decade corpora keep the assignment fan-out at
     // n x 64 instead of n x n/100 (r11 - the same cells-prop-to-n knee
     // q126 was called on; here the fix is hash-neutral)
-    val cent = qe.where(col("vec_id") % 100 === 0 && col("vec_id") < 6400)
-      .select(col("vec_id").as("cent_id"), col("q8").as("cq"))
+    val cent = fixedCells(qe)
     // r13: assignment is a broadcast-argmax MAP over the corpus scan
     // ([[assignCells]]) — no n×cells fan-out, no join, no aggregate
     val assigned = assignCells(s, qe, cent)
@@ -553,8 +549,7 @@ object Similarity {
     val qe = quantizedEmbeddings(s, d)
     // the q43/q143 bounded anchor grid — same cells as the single-probe
     // face, so recall deltas are attributable to nprobe alone
-    val cent = qe.where(col("vec_id") % 100 === 0 && col("vec_id") < 6400)
-      .select(col("vec_id").as("cent_id"), col("q8").as("cq"))
+    val cent = fixedCells(qe)
     val assigned = assignCells(s, qe, cent)
       .select(col("vec_id"), col("q8"), col("cent_id"))
     val probes = assignCellsTopP(s, qe.where(col("vec_id") < 5), cent, nprobe)
@@ -650,27 +645,18 @@ object Similarity {
   def quantizedEmbeddings(s: SparkSession, d: String): DataFrame =
     s.read.parquet(quantizedArtifact(s, d))
 
-  /** Build-once path of [[quantizedEmbeddings]]: returns the artifact
-    * dir, writing it first if this source content has never been
-    * quantized (`_OK` commits the write — a crashed half-write never
-    * serves). The repartition BEFORE the write matters twice over: the
-    * source is one compact parquet split, so without it the artifact
-    * would be one file and every downstream scan single-threaded (r11:
-    * q126 sf10 512 s against a 1-partition cache); with it the artifact
-    * carries session-width files and scans parallel. */
+  /** Build-once path of [[quantizedEmbeddings]]. The repartition
+    * BEFORE the write matters twice over: the source is one compact
+    * parquet split, so without it the artifact would be one file and
+    * every downstream scan single-threaded (r11: q126 sf10 512 s against
+    * a 1-partition cache); with it the artifact carries session-width
+    * files and scans parallel. */
   private def quantizedArtifact(s: SparkSession, d: String): String =
-    synchronized {
-      val dir = new java.io.File(
-        s"target/tmp/quant8_${Tables.sourceFingerprint(d, "embeddings")}")
-      if (!new java.io.File(dir, "_OK").exists()) {
-        scala.reflect.io.Path(dir).deleteRecursively()
-        quantizeInt8(Tables.embeddings(s, d)).select(col("vec_id"), col("q8"))
-          .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt)
-          .write.mode("overwrite").parquet(s"$dir/q8")
-        new java.io.File(dir, "_OK").createNewFile()
-      }
-      s"${dir.getPath}/q8"
-    }
+    Scratch.artifact(s"quant8_${Tables.sourceFingerprint(d, "embeddings")}") { dir =>
+      quantizeInt8(Tables.embeddings(s, d)).select(col("vec_id"), col("q8"))
+        .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt)
+        .write.mode("overwrite").parquet(s"$dir/q8")
+    } + "/q8"
 
   /** Deterministic per-vector argmax over an assignment fan-out — the
     * (vec_id, cent_id) maximizing (score, −cent_id), i.e. highest score
@@ -754,6 +740,27 @@ object Similarity {
     qe.withColumn("cent_id", org.apache.spark.sql.GraftBridge.column(
       graft.functions.ArgmaxExprs.ArgmaxDotCell(
         org.apache.spark.sql.GraftBridge.expression(col("q8")), bc)))
+  }
+
+  /** The fixed 64-cell anchor grid (cent_id, cq): every 100th quantized
+    * vector below 6400 — the literal the oracles replay. */
+  private[graft] def fixedCells(qe: DataFrame): DataFrame =
+    qe.where(col("vec_id") % 100 === 0 && col("vec_id") < 6400)
+      .select(col("vec_id").as("cent_id"), col("q8").as("cq"))
+
+  /** The stride grid (stride, cells): every vector with
+    * `vec_id % stride = 1` anchors a cell. `centStride` > 0 pins the
+    * stride (the gate faces pin 100 for oracle parity); 0 sizes it to
+    * ≈ √n of the session's cached corpus count, so routing AND in-cell
+    * search stay at n^1.5. */
+  private def strideCells(s: SparkSession, d: String, qe: DataFrame,
+      centStride: Int): (Int, DataFrame) = {
+    val stride =
+      if (centStride > 0) centStride
+      else math.max(2, math.round(math.sqrt(
+        SharedPlans.cachedCount(s, s"embCount|$d")(qe.count()).toDouble)).toInt)
+    (stride, qe.where(col("vec_id") % stride === 1)
+      .select(col("vec_id").as("cent_id"), col("q8").as("cq")))
   }
 
   /** Multi-probe routing (r13 verdict item 1): appends `probe_cells` —
@@ -1541,22 +1548,14 @@ object Similarity {
     * holds the eigen-invariants (orthonormality on the grid, variance
     * monotonicity, PQ-recall ≥ unrotated). */
   private[graft] def opqRotationDir(s: SparkSession, d: String): String =
-    synchronized {
-      val dim = 64
-      val dir = new java.io.File(
-        // v2: r16 eigenvalue-allocation comp order (v1 was λ-desc)
-        s"target/tmp/opqrot_v2_g${RotScale}_" +
-          Tables.sourceFingerprint(d, "embeddings"))
-      if (!new java.io.File(dir, "_OK").exists()) {
-        scala.reflect.io.Path(dir).deleteRecursively()
-        val rows = rotationRowsFor(gramCollect(s, d, dim))
-        import s.implicits._
-        rows.toDF("comp", "dim", "r")
-          .coalesce(1).write.mode("overwrite").parquet(s"$dir/rot")
-        new java.io.File(dir, "_OK").createNewFile()
-      }
-      s"${dir.getPath}/rot"
-    }
+    // v2: r16 eigenvalue-allocation comp order (v1 was λ-desc)
+    Scratch.artifact(s"opqrot_v2_g${RotScale}_" +
+        Tables.sourceFingerprint(d, "embeddings")) { dir =>
+      val rows = rotationRowsFor(gramCollect(s, d, 64))
+      import s.implicits._
+      rows.toDF("comp", "dim", "r")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/rot")
+    } + "/rot"
 
   /** Scatter matrix → eigen-sorted, SUBSPACE-BALANCED, sign-fixed,
     * [[RotScale]]-quantized rotation rows (comp, dim, r) — shared by
@@ -1789,11 +1788,7 @@ object Similarity {
     * Window ranks partition by qid (batch-sized, never corpus-sized). */
   def ivfIncremental(s: SparkSession, d: String, k: Int = 3,
       centStride: Int = 0): DataFrame = {
-    val base = {
-      val dir = new java.io.File("target/tmp/ivf_q126")
-      scala.reflect.io.Path(dir).deleteRecursively()
-      dir.getPath
-    }
+    val base = Scratch.fresh("ivf_q126")
     val qe = quantizedEmbeddings(s, d)
     val existing = qe.where(col("vec_id") % 10 =!= 0)
     // Cell count = |existing| / stride. centStride = 0 (the DEFAULT)
@@ -1980,12 +1975,7 @@ object Similarity {
     * on whatever geometry the index actually has. */
   def ivfBalanceAudit(s: SparkSession, d: String, centStride: Int = 0): DataFrame = {
     val qe = quantizedEmbeddings(s, d)
-    val stride =
-      if (centStride > 0) centStride
-      else math.max(2, math.round(math.sqrt(
-        SharedPlans.cachedCount(s, s"embCount|$d")(qe.count()).toDouble)).toInt)
-    val cent = qe.where(col("vec_id") % stride === 1)
-      .select(col("vec_id").as("cent_id"), col("q8").as("cq"))
+    val (_, cent) = strideCells(s, d, qe, centStride)
     // r13: one scan, cent_id computed in-row ([[assignCells]]); the
     // only shuffle left is the |cells|-bounded occupancy aggregate
     val occ = assignCells(s, qe, cent)
@@ -2077,8 +2067,7 @@ object Similarity {
     // comparability, and it is the cells-prop-to-n scale knee besides.
     // At gate SFs the cap never binds (ids < 2000), so the oracle
     // replays the identical grid.
-    val cent = qe.where(col("vec_id") % 100 === 0 && col("vec_id") < 6400)
-      .select(col("vec_id").as("cent_id"), col("q8").as("cq"))
+    val cent = fixedCells(qe)
     val assigned = assignCells(s, qe, cent)
     val cells = assigned.groupBy(col("cent_id")).agg(
       sum(when(col("vec_id") % 10 =!= 0, 1L).otherwise(0L)).as("n_a"),
@@ -2258,14 +2247,7 @@ object Similarity {
   def ivfCoverageAudit(s: SparkSession, d: String, centStride: Int = 0,
       indexDir: String = ""): DataFrame = {
     val qe = quantizedEmbeddings(s, d)
-    // stride self-sizes to ≈ √n by default (the q126/q152 rule); the
-    // gate face pins 100 for oracle parity
-    val stride =
-      if (centStride > 0) centStride
-      else math.max(2, math.round(math.sqrt(
-        SharedPlans.cachedCount(s, s"embCount|$d")(qe.count()).toDouble)).toInt)
-    val cent = qe.where(col("vec_id") % stride === 1)
-      .select(col("vec_id").as("cent_id"), col("q8").as("cq"))
+    val (stride, cent) = strideCells(s, d, qe, centStride)
     val idxPath =
       if (indexDir.nonEmpty) indexDir
       else damagedIndexArtifact(s, d, stride, cent)
@@ -2552,56 +2534,23 @@ object Similarity {
   /** The pristine "damaged" index fixture q156 audits and q159 repairs:
     * the q126 "prior run" slice (vec_id % 10 ≠ 0) routed and persisted
     * by cell, so the un-indexed daily batch IS the planted coverage
-    * hole. Fingerprint-keyed and built ONCE per (source content,
-    * stride) — the quant8 convention (r13 advice): the old fixed
-    * `target/tmp/ivf_q156`/`ivf_q159` paths were delete-and-rebuilt on
-    * every invocation, so two concurrent sessions on one checkout
-    * corrupted each other's index mid-audit, and every bench pass
-    * re-paid the full index build inside the measured query. q156
-    * audits the artifact IN PLACE (read-only); q159 copies it to a
+    * hole. Built once per (source content, stride): a fixed path
+    * delete-and-rebuilt per invocation let two concurrent sessions on
+    * one checkout corrupt each other's index mid-audit, and made every
+    * bench pass re-pay the full index build inside the measured query.
+    * q156 audits the artifact IN PLACE (read-only); q159 clones it to a
     * private work dir first (repair mutates — see [[ivfCoverageRepair]]). */
   private def damagedIndexArtifact(s: SparkSession, d: String, stride: Int,
-      cent: DataFrame): String = synchronized {
-    val dir = new java.io.File(
-      s"target/tmp/ivfdmg_${stride}_${Tables.sourceFingerprint(d, "embeddings")}")
-    if (!new java.io.File(dir, "_OK").exists()) {
-      scala.reflect.io.Path(dir).deleteRecursively()
+      cent: DataFrame): String =
+    Scratch.artifact(
+        s"ivfdmg_${stride}_${Tables.sourceFingerprint(d, "embeddings")}") { dir =>
       // the q126 layout discipline: repartition BY CELL before the
       // partitioned write (one file per cell, not tasks × cells)
       assignCells(s, quantizedEmbeddings(s, d).where(col("vec_id") % 10 =!= 0), cent)
         .select(col("vec_id"), col("cent_id"))
         .repartition(col("cent_id")).write.mode("overwrite")
-        .partitionBy("cent_id").parquet(s"${dir.getPath}/index")
-      new java.io.File(dir, "_OK").createNewFile()
-    }
-    s"${dir.getPath}/index"
-  }
-
-  /** Recursive local-dir clone (the q159/q166/q167 work-copy seam:
-    * mutating operators clone the pristine fixture instead of
-    * rebuilding it). HARDLINKS files when the filesystem allows (r14:
-    * O(files), not O(bytes) — the clone was the dominant cost of every
-    * mutating face's bench number), falling back to a byte copy.
-    * Safe because every mutation in this codebase is file-REPLACING,
-    * never in-place: a partition overwrite unlinks the old part files
-    * (the pristine fixture keeps its inodes) and writes fresh ones. */
-  private[graft] def copyDir(src: java.io.File, dst: java.io.File): Unit = {
-    val sp = src.toPath; val dp = dst.toPath
-    val walk = java.nio.file.Files.walk(sp)
-    try walk.forEach { p =>
-      val t = dp.resolve(sp.relativize(p).toString)
-      if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(t)
-      else {
-        java.nio.file.Files.createDirectories(t.getParent)
-        try java.nio.file.Files.createLink(t, p)
-        catch {
-          case _: UnsupportedOperationException | _: java.io.IOException =>
-            java.nio.file.Files.copy(p, t,
-              java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        }
-      }
-    } finally walk.close()
-  }
+        .partitionBy("cent_id").parquet(s"$dir/index")
+    } + "/index"
 
   /** q159 — COVERAGE REPAIR: the APPLY step behind [[ivfCoverageAudit]]
     * (the q155/q158 stance for the index family — an audit that only
@@ -2621,14 +2570,7 @@ object Similarity {
   def ivfCoverageRepair(s: SparkSession, d: String, centStride: Int = 0,
       workDir: String = ""): DataFrame = {
     val qe = quantizedEmbeddings(s, d)
-    // default self-sizes to ≈ √n (the q126/q152/q156 rule); the gate
-    // face pins 100 for oracle parity
-    val stride =
-      if (centStride > 0) centStride
-      else math.max(2, math.round(math.sqrt(
-        SharedPlans.cachedCount(s, s"embCount|$d")(qe.count()).toDouble)).toInt)
-    val cent = qe.where(col("vec_id") % stride === 1)
-      .select(col("vec_id").as("cent_id"), col("q8").as("cq"))
+    val (stride, cent) = strideCells(s, d, qe, centStride)
     // the damaged state (gate face): the shared pristine fixture COPIED
     // to a private work dir — repair mutates, so each invocation gets
     // its own clone (concurrency-safe) while the corpus-sized build is
@@ -2637,13 +2579,9 @@ object Similarity {
     val pristine = damagedIndexArtifact(s, d, stride, cent)
     // workDir: spec seam — a caller-owned clone location that is NOT
     // auto-deleted, so tests can inspect the repaired files on disk
-    val work =
-      if (workDir.nonEmpty) new java.io.File(workDir)
-      else new java.io.File(
-        s"target/tmp/ivfq159_${java.util.UUID.randomUUID().toString.take(8)}")
-    try {
-      val idx = s"${work.getPath}/index"
-      copyDir(new java.io.File(pristine), new java.io.File(idx))
+    def repair(work: String): DataFrame = {
+      val idx = s"$work/index"
+      Scratch.cloneDir(pristine, idx)
       // EAGER legs, one index GENERATION per executed plan (measured
       // hazard: two scans of the same path canonicalize equal, so a plan
       // holding both the pre- and post-append read gets the post-leg's
@@ -2707,7 +2645,8 @@ object Similarity {
         lit(nCellsTouched).as("n_cells_touched"),
         lit(nMissingAfter).as("n_missing_after"),
         lit(nIndexedAfter).as("n_indexed_after"))
-    } finally if (workDir.isEmpty) { scala.reflect.io.Path(work).deleteRecursively(); () }
+    }
+    if (workDir.nonEmpty) repair(workDir) else Scratch.withWorkDir("ivfq159")(repair)
   }
 
   /** Oracle for the pinned-stride gate face of [[ivfCoverageRepair]]:
@@ -2796,53 +2735,38 @@ object Similarity {
     * the compacted generation replaces the accreted one. */
   /** The FULL corpus routed + persisted by cell — the pristine serving
     * index mutating faces (q175's streaming erasure) clone via
-    * [[copyDir]]. Fingerprint-keyed, built once per source content. */
+    * [[Scratch.cloneDir]]. Built once per source content. */
   private[graft] def fullIndexArtifact(s: SparkSession, d: String,
-      cent: DataFrame): String = synchronized {
-    val dir = new java.io.File(
-      s"target/tmp/ivffull_${Tables.sourceFingerprint(d, "embeddings")}")
-    if (!new java.io.File(dir, "_OK").exists()) {
-      scala.reflect.io.Path(dir).deleteRecursively()
+      cent: DataFrame): String =
+    Scratch.artifact(s"ivffull_${Tables.sourceFingerprint(d, "embeddings")}") { dir =>
       assignCells(s, quantizedEmbeddings(s, d), cent)
         .select(col("vec_id"), col("cent_id"))
         .repartition(col("cent_id")).write.mode("overwrite")
-        .partitionBy("cent_id").parquet(s"${dir.getPath}/index")
-      new java.io.File(dir, "_OK").createNewFile()
-    }
-    s"${dir.getPath}/index"
-  }
+        .partitionBy("cent_id").parquet(s"$dir/index")
+    } + "/index"
 
   /** The accreted `batch=N/cent_id=M` state q161 leaves behind —
     * existing corpus at batch=-1, three waves at batch=0..2 — as a
-    * fingerprint-keyed build-once artifact (read-only; q165 compacts
-    * FROM it into a fresh directory). */
+    * build-once artifact (read-only; q165 compacts FROM it into a fresh
+    * directory). */
   private def accretedIndexArtifact(s: SparkSession, d: String,
-      cent: DataFrame): String = synchronized {
-    val dir = new java.io.File(
-      s"target/tmp/ivfaccr_${Tables.sourceFingerprint(d, "embeddings")}")
-    if (!new java.io.File(dir, "_OK").exists()) {
-      scala.reflect.io.Path(dir).deleteRecursively()
+      cent: DataFrame): String =
+    Scratch.artifact(s"ivfaccr_${Tables.sourceFingerprint(d, "embeddings")}") { dir =>
       val qe = quantizedEmbeddings(s, d)
       def writeGen(rows: DataFrame, gen: Int): Unit =
         assignCells(s, rows, cent).select(col("vec_id"), col("cent_id"))
           .repartition(col("cent_id")).write.mode("overwrite")
-          .partitionBy("cent_id").parquet(s"${dir.getPath}/index/batch=$gen")
+          .partitionBy("cent_id").parquet(s"$dir/index/batch=$gen")
       writeGen(qe.where(col("vec_id") % 10 =!= 0), -1)
       (0 until 3).foreach(i =>
         writeGen(qe.where(col("vec_id") % 10 === 0 &&
           pmod(col("vec_id"), lit(3)) === i), i))
-      new java.io.File(dir, "_OK").createNewFile()
-    }
-    s"${dir.getPath}/index"
-  }
+    } + "/index"
 
   def ivfCompactGate(s: SparkSession, d: String): DataFrame = {
     val qe = quantizedEmbeddings(s, d)
-    val cent = qe.where(col("vec_id") % 100 === 0 && col("vec_id") < 6400)
-      .select(col("vec_id").as("cent_id"), col("q8").as("cq"))
-    val work = new java.io.File(
-      s"target/tmp/ivfq165_${java.util.UUID.randomUUID().toString.take(8)}")
-    try {
+    val cent = fixedCells(qe)
+    Scratch.withWorkDir("ivfq165") { work =>
       // the accreted state q161 leaves behind, as a READ-ONLY
       // fingerprint-keyed artifact (r14 — compaction never mutates its
       // input, it writes a new generation elsewhere, so unlike
@@ -2858,7 +2782,7 @@ object Similarity {
       val nGenerations = beforeAgg.getLong(1)
       val nCells = beforeAgg.getLong(2)
       val nFilesBefore = parquetFileCount(idx)
-      val compacted = s"${work.getPath}/compacted"
+      val compacted = s"$work/compacted"
       ivfCompactDir(s, idx, compacted)
       // re-audit OFF DISK: fresh read of the compacted artifact
       val after = s.read.parquet(compacted)
@@ -2878,7 +2802,7 @@ object Similarity {
         lit(nFilesBefore).as("n_files_before"),
         lit(nFilesAfter).as("n_files_after"),
         lit(nMissingAfter).as("n_missing_after"))
-    } finally scala.reflect.io.Path(work).deleteRecursively()
+    }
   }
 
   /** Oracle for [[ivfCompactGate]]: the q43 routing CTEs; generations
@@ -2987,29 +2911,22 @@ object Similarity {
     * artifact tiers a production vector pipeline accumulates: the
     * quantized store (bucket-partitioned by `pmod(vec_id, 16)`), the
     * full-corpus IVF index (cell-partitioned), and the dedup signature
-    * store (bucket-partitioned by doc). Fingerprint-keyed and built once
-    * (the q156/q159 convention); each q166 invocation works on a COPY. */
+    * store (bucket-partitioned by doc). Built once; each q166
+    * invocation works on a clone. */
   private def erasureFixture(s: SparkSession, d: String, cent: DataFrame): String =
-    synchronized {
-      val dir = new java.io.File(
-        s"target/tmp/erasefix_${Tables.sourceFingerprint(d, "embeddings")}" +
-          s"_${Tables.sourceFingerprint(d, "documents")}")
-      if (!new java.io.File(dir, "_OK").exists()) {
-        scala.reflect.io.Path(dir).deleteRecursively()
-        val qe = quantizedEmbeddings(s, d)
-        qe.withColumn("bkt", pmod(col("vec_id"), lit(16)).cast("int"))
-          .repartition(col("bkt")).write.mode("overwrite")
-          .partitionBy("bkt").parquet(s"$dir/store")
-        assignCells(s, qe, cent).select(col("vec_id"), col("cent_id"))
-          .repartition(col("cent_id")).write.mode("overwrite")
-          .partitionBy("cent_id").parquet(s"$dir/index")
-        Dedup.minhashSigShared(s, d)
-          .withColumn("bkt", pmod(col("doc_id"), lit(16)).cast("int"))
-          .repartition(col("bkt")).write.mode("overwrite")
-          .partitionBy("bkt").parquet(s"$dir/sig")
-        new java.io.File(dir, "_OK").createNewFile()
-      }
-      dir.getPath
+    Scratch.artifact(s"erasefix_${Tables.sourceFingerprint(d, "embeddings")}" +
+        s"_${Tables.sourceFingerprint(d, "documents")}") { dir =>
+      val qe = quantizedEmbeddings(s, d)
+      qe.withColumn("bkt", pmod(col("vec_id"), lit(16)).cast("int"))
+        .repartition(col("bkt")).write.mode("overwrite")
+        .partitionBy("bkt").parquet(s"$dir/store")
+      assignCells(s, qe, cent).select(col("vec_id"), col("cent_id"))
+        .repartition(col("cent_id")).write.mode("overwrite")
+        .partitionBy("cent_id").parquet(s"$dir/index")
+      Dedup.minhashSigShared(s, d)
+        .withColumn("bkt", pmod(col("doc_id"), lit(16)).cast("int"))
+        .repartition(col("bkt")).write.mode("overwrite")
+        .partitionBy("bkt").parquet(s"$dir/sig")
     }
 
   /** q167 — IVF REBALANCE (hot-cell split): the APPLY step behind
@@ -3044,14 +2961,11 @@ object Similarity {
   def ivfRebalanceSplit(s: SparkSession, d: String,
       thresholdPpm: Long = 2000000L): DataFrame = {
     val qe = quantizedEmbeddings(s, d)
-    val cent = qe.where(col("vec_id") % 100 === 0 && col("vec_id") < 6400)
-      .select(col("vec_id").as("cent_id"), col("q8").as("cq"))
+    val cent = fixedCells(qe)
     val fix = erasureFixture(s, d, cent)
-    val work = new java.io.File(
-      s"target/tmp/ivfq167_${java.util.UUID.randomUUID().toString.take(8)}")
-    try {
-      val idx = s"${work.getPath}/index"
-      copyDir(new java.io.File(s"$fix/index"), new java.io.File(idx))
+    Scratch.withWorkDir("ivfq167") { work =>
+      val idx = s"$work/index"
+      Scratch.cloneDir(s"$fix/index", idx)
       // occupancy map off disk; hot = q152's ppm formula vs threshold
       val occ = s.read.parquet(idx).groupBy(col("cent_id"))
         .agg(count(lit(1)).as("occ"))
@@ -3118,7 +3032,7 @@ object Similarity {
         lit(after.getLong(1)).as("n_vecs_after"),
         lit(maxOccBefore).as("max_occ_before"),
         lit(after.getLong(2)).as("max_occ_after"))
-    } finally scala.reflect.io.Path(work).deleteRecursively()
+    }
   }
 
   /** Oracle for the gate face of [[ivfRebalanceSplit]] (threshold
@@ -3182,25 +3096,18 @@ object Similarity {
     * corpus half (vec_id % 2 = 0) and the odd half, each routed against
     * the SAME fixed anchor grid and persisted cell-partitioned — the
     * state two parallel index-build jobs (two ingest pipelines, two
-    * regions) leave behind. Fingerprint-keyed, built once per source
-    * content (the quant8 convention), read-only. */
+    * regions) leave behind. Built once per source content, read-only. */
   private def halfIndexArtifact(s: SparkSession, d: String,
-      cent: DataFrame): String = synchronized {
-    val dir = new java.io.File(
-      s"target/tmp/ivfhalf_${Tables.sourceFingerprint(d, "embeddings")}")
-    if (!new java.io.File(dir, "_OK").exists()) {
-      scala.reflect.io.Path(dir).deleteRecursively()
+      cent: DataFrame): String =
+    Scratch.artifact(s"ivfhalf_${Tables.sourceFingerprint(d, "embeddings")}") { dir =>
       val qe = quantizedEmbeddings(s, d)
       Seq(("a", 0), ("b", 1)).foreach { case (name, par) =>
         assignCells(s, qe.where(col("vec_id") % 2 === par), cent)
           .select(col("vec_id"), col("cent_id"))
           .repartition(col("cent_id")).write.mode("overwrite")
-          .partitionBy("cent_id").parquet(s"${dir.getPath}/$name")
+          .partitionBy("cent_id").parquet(s"$dir/$name")
       }
-      new java.io.File(dir, "_OK").createNewFile()
     }
-    dir.getPath
-  }
 
   /** q173 — IVF INDEX MERGE: fold two independently-built indexes over
     * disjoint corpus halves (same anchor grid — two parallel build jobs,
@@ -3219,17 +3126,14 @@ object Similarity {
     * q156 id-only anti-join. Nothing corpus-vector-sized moves. */
   def ivfMergeIndexes(s: SparkSession, d: String): DataFrame = {
     val qe = quantizedEmbeddings(s, d)
-    val cent = qe.where(col("vec_id") % 100 === 0 && col("vec_id") < 6400)
-      .select(col("vec_id").as("cent_id"), col("q8").as("cq"))
+    val cent = fixedCells(qe)
     val half = halfIndexArtifact(s, d, cent)
-    val work = new java.io.File(
-      s"target/tmp/ivfq173_${java.util.UUID.randomUUID().toString.take(8)}")
-    try {
+    Scratch.withWorkDir("ivfq173") { work =>
       val a = s.read.parquet(s"$half/a")
       val b = s.read.parquet(s"$half/b")
       val aAgg = a.agg(count(lit(1)), countDistinct(col("cent_id"))).collect().head
       val bAgg = b.agg(count(lit(1)), countDistinct(col("cent_id"))).collect().head
-      val merged = s"${work.getPath}/index"
+      val merged = s"$work/index"
       a.select(col("vec_id"), col("cent_id").cast("long").as("cent_id"))
         .unionAll(b.select(col("vec_id"), col("cent_id").cast("long").as("cent_id")))
         .repartition(col("cent_id")).write.mode("overwrite")
@@ -3252,7 +3156,7 @@ object Similarity {
         lit(mAgg.getLong(1)).as("n_cells_merged"),
         lit(filesAfter).as("files_after"),
         lit(nMissing).as("n_missing_after"))
-    } finally { scala.reflect.io.Path(work).deleteRecursively(); () }
+    }
   }
 
   /** Oracle for [[ivfMergeIndexes]]: q43 routing of each half, counts
@@ -3314,8 +3218,7 @@ object Similarity {
     * the write-side apply is q165/q167's partitioned-dir discipline. */
   def ivfRecenter(s: SparkSession, d: String): DataFrame = {
     val qe = quantizedEmbeddings(s, d)
-    val cent = qe.where(col("vec_id") % 100 === 0 && col("vec_id") < 6400)
-      .select(col("vec_id").as("cent_id"), col("q8").as("cq"))
+    val cent = fixedCells(qe)
     val dims = qe.select(size(col("q8"))).head().getInt(0)
     val assigned = assignCells(s, qe, cent)
       .select(col("vec_id"), col("q8"), col("cent_id"))
@@ -3550,8 +3453,7 @@ object Similarity {
   def nprobeSelect(s: SparkSession, d: String, k: Int = 10,
       maxProbe: Int = 3, targetPpm: Long = 900000L): DataFrame = {
     val qe = quantizedEmbeddings(s, d)
-    val cent = qe.where(col("vec_id") % 100 === 0 && col("vec_id") < 6400)
-      .select(col("vec_id").as("cent_id"), col("q8").as("cq"))
+    val cent = fixedCells(qe)
     val assigned = assignCells(s, qe, cent)
       .select(col("vec_id"), col("q8"), col("cent_id"))
     // ranked probe cells: pr = 1 is the argmax cell, pr = p widens
@@ -3693,8 +3595,7 @@ object Similarity {
   def ivfTopKFiltered(s: SparkSession, d: String, k: Int = 10,
       nprobe: Int = 2): DataFrame = {
     val qe = quantizedEmbeddings(s, d)
-    val cent = qe.where(col("vec_id") % 100 === 0 && col("vec_id") < 6400)
-      .select(col("vec_id").as("cent_id"), col("q8").as("cq"))
+    val cent = fixedCells(qe)
     val labels = Tables.embeddings(s, d).select(col("vec_id"), col("label"))
     val assigned = assignCells(s, qe, cent)
       .join(labels, Seq("vec_id"))
@@ -3777,14 +3678,11 @@ object Similarity {
     * bucketing, and signature-existence legs exactly. */
   def vectorErasure(s: SparkSession, d: String): DataFrame = {
     val qe = quantizedEmbeddings(s, d)
-    val cent = qe.where(col("vec_id") % 100 === 0 && col("vec_id") < 6400)
-      .select(col("vec_id").as("cent_id"), col("q8").as("cq"))
+    val cent = fixedCells(qe)
     val fix = erasureFixture(s, d, cent)
-    val work = new java.io.File(
-      s"target/tmp/eraseq166_${java.util.UUID.randomUUID().toString.take(8)}")
-    try {
+    Scratch.withWorkDir("eraseq166") { work =>
       Seq("store", "index", "sig").foreach(t =>
-        copyDir(new java.io.File(s"$fix/$t"), new java.io.File(s"$work/$t")))
+        Scratch.cloneDir(s"$fix/$t", s"$work/$t"))
       val victimVec = pmod(col("vec_id"), lit(97)) === 3
       val victimDoc = pmod(col("doc_id"), lit(97)) === 3
       // r17 (guide §2.6 overlap independent jobs): the three stores are
@@ -3820,7 +3718,7 @@ object Similarity {
         lit(nSigBkts).as("n_sig_buckets"),
         lit(residual).as("n_residual_after"),
         lit(nIndexAfter).as("n_index_after"))
-    } finally scala.reflect.io.Path(work).deleteRecursively()
+    }
   }
 
   /** Oracle for [[vectorErasure]]: the erase rule, bucketing, q43 cell
@@ -4130,34 +4028,23 @@ object Similarity {
       |JOIN neg n ON n.aid = a.aid
       |ORDER BY a.aid""".stripMargin
 
-  /** Corrupted-index fixture for [[ivfDigestAudit]], fingerprint-keyed
-    * like [[damagedIndexArtifact]] (r13 advice: never rebuild per call).
-    * Full corpus routed and cell-partitioned, with victims
-    * (vec_id % 167 = 5) committed under a CORRUPTED id (−id−1) — counts
-    * per cell stay intact, so the corruption is invisible to any
-    * count-based audit. */
+  /** Corrupted-index fixture for [[ivfDigestAudit]], built once like
+    * [[damagedIndexArtifact]]. Full corpus routed and cell-partitioned,
+    * with victims (vec_id % 167 = 5) committed under a CORRUPTED id
+    * (−id−1) — counts per cell stay intact, so the corruption is
+    * invisible to any count-based audit. */
   private def corruptedIndexArtifact(s: SparkSession, d: String,
-      stride: Int, cent: DataFrame): String = synchronized {
-    val dir = new java.io.File(
-      // v2 tag (r14 advice): the artifact's layout is coupled to the
-      // quantize/assignCells/sketch CODE, not just the source content —
-      // fold a format version into the key so a code change invalidates
-      // the committed fixture instead of serving stale routing to
-      // ivfDigestAudit (bump on any schema/semantics change here)
-      s"target/tmp/ivfcor_v2_${stride}_${Tables.sourceFingerprint(d, "embeddings")}")
-    if (!new java.io.File(dir, "_OK").exists()) {
-      scala.reflect.io.Path(dir).deleteRecursively()
+      stride: Int, cent: DataFrame): String =
+    Scratch.artifact(
+        s"ivfcor_v2_${stride}_${Tables.sourceFingerprint(d, "embeddings")}") { dir =>
       assignCells(s, quantizedEmbeddings(s, d), cent)
         .select(
           when(pmod(col("vec_id"), lit(167)) === 5, -col("vec_id") - 1)
             .otherwise(col("vec_id")).as("vec_id"),
           col("cent_id"))
         .repartition(col("cent_id")).write.mode("overwrite")
-        .partitionBy("cent_id").parquet(s"${dir.getPath}/index")
-      new java.io.File(dir, "_OK").createNewFile()
-    }
-    s"${dir.getPath}/index"
-  }
+        .partitionBy("cent_id").parquet(s"$dir/index")
+    } + "/index"
 
   /** q184 — INDEX INTEGRITY DIGEST AUDIT: q99's Merkle-split
     * reconciliation discipline applied to the vector tier. q156 audits
@@ -4181,15 +4068,7 @@ object Similarity {
   def ivfDigestAudit(s: SparkSession, d: String,
       centStride: Int = 0, indexDir: String = ""): DataFrame = {
     val qe = quantizedEmbeddings(s, d)
-    // stride self-sizes to ≈ √n by default (the q126/q152/q156 rule —
-    // cells ∝ √n keeps the broadcast-argmax per-row cost √n·d); the
-    // gate face pins 100 for oracle parity
-    val stride =
-      if (centStride > 0) centStride
-      else math.max(2, math.round(math.sqrt(
-        SharedPlans.cachedCount(s, s"embCount|$d")(qe.count()).toDouble)).toInt)
-    val cent = qe.where(col("vec_id") % stride === 1)
-      .select(col("vec_id").as("cent_id"), col("q8").as("cq"))
+    val (stride, cent) = strideCells(s, d, qe, centStride)
     val idx = s.read.parquet(
       if (indexDir.nonEmpty) indexDir
       else corruptedIndexArtifact(s, d, stride, cent))
@@ -4893,8 +4772,7 @@ object Similarity {
     * Report is |centers|-bounded. */
   def kCenterCoreset(s: SparkSession, d: String, k: Int = 8): DataFrame = {
     val qe = quantizedEmbeddings(s, d)
-    val cand = qe.where(col("vec_id") % 100 === 0 && col("vec_id") < 6400)
-      .select(col("vec_id"), col("q8")).collect()
+    val cand = fixedCells(qe).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).map(_.toLong).toArray))
       .sortBy(_._1)
     require(cand.nonEmpty, "kCenterCoreset: empty candidate pool")
@@ -4967,7 +4845,7 @@ object Similarity {
         |          WHERE vec_id % 100 = 0 AND vec_id < 6400),
         | sel1 AS (SELECT vec_id, q, CAST(1 AS BIGINT) AS step
         |          FROM cand ORDER BY vec_id LIMIT 1),
-        | selu1 AS (SELECT * FROM sel1)""".stripMargin
+        | selu1 AS MATERIALIZED (SELECT * FROM sel1)""".stripMargin
     val steps = (2 to 8).map { i =>
       val prev = s"selu${i - 1}"
       s""",
@@ -4980,7 +4858,7 @@ object Similarity {
          |    WHERE c.vec_id NOT IN (SELECT vec_id FROM $prev)
          |    GROUP BY c.vec_id, c.q) t(vec_id, q, md)
          |  ORDER BY md DESC, vec_id ASC LIMIT 1),
-         | selu$i AS (SELECT vec_id, q, step FROM $prev
+         | selu$i AS MATERIALIZED (SELECT vec_id, q, step FROM $prev
          |            UNION ALL SELECT vec_id, q, step FROM sel$i)""".stripMargin
     }.mkString
     val tail =

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Scratch, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -872,9 +872,8 @@ object TextAnalysis {
     // the TRAINING face: always retrains (its cost IS training) and
     // REFRESHES the persisted model artifact that the apply faces
     // (q114/q140) serve off — the q126/q127/q137 daily-run convention
-    bpeWriteModel(s, d)
-    bpeReportFrom(s.read.parquet(s"${bpeModelDir(d)}/merges"),
-      s.read.parquet(s"${bpeModelDir(d)}/vocab"))
+    val dir = bpeModel(s, d, refresh = true)
+    bpeReportFrom(s.read.parquet(s"$dir/merges"), s.read.parquet(s"$dir/vocab"))
   }
 
   def bpeTrainFrom(docs: DataFrame): DataFrame = {
@@ -902,42 +901,28 @@ object TextAnalysis {
       best.select(lit(i + 1).as("ord"), col("p1"), col("p2"), col("cnt"))
     }.reduce(_ unionByName _)
 
-  /** Persisted-model dir for the q109/q114/q140 tokenizer family, keyed
-    * by a CONTENT FINGERPRINT of the documents source (path + per-file
-    * length/mtime, [[graft.Tables.sourceFingerprint]]) — not the
-    * sanitized dir name, which (r11 advice) could both collide two
-    * distinct dirs onto one artifact and keep serving a stale model
-    * after the harness regenerates testdata at the same path. Verify
-    * wipes `target/tmp` at startup, so a gate run trains exactly once
-    * and every later face of the same run serves off the artifact;
-    * Bench/Profile never wipe, and with the fingerprint key they don't
-    * need to — regenerated data simply keys a fresh artifact. */
-  private[graft] def bpeModelDir(d: String): java.io.File =
-    new java.io.File(
-      s"target/tmp/bpe_model_${graft.Tables.sourceFingerprint(d, "documents")}")
-
-  /** Train on `d`'s documents and persist the model: `merges` (ord, p1,
-    * p2, cnt) + `vocab` (word, n, seq — the encoder). `_OK` commits the
-    * write (a crashed half-write never serves). */
-  private def bpeWriteModel(s: SparkSession, d: String): Unit = synchronized {
-    val dir = bpeModelDir(d)
-    scala.reflect.io.Path(dir).deleteRecursively()
-    val (mergeSteps, vocab) = bpeSteps(Tables.documents(s, d))
-    bpeMergesFrame(mergeSteps).coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/merges")
-    vocab.write.mode("overwrite").parquet(s"$dir/vocab")
-    new java.io.File(dir, "_OK").createNewFile()
-  }
+  /** The persisted model dir of the q109/q114/q140 tokenizer family,
+    * trained on `d`'s documents: `merges` (ord, p1, p2, cnt) + `vocab`
+    * (word, n, seq — the encoder). Keyed by a CONTENT FINGERPRINT of the
+    * documents source, not the sanitized dir name, which (r11 advice)
+    * could both collide two distinct dirs onto one artifact and keep
+    * serving a stale model after the harness regenerates testdata at the
+    * same path. */
+  private def bpeModel(s: SparkSession, d: String, refresh: Boolean = false): String =
+    Scratch.artifact(s"bpe_model_${Tables.sourceFingerprint(d, "documents")}",
+        refresh) { dir =>
+      val (mergeSteps, vocab) = bpeSteps(Tables.documents(s, d))
+      bpeMergesFrame(mergeSteps).coalesce(1)
+        .write.mode("overwrite").parquet(s"$dir/merges")
+      vocab.write.mode("overwrite").parquet(s"$dir/vocab")
+    }
 
   /** The trained encoder (word → merged seq) for `d`: served off the
-    * persisted artifact when present, trained (and persisted) on demand
-    * when not — so q114/q140 never RE-train a model q109 already built
-    * this run (r10 verdict item 7: q140 re-trained per face, 3.2 s). */
-  private[graft] def bpeModelVocab(s: SparkSession, d: String): DataFrame = {
-    val dir = bpeModelDir(d)
-    if (!new java.io.File(dir, "_OK").exists()) bpeWriteModel(s, d)
-    s.read.parquet(s"$dir/vocab")
-  }
+    * persisted model, trained on demand — so q114/q140 never RE-train a
+    * model q109 already built this run (r10 verdict item 7: q140
+    * re-trained per face, 3.2 s). */
+  private[graft] def bpeModelVocab(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(s"${bpeModel(s, d)}/vocab")
 
   /** The shared BPE training loop: builds the word-frequency vocab, runs
     * [[BpeIters]] merge iterations, and returns (per-step best-merge

@@ -63,15 +63,9 @@ object RetryCommit {
   * `df.write` instead (CopyWrite.sink).
   */
 object BatchingSink {
-  def run(df: DataFrame, cfg: CopyConfig,
-      commit: Seq[org.apache.spark.sql.Row] => Unit,
-      failedBatches: LongAccumulator): Unit =
-    runWith[Unit](df, cfg, () => (), (_, batch) => commit(batch), _ => (),
-      failedBatches)
-
-  /** Resource-scoped variant: `open` once per partition (a connection /
-    * prepared statement / codec context — the expensive part of a
-    * row-protocol sink), `commit(resource, batch)` per flushed batch
+  /** `open` once per partition (a connection / prepared statement /
+    * codec context — the expensive part of a row-protocol sink),
+    * `commit(resource, batch)` per flushed batch
     * inside the retry loop, `close` in a finally. A failed attempt
     * recycles the resource (close + reopen on the next attempt) so a
     * broken connection can't poison the rest of the partition, while a

@@ -51,11 +51,6 @@ object CopyWrite {
           s"parse-error budget exceeded: ${acc.value} > $maxParseErrors")
   }
 
-  /** Raw cells schema: array<struct<value:string, quoted:boolean>>. */
-  private val cellsType = ArrayType(StructType(Seq(
-    StructField("value", StringType, nullable = false),
-    StructField("quoted", BooleanType, nullable = false))))
-
   /** Lines → parsed records. Malformed records count against the budget
     * and are dropped (PERMISSIVE), exactly the reference's reader-loop
     * behavior; blank lines are skipped like encoding/csv does. */
@@ -66,18 +61,13 @@ object CopyWrite {
       spark.sparkContext.longAccumulator("parseErrors"), cfg.maxParseErrors)
     val acc = errs.acc
     import spark.implicits._
-    def parseOne(line: String): Seq[(String, Boolean)] =
-      try QuoteCsv.parseRecord(line).map(c => (c.value, c.quoted)).toSeq
-      catch { case _: CsvParseException => acc.add(1L); null }
-    val parsed = lines
-      .filter((l: String) => l.nonEmpty)
-      .map(parseOne _)
-      .filter((r: Seq[(String, Boolean)]) => r != null)
-      .toDF("cells")
-    val renamed = parsed.withColumn("cells",
-      transform(col("cells"), c =>
-        struct(c.getField("_1").as("value"), c.getField("_2").as("quoted"))))
-    (renamed, errs)
+    // cells: array<struct<value:string, quoted:boolean>>
+    val parsed = lines.flatMap { (line: String) =>
+      if (line.isEmpty) None
+      else try Some(QuoteCsv.parseRecord(line): Seq[RawCell])
+      catch { case _: CsvParseException => acc.add(1L); None }
+    }.toDF("cells")
+    (parsed, errs)
   }
 
   /** Exact-compat typed projection: one tagged-union struct column per

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.sql.DriverManager
 
-import graft.{CopyConfig, Identifiers}
+import graft.{CopyConfig, Identifiers, Scratch}
 import graft.pipeline.BatchingSink
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
@@ -34,11 +34,8 @@ object JdbcBackend {
   def derbyUrl(dbDir: String): String = {
     // keep derby.log out of the CWD root (once per JVM, before engine
     // boot); Derby creates the file but not its parent dirs
-    if (System.getProperty("derby.stream.error.file") == null) {
-      new java.io.File("target/tmp").mkdirs()
-      System.setProperty("derby.stream.error.file",
-        "target/tmp/derby.log")
-    }
+    if (System.getProperty("derby.stream.error.file") == null)
+      System.setProperty("derby.stream.error.file", Scratch.file("derby.log"))
     s"jdbc:derby:$dbDir;create=true"
   }
 

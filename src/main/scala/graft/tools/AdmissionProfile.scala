@@ -48,8 +48,7 @@ object AdmissionProfile {
 
     // ---- stream passthrough: same delivery, count-only body ----
     timeMin("stream_passthrough") {
-      val base = "target/tmp/sda_passthru"
-      scala.reflect.io.Path(new java.io.File(base)).deleteRecursively()
+      val base = graft.Scratch.fresh("sda_passthru")
       (0 until 3).foreach { i =>
         newDocs.where(pmod(col("doc_id"), lit(3)) === i)
           .coalesce(1).write.mode("append").parquet(s"$base/in")
@@ -65,8 +64,7 @@ object AdmissionProfile {
     }
 
     // ---- batch-mode stages over the same wave slices ----
-    val stg = "target/tmp/sda_stages"
-    scala.reflect.io.Path(new java.io.File(stg)).deleteRecursively()
+    val stg = graft.Scratch.fresh("sda_stages")
     Dedup.minhashSig(corpus).write.mode("overwrite").parquet(s"$stg/sig")
     val idxSig = spark.read.parquet(s"$stg/sig")
     Dedup.sigBands(idxSig).write.mode("overwrite").parquet(s"$stg/bands")

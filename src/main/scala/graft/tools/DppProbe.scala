@@ -12,8 +12,7 @@ object DppProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val spark = graft.Session.tool(sfDir)
-    val base = "target/tmp/dpp_probe"
-    scala.reflect.io.Path(new java.io.File(base)).deleteRecursively()
+    val base = graft.Scratch.fresh("dpp_probe")
     val e = graft.Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), (col("vec_id") % 50).as("cent_id"))
     e.repartition(col("cent_id")).write.partitionBy("cent_id")

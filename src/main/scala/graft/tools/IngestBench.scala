@@ -16,7 +16,7 @@ object IngestBench {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val spark = graft.Session.tool(sfDir)
     val cfg = CopyConfig() // reference defaults incl. numProcesses=8
-    val base = s"target/tmp/ingestbench_${System.nanoTime()}"
+    val base = graft.Scratch.path(s"ingestbench_${System.nanoTime()}")
 
     // materialize the CSV input (not timed - the reference reads stdin)
     val src = Tables.lineitem(spark, sfDir).select(

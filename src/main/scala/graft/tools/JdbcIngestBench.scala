@@ -33,7 +33,7 @@ object JdbcIngestBench {
     val workers = if (args.length > 2) args(2).toInt else 8
     val spark = graft.Session.tool(sfDir)
     val cfg = CopyConfig() // reference defaults incl. chunk/byte batching
-    val base = s"target/tmp/jdbcingest_${System.nanoTime()}"
+    val base = graft.Scratch.path(s"jdbcingest_${System.nanoTime()}")
 
     // materialize the CSV input (not timed — the reference reads stdin)
     val src = Tables.lineitem(spark, sfDir).select(

@@ -9,7 +9,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * Spark's own StreamingQueryProgress.durationMs — triggerExecution,
   * queryPlanning, walCommit, latestOffset, addBatch, commitOffsets —
   * plus query start/stop wall time. A/B: checkpoint on disk
-  * (target/tmp) vs tmpfs (/dev/shm), to price WAL+commit-log fsyncs.
+  * (the scratch root) vs tmpfs (/dev/shm), to price WAL+commit-log fsyncs.
   *
   * Usage: StreamDurProbe <sfDir> [reps]
   */
@@ -32,8 +32,7 @@ object StreamDurProbe {
 
     val docs = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("source"))
-    val base = "target/tmp/sdp_in"
-    scala.reflect.io.Path(new java.io.File(base)).deleteRecursively()
+    val base = graft.Scratch.fresh("sdp_in")
     (0 until 3).foreach { i =>
       docs.where(pmod(col("doc_id"), lit(3)) === i)
         .coalesce(1).write.mode("append").parquet(s"$base/in")
@@ -62,7 +61,7 @@ object StreamDurProbe {
           sums.mkString(" "))
       }
     }
-    run("disk ", "target/tmp")
+    run("disk ", graft.Scratch.Root)
     run("tmpfs", "/dev/shm/graft_probe")
     spark.stop()
   }

@@ -37,8 +37,7 @@ object StreamEvictionProbe {
     // stage: time-range-ordered files with ascending mtimes (the file
     // source orders by modification time; equal stamps would leave the
     // replay order undefined and spray late data across the watermark)
-    val stage = new java.io.File("target/tmp/evict_probe_stage").getAbsoluteFile
-    scala.reflect.io.Path(stage).deleteRecursively()
+    val stage = new java.io.File(graft.Scratch.fresh("evict_probe_stage")).getAbsoluteFile
     val ev = graft.Tables.events(spark, sfDir)
       .select(col("ts"), col("event_type"), col("value"), col("user_id"))
     ev.repartitionByRange(nFiles, col("ts")).sortWithinPartitions(col("ts"))
@@ -72,8 +71,7 @@ object StreamEvictionProbe {
 
     def runVariant(tag: String, out: DataFrame): Unit = {
       batches.synchronized(batches.clear())
-      val ckpt = s"target/tmp/evict_probe_ckpt_$tag"
-      scala.reflect.io.Path(new java.io.File(ckpt)).deleteRecursively()
+      val ckpt = graft.Scratch.fresh(s"evict_probe_ckpt_$tag")
       val t = System.nanoTime()
       val q = out.writeStream.format("noop")
         .option("checkpointLocation", ckpt)

@@ -45,8 +45,7 @@ object StreamFloorLedger {
     // what it documents: listing + micro-batch scheduling + commits.
     val docs = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("source"))
-    val base = "target/tmp/sfl_passthru"
-    scala.reflect.io.Path(new java.io.File(base)).deleteRecursively()
+    val base = graft.Scratch.fresh("sfl_passthru")
     (0 until 3).foreach { i =>
       docs.where(pmod(col("doc_id"), lit(3)) === i)
         .coalesce(1).write.mode("append").parquet(s"$base/in")

@@ -33,15 +33,9 @@ object StreamJoinProfile {
       .where(col("event_type") === "view")
       .select(col("user_id"), col("ts").as("rts"), col("value"))
 
-    def freshBase(tag: String): String = {
-      val dir = new java.io.File(s"target/tmp/sjp_$tag")
-      scala.reflect.io.Path(dir).deleteRecursively()
-      dir.getPath
-    }
-
     def time(tag: String)(body: String => Unit): Unit = {
       for (i <- 1 to repeat) {
-        val base = freshBase(tag)
+        val base = graft.Scratch.fresh(s"sjp_$tag")
         val t0 = System.nanoTime()
         body(base)
         println(f"$tag run $i: ${(System.nanoTime() - t0) / 1e9}%.2fs")

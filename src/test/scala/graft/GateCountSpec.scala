@@ -12,7 +12,7 @@ class GateCountSpec extends AnyFunSuite {
 
   private lazy val readme =
     new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/repo/README.md")), "UTF-8")
+      java.nio.file.Paths.get("README.md")), "UTF-8")
 
   test("every queries entry has an oracle, and numbering has no accidental gaps") {
     val qs = SparkEntry.queries.keySet

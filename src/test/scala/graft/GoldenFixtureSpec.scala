@@ -53,7 +53,7 @@ class GoldenFixtureSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("edge inputs: empty file, header-only, single column, blank lines") {
-    val parent = java.nio.file.Paths.get("/root/repo/target/tmp")
+    val parent = java.nio.file.Paths.get(Scratch.Root).toAbsolutePath
     java.nio.file.Files.createDirectories(parent) // suite order-independent
     val dir = java.nio.file.Files.createTempDirectory(parent, "edge").toString
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/empty.csv"), "")

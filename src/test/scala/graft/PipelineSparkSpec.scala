@@ -48,8 +48,8 @@ class PipelineSparkSpec extends AnyFunSuite with SparkFixture {
     val n = df.count()
     val committed = spark.sparkContext.longAccumulator("committed")
     val failed = spark.sparkContext.longAccumulator("failedBatches")
-    BatchingSink.run(df, CopyConfig(chunkSize = 100, maxAttempts = 3, backoffMs = 0),
-      batch => committed.add(batch.size.toLong), failed)
+    BatchingSink.runWith[Unit](df, CopyConfig(chunkSize = 100, maxAttempts = 3, backoffMs = 0),
+      () => (), (_, batch) => committed.add(batch.size.toLong), _ => (), failed)
     assert(committed.value == n)
     assert(failed.value == 0L)
   }
@@ -83,9 +83,9 @@ class PipelineSparkSpec extends AnyFunSuite with SparkFixture {
     val df = Tables.orders(spark, sf).select("o_orderkey").limit(500)
     val failed = spark.sparkContext.longAccumulator("failedBatches2")
     val ex = intercept[Exception] {
-      BatchingSink.run(df,
+      BatchingSink.runWith[Unit](df,
         CopyConfig(chunkSize = 100, maxAttempts = 1, backoffMs = 0, maxInsertErrors = 0),
-        _ => sys.error("sink down"), failed)
+        () => (), (_, _) => sys.error("sink down"), _ => (), failed)
     }
     def allMessages(t: Throwable): String =
       if (t == null) "" else t.getMessage + " | " + allMessages(t.getCause)
@@ -154,7 +154,7 @@ class PipelineSparkSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("CLI typed jdbc round-trip: CSV -> Derby typed DDL -> CSV preserves types") {
-    val base = s"/root/repo/target/tmp/cli_typed_${java.util.UUID.randomUUID().toString.take(8)}"
+    val base = new java.io.File(Scratch.unique("cli_typed")).getAbsolutePath
     val csvIn = s"$base/in"
     new java.io.File(csvIn).mkdirs()
     val lines = Seq(
@@ -295,7 +295,7 @@ class PipelineSparkSpec extends AnyFunSuite with SparkFixture {
     val rep = new graft.pipeline.BatchProgressListener(
       CopyConfig(reportFrequencyMs = 100), _ => ())
     rep.start(spark)
-    val out = s"/root/repo/target/tmp/progress_${java.util.UUID.randomUUID().toString.take(8)}"
+    val out = Scratch.unique("progress")
     try {
       val df = Tables.orders(spark, sf).select("o_orderkey")
       val n = df.count()
@@ -372,7 +372,7 @@ class PipelineSparkSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("partitioned write + partition-pruned read") {
-    val out = s"/root/repo/target/tmp/part_${java.util.UUID.randomUUID().toString.take(8)}"
+    val out = Scratch.unique("part")
     Tables.events(spark, sf).write.partitionBy("event_type").parquet(out)
     val df = spark.read.parquet(out)
       .where(org.apache.spark.sql.functions.col("event_type") === "click")
@@ -507,7 +507,7 @@ class PipelineSparkSpec extends AnyFunSuite with SparkFixture {
 
   test("JDBC (Derby) round-trip through the batching sink is lossless") {
     import org.apache.spark.sql.functions._
-    val db = s"/root/repo/target/tmp/derby_spec_${java.util.UUID.randomUUID().toString.take(8)}"
+    val db = new java.io.File(Scratch.unique("derby_spec")).getAbsolutePath
     val u = graft.sources.JdbcBackend.derbyUrl(db)
     val src = Tables.supplier(spark, sf)
       .select(col("s_suppkey"), col("s_name"), col("s_nationkey"), col("s_acctbal"))

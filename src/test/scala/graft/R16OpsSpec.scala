@@ -369,7 +369,7 @@ class R16OpsSpec extends AnyFunSuite with SparkFixture {
     // framing: the artifact is LINE-delimited even though canary text
     // embeds \n and \r - the writer must escape control chars, so
     // #lines == #records and every line parses on its own
-    val dir = new java.io.File(ops.Pipelines.q204ArtifactDirAbs(sf))
+    val dir = new java.io.File(Scratch.path(ops.Pipelines.q204ArtifactName(sf)))
     val part = dir.listFiles().filter(_.getName.startsWith("part-")).head
     val lines = scala.io.Source.fromFile(part, "UTF-8").getLines().toSeq
     assert(lines.length == out.length,

@@ -12,7 +12,7 @@ import java.nio.file.{Files, Paths}
   * fails on the pre-fix behavior. */
 class ReviewRegressionSpec extends AnyFunSuite with SparkFixture {
 
-  private val base = s"/root/repo/target/tmp/rr_${java.util.UUID.randomUUID().toString.take(8)}"
+  private val base = new java.io.File(Scratch.unique("rr")).getAbsolutePath
 
   override def beforeAll(): Unit = {
     super.beforeAll()

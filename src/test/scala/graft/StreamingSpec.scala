@@ -12,7 +12,7 @@ import java.nio.file.{Files, Paths}
   * (the reference's token-checkpoint semantics, `read.go:100-107`). */
 class StreamingSpec extends AnyFunSuite with SparkFixture {
 
-  private val base = s"/root/repo/target/tmp/stream_${java.util.UUID.randomUUID().toString.take(8)}"
+  private val base = new java.io.File(Scratch.unique("stream")).getAbsolutePath
 
   private val schema = StructType(Seq(
     StructField("id", LongType), StructField("name", StringType),

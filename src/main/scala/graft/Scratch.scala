@@ -1,14 +1,17 @@
 package graft
 
-import java.io.File
+import java.io.{File, IOException}
 import java.nio.file.{Files, StandardCopyOption}
 import java.util.concurrent.ConcurrentHashMap
+import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** Every decision about scratch files: where they live, and the three
-  * kinds of dir under the root (README "Scratch and artifacts").
+/** Every decision about scratch files: where they live, the three
+  * kinds of dir under the root, and how a stream's input waves are
+  * delivered (README "Scratch and artifacts").
   *  - [[fresh]]: a fixed per-query dir, cleared on entry;
   *  - [[artifact]]: a build-once dir, committed by an `_OK` marker;
-  *  - [[withWorkDir]]: a private UUID-named dir, deleted after use.
+  *  - [[withWorkDir]]: a private UUID-named dir, deleted after use;
+  *  - [[stageWaves]]: staged waves moved into a stream's input dir.
   * A dir name never changes with the code that writes it, so a warm
   * root keeps serving across builds; a format change bumps the
   * artifact key's version tag instead. */
@@ -99,6 +102,38 @@ object Scratch {
         }
       }
     } finally walk.close()
+  }
+
+  /** The modification time of wave 0 in [[stageWaves]]; wave `i` gets
+    * `WaveT0 + i * WaveStepMs`. */
+  private val WaveT0 = 1700000000000L
+  private val WaveStepMs = 600000L
+
+  /** Delivers ordered waves into `dir`, the input of a file stream
+    * source: each of `stages` must hold exactly one `part-` file (one
+    * file per wave), which is moved into `dir` with `fs.rename` and
+    * stamped with a strictly increasing modification time per wave.
+    * The file source orders new files by modification time, and files
+    * written back to back can tie on it, so the stamp is what fixes
+    * the order. Every wave is checked before the first one moves, and
+    * a move that fails throws: a wave left behind would otherwise be a
+    * micro-batch silently missing. */
+  def stageWaves(fs: FileSystem, stages: Seq[String], dir: String): Unit = {
+    val files = stages.zipWithIndex.map { case (stage, i) =>
+      val parts = fs.listStatus(new Path(stage)).map(_.getPath)
+        .filter(_.getName.startsWith("part-"))
+      if (parts.length != 1)
+        throw new IOException(s"wave $i: expected one part file in $stage, found ${parts.length}")
+      parts.head
+    }
+    val into = new Path(dir)
+    fs.mkdirs(into)
+    files.zipWithIndex.foreach { case (src, i) =>
+      val dst = new Path(into, src.getName)
+      if (!fs.rename(src, dst))
+        throw new IOException(s"wave $i: move failed for $src")
+      fs.setTimes(dst, WaveT0 + i * WaveStepMs, -1)
+    }
   }
 
   /** Deletes the whole root. */

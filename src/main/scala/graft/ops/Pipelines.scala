@@ -3,6 +3,7 @@ package graft.ops
 import graft.{CopyConfig, Scratch, Tables}
 import graft.infer.TypeInference
 import graft.pipeline.{CopyRead, CopyWrite}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -50,6 +51,41 @@ object Pipelines {
           case other => other
         })
     } finally pool.shutdown()
+  }
+
+  /** Writes each of `waves` as one file into `base/stage_w<i>`, on one
+    * [[runConcurrently]] pool with the independent `alongside` jobs,
+    * then moves them into `base/in` through [[Scratch.stageWaves]].
+    * Returns the `in` dir: a file stream source over it with
+    * `maxFilesPerTrigger = k` sees waves `k·b … k·b+k−1` in micro-batch
+    * `b`. */
+  private[graft] def deliverWaves(s: SparkSession, base: String,
+      waves: Seq[DataFrame], alongside: Seq[() => Unit] = Nil): String = {
+    val stages = waves.indices.map(i => s"$base/stage_w$i")
+    val writes = stages.zipWithIndex.map { case (stage, i) => () =>
+      s.sparkContext.setJobDescription(s"wave $i of $base")
+      waves(i).coalesce(1).write.mode("overwrite").parquet(stage)
+    }
+    val jobs = alongside ++ writes
+    runConcurrently(s, math.min(jobs.size, 4))(jobs) // q149's four setup jobs at once
+    val in = s"$base/in"
+    Scratch.stageWaves(
+      new Path(in).getFileSystem(s.sparkContext.hadoopConfiguration), stages, in)
+    in
+  }
+
+  /** The per-batch dirs `base/stage/<prefix>*` a foreachBatch face
+    * staged, read as one table. The dirs are listed, not globbed in the
+    * read: a glob path is probed for streaming-sink metadata and logs a
+    * benign stack trace. No dir means no micro-batch ever committed —
+    * empty input or a silently failed stream — which fails loudly. */
+  private def readStaged(s: SparkSession, base: String, prefix: String): DataFrame = {
+    val pattern = new Path(s"$base/stage/$prefix*")
+    val dirs = pattern.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .globStatus(pattern).map(_.getPath.toString).sorted
+    require(dirs.nonEmpty, s"$base: the stream staged no $prefix* batches — " +
+      "empty input or a silently failed stream")
+    s.read.parquet(dirs.toIndexedSeq: _*)
   }
 
   /** State-partition width for the STATEFUL streaming faces, set via
@@ -616,17 +652,17 @@ object Pipelines {
   /** Gate face (q111) — STREAMING Misra–Gries heavy hitters: the q104
     * sketch maintained as streaming-aggregation state across real
     * micro-batches (the 7th streaming class: sketch state). The corpus
-    * arrives in three waves (doc_id mod 3, the q103 file-delivery
-    * trick, maxFilesPerTrigger=1), so the MG buffer is updated in batch
-    * 1, then MERGED with the restored state in batches 2 and 3 — the
-    * cross-batch path a single-batch run never executes. The MG theorem
-    * is order- and merge-independent, so the streamed sketch satisfies
-    * exactly the q104 contract: the gate emits the same guaranteed-set
-    * flags (computed against batch-exact counts) and the oracle asserts
-    * them — a sketch whose state mis-restored (lost counts, doubled
-    * counts, dropped keys) breaks underestimate/bound/found and reds
-    * the hash. n_total rides the same streaming state (a second agg
-    * buffer), so a dropped batch reds the count parity too.
+    * arrives in three waves (doc_id mod 3, maxFilesPerTrigger=1), so the
+    * MG buffer is updated in batch 1, then MERGED with the restored state
+    * in batches 2 and 3 — the cross-batch path a single-batch run never
+    * executes. The MG theorem is order- and merge-independent, so the
+    * streamed sketch satisfies exactly the q104 contract: the gate emits
+    * the same guaranteed-set flags (computed against batch-exact counts)
+    * and the oracle asserts them — a sketch whose state mis-restored
+    * (lost counts, doubled counts, dropped keys) breaks
+    * underestimate/bound/found and reds the hash. n_total rides the same
+    * streaming state (a second agg buffer), so a dropped batch reds the
+    * count parity too.
     *
     * Scale: state = ONE bounded MG buffer (≤ cap entries) + a long —
     * constant regardless of stream length; each micro-batch shuffles
@@ -642,10 +678,10 @@ object Pipelines {
     val cap = 64
     val base = Scratch.fresh(ShhName)
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-    (0 until 3).foreach(i => docs.where(pmod(col("doc_id"), lit(3)) === i)
-      .coalesce(1).write.mode("append").parquet(s"$base/in"))
+    val in = deliverWaves(s, base,
+      (0 until 3).map(i => docs.where(pmod(col("doc_id"), lit(3)) === i)))
     val stream = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
+      .option("maxFilesPerTrigger", 1).parquet(in)
     runStream(s) {
       stream
       .select(explode(graft.ops.TextAnalysis.words(col("text"))).as("word"))
@@ -871,40 +907,15 @@ object Pipelines {
     import s.implicits._
     import graft.streaming.CdcApply
     val base = Scratch.fresh("cdc_q103")
-    val tiers = Reconcile.changeLogTiers(Tables.orders(s, d))
-    // r18 (§2.6 overlap independent jobs): the six tier builds are
-    // independent filtered scans of orders — previously six SEQUENTIAL
-    // coalesce(1) writes. They now run concurrently from a bounded
-    // driver pool into per-tier staging dirs; the part files are then
-    // MOVED into log/ with ascending explicit mtimes (the q161
-    // stamped-delivery trick), so the file source's mtime ordering —
-    // and therefore the maxFilesPerTrigger=2 wave composition the
-    // oracle contract was built on — is EXACTLY the sequential
-    // writer's: {t0,t1},{t2,t3},{t4,t5}.
-    // sf1 A/B vs the pre-r18 sequential-append + re-scan shape (one JVM,
-    // alternating): new 11.95/12.34 s warm-min/med vs old 13.47/13.72
-    // (−11%). The measurement-only legacy path is removed again.
-    runConcurrently(s, 3)(tiers.zipWithIndex.map { case (t, i) => () =>
-      s.sparkContext.setJobDescription(s"q103: changelog tier $i")
-      t.coalesce(1).write.mode("overwrite").parquet(s"$base/stage_t$i")
-    })
-    val logDir = new java.io.File(s"$base/log")
-    logDir.mkdirs()
-    tiers.indices.foreach { i =>
-      Option(new java.io.File(s"$base/stage_t$i").listFiles())
-        .getOrElse(Array.empty[java.io.File])
-        .filter(_.getName.startsWith("part-")).foreach { f =>
-          val dst = new java.io.File(logDir, f.getName)
-          if (!f.renameTo(dst))
-            throw new IllegalStateException(s"q103: move failed for $f")
-          dst.setLastModified(1700000000000L + i * 60000L)
-          ()
-        }
-    }
+    // the six changelog tiers, one wave each, read two per micro-batch:
+    // {t0,t1},{t2,t3},{t4,t5} is the composition the oracle was built on
+    // (r18 sf1 A/B, staged concurrently vs six sequential appends:
+    // 11.95/12.34 s warm-min/med vs 13.47/13.72)
+    val logDir = deliverWaves(s, base, Reconcile.changeLogTiers(Tables.orders(s, d)))
     val stream = s.readStream
       .schema(org.apache.spark.sql.Encoders.product[CdcApply.Change].schema)
       .option("maxFilesPerTrigger", 2)
-      .parquet(s"$base/log").as[CdcApply.Change]
+      .parquet(logDir).as[CdcApply.Change]
     runStream(s) {
       CdcApply.applyStream(stream)
       .writeStream.format("parquet")
@@ -926,7 +937,7 @@ object Pipelines {
     // the two digest sides merge into ONE tagged union-aggregate action
     // (2 jobs → 1, and the two snapshot subtrees are scheduled
     // together). nLog over the parquet artifact is a footer-count.
-    val log = s.read.parquet(s"$base/log")
+    val log = s.read.parquet(logDir)
     val batchSnap = Reconcile.mergeUpsert(log, Seq("o_orderkey"), "version", "op")
     val streamSnap = fin.where(col("op") === "U")
     val d60 = conv(substring(md5(concat_ws("|",
@@ -996,15 +1007,14 @@ object Pipelines {
 
   /** Gate face (q138) for [[graft.streaming.RollingAnomaly]] — the
     * ring-buffer state machine run as a REAL streaming query over
-    * day-partitioned waves. Events split into three day-tercile waves
-    * (mod-time-stamped in strictly increasing order, the q121 r9-advice
-    * convention, so the file source cannot reorder them); each wave's
-    * micro-batch completes its days, the machine scores them against
-    * state carried from PRIOR waves and emits q135's exact flag rows.
-    * The oracle is q135's batch-window SQL verbatim: equality proves
-    * the incremental ring ≡ the batch ROWS frame across wave
-    * boundaries (days 8+ of a user score against a ring built in an
-    * earlier micro-batch — a state restore is on the hash path). */
+    * day-partitioned waves. Events split into three day-tercile waves,
+    * delivered in order; each wave's micro-batch completes its days, the
+    * machine scores them against state carried from PRIOR waves and emits
+    * q135's exact flag rows. The oracle is q135's batch-window SQL
+    * verbatim: equality proves the incremental ring ≡ the batch ROWS
+    * frame across wave boundaries (days 8+ of a user score against a ring
+    * built in an earlier micro-batch — a state restore is on the hash
+    * path). */
   def streamRollingAnomaly(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import graft.streaming.RollingAnomaly
@@ -1014,19 +1024,12 @@ object Pipelines {
     val mm = ev.agg(min(col("day")), max(col("day"))).head
     val (d0, span) = (mm.getLong(0), mm.getLong(1) - mm.getLong(0) + 1)
     val (b1, b2) = (d0 + span / 3, d0 + 2 * span / 3)
-    val inDir = new java.io.File(s"$base/in")
-    val stamped = scala.collection.mutable.HashSet[String]()
-    Seq(col("day") < b1,
-        col("day") >= b1 && col("day") < b2,
-        col("day") >= b2).zipWithIndex.foreach { case (wave, i) =>
-      ev.where(wave).coalesce(1).write.mode("append").parquet(s"$base/in")
-      val waveT = 1700000000000L + i * 600000L
-      inDir.listFiles().foreach(f => if (stamped.add(f.getName)) f.setLastModified(waveT))
-    }
+    val in = deliverWaves(s, base, Seq(col("day") < b1,
+      col("day") >= b1 && col("day") < b2, col("day") >= b2).map(ev.where))
     val stream = s.readStream
       .schema(org.apache.spark.sql.Encoders.product[RollingAnomaly.Ev].schema)
       .option("maxFilesPerTrigger", 1)
-      .parquet(s"$base/in").as[RollingAnomaly.Ev]
+      .parquet(in).as[RollingAnomaly.Ev]
     runStream(s) {
       RollingAnomaly.flags(stream)
       .writeStream.format("parquet")
@@ -1051,18 +1054,18 @@ object Pipelines {
 
   /** Gate face (q121) — streaming late-data DEAD-LETTER routing
     * ([[graft.streaming.DeadLetter]], 8th streaming class: side-output
-    * from custom state). The events corpus arrives in 3 waves
-    * (event_id mod 3, maxFilesPerTrigger = 1 — the q103/q111 delivery
-    * trick), timestamps interleaved across waves by construction, so
-    * waves 2–3 genuinely contain rows behind wave 1's keyed watermark:
-    * those route to the flagged side channel instead of being silently
-    * dropped (what Spark's built-in stateful aggs do). Delay = half the
-    * corpus's time span (computed from the data so the face survives
-    * testdata regeneration), window = 1 day. The face sums the sink's
-    * per-batch deltas; the oracle replays the exact keyed-watermark
-    * rule — per key, max prior-wave event time minus delay — so a row
-    * misrouted in either direction, a dropped late row, or a watermark
-    * advanced at the wrong batch boundary diverges the counts. */
+    * from custom state). The events corpus arrives in 3 waves (event_id
+    * mod 3, maxFilesPerTrigger = 1), timestamps interleaved across waves
+    * by construction, so waves 2–3 genuinely contain rows behind wave 1's
+    * keyed watermark: those route to the flagged side channel instead of
+    * being silently dropped (what Spark's built-in stateful aggs do).
+    * Delay = half the corpus's time span (computed from the data so the
+    * face survives testdata regeneration), window = 1 day. The face sums
+    * the sink's per-batch deltas; the oracle replays the exact
+    * keyed-watermark rule — per key, max prior-wave event time minus
+    * delay — so a row misrouted in either direction, a dropped late row,
+    * or a watermark advanced at the wrong batch boundary diverges the
+    * counts. */
   def streamDeadLetter(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import graft.streaming.DeadLetter
@@ -1072,25 +1075,14 @@ object Pipelines {
         unix_timestamp(col("ts")).as("t"))
     // Wave ORDER is load-bearing here (unlike q111/q103, whose state is
     // merge-order-independent): the keyed watermark advances wave by
-    // wave, and the oracle replays waves in event_id%3 order. The file
-    // source orders by MODIFICATION TIME, and two sequential appends can
-    // tie within the filesystem's stamp granularity — so stamp each
-    // wave's files explicitly with strictly increasing times (r9 advice).
-    val inDir = new java.io.File(s"$base/in")
-    val stamped = scala.collection.mutable.HashSet[String]()
-    (0 until 3).foreach { i =>
-      ev.where(pmod(col("event_id"), lit(3)) === i)
-        .coalesce(1).write.mode("append").parquet(s"$base/in")
-      val waveT = 1700000000000L + i * 600000L
-      inDir.listFiles().foreach { f =>
-        if (stamped.add(f.getName)) f.setLastModified(waveT)
-      }
-    }
+    // wave, and the oracle replays waves in event_id%3 order.
+    val in = deliverWaves(s, base,
+      (0 until 3).map(i => ev.where(pmod(col("event_id"), lit(3)) === i)))
     val delaySec = ev.agg(expr("(max(t) - min(t)) div 2")).head.getLong(0)
     val stream = s.readStream
       .schema(org.apache.spark.sql.Encoders.product[DeadLetter.Ev].schema)
       .option("maxFilesPerTrigger", 1)
-      .parquet(s"$base/in").as[DeadLetter.Ev]
+      .parquet(in).as[DeadLetter.Ev]
     runStream(s) {
       DeadLetter.route(stream, delaySec, windowSec = 86400L)
       .writeStream.format("parquet")
@@ -1305,17 +1297,15 @@ object Pipelines {
 
   /** q149 — STREAMING DELTA-DEDUP ADMISSION (11th streaming class):
     * q127's admission screening run as a real multi-batch stream. New
-    * documents arrive in three waves (doc_id mod 3, the q103/q111/q121
-    * file-delivery trick, strictly increasing mtimes so wave ORDER is
-    * physical); each micro-batch signs its docs with q127's exact
-    * MinHash pipeline ([[Dedup.minhashSig]]), band-joins them against
-    * the PERSISTED corpus index, est-Jaccard-verifies, and emits a
-    * per-doc admit/reject verdict — plus the CROSS-BATCH leg q127's
-    * one-shot face never runs: each doc is also screened against every
-    * doc ADMITTED IN AN EARLIER WAVE, so a doc admitted in wave 1
-    * rejects its near-dup arriving in wave 3. State is load-bearing:
-    * lose it and the wave-3 dup sails through (the spec plants exactly
-    * that scenario).
+    * documents arrive in three ordered waves (doc_id mod 3); each
+    * micro-batch signs its docs with q127's exact MinHash pipeline
+    * ([[Dedup.minhashSig]]), band-joins them against the PERSISTED corpus
+    * index, est-Jaccard-verifies, and emits a per-doc admit/reject
+    * verdict — plus the CROSS-BATCH leg q127's one-shot face never runs:
+    * each doc is also screened against every doc ADMITTED IN AN EARLIER
+    * WAVE, so a doc admitted in wave 1 rejects its near-dup arriving in
+    * wave 3. State is load-bearing: lose it and the wave-3 dup sails
+    * through (the spec plants exactly that scenario).
     *
     * State shape: the admitted set's signatures are a PARQUET state
     * artifact, not state-store rows, on purpose — at corpus scale the
@@ -1349,17 +1339,10 @@ object Pipelines {
   def streamDedupAdmission(s: SparkSession, d: String): DataFrame = {
     val base = Scratch.fresh(SdaName)
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-    // r18 (§2.6 overlap independent jobs, the q103 tier-write pattern):
-    // the setup's two halves are independent — (a) the corpus index
-    // chain (sig artifact → bands → admitted-state seed, each step
-    // reading its predecessor's artifact) and (b) the three wave
-    // deliveries (filtered doc scans). They previously ran as six
-    // SEQUENTIAL driver actions; the chain and the three wave writes
-    // now run concurrently from a bounded pool, waves staging into
-    // per-wave dirs whose part files are then MOVED into in/ with the
-    // same ascending stamped mtimes as before — wave composition (one
-    // file per wave, mtime order {t0,t1,t2}, maxFilesPerTrigger=1) is
-    // EXACTLY the sequential writer's.
+    // r18 (§2.6 overlap independent jobs): the corpus index chain (sig
+    // artifact → bands → admitted-state seed, each step reading its
+    // predecessor's artifact) is independent of the wave writes, so it
+    // rides the same pool as one more job.
     def chain(): Unit = {
       s.sparkContext.setJobDescription("q149: corpus sig/bands/seed chain")
       // the "prior run": corpus signatures from the persisted artifact
@@ -1379,48 +1362,18 @@ object Pipelines {
       // replayed batch's own half-written admissions out of its input.
       idxSig.limit(0).write.mode("overwrite").parquet(s"$base/adm_sig/batch=-1")
     }
-    def wave(i: Int): Unit = {
-      s.sparkContext.setJobDescription(s"q149: wave $i delivery")
-      docs.where(col("doc_id") % 7 === 0 && pmod(col("doc_id"), lit(3)) === i)
-        .coalesce(1).write.mode("overwrite").parquet(s"$base/stage_w$i")
-    }
-    runConcurrently(s, 4)((() => chain()) +: (0 until 3).map(i => () => wave(i)))
-    // wave move-in, mtimes strictly increasing (the q121 r9-advice fix:
-    // the file source orders by modification time and sequential appends
-    // can tie within stamp granularity)
-    val inDir = streamDedupAdmissionInputDir
-    inDir.mkdirs()
-    (0 until 3).foreach { i =>
-      val waveT = 1700000000000L + i * 600000L
-      Option(new java.io.File(s"$base/stage_w$i").listFiles())
-        .getOrElse(Array.empty[java.io.File])
-        .filter(_.getName.startsWith("part-")).foreach { f =>
-          val dst = new java.io.File(inDir, f.getName)
-          if (!f.renameTo(dst))
-            throw new IllegalStateException(s"q149: move failed for $f")
-          dst.setLastModified(waveT)
-          ()
-        }
-    }
+    val in = deliverWaves(s, base, (0 until 3).map(i =>
+      docs.where(col("doc_id") % 7 === 0 && pmod(col("doc_id"), lit(3)) === i)),
+      alongside = Seq(() => chain()))
     val stream = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
+      .option("maxFilesPerTrigger", 1).parquet(in)
     runStream(s) {
       stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
         sdaProcessBatch(base, batch, batchId)
       }.option("checkpointLocation", s"$base/ckpt")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
     }
-    // explicit dir list, not a glob: DataFrameReader probes a glob path
-    // for streaming-sink metadata and logs a scary (benign) trace.
-    // Null-guarded (r13 advice): listFiles() returns null when no
-    // micro-batch ever committed — fail with the REAL story, not an NPE
-    val verdictDirs = Option(new java.io.File(s"$base/stage").listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .filter(_.getName.startsWith("verdicts_")).map(_.getPath).sorted
-    require(verdictDirs.nonEmpty,
-      "streamDedupAdmission: stream produced no staged verdict batches — " +
-        "empty input or a silently failed stream")
-    s.read.parquet(verdictDirs.toIndexedSeq: _*)
+    readStaged(s, base, "verdicts_")
       .select(col("new_doc"), (col("new_doc") % 3).as("wave"),
         col("n_corpus_dups"), col("n_admitted_dups"), col("admitted"))
       .orderBy(col("new_doc"))
@@ -1602,33 +1555,19 @@ object Pipelines {
       .select(col("vec_id"), col("cent_id"))
       .repartition(col("cent_id")).write.mode("overwrite")
       .partitionBy("cent_id").parquet(s"$base/index/batch=-1")
-    // wave delivery (the q149 mtime trick: file-source order is mtime)
     val newVecs = qe.where(col("vec_id") % 10 === 0)
       .select(col("vec_id"), col("q8"))
-    val inDir = streamIndexMaintenanceInputDir
-    val stamped = scala.collection.mutable.HashSet[String]()
-    (0 until 3).foreach { i =>
-      newVecs.where(pmod(col("vec_id"), lit(3)) === i)
-        .coalesce(1).write.mode("append").parquet(s"$base/in")
-      val waveT = 1700000000000L + i * 600000L
-      inDir.listFiles().foreach(f => if (stamped.add(f.getName)) f.setLastModified(waveT))
-    }
+    val in = deliverWaves(s, base,
+      (0 until 3).map(i => newVecs.where(pmod(col("vec_id"), lit(3)) === i)))
     val stream = s.readStream.schema(newVecs.schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
+      .option("maxFilesPerTrigger", 1).parquet(in)
     runStream(s) {
       stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
         simProcessBatch(base, cent, existing, batch, batchId)
       }.option("checkpointLocation", s"$base/ckpt")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
     }
-    // null-guarded like q149's verdict list (r13 advice)
-    val receiptDirs = Option(new java.io.File(s"$base/stage").listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .filter(_.getName.startsWith("receipt_")).map(_.getPath).sorted
-    require(receiptDirs.nonEmpty,
-      "streamIndexMaintenance: stream produced no staged receipts — " +
-        "empty input or a silently failed stream")
-    s.read.parquet(receiptDirs.toIndexedSeq: _*).orderBy(col("wave"))
+    readStaged(s, base, "receipt_").orderBy(col("wave"))
   }
 
   /** ONE micro-batch of [[streamIndexMaintenance]] — extracted (r14,
@@ -1733,12 +1672,6 @@ object Pipelines {
       |FROM per CROSS JOIN ex
       |ORDER BY per.wave""".stripMargin
 
-  private val SeName = "se_q175"
-  /** Where [[streamErasure]] stages its delivery files — exposed for
-    * the spec's replay assertion. */
-  private[graft] def streamErasureInputDir: java.io.File =
-    new java.io.File(Scratch.path(s"$SeName/in"))
-
   /** q175 — STREAMING ERASURE PROPAGATION (13th streaming class): the
     * right-to-be-forgotten queue as a real multi-batch stream — q166's
     * batch erasure is how you erase a KNOWN subject list; production
@@ -1767,7 +1700,7 @@ object Pipelines {
     * affected cells' survivors — cost ∝ the requests and the cells
     * they name, never the index; the audit legs are id-only joins. */
   def streamErasure(s: SparkSession, d: String): DataFrame = {
-    val base = Scratch.fresh(SeName)
+    val base = Scratch.fresh("se_q175")
     val qe = Similarity.quantizedEmbeddings(s, d)
     val cent = Similarity.fixedCells(qe)
     // the serving index: the FULL corpus routed + persisted by cell —
@@ -1776,32 +1709,20 @@ object Pipelines {
     // write is paid once per source content, not per invocation)
     Scratch.cloneDir(Similarity.fullIndexArtifact(s, d, cent), s"$base/index")
     // erasure requests: subjects vec_id % 10 = 0, delivered in three
-    // waves by (vec_id div 10) % 3 (the q161 mtime trick)
+    // waves by (vec_id div 10) % 3
     val subjects = qe.where(col("vec_id") % 10 === 0)
       .select(col("vec_id"), col("q8"))
-    val inDir = streamErasureInputDir
-    val stamped = scala.collection.mutable.HashSet[String]()
-    (0 until 3).foreach { i =>
-      subjects.where(expr("(vec_id div 10) % 3") === i)
-        .coalesce(1).write.mode("append").parquet(s"$base/in")
-      val waveT = 1700000000000L + i * 600000L
-      inDir.listFiles().foreach(f => if (stamped.add(f.getName)) f.setLastModified(waveT))
-    }
+    val in = deliverWaves(s, base,
+      (0 until 3).map(i => subjects.where(expr("(vec_id div 10) % 3") === i)))
     val stream = s.readStream.schema(subjects.schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
+      .option("maxFilesPerTrigger", 1).parquet(in)
     runStream(s) {
       stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
         seProcessBatch(base, cent, qe, batch, batchId)
       }.option("checkpointLocation", s"$base/ckpt")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
     }
-    val receiptDirs = Option(new java.io.File(s"$base/stage").listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .filter(_.getName.startsWith("receipt_")).map(_.getPath).sorted
-    require(receiptDirs.nonEmpty,
-      "streamErasure: stream produced no staged receipts — empty input " +
-        "or a silently failed stream")
-    s.read.parquet(receiptDirs.toIndexedSeq: _*).orderBy(col("wave"))
+    readStaged(s, base, "receipt_").orderBy(col("wave"))
   }
 
   /** ONE micro-batch of [[streamErasure]] — extracted for the crash-
@@ -1924,12 +1845,6 @@ object Pipelines {
       |FROM per LEFT JOIN del USING (wave)
       |ORDER BY wave""".stripMargin
 
-  private val SdrName = "sdr_q182"
-  /** Where [[streamDriftMonitor]] stages its delivery files — exposed
-    * for the replay spec. */
-  private[graft] def streamDriftMonitorInputDir: java.io.File =
-    new java.io.File(Scratch.path(s"$SdrName/in"))
-
   /** q182 — STREAMING CORPUS-DRIFT MONITOR (14th streaming class):
     * q139's distribution-drift audit as a CONTINUOUS property of an
     * arriving crawl — the alarm a production ingest keeps on while the
@@ -1957,35 +1872,23 @@ object Pipelines {
     * the |langs|-bounded profile tables; the reference broadcast is
     * |langs| rows. Nothing corpus-sized shuffles per wave. */
   def streamDriftMonitor(s: SparkSession, d: String): DataFrame = {
-    val base = Scratch.fresh(SdrName)
+    val base = Scratch.fresh("sdr_q182")
     val docs = Tables.documents(s, d).select(col("doc_id"), col("lang"))
     // the prior-release reference profile, persisted once (the artifact
     // a real monitor loads at start)
     docs.groupBy(col("lang")).agg(count(lit(1)).as("c"))
       .coalesce(1).write.mode("overwrite").parquet(s"$base/ref")
-    val inDir = streamDriftMonitorInputDir
-    val stamped = scala.collection.mutable.HashSet[String]()
-    (0 until 3).foreach { i =>
-      docs.where(pmod(col("doc_id"), lit(3)) === i)
-        .coalesce(1).write.mode("append").parquet(s"$base/in")
-      val waveT = 1700000000000L + i * 600000L
-      inDir.listFiles().foreach(f => if (stamped.add(f.getName)) f.setLastModified(waveT))
-    }
+    val in = deliverWaves(s, base,
+      (0 until 3).map(i => docs.where(pmod(col("doc_id"), lit(3)) === i)))
     val stream = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
+      .option("maxFilesPerTrigger", 1).parquet(in)
     runStream(s) {
       stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
         sdrProcessBatch(base, batch, batchId)
       }.option("checkpointLocation", s"$base/ckpt")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
     }
-    val receiptDirs = Option(new java.io.File(s"$base/stage").listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .filter(_.getName.startsWith("receipt_")).map(_.getPath).sorted
-    require(receiptDirs.nonEmpty,
-      "streamDriftMonitor: stream produced no staged receipts — " +
-        "empty input or a silently failed stream")
-    s.read.parquet(receiptDirs.toIndexedSeq: _*).orderBy(col("wave"))
+    readStaged(s, base, "receipt_").orderBy(col("wave"))
   }
 
   /** ONE micro-batch of [[streamDriftMonitor]] — pure function of the
@@ -2062,12 +1965,6 @@ object Pipelines {
       |FROM sc s JOIN nb ON nb.wave = s.wave JOIN cumt t ON t.wave = s.wave
       |ORDER BY wave""".stripMargin
 
-  private val SbaName = "sba_q192"
-  /** Where [[streamBudgetAdmission]] stages its delivery files —
-    * exposed for the replay spec. */
-  private[graft] def streamBudgetAdmissionInputDir: java.io.File =
-    new java.io.File(Scratch.path(s"$SbaName/in"))
-
   /** Per-source token budget of [[streamBudgetAdmission]]'s gate face —
     * sized so sources close in DIFFERENT waves at sf0.01 (~65 tokens/
     * doc, ~8-9 docs/source/wave): the admit and reject paths are both
@@ -2100,32 +1997,20 @@ object Pipelines {
     * re-derivation here is what makes replay receipts bit-stable);
     * receipts are |1|-row. */
   def streamBudgetAdmission(s: SparkSession, d: String): DataFrame = {
-    val base = Scratch.fresh(SbaName)
+    val base = Scratch.fresh("sba_q192")
     val docs = graft.ops.TextAnalysis.sourceQualityFrame(s, d)
       .select(col("doc_id"), col("source"), col("nt"))
-    val inDir = streamBudgetAdmissionInputDir
-    val stamped = scala.collection.mutable.HashSet[String]()
-    (0 until 3).foreach { i =>
-      docs.where(pmod(col("doc_id"), lit(3)) === i)
-        .coalesce(1).write.mode("append").parquet(s"$base/in")
-      val waveT = 1700000000000L + i * 600000L
-      inDir.listFiles().foreach(f => if (stamped.add(f.getName)) f.setLastModified(waveT))
-    }
+    val in = deliverWaves(s, base,
+      (0 until 3).map(i => docs.where(pmod(col("doc_id"), lit(3)) === i)))
     val stream = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
+      .option("maxFilesPerTrigger", 1).parquet(in)
     runStream(s) {
       stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
         sbaProcessBatch(base, batch, batchId)
       }.option("checkpointLocation", s"$base/ckpt")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
     }
-    val receiptDirs = Option(new java.io.File(s"$base/stage").listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .filter(_.getName.startsWith("receipt_")).map(_.getPath).sorted
-    require(receiptDirs.nonEmpty,
-      "streamBudgetAdmission: stream produced no staged receipts — " +
-        "empty input or a silently failed stream")
-    s.read.parquet(receiptDirs.toIndexedSeq: _*).orderBy(col("wave"))
+    readStaged(s, base, "receipt_").orderBy(col("wave"))
   }
 
   /** ONE micro-batch of [[streamBudgetAdmission]] — pure function of

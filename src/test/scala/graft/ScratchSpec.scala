@@ -1,12 +1,16 @@
 package graft
 
-import java.io.File
+import java.io.{File, IOException}
+import java.net.URI
 import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path, RawLocalFileSystem}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The build-once protocol of [[Scratch.artifact]] and the private dir
-  * of [[Scratch.withWorkDir]]. No session: the protocol is plain files. */
+/** The build-once protocol of [[Scratch.artifact]], the private dir of
+  * [[Scratch.withWorkDir]] and the wave moves of [[Scratch.stageWaves]].
+  * No session: the protocol is plain files. */
 class ScratchSpec extends AnyFunSuite {
 
   /** A fresh artifact key under the root, removed after `body`. */
@@ -89,5 +93,57 @@ class ScratchSpec extends AnyFunSuite {
     assert(seen.distinct.length == 2)
     assert(seen.forall(d => new File(d).getName.matches("scratchspec_work_[0-9a-f]{8}")))
     assert(seen.forall(d => !new File(d).exists()), "work dir left behind")
+  }
+
+  /** `n` stage dirs under `key`, each holding one part file, named so
+    * that name order is wave order, beside a `_SUCCESS` marker. */
+  private def stages(key: String, n: Int): Seq[String] =
+    (0 until n).map { i =>
+      val dir = Scratch.path(s"$key/stage_w$i")
+      touch(dir, s"part-0000$i.parquet")
+      touch(dir, "_SUCCESS")
+      dir
+    }
+
+  private val localFs = FileSystem.getLocal(new Configuration())
+
+  test("stageWaves: each wave's file is moved in, stamped later than the wave before") {
+    withKey { key =>
+      val in = Scratch.path(s"$key/in")
+      val staged = stages(key, 3)
+      Scratch.stageWaves(localFs, staged, in)
+      val moved = new File(in).listFiles().filter(_.getName.startsWith("part-"))
+        .sortBy(_.getName).toSeq
+      assert(moved.map(_.getName) == (0 until 3).map(i => s"part-0000$i.parquet"))
+      val stamps = moved.map(_.lastModified())
+      assert(stamps.zip(stamps.tail).forall { case (a, b) => a < b },
+        s"wave stamps not strictly increasing: $stamps")
+      assert(staged.forall(d => !new File(d).list().exists(_.startsWith("part-"))),
+        "a part file was left in its stage dir")
+    }
+  }
+
+  test("stageWaves: a move the filesystem refuses throws, naming the wave") {
+    withKey { key =>
+      val refusing = new RawLocalFileSystem {
+        override def rename(src: Path, dst: Path): Boolean = false
+      }
+      refusing.initialize(URI.create("file:///"), new Configuration())
+      val e = intercept[IOException] {
+        Scratch.stageWaves(refusing, stages(key, 2), Scratch.path(s"$key/in"))
+      }
+      assert(e.getMessage.startsWith("wave 0: move failed"), e.getMessage)
+    }
+  }
+
+  test("stageWaves: a wave that is not exactly one file throws before any move") {
+    withKey { key =>
+      val staged = stages(key, 2)
+      touch(staged(1), "part-00009.parquet")
+      val in = Scratch.path(s"$key/in")
+      val e = intercept[IOException](Scratch.stageWaves(localFs, staged, in))
+      assert(e.getMessage.startsWith("wave 1: expected one part file"), e.getMessage)
+      assert(!new File(in).exists(), "a wave was moved before the check")
+    }
   }
 }

@@ -374,6 +374,28 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
       "resumed streaming snapshot differs from batch apply")
   }
 
+  test("deliverWaves: micro-batch i of a maxFilesPerTrigger=1 stream holds exactly wave i") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.streaming.Trigger
+    val s = spark
+    import s.implicits._
+    val dir = s"$base/waves"
+    // disjoint keys per wave; the waves are written concurrently, so
+    // only the delivery fixes which one the source takes first
+    val keys = (0 until 3).map(i => (i * 100L until i * 100L + 20L).toSet)
+    val in = graft.ops.Pipelines.deliverWaves(spark, dir, keys.map(_.toSeq.toDF("k")))
+    val seen = new java.util.concurrent.ConcurrentHashMap[Long, Set[Long]]()
+    val q = spark.readStream.schema(StructType(Seq(StructField("k", LongType))))
+      .option("maxFilesPerTrigger", 1).parquet(in)
+      .writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+        seen.put(batchId, batch.as[Long].collect().toSet); ()
+      }.option("checkpointLocation", s"$dir/ckpt")
+      .trigger(Trigger.AvailableNow()).start()
+    assert(q.awaitTermination(120000), "wave stream missed its deadline")
+    val got = (0L until seen.size).map(seen.get)
+    assert(seen.size == 3 && got == keys, s"micro-batches $got, waves $keys")
+  }
+
   test("rolling-anomaly ring: scores match the batch frame, ring trims to 7") {
     import graft.streaming.RollingAnomaly.{stepDays, Ring}
     // 8 constant days then a spike, delivered in two waves: the spike's

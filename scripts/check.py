@@ -13,7 +13,10 @@ Usage: python3 scripts/check.py [sfDir] [--skip-verify]
 (default: the two highest BENCH_r*.json rounds) and flags regressions
 > 25% that are also > 0.2s absolute (so sub-second queries don't trip
 on scheduler noise). Queries only in one file are listed as added or
-removed; the shared-query totals quantify pass-level drift.
+removed; the shared-query totals quantify pass-level drift. When both
+files are Bench detail files carrying engine records (`layers`), each
+flagged query also names the record field with the largest relative
+change between the two per-query median records.
 
 --correctness-diff compares two CORRECTNESS_r*.json files (default: the
 two highest rounds): a query silently DROPPING OUT of the gate, newly
@@ -91,6 +94,48 @@ def load_bench_loads(path):
     la = (d or {}).get("load_avg") or (d or {}).get("load")
     return [float(x) for x in la] if la else None
 
+def load_bench_layers(path):
+    """Per-query engine records (`layers`, one per pass) from a Bench
+    detail file, reduced to the median of each numeric field; nested
+    maps flatten to `plan_ms.analysis`-style keys. None when the file
+    carries no records."""
+    d = json.load(open(path))
+    layers = (d or {}).get("layers") if isinstance(d, dict) else None
+    if not layers:
+        return None
+    def flat(rec, pre=""):
+        out = {}
+        for k, v in rec.items():
+            if isinstance(v, dict): out.update(flat(v, f"{pre}{k}."))
+            elif isinstance(v, (int, float)) and not isinstance(v, bool): out[pre + k] = v
+        return out
+    res = {}
+    for name, recs in layers.items():
+        q = name.split("_")[0]
+        fields = [flat(r) for r in recs]
+        keys = set().union(*fields) if fields else set()
+        res[q] = {k: sorted(f.get(k, 0) for f in fields)[len(fields) // 2] for k in keys}
+    return res
+
+def largest_layer_change(old, new):
+    """The record field with the largest relative change between two
+    per-query median records, as `(field, old, new)`. A time field
+    (`*_s`, `plan_ms.*`, `stream_ms.*`) that moved less than 50 ms is
+    skipped: at that size a few-ms planning or GC jitter would otherwise
+    outrank the layer that made the query > 0.2 s slower. A field new
+    from zero counts as the largest."""
+    def secs(k, v):
+        return v / 1000 if k.startswith(("plan_ms.", "stream_ms.")) else v
+    best = None
+    for k in set(old) | set(new):
+        o, n = old.get(k, 0), new.get(k, 0)
+        if o == n: continue
+        timed = k.endswith("_s") or k.startswith(("plan_ms.", "stream_ms."))
+        if timed and abs(secs(k, n) - secs(k, o)) < 0.05: continue
+        rel = abs(n - o) / abs(o) if o else math.inf
+        if best is None or rel > best[0]: best = (rel, k, o, n)
+    return None if best is None else best[1:]
+
 # The micro-batch streaming faces (10 classes + batch q63's streaming
 # sibling set): their bench cost is dominated by the fixed 3-wave
 # delivery + checkpoint-commit latency floor, not data volume.
@@ -162,8 +207,15 @@ def bench_diff(argv):
     if removed: print(f"  removed ({len(removed)}): {', '.join(removed)}")
     if flagged:
         print(f"  REGRESSIONS (> 25% and > 0.2s):")
+        # both sides' detail files carry engine records: name the record
+        # field that moved most, so a flagged query points at its layer
+        lo_l, ln_l = load_bench_layers(old_path), load_bench_layers(new_path)
         for q, o, n, pct in sorted(flagged, key=lambda t: -t[3]):
-            print(f"    {q}: {o:.2f}s -> {n:.2f}s (+{pct * 100:.0f}%)")
+            why = ""
+            if lo_l and ln_l and q in lo_l and q in ln_l:
+                ch = largest_layer_change(lo_l[q], ln_l[q])
+                if ch: why = f"  largest layer change: {ch[0]} {ch[1]:g} -> {ch[2]:g}"
+            print(f"    {q}: {o:.2f}s -> {n:.2f}s (+{pct * 100:.0f}%){why}")
     else:
         print("  no per-query regressions above threshold")
     return 1 if flagged else 0

@@ -31,10 +31,11 @@ echo "load=$(cut -d' ' -f1 /proc/loadavg)"
 scripts/run-tool.sh graft.tools.Profile target/sf30 2 q154_intra_doc_repetition 2>/dev/null
 scripts/run-tool.sh graft.tools.Profile target/sf100 2 q154_intra_doc_repetition 2>/dev/null
 
+# each run's engine record splits q149 into stream_ms.addBatch (data
+# work), the rest of triggerExecution (micro-batch machinery) and the
+# wall time outside the stream (r12 item 7)
 echo "--- q149 at sf0.1 after the one-commit-per-batch rework (r12 record 7.91s) ---"
 scripts/run-tool.sh graft.tools.Profile /root/testdata/sf0.1 3 q149_stream_admission 2>/dev/null
-echo "--- q149 floor decomposition (AdmissionProfile, r12 item 7) ---"
-scripts/run-tool.sh graft.tools.AdmissionProfile /root/testdata/sf0.1 2 2>/dev/null
 
 echo "--- ingest: same sink, Derby vs DuckDB store (r12 item 6); fresh JVM each ---"
 DUCK=$(find /root/.cache/coursier -name "duckdb_jdbc-*.jar" | head -1)

@@ -7,7 +7,6 @@
 #      rows ARE the eviction-exposed floor that hit 23.96 s in r14.
 #   2. Media faces (item 3): q64/q65/q66/q67 isolated with the decoded-
 #      stats artifact — target <= 1 s warm.
-#   3. Streaming floor ledger at sf0.1 (item 7).
 # The q184 default-stride decade rows and the q170 splice A/B it also ran
 # are settled (probe_r15.txt, BASELINE.md); their one-off mains are gone.
 cd /root/repo
@@ -24,8 +23,5 @@ echo "--- 2. media faces, decoded-stats artifact (sf0.1, 3 passes) ---"
 scripts/run-tool.sh graft.tools.Profile /root/testdata/sf0.1 3 \
   q60_media_meta q61_media_decode_summary q64_image_decode \
   q65_audio_decode q66_image_resize q67_frame_sample 2>/dev/null
-
-echo "--- 3. streaming floor ledger (sf0.1) ---"
-scripts/run-tool.sh graft.tools.StreamFloorLedger /root/testdata/sf0.1 2 2>/dev/null
 
 echo "== done $(date -u +%H:%M:%SZ) load=$(cut -d' ' -f1 /proc/loadavg) =="

@@ -99,6 +99,9 @@ object Bench {
       .filterNot(n => exclude.contains(n.takeWhile(_ != '_')))
     val samples = scala.collection.mutable.Map.empty[String, List[Double]]
       .withDefaultValue(Nil)
+    // one engine record ([[obs.Record]]) per query per pass
+    val layers = scala.collection.mutable.Map.empty[String, List[String]]
+      .withDefaultValue(Nil)
     // window-quality telemetry (r7 verdict item 6): the r7 A/B proved
     // medians measure the LOAD WINDOW as much as the code (noisy
     // neighbors move them 15-20%); recording the 1-min system load at
@@ -110,17 +113,23 @@ object Bench {
       loadAvgs += osBean.getSystemLoadAverage
       names.foreach { name =>
         val fn = SparkEntry.queries(name)
-        val t0 = System.nanoTime()
-        val ok =
-          try {
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            true
-          } catch {
-            case e: Throwable =>
-              System.err.println(s"[bench] $name failed: ${e.getMessage}")
-              false
-          }
-        if (ok) samples(name) :+= (System.nanoTime() - t0) / 1e9
+        // the meter is registered before t0 and drained after the save,
+        // so its record is taken outside the timed window
+        val ((ok, dt), rec) = obs.Meter.measure(spark) {
+          val t0 = System.nanoTime()
+          val ok =
+            try {
+              fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+              true
+            } catch {
+              case e: Throwable =>
+                System.err.println(s"[bench] $name failed: ${e.getMessage}")
+                false
+            }
+          (ok, (System.nanoTime() - t0) / 1e9)
+        }
+        if (ok) samples(name) :+= dt
+        layers(name) :+= rec.json
       }
       spark.catalog.clearCache() // passes stay independent of each other
     }
@@ -162,7 +171,9 @@ object Bench {
     // cross-round comparison against r13/r14's decode-in-query floors
     // must not read their drop as an operator speedup.
     val artifactScanFaces = """["q64","q65","q66","q67"]"""
-    val detail = f"""{"metric":"total","value":${tot(_._2)}%.3f,"unit":"sec","queries":${obj(_._2)},"total_min":${tot(_._3)}%.3f,"queries_min":${obj(_._3)},"total_mean":${tot(_._4)}%.3f,"queries_mean":${obj(_._4)},"n_samples":$passes,"queries_n":$perQueryN,"failed_passes":$failedPasses,"stat":"median","forced_eval":"noop_sink","artifact_scan_faces":$artifactScanFaces,"load_avg":$loadJson,"sf":"$sfDir"}"""
+    val layersJson = names.map(n => "\"" + n + "\":" + layers(n).mkString("[", ",", "]"))
+      .mkString("{", ",", "}")
+    val detail = f"""{"metric":"total","value":${tot(_._2)}%.3f,"unit":"sec","queries":${obj(_._2)},"total_min":${tot(_._3)}%.3f,"queries_min":${obj(_._3)},"total_mean":${tot(_._4)}%.3f,"queries_mean":${obj(_._4)},"n_samples":$passes,"queries_n":$perQueryN,"failed_passes":$failedPasses,"stat":"median","forced_eval":"noop_sink","artifact_scan_faces":$artifactScanFaces,"load_avg":$loadJson,"sf":"$sfDir","layers":$layersJson}"""
     // cwd-relative default (r5 advice): works from any checkout location;
     // override with SPARK_GRAFT_BENCH_DETAIL
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "bench_detail.json")

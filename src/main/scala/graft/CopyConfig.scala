@@ -13,7 +13,6 @@ final case class CopyConfig(
     maxAttempts: Int = 5,                 // --max-attempts (0 = infinite)
     nullValue: String = "NULL",           // --null
     numProcesses: Int = 8,                // --num-processes
-    reportFrequencyMs: Long = 250,        // --report-frequency (100ms floor)
     chunkSize: Int = 1000,                // --chunk-size (rows per batch)
     maxBatchSizeKb: Int = 20,             // --max-batch-size (kB per batch)
     maxInsertErrors: Int = -1,            // --max-insert-errors (<0 unlimited)
@@ -35,5 +34,4 @@ final case class CopyConfig(
     require(parts.length == 2, s"invalid bool style: $boolStyle")
     parts(1)
   }
-  def reportFrequencyClamped: Long = math.max(reportFrequencyMs, 100L)
 }

@@ -1464,8 +1464,13 @@ object Dedup {
     * means the edges are NOT the star-forest fixpoint, so this fails
     * fast (r5 advice — a log.warn here shipped wrong component ids
     * downstream) rather than return unconverged ids. With doubling, 64
-    * iterations covers any plausible graph. */
-  def connectedComponents(edges: DataFrame, maxIters: Int = 64): DataFrame = {
+    * iterations covers any plausible graph.
+    *
+    * The small-graph route's labels carry a broadcast hint for the
+    * consumer join; `joined = false` leaves it off for a caller that
+    * writes the labels instead (Spark ignores a hint outside a join). */
+  def connectedComponents(edges: DataFrame, maxIters: Int = 64,
+      joined: Boolean = true): DataFrame = {
     val spark = edges.sparkSession
     // canonical directed edge list: (u = larger id, v = smaller id)
     var e = edges
@@ -1518,11 +1523,12 @@ object Dedup {
           org.apache.spark.sql.types.LongType, nullable = false),
         org.apache.spark.sql.types.StructField("comp",
           org.apache.spark.sql.types.LongType, nullable = false)))
-      return broadcast(spark.createDataFrame(
+      val labels = spark.createDataFrame(
         spark.sparkContext.parallelize(
           scala.collection.immutable.ArraySeq.unsafeWrapArray(labelRows),
           math.max(1, math.min(spark.sparkContext.defaultParallelism, labelRows.length))),
-        labelSchema))
+        labelSchema)
+      return if (joined) broadcast(labels) else labels
     }
     // DISTRIBUTED ROUTE: alternating large-star / small-star
     var iter = 0
@@ -2121,7 +2127,7 @@ object Dedup {
     val pairs = minhashLshPairsShared(s, d).select(col("d1"), col("d2"))
     // the "prior run": yesterday's labels, persisted
     connectedComponents(
-        pairs.where(col("d1") % 10 =!= 0 && col("d2") % 10 =!= 0))
+        pairs.where(col("d1") % 10 =!= 0 && col("d2") % 10 =!= 0), joined = false)
       .write.mode("overwrite").parquet(s"$base/labels")
     val labels = s.read.parquet(s"$base/labels") // (id, comp)
     incrementalComponentsFrom(labels,

@@ -88,6 +88,16 @@ object Pipelines {
     s.read.parquet(dirs.toIndexedSeq: _*)
   }
 
+  /** The per-batch dirs `base/stage/b_<i>` with `i ≤ batchId` that a
+    * foreachBatch face has staged, keyed by batch id: the arrival
+    * record a batch re-derives its prefix from. */
+  private def stagedPrefix(bs: SparkSession, base: String,
+      batchId: Long): Seq[(Long, String)] = {
+    val fs = new Path(base).getFileSystem(bs.sparkContext.hadoopConfiguration)
+    (0L to batchId).map(i => (i, s"$base/stage/b_$i"))
+      .filter { case (_, p) => fs.exists(new Path(p)) }
+  }
+
   /** State-partition width for the STATEFUL streaming faces, set via
     * `graft.stream.parts`. A streaming query pays a per-partition
     * state-store commit EVERY micro-batch, so the width must be sized
@@ -1613,9 +1623,7 @@ object Pipelines {
     val idx = bs.read.parquet(s"$base/index").where(col("batch") <= batchId)
     // corpus-so-far = existing ∪ staged waves ≤ this batch (the
     // staged artifacts ARE the arrival record)
-    val stagedDirs = (0L to batchId)
-      .map(i => s"$base/stage/b_$i")
-      .filter(p => new java.io.File(p).exists())
+    val stagedDirs = stagedPrefix(bs, base, batchId).map(_._2)
     val prefix = stagedDirs
       .map(p => bs.read.parquet(p).select(col("vec_id")))
       .foldLeft(existing.select(col("vec_id")))(_ unionAll _)
@@ -1778,8 +1786,9 @@ object Pipelines {
       // directory below is mutated
       val liveCells = survivors.select(col("cent_id")).distinct()
         .collect().map(_.getLong(0)).toSet
-      myCells.filterNot(liveCells).foreach(c => scala.reflect.io.Path(
-        new java.io.File(s"$base/index/cent_id=$c")).deleteRecursively())
+      val fs = new Path(base).getFileSystem(bs.sparkContext.hadoopConfiguration)
+      myCells.filterNot(liveCells)
+        .foreach(c => fs.delete(new Path(s"$base/index/cent_id=$c"), true))
       if (liveCells.nonEmpty) Similarity.withDynamicOverwrite(bs) {
         survivors.repartition(col("cent_id")).write.mode("overwrite")
           .partitionBy("cent_id").parquet(s"$base/index")
@@ -1898,8 +1907,7 @@ object Pipelines {
     val bs = batch.sparkSession
     batch.write.mode("overwrite").parquet(s"$base/stage/b_$batchId")
     val nBatch = bs.read.parquet(s"$base/stage/b_$batchId").count()
-    val prefixDirs = (0L to batchId).map(i => s"$base/stage/b_$i")
-      .filter(p => new java.io.File(p).exists())
+    val prefixDirs = stagedPrefix(bs, base, batchId).map(_._2)
     val cum = prefixDirs.map(p => bs.read.parquet(p))
       .reduce(_ unionAll _)
       .groupBy(col("lang")).agg(count(lit(1)).as("cc"))
@@ -2021,9 +2029,7 @@ object Pipelines {
     batch.write.mode("overwrite").parquet(s"$base/stage/b_$batchId")
     // arrival order = (wave, doc_id); the meter is re-derived from the
     // staged prefix so a replayed batch sees exactly its original world
-    val prefix = (0L to batchId)
-      .map(i => (i, s"$base/stage/b_$i"))
-      .filter { case (_, p) => new java.io.File(p).exists() }
+    val prefix = stagedPrefix(bs, base, batchId)
       .map { case (i, p) => bs.read.parquet(p).withColumn("wave", lit(i)) }
       .reduce(_ unionAll _)
     val wCum = org.apache.spark.sql.expressions.Window

@@ -728,7 +728,7 @@ object Relational {
     val ph = probeRows.select(col("user_id"),
       posexplode(array((0 until CmsDepth).map(j =>
         cmsBucket(j, col("user_id"))): _*)).as(Seq("j", "bucket")))
-    val est = broadcast(ph).join(sketch, Seq("j", "bucket"), "left")
+    val est = ph.join(sketch, Seq("j", "bucket"), "left")
       .na.fill(0L, Seq("n"))
       .groupBy(col("user_id")).agg(min(col("n")).as("est_n"))
     val exact = ev.where(col("user_id").isin(CmsProbes: _*))

@@ -4,7 +4,7 @@ import graft.CopyConfig
 import graft.pipeline.CopyWrite
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 /** Structured-Streaming face of the copy pipeline — the idiomatic mapping
@@ -15,9 +15,9 @@ import org.apache.spark.sql.types.StructType
   *    committed offset, at-least-once, monotone progress;
   *  - retry w/ backoff (#10, #19): task + trigger retry under the
   *    streaming commit protocol;
-  *  - progress reporter (#13, `write.go:162-179`): [[RateReporter]], a
-  *    StreamingQueryListener — rows/sec per trigger is built into
-  *    Spark's progress events (reference hand-rolls a ticker goroutine);
+  *  - progress reporter (#13, `write.go:162-179`): rows per trigger is
+  *    built into Spark's progress events; [[graft.obs.Meter]] collects
+  *    them (the reference hand-rolls a ticker goroutine);
   *  - backpressure (unbuffered channel, `write.go:122`): maxFilesPerTrigger
   *    bounds each micro-batch.
   */
@@ -134,24 +134,4 @@ object StreamIngest {
       .select(col("session_window.start").as("session_start"),
         col("session_window.end").as("session_end"),
         col("user_id"), col("n_events"))
-
-  /** The reference's ticker reporter (`write.go:162-179`: done/fail/cur/avg
-    * per interval) as a StreamingQueryListener: logs rows/sec per trigger
-    * and cumulative totals. Attach with
-    * `spark.streams.addListener(new RateReporter)`. */
-  final class RateReporter(log: String => Unit = s => Console.err.println(s))
-      extends StreamingQueryListener {
-    @volatile private var total = 0L
-    override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
-      log(s"[graft] query ${e.id} started")
-    override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
-      val p = e.progress
-      total += p.numInputRows
-      log(f"[graft] done=$total%d cur=${p.inputRowsPerSecond}%.1f/s " +
-        f"avg=${p.processedRowsPerSecond}%.1f/s batch=${p.batchId}%d")
-    }
-    override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
-      log(s"[graft] query ${e.id} terminated" +
-        e.exception.map(x => s" with error: $x").getOrElse(""))
-  }
 }

@@ -5,7 +5,8 @@ package graft.tools
   * profile gives the key, or unset when the profile leaves it at Spark's
   * default), mode B = conf set to the given value; run order alternates
   * AB/BA each round so linear box drift cancels. Full face evaluation
-  * through the noop sink, under the bench's engine confs ([[graft.Session]]).
+  * through the noop sink, under the bench's engine confs ([[graft.Session]]),
+  * each run printed with its [[graft.obs.Record]].
   *
   * Usage: ConfAB <sfDir> <rounds> <confKey=value> <query>...
   *
@@ -22,25 +23,14 @@ object ConfAB {
     val spark = graft.Session.tool(sfDir)
     val shipped = spark.conf.getAll.get(confKey)
     println(s"[conf-ab] A: $confKey=${shipped.getOrElse("(unset)")}  B: $confKey=$confVal")
-    val nJobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          nJobs.incrementAndGet()
-      })
     val results =
-      scala.collection.mutable.Map[(String, String), List[(Double, Int)]]()
+      scala.collection.mutable.Map[(String, String), List[(Double, Long)]]()
     def runOne(name: String, mode: String, round: Int): Unit = {
       if (mode == "B") spark.conf.set(confKey, confVal)
       else shipped.fold(spark.conf.unset(confKey))(spark.conf.set(confKey, _))
-      val j0 = nJobs.get(); val t0 = System.nanoTime()
-      graft.SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9; val jn = nJobs.get() - j0
-      println(f"[conf-ab] $name $mode round $round: $dt%.2fs jobs=$jn")
-      results((name, mode)) = (dt, jn) :: results.getOrElse((name, mode), Nil)
-      spark.catalog.clearCache()
+      val (dt, rec) = Profile.runFace(spark, sfDir, name)
+      println(f"[conf-ab] $name $mode round $round: $dt%.2fs ${rec.line}")
+      results((name, mode)) = (dt, rec.jobs) :: results.getOrElse((name, mode), Nil)
     }
     for (name <- names; r <- 1 to rounds) {
       val order = if (r % 2 == 1) Seq("A", "B") else Seq("B", "A")

@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
+import org.apache.spark.sql.streaming.Trigger
 
 /** Multi-batch streaming state probe (r7 verdict item 4): the gate's
   * streaming faces run AvailableNow over a single file → ONE micro-batch,
@@ -13,13 +13,13 @@ import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
   * modification times so the file source replays them in event-time
   * order, the production arrival shape), a REAL streaming query consumes
   * them one file per trigger (`maxFilesPerTrigger=1` under AvailableNow),
-  * and the listener records per-batch state rows/bytes + watermark.
+  * and [[graft.obs.Meter]] records per-batch state rows/bytes + watermark.
   *
   * Healthy result — the number the 100 TB question needs: state rows
   * RISE across the first batches then PLATEAU at the windows/keys inside
   * the watermark lag and FALL as eviction overtakes arrival, with the
-  * peak well under the single-batch worst case (= total groups, what
-  * StreamProbe measures on the gate faces). State tracking the WATERMARK
+  * peak well under the single-batch worst case (= total groups, the
+  * peak state `graft.tools.Profile` reports on the gate faces). State tracking the WATERMARK
   * WINDOW rather than the corpus is eviction working.
   *
   * Variants: `agg` = q58's windowed aggregation (state = open windows);
@@ -51,44 +51,25 @@ object StreamEvictionProbe {
       col("event_type")).distinct().count()
     val totalKeys = ev.select(col("user_id"), col("event_type")).distinct().count()
 
-    case class Batch(id: Long, rows: Long, stateRows: Long, stateMB: Long, wm: String)
-    val batches = scala.collection.mutable.ListBuffer.empty[Batch]
-    val listener = new StreamingQueryListener {
-      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
-        val p = e.progress
-        val ops = p.stateOperators
-        batches.synchronized {
-          batches += Batch(p.batchId, p.numInputRows,
-            if (ops.isEmpty) 0L else ops.map(_.numRowsTotal).sum,
-            if (ops.isEmpty) 0L else ops.map(_.memoryUsedBytes).sum / 1024 / 1024,
-            Option(p.eventTime.get("watermark")).getOrElse("-"))
-        }
-      }
-      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-    }
-    spark.streams.addListener(listener)
-
     def runVariant(tag: String, out: DataFrame): Unit = {
-      batches.synchronized(batches.clear())
       val ckpt = graft.Scratch.fresh(s"evict_probe_ckpt_$tag")
-      val t = System.nanoTime()
-      val q = out.writeStream.format("noop")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination(600000)
-      val secs = (System.nanoTime() - t) / 1e9
-      Thread.sleep(1000) // listener bus drain
-      val bs = batches.synchronized(batches.toList).sortBy(_.id)
-        .filter(_.rows > 0) // drop the empty finalization batches
-      val peak = if (bs.isEmpty) 0L else bs.map(_.stateRows).max
-      val last = if (bs.isEmpty) 0L else bs.last.stateRows
+      val (secs, rec) = graft.obs.Meter.measure(spark) {
+        val t = System.nanoTime()
+        out.writeStream.format("noop")
+          .option("checkpointLocation", ckpt)
+          .trigger(Trigger.AvailableNow()).start()
+          .awaitTermination(600000)
+        (System.nanoTime() - t) / 1e9
+      }
+      val bs = rec.batches.filter(_.inputRows > 0) // drop the empty finalization batches
+      val peak = bs.map(_.stateRows).maxOption.getOrElse(0L)
+      val last = bs.lastOption.fold(0L)(_.stateRows)
       println(f"[$tag] sf=$sfDir rows=$nRows files=${parts.length} wall=$secs%.1fs " +
         f"batches=${bs.size} peak_state_rows=$peak last_batch_state_rows=$last " +
         f"total_windows=$totalWindows total_keys=$totalKeys")
       bs.foreach(b => println(
-        f"[$tag]   batch ${b.id}%2d: in=${b.rows}%7d state_rows=${b.stateRows}%7d " +
-          f"state_mb=${b.stateMB}%4d wm=${b.wm}"))
+        f"[$tag]   batch ${b.batchId}%2d: in=${b.inputRows}%7d state_rows=${b.stateRows}%7d " +
+          f"state_mb=${b.stateBytes / 1024 / 1024}%4d wm=${b.watermark.getOrElse("-")}"))
     }
 
     val schema = spark.read.parquet(stage.getPath).schema

@@ -291,23 +291,6 @@ class PipelineSparkSpec extends AnyFunSuite with SparkFixture {
     }
   }
 
-  test("batch progress listener counts written rows") {
-    val rep = new graft.pipeline.BatchProgressListener(
-      CopyConfig(reportFrequencyMs = 100), _ => ())
-    rep.start(spark)
-    val out = Scratch.unique("progress")
-    try {
-      val df = Tables.orders(spark, sf).select("o_orderkey")
-      val n = df.count()
-      df.write.mode("overwrite").parquet(out)
-      // listener events are delivered async; poll briefly
-      val deadline = System.currentTimeMillis() + 10000
-      while (rep.rowsDone < n && System.currentTimeMillis() < deadline)
-        Thread.sleep(50)
-      assert(rep.rowsDone == n, s"listener saw ${rep.rowsDone}, wrote $n")
-    } finally rep.stop()
-  }
-
   test("cli flag parsing maps the reference flag surface") {
     val (cfg, other) = Cli.parseFlags(Seq(
       "--header", "--null", "-", "--bool-style", "yes,no", "--chunk-size", "500",

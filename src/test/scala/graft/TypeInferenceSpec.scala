@@ -108,9 +108,7 @@ class TypeInferenceSpec extends AnyFunSuite {
       1709528767L)
   }
 
-  test("config invariants: report clamp and bool-style validation") {
-    assert(CopyConfig(reportFrequencyMs = 10).reportFrequencyClamped == 100L)
-    assert(CopyConfig(reportFrequencyMs = 250).reportFrequencyClamped == 250L)
+  test("config invariants: bool-style validation") {
     intercept[IllegalArgumentException](CopyConfig(boolStyle = "nocommas").falseValue)
     assert(CopyConfig(boolStyle = "1,0").trueValue == "1")
     assert(CopyConfig(boolStyle = "1,0").falseValue == "0")

@@ -23,7 +23,7 @@ two highest rounds): a query silently DROPPING OUT of the gate, newly
 failing, or downgrading from hash-checked to rows-only is flagged —
 the r8 verdict noted nothing watches for that class automatically.
 """
-import sys, os, json, subprocess, glob, math
+import sys, os, json, subprocess, glob, math, hashlib
 
 SF = os.path.abspath(sys.argv[1] if len(sys.argv) > 1 and not sys.argv[1].startswith("--") else "/root/testdata/sf0.01")
 # Targeted iteration (builder-local, never the gate): GRAFT_ONLY="q178_x
@@ -62,6 +62,12 @@ def table_hash(rows, cols):
     order = sorted(range(len(cols)), key=lambda i: cols[i])
     data = sorted(tuple(canon(r[i]) for i in order) for r in rows)
     return data
+
+def dump_hash(rows, cols):
+    """16-hex sha256 prefix over the name-sorted columns and the sorted
+    canonical rows: the per-dump identity two runs compare by `diff`."""
+    key = repr((sorted(cols), table_hash(rows, cols)))
+    return hashlib.sha256(key.encode()).hexdigest()[:16]
 
 def load_bench_queries(path):
     """Per-query medians from a driver BENCH_r*.json (preferring its
@@ -298,7 +304,7 @@ def main():
         got = con.execute(f"SELECT * FROM '{path}/*.parquet'")
         gcols = [d[0] for d in got.description]; grows = got.fetchall()
         if name not in oracle:
-            print(f"  {name}: rows={len(grows)} (no oracle — rows-only check: {'OK' if len(grows)>0 else 'EMPTY!'})")
+            print(f"  {name}: rows={len(grows)} (no oracle — rows-only check: {'OK' if len(grows)>0 else 'EMPTY!'}) {dump_hash(grows, gcols)}")
             ok += 1 if len(grows) > 0 else 0; fail += 0 if len(grows) > 0 else 1
             continue
         try:
@@ -325,7 +331,7 @@ def main():
         if g != e:
             diffs = [(a, b) for a, b in zip(g, e) if a != b][:3]
             print(f"  {name}: VALUE MISMATCH e.g. {diffs}"); fail += 1; continue
-        print(f"  {name}: OK ({len(g)} rows)"); ok += 1
+        print(f"  {name}: OK ({len(g)} rows) {dump_hash(grows, gcols)}"); ok += 1
     print(f"== {ok} ok, {fail} fail ==")
     sys.exit(1 if fail else 0)
 

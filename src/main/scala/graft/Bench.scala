@@ -71,7 +71,7 @@ object Bench {
     try {
       graft.ops.Dedup.prebuildArtifacts(spark, sfDir)
       graft.ops.Multimodal.prebuildArtifacts(spark, sfDir)
-      graft.ops.Similarity.quantizedEmbeddings(spark, sfDir)
+      graft.ops.Ivf.quantizedEmbeddings(spark, sfDir)
     } catch { case e: Throwable =>
       System.err.println(s"[bench] artifact prebuild failed: ${e.getMessage}") }
     // r16 (r15 verdict "What's wrong #1"): the remaining first-sample

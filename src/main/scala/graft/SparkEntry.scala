@@ -104,8 +104,8 @@ object SparkEntry {
     // exact keep-list on the q41 subset (oracle-checked); the 100 TB pair
     // source is annLshPairs (exact=false), spec-compared
     "q44_cosine_dedup" -> Similarity.cosineDedupAuto _,
-    // gate runs the exact-integer quantized IVF (hash-checkable: integer
-    // routing has no float ties); the float/Lloyd variant is spec-compared
+    // the exact-integer quantized IVF (hash-checkable: integer routing
+    // has no float ties)
     "q43_ivf_topk" -> ((s: SparkSession, d: String) => Similarity.ivfTopKQuantized(s, d)),
     "q50_infer_cascade" -> Pipelines.inferCascade,
     "q51_csv_roundtrip" -> Pipelines.csvRoundtrip,
@@ -996,8 +996,7 @@ object SparkEntry {
     "q42_ann_lsh_pairs" -> Similarity.annLshPairsSql,
     "q44_cosine_dedup" -> Similarity.cosineDedupSql,
     // q43: the quantized-IVF face — routing and ranking are exact integer
-    // dots, so the full cell-routed pipeline replays in DuckDB (the float
-    // Lloyd variant stays spec-only; its exactness oracle is q40)
+    // dots, so the full cell-routed pipeline replays in DuckDB
     "q43_ivf_topk" -> Similarity.ivfTopKQuantizedSql,
     "q50_infer_cascade" -> Pipelines.inferCascadeSql,
     // q51: the oracle reads the CSV ARTIFACT the engine wrote (path

@@ -14,7 +14,14 @@ final case class Batch(batchId: Long, inputRows: Long, stateRows: Long,
     stateBytes: Long, watermark: Option[String], durationMs: Map[String, Long])
 
 /** Where one measured body's time and bytes went: scheduler, task,
-  * planner and streaming counters, summed over everything the body ran. */
+  * planner and streaming counters, summed over everything the body ran.
+  * `planMs` sums, per phase, only the `qe.tracker` phases of each
+  * action's own QueryExecution. A DataFrame is analyzed when it is
+  * built, and an action over it (a noop-sink write is a new command
+  * QueryExecution over the analyzed plan) does not re-run that
+  * analysis, so a face that is analyzed eagerly while it is built can
+  * read `analysis:0`: time the build separately (`Profile`'s `build=`)
+  * to see it. */
 final case class Record(
     jobs: Long, stages: Long, tasks: Long,
     taskRunS: Double, taskCpuS: Double, gcS: Double,

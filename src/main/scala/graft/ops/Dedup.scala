@@ -639,7 +639,7 @@ object Dedup {
 
   /** Build-once path of [[minhashSigShared]]: the portable corpus
     * signature table as a PERSISTED fingerprint-keyed artifact — the
-    * quant8 convention ([[Similarity.quantizedEmbeddings]]) applied to
+    * quant8 convention ([[Ivf.quantizedEmbeddings]]) applied to
     * the dedup family's hot path (r13 verdict item 2). FIVE consumers
     * ride this table (q34's pair mining, q127/q149's admission index,
     * q151/q157's audit legs) and the r13 session-cache version re-signed
@@ -720,7 +720,7 @@ object Dedup {
         when(col("n_lsh") > 0,
           expr("(1000000 * n_lsh_true) div n_lsh")).as("precision_ppm"),
         when(col("n_truth_sample") > 0,
-          expr("(1000000 * n_hit_sample) div n_truth_sample")).as("recall_ppm"))
+          Ivf.recallPpm("n_hit_sample", "n_truth_sample")).as("recall_ppm"))
   }
 
   /** q157 — LSH QUALITY AUDIT WITH PLANTED CANARIES: q151's recall leg
@@ -843,7 +843,7 @@ object Dedup {
         when(col("n_lsh") > 0,
           expr("(1000000 * n_lsh_true) div n_lsh")).as("precision_ppm"),
         when(col("n_truth_sample") > 0,
-          expr("(1000000 * n_hit_sample) div n_truth_sample")).as("recall_ppm"))
+          Ivf.recallPpm("n_hit_sample", "n_truth_sample")).as("recall_ppm"))
   }
 
   /** Oracle for [[lshQualityAudit]]: the full-corpus portable LSH

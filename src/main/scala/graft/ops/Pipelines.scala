@@ -1539,7 +1539,7 @@ object Pipelines {
     * vector-family sibling of q149 (dedup: batch q127 / stream q149;
     * ANN: batch q126 / stream q161). New vectors arrive in three waves;
     * each micro-batch routes its vectors through the broadcast-argmax
-    * map ([[Similarity.assignCells]] — no fan-out, no shuffle) and
+    * map ([[Ivf.assignCells]] — no fan-out, no shuffle) and
     * commits them to the persisted cell-partitioned index, then writes
     * a per-wave RECEIPT measured OFF DISK: batch size, cells touched,
     * index size after, and the q156 coverage check (vectors of the
@@ -1557,14 +1557,12 @@ object Pipelines {
     * centroid grid is the q143 bounded-anchor literal. */
   def streamIndexMaintenance(s: SparkSession, d: String): DataFrame = {
     val base = Scratch.fresh(SimName)
-    val qe = Similarity.quantizedEmbeddings(s, d)
+    val qe = Ivf.quantizedEmbeddings(s, d)
     val existing = qe.where(col("vec_id") % 10 =!= 0)
-    val cent = Similarity.fixedCells(qe)
+    val cent = Ivf.fixedCells(qe)
     // the "prior run": existing corpus routed + persisted by cell
-    Similarity.assignCells(s, existing, cent)
-      .select(col("vec_id"), col("cent_id"))
-      .repartition(col("cent_id")).write.mode("overwrite")
-      .partitionBy("cent_id").parquet(s"$base/index/batch=-1")
+    Ivf.writeCells(Ivf.assignCells(s, existing, cent).select(col("vec_id"), col("cent_id")),
+      s"$base/index/batch=-1")
     val newVecs = qe.where(col("vec_id") % 10 === 0)
       .select(col("vec_id"), col("q8"))
     val in = deliverWaves(s, base,
@@ -1594,10 +1592,8 @@ object Pipelines {
     val bs = batch.sparkSession
     batch.write.mode("overwrite").parquet(s"$base/stage/b_$batchId")
     val b = bs.read.parquet(s"$base/stage/b_$batchId")
-    Similarity.assignCells(bs, b, cent)
-      .select(col("vec_id"), col("cent_id"))
-      .repartition(col("cent_id")).write.mode("overwrite")
-      .partitionBy("cent_id").parquet(s"$base/index/batch=$batchId")
+    Ivf.writeCells(Ivf.assignCells(bs, b, cent).select(col("vec_id"), col("cent_id")),
+      s"$base/index/batch=$batchId")
     // receipt legs (r17, the q166 job-count discipline inside the
     // micro-batch): ONE read-back aggregate of the just-written batch
     // partition carries the batch size (routing preserves rows) AND the
@@ -1709,8 +1705,8 @@ object Pipelines {
     * they name, never the index; the audit legs are id-only joins. */
   def streamErasure(s: SparkSession, d: String): DataFrame = {
     val base = Scratch.fresh("se_q175")
-    val qe = Similarity.quantizedEmbeddings(s, d)
-    val cent = Similarity.fixedCells(qe)
+    val qe = Ivf.quantizedEmbeddings(s, d)
+    val cent = Ivf.fixedCells(qe)
     // the serving index: the FULL corpus routed + persisted by cell —
     // cloned from the pristine fingerprint-keyed artifact (hardlinks,
     // r14: the erasure mutates the clone, so the corpus-sized route +
@@ -1758,7 +1754,7 @@ object Pipelines {
     // re-confirmed quiet — one-JVM interleaved sf1 A/B vs the
     // temporarily restored legacy legs: merged 5.56/6.08 s warm-min/med
     // at 68 jobs vs legacy 6.33/6.41 at 89.
-    val vicRows = Similarity.assignCells(bs, b, cent)
+    val vicRows = Ivf.assignCells(bs, b, cent)
       .groupBy(col("cent_id")).agg(count(lit(1)).as("nv")).collect()
     val nvByCell = vicRows
       .map(r => r.getAs[Number](0).longValue() -> r.getLong(1)).toMap
@@ -1768,7 +1764,7 @@ object Pipelines {
     // (static occupancy vs victim count — replay-stable by routing)
     val nCellsDeleted =
       if (myCells.isEmpty) 0L
-      else Similarity.assignCells(bs, qe, cent)
+      else Ivf.assignCells(bs, qe, cent)
         .where(col("cent_id").isin(myCells.toIndexedSeq: _*))
         .groupBy(col("cent_id")).agg(count(lit(1)).as("occ")).collect()
         .count(r => r.getLong(1) == nvByCell(r.getAs[Number](0).longValue()))
@@ -1789,10 +1785,8 @@ object Pipelines {
       val fs = new Path(base).getFileSystem(bs.sparkContext.hadoopConfiguration)
       myCells.filterNot(liveCells)
         .foreach(c => fs.delete(new Path(s"$base/index/cent_id=$c"), true))
-      if (liveCells.nonEmpty) Similarity.withDynamicOverwrite(bs) {
-        survivors.repartition(col("cent_id")).write.mode("overwrite")
-          .partitionBy("cent_id").parquet(s"$base/index")
-      }
+      if (liveCells.nonEmpty)
+        Similarity.withDynamicOverwrite(bs)(Ivf.writeCells(survivors, s"$base/index"))
       survivors.unpersist()
       ()
     }

@@ -72,7 +72,7 @@ object SharedPlans {
     }
 
   /** Memoized Broadcast per (session, content key) — for driver-built
-    * broadcast VARIABLES (e.g. the [[Similarity.assignCells]] centroid
+    * broadcast VARIABLES (e.g. the [[Ivf.assignCells]] centroid
     * matrix), which unlike broadcast JOINS are not tracked by Spark's
     * CacheManager. Creating a fresh broadcast per call leaked one
     * BlockManager entry per invocation across a session's lifetime (r13

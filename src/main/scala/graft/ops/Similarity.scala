@@ -42,7 +42,7 @@ object Similarity {
     * streams once; one dot per (probe, candidate). */
   def cosineTopK(s: SparkSession, d: String): DataFrame = {
     val e = withNorm(s, d)
-    val q = e.where(col("vec_id") < 5)
+    val q = Ivf.probes(e)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"), col("nrm").as("qnrm"))
     val sims = e.join(broadcast(q), col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("cid"),
@@ -254,9 +254,6 @@ object Similarity {
   private def signBit(vec: Column, p: Int): Column =
     when(vecDot(vec, typedLit(plane(p))) > 0, 1L).otherwise(0L)
 
-  /** Diagnostic access for [[graft.tools.AnnDiag]]. */
-  private[graft] def signBitPublic(vec: Column, p: Int): Column = signBit(vec, p)
-
   /** The (vec_id, band, bucket) table [[annLshPairs]] joins on — ONE
     * definition shared with [[graft.tools.AnnDiag]] and the
     * [[maxBandOccupancy]] oracle-downgrade probe, so diagnostics always
@@ -385,104 +382,23 @@ object Similarity {
        |ORDER BY id1, id2""".stripMargin
   }
 
-  /** IVF-style ANN: coarse-quantize the corpus (deterministic seeds =
-    * every 100th vector, refined by `refineIters` Lloyd step(s)), search
-    * only the probe's cell. The centroid table is tiny and broadcast at
-    * every use (assignment + probe routing); each query touches
-    * 1/|cells| of the corpus. Rows-only (cell routing is
-    * engine-internal).
-    *
-    * The Lloyd step is all DataFrame ops: broadcast argmax assignment,
-    * then the per-cell mean via posexplode → (cell, dim) partial-agg'd
-    * avg → re-assembled array. The explode shuffles |corpus|·dims rows
-    * once per iteration — the standard distributed k-means cost, run
-    * once here ("training" IVF lists is a batch job; routing reuses the
-    * result).
-    *
-    * TRAINING/SPEC VARIANT — NOT A SERVE PATH (r13 verdict item 8): this
-    * float-cosine Lloyd variant exists as the engine-internal comparison
-    * target for the quantized gate face (its one caller is
-    * PipelineSparkSpec's IVF-vs-exact comparison). Its assignment still
-    * routes through the n×cells fan-out ([[argmaxCell]]) because float
-    * scores can't ride [[ArgmaxExprs.ArgmaxDotCell]]'s integer-exact
-    * broadcast argmax; every SERVE path (q43/q126/q152/q143/q156/q159/
-    * q161/q164) uses the quantized [[assignCells]] map instead. Do not
-    * wire this into a gate face or a production route. */
-  def ivfTopK(s: SparkSession, d: String, refineIters: Int = 1): DataFrame = {
-    val e = withNorm(s, d)
-    // argmax as a hash aggregate over a NARROW frame, wide columns
-    // re-attached after (the r11 narrow-argmax rule + r12 [[argmaxCell]])
-    def assign(cent: DataFrame): DataFrame =
-      e.join(
-        argmaxCell(
-          e.join(broadcast(cent))
-            .select(col("vec_id"), col("cent_id"),
-              (vecDot(col("embedding"), col("cvec")) / (col("nrm") * col("cnrm"))).as("csim")),
-          col("csim")), "vec_id")
-        .select(col("vec_id"), col("embedding"), col("nrm"), col("cent_id"))
-    var cent = e.where(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("cent_id"), col("embedding").as("cvec"), col("nrm").as("cnrm"))
-    for (_ <- 0 until refineIters) {
-      val means = assign(cent)
-        .select(col("cent_id"), posexplode(col("embedding")).as(Seq("i", "x")))
-        .groupBy(col("cent_id"), col("i")).agg(avg(col("x")).as("m"))
-        .groupBy(col("cent_id"))
-        // array_sort on struct<i,m> orders by i (first field) → dims align
-        .agg(transform(array_sort(collect_list(struct(col("i"), col("m")))),
-          p => p.getField("m")).as("cvec"))
-      cent = means.select(col("cent_id"), col("cvec"), vecNorm(col("cvec")).as("cnrm"))
-    }
-    val assigned = assign(cent)
-    val probes = assigned.where(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"),
-        col("nrm").as("qnrm"), col("cent_id").as("qcell"))
-    val wTop = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("cid").asc)
-    assigned.join(broadcast(probes),
-        col("cent_id") === col("qcell") && col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("cid"),
-        round(vecDot(col("qvec"), col("embedding")) / (col("qnrm") * col("nrm")), 4).as("cos"))
-      .withColumn("rank", row_number().over(wTop))
-      .where(col("rank") <= 10)
-      .orderBy(col("qid"), col("rank"))
-  }
-
-  /** IVF on the int8-QUANTIZED corpus (q43's gate face) — same list
-    * structure as [[ivfTopK]] but every comparison is an exact integer:
-    * centroids are the quantized seed vectors (every 100th, no Lloyd
-    * step), cell routing is argmax over integer centroid dots, and the
-    * in-cell ranking is the q48 integer-dot rank. Integer dots of int8
-    * vectors are ≤ 64·127² — exactly representable, order-independent —
+  /** IVF on the int8-QUANTIZED corpus (q43's gate face): the corpus is
+    * routed to its argmax cell of the bounded [[Ivf.fixedCells]] grid,
+    * each probe searches only its own cell, and the in-cell ranking is
+    * the exact [[Ivf.topK]] rule. Every comparison is an exact integer,
     * so routing has NO float ties and the whole pipeline replays
-    * verbatim in DuckDB (this is what flipped q43 from rows-only to
-    * hash-checked; the float/Lloyd variant stays as the spec-compared
-    * engine path).
+    * verbatim in DuckDB.
     *
-    * Scale: identical join shapes to [[ivfTopK]] — tiny centroid table
-    * broadcast into the assignment, probes broadcast into one cell's
-    * worth of candidates; at a fixed cell count the assignment cost is
-    * linear in n. */
+    * Scale: the assignment is a broadcast-argmax map over the corpus
+    * scan, and the probes broadcast into one cell's worth of
+    * candidates; at a fixed cell count the cost is linear in n. */
   def ivfTopKQuantized(s: SparkSession, d: String, k: Int = 10): DataFrame = {
-    val qe = quantizedEmbeddings(s, d)
-    // anchor rule is a BOUNDED literal (<= 64 anchors): at gate SFs
-    // (ids < 2000) the cap never binds, so the oracle hash is
-    // unchanged, while decade corpora keep the assignment fan-out at
-    // n x 64 instead of n x n/100 (r11 - the same cells-prop-to-n knee
-    // q126 was called on; here the fix is hash-neutral)
-    val cent = fixedCells(qe)
-    // r13: assignment is a broadcast-argmax MAP over the corpus scan
-    // ([[assignCells]]) — no n×cells fan-out, no join, no aggregate
-    val assigned = assignCells(s, qe, cent)
+    val qe = Ivf.quantizedEmbeddings(s, d)
+    val assigned = Ivf.assignCells(s, qe, Ivf.fixedCells(qe))
       .select(col("vec_id"), col("q8"), col("cent_id"))
-    val probes = assigned.where(col("vec_id") < 5)
+    val probes = Ivf.probes(assigned)
       .select(col("vec_id").as("qid"), col("q8").as("qv"), col("cent_id").as("qcell"))
-    val wTop = Window.partitionBy(col("qid")).orderBy(col("dot").desc, col("cid").asc)
-    assigned.join(broadcast(probes),
-        col("cent_id") === col("qcell") && col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("cid"),
-        vecDot(col("qv"), col("q8")).cast("long").as("dot"))
-      .withColumn("rank", row_number().over(wTop))
-      .where(col("rank") <= k)
-      .orderBy(col("qid"), col("rank"))
+    Ivf.topK(Ivf.probeDots(assigned, probes), k).orderBy(col("qid"), col("rank"))
   }
 
   val ivfTopKQuantizedSql: String =
@@ -546,23 +462,16 @@ object Similarity {
     * linear in nprobe, measured per decade in probe_r14.txt. */
   def ivfTopKMultiProbe(s: SparkSession, d: String, k: Int = 10,
       nprobe: Int = 3): DataFrame = {
-    val qe = quantizedEmbeddings(s, d)
+    val qe = Ivf.quantizedEmbeddings(s, d)
     // the q43/q143 bounded anchor grid — same cells as the single-probe
     // face, so recall deltas are attributable to nprobe alone
-    val cent = fixedCells(qe)
-    val assigned = assignCells(s, qe, cent)
+    val cent = Ivf.fixedCells(qe)
+    val assigned = Ivf.assignCells(s, qe, cent)
       .select(col("vec_id"), col("q8"), col("cent_id"))
-    val probes = assignCellsTopP(s, qe.where(col("vec_id") < 5), cent, nprobe)
+    val probes = Ivf.assignCellsTopP(s, Ivf.probes(qe), cent, nprobe)
       .select(col("vec_id").as("qid"), col("q8").as("qv"),
         explode(col("probe_cells")).as("qcell"))
-    val wTop = Window.partitionBy(col("qid")).orderBy(col("dot").desc, col("cid").asc)
-    assigned.join(broadcast(probes),
-        col("cent_id") === col("qcell") && col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("cid"),
-        vecDot(col("qv"), col("q8")).cast("long").as("dot"))
-      .withColumn("rank", row_number().over(wTop))
-      .where(col("rank") <= k)
-      .orderBy(col("qid"), col("rank"))
+    Ivf.topK(Ivf.probeDots(assigned, probes), k).orderBy(col("qid"), col("rank"))
   }
 
   /** Oracle for [[ivfTopKMultiProbe]] at nprobe = 3: the q43 CTEs with
@@ -605,187 +514,6 @@ object Similarity {
       |SELECT qid, cid, dot, rank FROM ranked WHERE rank <= 10
       |ORDER BY qid, rank""".stripMargin
 
-  /** Int8 symmetric quantization of the embedding column: per-vector
-    * scale 127/max|x|, q_i = floor(x_i·127/max|x| + 0.5). `floor(+0.5)`,
-    * NOT `round()`: Spark rounds HALF_UP and DuckDB HALF_EVEN, so an
-    * exact .5 would diverge — floor is identical everywhere, and the
-    * asymmetry at negative .5 is the same on both engines. The all-zero
-    * vector quantizes to zeros (no 0/0). Values stay exact small
-    * integers, carried as array<double> so the codegen'd [[VectorExprs]]
-    * dot kernel applies. */
-  /** The int8-quantized corpus as a SHARED MATERIALIZED table per
-    * (session, dir) — the LSH pair-table convention ([[SharedPlans]])
-    * applied to the vector hot path. This is a correctness-of-scale
-    * fix, not a convenience: [[quantizeInt8]]'s `transform` HOF is
-    * CodegenFallback, and without a materialization barrier Spark
-    * collapses the quantize projection INTO the fan-out assignment
-    * join, re-evaluating the interpreted per-element lambda once per
-    * (vector × anchor) PAIR — the r11 sf1 probes measured q143 at
-    * 88-171 s and q144 at 242 s from exactly this (n·cells interpreted
-    * 64-element transforms), vs seconds once the quantized table is
-    * materialized n-sized.
-    *
-    * r12 (r11 verdict item 1): the table is now the PERSISTED artifact
-    * the r11 doc promised — quantized ONCE per source content
-    * (fingerprint-keyed like the BPE model, so regenerated testdata
-    * keys a fresh artifact) and written to parquet; every vector-family
-    * consumer (q40-q48, q106, q115, q120, q126, q143, q144) reads the
-    * artifact as a PLAIN SCAN — deliberately NOT [[SharedPlans]]-cached
-    * anymore: the r11 persist existed to keep the CodegenFallback
-    * quantize HOF from re-running per consumer, but the artifact
-    * already holds materialized q8 arrays, so a codegen'd
-    * column-pruned parquet scan beats paying cache materialization
-    * every time the bench/verify pass boundary clears the cache (the
-    * r12 mid-round bench measured exactly that residue on q115). The
-    * int-valued doubles round-trip parquet exactly, so the gate hashes
-    * prove the disk leg lossless (the q51/q126 artifact convention).
-    * At 100 TB this IS the production shape: the quantized corpus
-    * lives next to the IVF index and the daily batch never re-encodes
-    * it. */
-  def quantizedEmbeddings(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(quantizedArtifact(s, d))
-
-  /** Build-once path of [[quantizedEmbeddings]]. The repartition
-    * BEFORE the write matters twice over: the source is one compact
-    * parquet split, so without it the artifact would be one file and
-    * every downstream scan single-threaded (r11: q126 sf10 512 s against
-    * a 1-partition cache); with it the artifact carries session-width
-    * files and scans parallel. */
-  private def quantizedArtifact(s: SparkSession, d: String): String =
-    Scratch.artifact(s"quant8_${Tables.sourceFingerprint(d, "embeddings")}") { dir =>
-      quantizeInt8(Tables.embeddings(s, d)).select(col("vec_id"), col("q8"))
-        .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt)
-        .write.mode("overwrite").parquet(s"$dir/q8")
-    } + "/q8"
-
-  /** Deterministic per-vector argmax over an assignment fan-out — the
-    * (vec_id, cent_id) maximizing (score, −cent_id), i.e. highest score
-    * with ties to the SMALLEST cent_id: exactly the old
-    * `row_number over (partition by vec_id order by score desc,
-    * cent_id asc) = 1`, but as a HASH AGGREGATE (`max_by` on an ordered
-    * struct) instead of a window. The difference is the execution
-    * model, not the answer: the fan-out join emits n×cells rows, and a
-    * window must SORT them (Spark's WindowGroupLimit prunes rows but
-    * only after a full local sort), while max_by partial-aggregates
-    * each partition down to ≤ one row per vec BEFORE the exchange — the
-    * shuffle carries ~n rows instead of n×cells. Measured (r12): the
-    * q152 sf30 assignment (600k vecs × 774 cells = 464M rows) ran 123 s
-    * through the window sort and seconds through this. */
-  private def argmaxCell(fanout: DataFrame, score: Column): DataFrame =
-    fanout.groupBy(col("vec_id"))
-      .agg(max_by(col("cent_id"), struct(score, -col("cent_id"))).as("cent_id"))
-
-  /** r13 (r12 verdict item 1): quantized-corpus cell assignment WITHOUT
-    * the n×cells fan-out. Collects the centroid table once (bounded —
-    * every caller's grid is ≤ 64 anchors or ≈ √n stride rows, the same
-    * table those callers already broadcast into the join), ships it as
-    * a broadcast-variable-backed [[graft.functions.CentroidMatrix]],
-    * and appends `cent_id` via the codegen'd
-    * [[graft.functions.ArgmaxExprs.ArgmaxDotCell]] — a pure map over
-    * the corpus scan: n rows in, n rows out, no join, no aggregate, no
-    * exchange, no sort. The r12 `max_by` shape still materialized (and
-    * partial-SORT-aggregated) n×cells rows; with cells ∝ √n that is
-    * n^1.5 rows — this is the shape that stays linear at 100 TB.
-    * Bit-exact vs the fan-out argmax: integer dots, ties to smallest
-    * cent_id (ids sorted ascending + strict `>`). `cent` must have
-    * columns (cent_id: long, cq: array<double>); rows are collected
-    * driver-side, so callers keep grids bounded (they already must, to
-    * broadcast-join them). */
-  /** Centroid-count ceiling for the broadcast grid: every caller's grid
-    * is ≤ 64 anchors or ≈ √n stride rows, so 2²⁰ cells (≈ 512 MB of
-    * 64-dim doubles — the broadcast budget, and n ≈ 10¹² at cells = √n)
-    * is far above any intended geometry; a grid past it means a caller
-    * lost its bound and should use the join-regime assignment instead.
-    * The guard also keeps `cells × dims` safely inside Int for the flat
-    * array allocation and the `c * dims` index arithmetic. */
-  val MaxBroadcastCells: Int = 1 << 20
-
-  /** Collect + flatten + broadcast one centroid grid, MEMOIZED per
-    * (session, content) via [[SharedPlans.cachedBroadcast]] — r13
-    * advice: a fresh broadcast per call is a BlockManager leak across
-    * q161's waves and repeated bench passes; content-keying (MD5 over
-    * ids + dims + flat values) bounds live broadcasts at the number of
-    * distinct grids a session ever builds. */
-  private def centroidBroadcast(s: SparkSession, cent: DataFrame)
-      : org.apache.spark.broadcast.Broadcast[graft.functions.CentroidMatrix] = {
-    val rows = cent.select(col("cent_id"), col("cq")).collect()
-    require(rows.nonEmpty, "assignCells: empty centroid table")
-    require(rows.length <= MaxBroadcastCells,
-      s"assignCells: ${rows.length} centroids exceeds the broadcast-grid " +
-        s"ceiling ($MaxBroadcastCells) — use a bounded/√n grid or the " +
-        "join-regime assignment (kmeansAssign viaJoin) for grids this large")
-    val sorted = rows.sortBy(_.getLong(0))
-    val dims = sorted.map(_.getSeq[Double](1).length).max
-    val flatLen = math.multiplyExact(sorted.length, dims) // overflow-guarded
-    val ids = sorted.map(_.getLong(0))
-    val flat = new Array[Double](flatLen)
-    var c = 0
-    while (c < sorted.length) {
-      val v = sorted(c).getSeq[Double](1)
-      var j = 0
-      while (j < v.length) { flat(c * dims + j) = v(j); j += 1 }
-      c += 1
-    }
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val bb = java.nio.ByteBuffer.allocate(8 * (ids.length + flat.length) + 4)
-    bb.putInt(dims); ids.foreach(bb.putLong); flat.foreach(bb.putDouble)
-    val key = "centMatrix|" + md.digest(bb.array())
-      .map("%02x".format(_)).mkString
-    SharedPlans.cachedBroadcast(s, key)(
-      s.sparkContext.broadcast(graft.functions.CentroidMatrix(ids, flat, dims)))
-  }
-
-  private[graft] def assignCells(s: SparkSession, qe: DataFrame, cent: DataFrame): DataFrame = {
-    val bc = centroidBroadcast(s, cent)
-    qe.withColumn("cent_id", org.apache.spark.sql.GraftBridge.column(
-      graft.functions.ArgmaxExprs.ArgmaxDotCell(
-        org.apache.spark.sql.GraftBridge.expression(col("q8")), bc)))
-  }
-
-  /** The fixed 64-cell anchor grid (cent_id, cq): every 100th quantized
-    * vector below 6400 — the literal the oracles replay. */
-  private[graft] def fixedCells(qe: DataFrame): DataFrame =
-    qe.where(col("vec_id") % 100 === 0 && col("vec_id") < 6400)
-      .select(col("vec_id").as("cent_id"), col("q8").as("cq"))
-
-  /** The stride grid (stride, cells): every vector with
-    * `vec_id % stride = 1` anchors a cell. `centStride` > 0 pins the
-    * stride (the gate faces pin 100 for oracle parity); 0 sizes it to
-    * ≈ √n of the session's cached corpus count, so routing AND in-cell
-    * search stay at n^1.5. */
-  private def strideCells(s: SparkSession, d: String, qe: DataFrame,
-      centStride: Int): (Int, DataFrame) = {
-    val stride =
-      if (centStride > 0) centStride
-      else math.max(2, math.round(math.sqrt(
-        SharedPlans.cachedCount(s, s"embCount|$d")(qe.count()).toDouble)).toInt)
-    (stride, qe.where(col("vec_id") % stride === 1)
-      .select(col("vec_id").as("cent_id"), col("q8").as("cq")))
-  }
-
-  /** Multi-probe routing (r13 verdict item 1): appends `probe_cells` —
-    * the top-`p` cent_ids by integer dot, ordered (dot desc, cent_id
-    * asc) — via the codegen'd
-    * [[graft.functions.ArgmaxExprs.TopPDotCells]] map. Same zero-fanout
-    * shape as [[assignCells]] (p = 1 degenerates to it exactly); the
-    * probe side explodes to p rows per QUERY, never per corpus vector. */
-  private[graft] def assignCellsTopP(s: SparkSession, qe: DataFrame,
-      cent: DataFrame, p: Int): DataFrame = {
-    val bc = centroidBroadcast(s, cent)
-    qe.withColumn("probe_cells", org.apache.spark.sql.GraftBridge.column(
-      graft.functions.ArgmaxExprs.TopPDotCells(
-        org.apache.spark.sql.GraftBridge.expression(col("q8")), bc, p)))
-  }
-
-  def quantizeInt8(e: DataFrame): DataFrame =
-    e.withColumn("_ma",
-        array_max(transform(col("embedding"), x => abs(x.cast("double")))))
-      .withColumn("q8", transform(col("embedding"), x =>
-        when(col("_ma") > 0,
-          floor(x.cast("double") * lit(127.0) / col("_ma") + lit(0.5)).cast("double"))
-          .otherwise(lit(0.0))))
-      .drop("_ma")
-
   /** Quantized retrieval (q48): top-k by INTEGER dot product of int8
     * vectors — the memory-bandwidth-saving scale trick (4 bytes→1 per
     * component on the wire at 100 TB; here the win is demonstrating the
@@ -794,18 +522,9 @@ object Similarity {
     * order-independent — every partial sum is exactly representable), so
     * the rank is fully deterministic: no FP rounding in the ORDER BY at
     * all, stronger than the rounded-cosine pattern. */
-  def quantizedTopK(s: SparkSession, d: String, k: Int = 5): DataFrame = {
-    val qe = quantizedEmbeddings(s, d)
-    val probes = qe.where(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("q8").as("qv"))
-    val sims = qe.join(broadcast(probes), col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("cid"),
-        vecDot(col("qv"), col("q8")).cast("long").as("dot"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("dot").desc, col("cid").asc)
-    sims.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
+  def quantizedTopK(s: SparkSession, d: String, k: Int = 5): DataFrame =
+    Ivf.topK(Ivf.exactDots(Ivf.quantizedEmbeddings(s, d)), k)
       .orderBy(col("qid"), col("rank"))
-  }
 
   /** Per-label centroids of the int8-QUANTIZED embeddings (q68) — class
     * centroids / mean-pooling, the supervision-side vector aggregate.
@@ -821,7 +540,7 @@ object Similarity {
     * collapses each partition to (labels × 64) rows before the shuffle —
     * the map-side-combine shape that survives any n. */
   def labelCentroids(s: SparkSession, d: String): DataFrame =
-    quantizeInt8(Tables.embeddings(s, d))
+    Ivf.quantizeInt8(Tables.embeddings(s, d))
       .select(col("label"), posexplode(col("q8")).as(Seq("dim", "q")))
       .groupBy(col("label"), col("dim"))
       .agg(count(lit(1)).as("n"), sum(col("q")).cast("long").as("sum_q"))
@@ -875,7 +594,7 @@ object Similarity {
     * pressure at the third decade; the primitive-loop kernel is the
     * allocation-free form — semantics identical, index-ordered sums). */
   def randomProjection(e: DataFrame, outDims: Int = 16): DataFrame = {
-    val q = quantizeInt8(e)
+    val q = Ivf.quantizeInt8(e)
     val signs = signMatrix(64, outDims)
     val outs = (0 until outDims).map { j =>
       val sLit = typedLit(signs(j).toSeq.map(_.toDouble))
@@ -923,7 +642,7 @@ object Similarity {
     * integer squared distance (≤ 64·254² < 2²³, exact in double;
     * first-min index breaks ties); the centroid update is the
     * floor(sum/count + 0.5) ROUNDED INTEGER MEAN (same convention as
-    * quantizeInt8) so centroids stay small exact integers; an empty
+    * Ivf.quantizeInt8) so centroids stay small exact integers; an empty
     * cluster keeps its previous centroid. No float ever reaches a
     * compared value, so DuckDB replays the full iteration unrolled.
     *
@@ -988,7 +707,7 @@ object Similarity {
   }
 
   def kmeansInt(s: SparkSession, d: String, k: Int = 8, iters: Int = 2): DataFrame =
-    kmeansIntOn(quantizedEmbeddings(s, d), k, iters)
+    kmeansIntOn(Ivf.quantizedEmbeddings(s, d), k, iters)
 
   /** The Lloyd loop alone: trains and returns the converged centroids
     * over an already-quantized (vec_id, q8) frame; seeds are the first k
@@ -1132,7 +851,7 @@ object Similarity {
     * guard) already covers that k. Output is per-vector, so downstream
     * filters join on it without recomputing. */
   def semDedup(s: SparkSession, d: String): DataFrame =
-    semDedupOn(quantizedEmbeddings(s, d), k = 8, iters = 2, tauNum = 2, tauDen = 5)
+    semDedupOn(Ivf.quantizedEmbeddings(s, d), k = 8, iters = 2, tauNum = 2, tauDen = 5)
 
   def semDedupOn(qe: DataFrame, k: Int, iters: Int,
       tauNum: Int, tauDen: Int): DataFrame = {
@@ -1237,7 +956,7 @@ object Similarity {
     pqTopK(Tables.embeddings(s, d))
 
   def pqTopK(embeddings: DataFrame): DataFrame = {
-    val qe = quantizeInt8(embeddings).select(col("vec_id"), col("q8"))
+    val qe = Ivf.quantizeInt8(embeddings).select(col("vec_id"), col("q8"))
     // n×M rows: (vec_id, m, 8-dim int8 subvector)
     val subs = qe.select(col("vec_id"),
         explode(transform(sequence(lit(0), lit(PqM - 1)), m =>
@@ -1265,7 +984,7 @@ object Similarity {
       .agg(min(struct(d2(col("sub"), col("cent")).as("d2"), col("j"))).as("w"))
       .select(col("vec_id"), col("m"), col("w.j").as("code"))
     // 5 probes × 8 subspaces × 16 centroids = 640-row ADC table
-    val dtab = subs.where(col("vec_id") < 5)
+    val dtab = Ivf.probes(subs)
       .select(col("vec_id").as("qid"), col("m"), col("sub").as("qsub"))
       .join(seeds, Seq("m"))
       .select(col("qid"), col("m"), col("j"), d2(col("qsub"), col("cent")).as("dq"))
@@ -1404,7 +1123,7 @@ object Similarity {
   def gramMatrix(s: SparkSession, d: String): DataFrame = {
     import graft.functions.GramAgg.gramUpper
     val dim = 64
-    val g = quantizeInt8(Tables.embeddings(s, d))
+    val g = Ivf.quantizeInt8(Tables.embeddings(s, d))
       .agg(gramUpper(col("q8"), dim).as("g"))
     // unpack positionally: flatten(transform...) generates (i,j) pairs in
     // the buffer's row-major upper-triangle order, so pos indexes g
@@ -1517,7 +1236,7 @@ object Similarity {
     * (2,080 values, the kmeansFit bounded-collect rule) and mirrored. */
   private def gramCollect(s: SparkSession, d: String, dim: Int)
       : Array[Array[Long]] =
-    gramCollectFrame(quantizeInt8(Tables.embeddings(s, d)), dim)
+    gramCollectFrame(Ivf.quantizeInt8(Tables.embeddings(s, d)), dim)
 
   /** [[gramCollect]] over any (vec_id, q8) frame — fixture-testable. */
   private[graft] def gramCollectFrame(qe: DataFrame, dim: Int)
@@ -1652,7 +1371,7 @@ object Similarity {
       .agg(array_sort(collect_list(struct(col("dim"), col("r")))).as("p"))
       .select(col("comp"),
         transform(col("p"), x => x.getField("r").cast("double")).as("rvec"))
-    val probes = quantizedEmbeddings(s, d).where(col("vec_id") < 5)
+    val probes = Ivf.probes(Ivf.quantizedEmbeddings(s, d))
       .select(col("vec_id"), col("q8"))
     val proj = rvecs.crossJoin(broadcast(probes))
       .select(col("comp"), col("vec_id"),
@@ -1740,7 +1459,7 @@ object Similarity {
     * the OPQ-vs-PQ recall spec. Engine-side only (no driver data
     * path): rotation rows broadcast, one narrow map per vector. */
   private[graft] def rotatedEmbeddings(s: SparkSession, d: String): DataFrame =
-    rotateFrameBy(quantizedEmbeddings(s, d),
+    rotateFrameBy(Ivf.quantizedEmbeddings(s, d),
       s.read.parquet(opqRotationDir(s, d)))
 
   /** Project any (vec_id, q8) frame onto a (comp, dim, r) rotation —
@@ -1789,39 +1508,18 @@ object Similarity {
   def ivfIncremental(s: SparkSession, d: String, k: Int = 3,
       centStride: Int = 0): DataFrame = {
     val base = Scratch.fresh("ivf_q126")
-    val qe = quantizedEmbeddings(s, d)
+    val qe = Ivf.quantizedEmbeddings(s, d)
     val existing = qe.where(col("vec_id") % 10 =!= 0)
-    // Cell count = |existing| / stride. centStride = 0 (the DEFAULT)
-    // computes stride ≈ √n from the corpus itself — the q112
-    // self-routing precedent applied to IVF geometry (r10 verdict item
-    // 2): cells ≈ √n keeps routing AND in-cell search at n^1.5, IVF's
-    // single-node fundamental; on a cluster the cells distribute. A
-    // FIXED stride makes cells ∝ n and routing n²/stride — the r10
-    // sf10 probe measured that knee (180 s at n = 200k). The gate face
-    // alone pins centStride = 100 to match the oracle literal;
-    // `tools/IvfIncrProbe` measures the default recipe per SF. */
-    val stride =
-      if (centStride > 0) centStride
-      else math.max(2, math.round(math.sqrt(existing.count().toDouble)).toInt)
-    val cent = existing.where(col("vec_id") % stride === 1)
-      .select(col("vec_id").as("cent_id"), col("q8").as("cq"))
-    // r13: routing is a broadcast-argmax MAP ([[assignCells]]) — the
-    // r11/r12 narrow-frame discipline existed to keep the 64-double q8
-    // array out of an n×cells argmax (the wide sort spilled ~175 GB at
-    // sf10); now there IS no n×cells frame: cent_id is computed in the
-    // scan's own project, q8 never leaves the row.
+    // the grid is drawn from the existing slice, so a self-sized stride
+    // is √|existing|, not √ of the corpus. The gate face alone pins
+    // centStride = 100 to match the oracle literal; `tools/IvfIncrProbe`
+    // measures the default recipe per SF.
+    val cent = Ivf.strideCells(existing, Ivf.stride(centStride, existing.count()))
     def route(v: DataFrame): DataFrame =
-      assignCells(s, v, cent).select(col("vec_id"), col("q8"), col("cent_id"))
-    // the "prior run": build and persist the index artifact,
-    // PARTITIONED BY CELL — "a batch touching c cells reads c cells'
-    // worth of codes" must be true on disk, not just in prose (r10
-    // verdict item 2): the layout is what makes the serve-path prune
-    // physical. Repartition BY CELL first: otherwise every write task
-    // opens a file in every cell directory (tasks × cells small files —
-    // the r11 sf10 probe's write blow-up); this way each cell is one
-    // task's one file.
-    route(existing).repartition(col("cent_id")).write.mode("overwrite")
-      .partitionBy("cent_id").parquet(s"$base/index")
+      Ivf.assignCells(s, v, cent).select(col("vec_id"), col("q8"), col("cent_id"))
+    // the "prior run": build and persist the index artifact in the cell
+    // layout — the layout is what makes the serve-path prune physical
+    Ivf.writeCells(route(existing), s"$base/index")
     val index = s.read.parquet(s"$base/index")
     // the "daily batch": routed off the persisted centroids and
     // PERSISTED next to the index — the artifact a serve replica
@@ -1849,13 +1547,9 @@ object Similarity {
     // executed scan physically read fewer files than the index holds.
     val batch = s.read.parquet(s"$base/batch")
       .where(col("qid") % 10 === 0)
-    val wTop = Window.partitionBy(col("qid"))
-      .orderBy(col("dot").desc, col("cid").asc)
-    index.join(broadcast(batch), col("cent_id") === col("qcell"))
+    Ivf.topK(index.join(broadcast(batch), col("cent_id") === col("qcell"))
       .select(col("qid"), col("vec_id").as("cid"),
-        vecDot(col("qv"), col("q8")).cast("long").as("dot"))
-      .withColumn("rank", row_number().over(wTop))
-      .where(col("rank") <= k)
+        vecDot(col("qv"), col("q8")).cast("long").as("dot")), k)
       .orderBy(col("qid"), col("rank"))
   }
 
@@ -1974,11 +1668,11 @@ object Similarity {
     * convention); `centStride` = 0 self-sizes to ≈ √n — the audit runs
     * on whatever geometry the index actually has. */
   def ivfBalanceAudit(s: SparkSession, d: String, centStride: Int = 0): DataFrame = {
-    val qe = quantizedEmbeddings(s, d)
-    val (_, cent) = strideCells(s, d, qe, centStride)
-    // r13: one scan, cent_id computed in-row ([[assignCells]]); the
+    val qe = Ivf.quantizedEmbeddings(s, d)
+    val cent = Ivf.strideCells(qe, Ivf.stride(centStride, corpusCount(s, d)))
+    // r13: one scan, cent_id computed in-row ([[Ivf.assignCells]]); the
     // only shuffle left is the |cells|-bounded occupancy aggregate
-    val occ = assignCells(s, qe, cent)
+    val occ = Ivf.assignCells(s, qe, cent)
       .groupBy(col("cent_id")).agg(count(lit(1)).as("occ"))
     val tot = occ.agg(count(lit(1)).as("n_cells"), sum(col("occ")).as("n_vecs"))
     occ.crossJoin(broadcast(tot))
@@ -2060,15 +1754,15 @@ object Similarity {
     * with n would break comparability (and re-open the cells ∝ n
     * assignment knee); the oracle replays the identical literal. */
   def embeddingDrift(s: SparkSession, d: String): DataFrame = {
-    val qe = quantizedEmbeddings(s, d)
+    val qe = Ivf.quantizedEmbeddings(s, d)
     // FIXED anchor grid (the q43 bounded literal, <= 64 anchors): a
     // drift audit wants the SAME grid on every run - a corpus-sized
     // grid would change the cells as n grows and break cross-run
     // comparability, and it is the cells-prop-to-n scale knee besides.
     // At gate SFs the cap never binds (ids < 2000), so the oracle
     // replays the identical grid.
-    val cent = fixedCells(qe)
-    val assigned = assignCells(s, qe, cent)
+    val cent = Ivf.fixedCells(qe)
+    val assigned = Ivf.assignCells(s, qe, cent)
     val cells = assigned.groupBy(col("cent_id")).agg(
       sum(when(col("vec_id") % 10 =!= 0, 1L).otherwise(0L)).as("n_a"),
       sum(when(col("vec_id") % 10 =!= 1, 1L).otherwise(0L)).as("n_b"))
@@ -2144,10 +1838,7 @@ object Similarity {
     val ann = ivfTopKQuantized(s, d, k).select(col("qid"), col("cid"))
     val hits = truth.join(ann, Seq("qid", "cid"))
       .groupBy(col("qid")).agg(count(lit(1)).as("n_hit"))
-    truth.groupBy(col("qid")).agg(count(lit(1)).as("n_truth"))
-      .join(hits, Seq("qid"), "left")
-      .withColumn("n_hit", coalesce(col("n_hit"), lit(0L)))
-      .withColumn("recall_ppm", expr("(1000000 * n_hit) div n_truth"))
+    Ivf.recall(truth.groupBy(col("qid")).agg(count(lit(1)).as("n_truth")), hits, "qid")
       .select(col("qid"), col("n_truth"), col("n_hit"), col("recall_ppm"))
       .orderBy(col("qid"))
   }
@@ -2214,11 +1905,11 @@ object Similarity {
     * deletes one cell's files and must see exactly that cell reported.
     * The anti-join on vec_id is the ONE corpus-sized comparison (ids
     * only — both sides column-pruned to a long); the missing set is
-    * then routed through the broadcast-argmax map ([[assignCells]]) to
+    * then routed through the broadcast-argmax map ([[Ivf.assignCells]]) to
     * name the stale cells, and the report is |cells|-bounded. */
   private[graft] def ivfCoverageByCell(s: SparkSession, corpus: DataFrame,
       cent: DataFrame, index: DataFrame): DataFrame =
-    assignCells(s,
+    Ivf.assignCells(s,
       corpus.join(index.select(col("vec_id")), Seq("vec_id"), "left_anti"),
       cent)
       .groupBy(col("cent_id")).agg(count(lit(1)).as("n_missing"))
@@ -2246,8 +1937,9 @@ object Similarity {
     * No corpus re-encode, no fan-out — safe at any corpus size. */
   def ivfCoverageAudit(s: SparkSession, d: String, centStride: Int = 0,
       indexDir: String = ""): DataFrame = {
-    val qe = quantizedEmbeddings(s, d)
-    val (stride, cent) = strideCells(s, d, qe, centStride)
+    val qe = Ivf.quantizedEmbeddings(s, d)
+    val stride = Ivf.stride(centStride, corpusCount(s, d))
+    val cent = Ivf.strideCells(qe, stride)
     val idxPath =
       if (indexDir.nonEmpty) indexDir
       else damagedIndexArtifact(s, d, stride, cent)
@@ -2341,19 +2033,10 @@ object Similarity {
     * and lexical (qid, cid, rank_lex), both top-k per probe with the
     * identical deterministic tie-break. */
   private def retrievalLegs(s: SparkSession, d: String, k: Int): (DataFrame, DataFrame) = {
-    val qe = quantizedEmbeddings(s, d)
-    val probesV = qe.where(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("q8").as("qv"))
-    val wV = Window.partitionBy(col("qid"))
-      .orderBy(col("dot").desc, col("cid").asc)
-    val vec = qe.join(broadcast(probesV), col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("cid"),
-        vecDot(col("qv"), col("q8")).cast("long").as("dot"))
-      .withColumn("rank_vec", row_number().over(wV))
-      .where(col("rank_vec") <= k)
-      .select(col("qid"), col("cid"), col("rank_vec"))
+    val vec = quantizedTopK(s, d, k)
+      .select(col("qid"), col("cid"), col("rank").as("rank_vec"))
     val sh = Dedup.shingles(Tables.documents(s, d))
-    val probeSh = sh.where(col("doc_id") < 5)
+    val probeSh = Ivf.probes(sh, "doc_id")
       .select(col("doc_id").as("qid"), col("shingle"))
     val wL = Window.partitionBy(col("qid"))
       .orderBy(col("ninter").desc, col("cid").asc)
@@ -2544,12 +2227,10 @@ object Similarity {
       cent: DataFrame): String =
     Scratch.artifact(
         s"ivfdmg_${stride}_${Tables.sourceFingerprint(d, "embeddings")}") { dir =>
-      // the q126 layout discipline: repartition BY CELL before the
-      // partitioned write (one file per cell, not tasks × cells)
-      assignCells(s, quantizedEmbeddings(s, d).where(col("vec_id") % 10 =!= 0), cent)
-        .select(col("vec_id"), col("cent_id"))
-        .repartition(col("cent_id")).write.mode("overwrite")
-        .partitionBy("cent_id").parquet(s"$dir/index")
+      Ivf.writeCells(
+        Ivf.assignCells(s, Ivf.quantizedEmbeddings(s, d).where(col("vec_id") % 10 =!= 0), cent)
+          .select(col("vec_id"), col("cent_id")),
+        s"$dir/index")
     } + "/index"
 
   /** q159 — COVERAGE REPAIR: the APPLY step behind [[ivfCoverageAudit]]
@@ -2569,8 +2250,9 @@ object Similarity {
     * crash-recovery job: cost ∝ the hole, not the index. */
   def ivfCoverageRepair(s: SparkSession, d: String, centStride: Int = 0,
       workDir: String = ""): DataFrame = {
-    val qe = quantizedEmbeddings(s, d)
-    val (stride, cent) = strideCells(s, d, qe, centStride)
+    val qe = Ivf.quantizedEmbeddings(s, d)
+    val stride = Ivf.stride(centStride, corpusCount(s, d))
+    val cent = Ivf.strideCells(qe, stride)
     // the damaged state (gate face): the shared pristine fixture COPIED
     // to a private work dir — repair mutates, so each invocation gets
     // its own clone (concurrency-safe) while the corpus-sized build is
@@ -2609,7 +2291,7 @@ object Similarity {
       // silently double-count the appended rows into the anti-join.
       val missing = qe.join(s.read.parquet(idx).select(col("vec_id")),
         Seq("vec_id"), "left_anti")
-      val routed = assignCells(s, missing, cent)
+      val routed = Ivf.assignCells(s, missing, cent)
         .select(col("vec_id"), col("cent_id")).persist()
       val Seq(Seq(nMissingBefore, nCellsTouched), Seq(nRepaired)) =
         Pipelines.runConcurrently(s, 2)(Seq(
@@ -2624,8 +2306,7 @@ object Similarity {
             s.sparkContext.setJobDescription("q159: route the hole")
             Seq(routed.count())
           }))
-      routed.repartition(col("cent_id")).write.mode("append")
-        .partitionBy("cent_id").parquet(idx)
+      Ivf.writeCells(routed, idx, "append")
       routed.unpersist()
       // re-audit OFF DISK: fresh read, fresh listing — the receipt states
       // what the artifact now holds, not what the repair assumes
@@ -2699,11 +2380,8 @@ object Similarity {
     * compacted path (under `workDir`). */
   private[graft] def ivfCompactDir(s: SparkSession, idxDir: String,
       outDir: String): Unit = {
-    // one exchange keyed by cell, then the partitioned write lands each
-    // cell as ONE file (the q126 layout rule) — generation column gone
-    s.read.parquet(idxDir).select(col("vec_id"), col("cent_id"))
-      .repartition(col("cent_id")).write.mode("overwrite")
-      .partitionBy("cent_id").parquet(outDir)
+    // one exchange keyed by cell, each cell ONE file — generation column gone
+    Ivf.writeCells(s.read.parquet(idxDir).select(col("vec_id"), col("cent_id")), outDir)
   }
 
   /** q165 — INDEX COMPACTION (r13 verdict item 3): the q161 stream
@@ -2739,10 +2417,8 @@ object Similarity {
   private[graft] def fullIndexArtifact(s: SparkSession, d: String,
       cent: DataFrame): String =
     Scratch.artifact(s"ivffull_${Tables.sourceFingerprint(d, "embeddings")}") { dir =>
-      assignCells(s, quantizedEmbeddings(s, d), cent)
-        .select(col("vec_id"), col("cent_id"))
-        .repartition(col("cent_id")).write.mode("overwrite")
-        .partitionBy("cent_id").parquet(s"$dir/index")
+      Ivf.writeCells(Ivf.assignCells(s, Ivf.quantizedEmbeddings(s, d), cent)
+        .select(col("vec_id"), col("cent_id")), s"$dir/index")
     } + "/index"
 
   /** The accreted `batch=N/cent_id=M` state q161 leaves behind —
@@ -2752,11 +2428,10 @@ object Similarity {
   private def accretedIndexArtifact(s: SparkSession, d: String,
       cent: DataFrame): String =
     Scratch.artifact(s"ivfaccr_${Tables.sourceFingerprint(d, "embeddings")}") { dir =>
-      val qe = quantizedEmbeddings(s, d)
+      val qe = Ivf.quantizedEmbeddings(s, d)
       def writeGen(rows: DataFrame, gen: Int): Unit =
-        assignCells(s, rows, cent).select(col("vec_id"), col("cent_id"))
-          .repartition(col("cent_id")).write.mode("overwrite")
-          .partitionBy("cent_id").parquet(s"$dir/index/batch=$gen")
+        Ivf.writeCells(Ivf.assignCells(s, rows, cent).select(col("vec_id"), col("cent_id")),
+          s"$dir/index/batch=$gen")
       writeGen(qe.where(col("vec_id") % 10 =!= 0), -1)
       (0 until 3).foreach(i =>
         writeGen(qe.where(col("vec_id") % 10 === 0 &&
@@ -2764,8 +2439,8 @@ object Similarity {
     } + "/index"
 
   def ivfCompactGate(s: SparkSession, d: String): DataFrame = {
-    val qe = quantizedEmbeddings(s, d)
-    val cent = fixedCells(qe)
+    val qe = Ivf.quantizedEmbeddings(s, d)
+    val cent = Ivf.fixedCells(qe)
     Scratch.withWorkDir("ivfq165") { work =>
       // the accreted state q161 leaves behind, as a READ-ONLY
       // fingerprint-keyed artifact (r14 — compaction never mutates its
@@ -2916,13 +2591,12 @@ object Similarity {
   private def erasureFixture(s: SparkSession, d: String, cent: DataFrame): String =
     Scratch.artifact(s"erasefix_${Tables.sourceFingerprint(d, "embeddings")}" +
         s"_${Tables.sourceFingerprint(d, "documents")}") { dir =>
-      val qe = quantizedEmbeddings(s, d)
+      val qe = Ivf.quantizedEmbeddings(s, d)
       qe.withColumn("bkt", pmod(col("vec_id"), lit(16)).cast("int"))
         .repartition(col("bkt")).write.mode("overwrite")
         .partitionBy("bkt").parquet(s"$dir/store")
-      assignCells(s, qe, cent).select(col("vec_id"), col("cent_id"))
-        .repartition(col("cent_id")).write.mode("overwrite")
-        .partitionBy("cent_id").parquet(s"$dir/index")
+      Ivf.writeCells(Ivf.assignCells(s, qe, cent).select(col("vec_id"), col("cent_id")),
+        s"$dir/index")
       Dedup.minhashSigShared(s, d)
         .withColumn("bkt", pmod(col("doc_id"), lit(16)).cast("int"))
         .repartition(col("bkt")).write.mode("overwrite")
@@ -2960,8 +2634,8 @@ object Similarity {
     * same cost model as q159's repair and q166's erasure. */
   def ivfRebalanceSplit(s: SparkSession, d: String,
       thresholdPpm: Long = 2000000L): DataFrame = {
-    val qe = quantizedEmbeddings(s, d)
-    val cent = fixedCells(qe)
+    val qe = Ivf.quantizedEmbeddings(s, d)
+    val cent = Ivf.fixedCells(qe)
     val fix = erasureFixture(s, d, cent)
     Scratch.withWorkDir("ivfq167") { work =>
       val idx = s"$work/index"
@@ -3013,10 +2687,7 @@ object Similarity {
         routed.count() // materialize BEFORE mutating the dirs it reads
         hot.foreach(h => scala.reflect.io.Path(
           new java.io.File(s"$idx/cent_id=$h")).deleteRecursively())
-        withDynamicOverwrite(s) {
-          routed.repartition(col("cent_id")).write.mode("overwrite")
-            .partitionBy("cent_id").parquet(idx)
-        }
+        withDynamicOverwrite(s)(Ivf.writeCells(routed, idx))
         routed.unpersist()
         ()
       }
@@ -3100,12 +2771,10 @@ object Similarity {
   private def halfIndexArtifact(s: SparkSession, d: String,
       cent: DataFrame): String =
     Scratch.artifact(s"ivfhalf_${Tables.sourceFingerprint(d, "embeddings")}") { dir =>
-      val qe = quantizedEmbeddings(s, d)
+      val qe = Ivf.quantizedEmbeddings(s, d)
       Seq(("a", 0), ("b", 1)).foreach { case (name, par) =>
-        assignCells(s, qe.where(col("vec_id") % 2 === par), cent)
-          .select(col("vec_id"), col("cent_id"))
-          .repartition(col("cent_id")).write.mode("overwrite")
-          .partitionBy("cent_id").parquet(s"$dir/$name")
+        Ivf.writeCells(Ivf.assignCells(s, qe.where(col("vec_id") % 2 === par), cent)
+          .select(col("vec_id"), col("cent_id")), s"$dir/$name")
       }
     }
 
@@ -3125,8 +2794,8 @@ object Similarity {
     * cell — the same cost class as q165's compaction; the audit is the
     * q156 id-only anti-join. Nothing corpus-vector-sized moves. */
   def ivfMergeIndexes(s: SparkSession, d: String): DataFrame = {
-    val qe = quantizedEmbeddings(s, d)
-    val cent = fixedCells(qe)
+    val qe = Ivf.quantizedEmbeddings(s, d)
+    val cent = Ivf.fixedCells(qe)
     val half = halfIndexArtifact(s, d, cent)
     Scratch.withWorkDir("ivfq173") { work =>
       val a = s.read.parquet(s"$half/a")
@@ -3134,10 +2803,8 @@ object Similarity {
       val aAgg = a.agg(count(lit(1)), countDistinct(col("cent_id"))).collect().head
       val bAgg = b.agg(count(lit(1)), countDistinct(col("cent_id"))).collect().head
       val merged = s"$work/index"
-      a.select(col("vec_id"), col("cent_id").cast("long").as("cent_id"))
-        .unionAll(b.select(col("vec_id"), col("cent_id").cast("long").as("cent_id")))
-        .repartition(col("cent_id")).write.mode("overwrite")
-        .partitionBy("cent_id").parquet(merged)
+      Ivf.writeCells(a.select(col("vec_id"), col("cent_id").cast("long").as("cent_id"))
+        .unionAll(b.select(col("vec_id"), col("cent_id").cast("long").as("cent_id"))), merged)
       val m = s.read.parquet(merged)
       val mAgg = m.agg(count(lit(1)), countDistinct(col("cent_id"))).collect().head
       val filesAfter = Option(new java.io.File(merged).listFiles())
@@ -3217,10 +2884,10 @@ object Similarity {
     * receipt is |cells| rows. No pairwise work, no index rewrite here —
     * the write-side apply is q165/q167's partitioned-dir discipline. */
   def ivfRecenter(s: SparkSession, d: String): DataFrame = {
-    val qe = quantizedEmbeddings(s, d)
-    val cent = fixedCells(qe)
+    val qe = Ivf.quantizedEmbeddings(s, d)
+    val cent = Ivf.fixedCells(qe)
     val dims = qe.select(size(col("q8"))).head().getInt(0)
-    val assigned = assignCells(s, qe, cent)
+    val assigned = Ivf.assignCells(s, qe, cent)
       .select(col("vec_id"), col("q8"), col("cent_id"))
       .localCheckpoint(true) // feeds the mean agg AND both occupancy aggs
     // component-wise member sums (exact integers) -> integer-div means.
@@ -3241,7 +2908,7 @@ object Similarity {
     val newCent = cent.select(col("cent_id"), col("cq").as("old_cq"))
       .join(recentered.select(col("cent_id"), col("cq")), Seq("cent_id"), "left")
       .select(col("cent_id"), coalesce(col("cq"), col("old_cq")).as("cq"))
-    val reassigned = assignCells(s,
+    val reassigned = Ivf.assignCells(s,
         assigned.select(col("vec_id"), col("q8"), col("cent_id").as("old_cell")),
         newCent)
       .select(col("vec_id"), col("old_cell"), col("cent_id").as("new_cell"))
@@ -3336,7 +3003,7 @@ object Similarity {
     * the inversion counts replay bit-for-bit. */
   def quantFidelity(s: SparkSession, d: String, k: Int = 20): DataFrame = {
     val e = withNorm(s, d)
-    val probes = e.where(col("vec_id") < 5)
+    val probes = Ivf.probes(e)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"),
         col("nrm").as("qnrm"))
     val wF = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("cid").asc)
@@ -3345,11 +3012,11 @@ object Similarity {
         round(vecDot(col("qvec"), col("embedding")) / (col("qnrm") * col("nrm")), 4)
           .as("cos"))
       .withColumn("rf", row_number().over(wF)).where(col("rf") <= k)
-    val qe = quantizedEmbeddings(s, d)
+    val qe = Ivf.quantizedEmbeddings(s, d)
     val wQ = Window.partitionBy(col("qid")).orderBy(col("qdot").desc, col("cid").asc)
     val ranked = cand
       .join(qe.select(col("vec_id").as("cid"), col("q8").as("cq8")), "cid")
-      .join(broadcast(qe.where(col("vec_id") < 5)
+      .join(broadcast(Ivf.probes(qe)
         .select(col("vec_id").as("qid"), col("q8").as("pq8"))), "qid")
       .select(col("qid"), col("cid"), col("rf"),
         vecDot(col("pq8"), col("cq8")).cast("long").as("qdot"))
@@ -3452,12 +3119,12 @@ object Similarity {
     * maxProbe plus |probes|-bounded joins. */
   def nprobeSelect(s: SparkSession, d: String, k: Int = 10,
       maxProbe: Int = 3, targetPpm: Long = 900000L): DataFrame = {
-    val qe = quantizedEmbeddings(s, d)
-    val cent = fixedCells(qe)
-    val assigned = assignCells(s, qe, cent)
+    val qe = Ivf.quantizedEmbeddings(s, d)
+    val cent = Ivf.fixedCells(qe)
+    val assigned = Ivf.assignCells(s, qe, cent)
       .select(col("vec_id"), col("q8"), col("cent_id"))
     // ranked probe cells: pr = 1 is the argmax cell, pr = p widens
-    val pcells = assignCellsTopP(s, qe.where(col("vec_id") < 5), cent, maxProbe)
+    val pcells = Ivf.assignCellsTopP(s, Ivf.probes(qe), cent, maxProbe)
       .select(col("vec_id").as("qid"), col("q8").as("qv"),
         posexplode(col("probe_cells")).as(Seq("pr0", "qcell")))
       .select(col("qid"), col("qv"), (col("pr0") + 1).as("pr"), col("qcell"))
@@ -3471,26 +3138,16 @@ object Similarity {
         .localCheckpoint(true), // feeds tot + per-level hits
       // widest-level candidates, computed once (each corpus vector meets
       // a query at most once per ranked probe cell)
-      () => assigned.join(broadcast(pcells),
-          col("cent_id") === col("qcell") && col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id").as("cid"), col("pr"),
-          vecDot(col("qv"), col("q8")).cast("long").as("dot"))
-        .localCheckpoint(true)))
+      () => Ivf.probeDots(assigned, pcells, col("pr")).localCheckpoint(true)))
     val lv = s.range(1, maxProbe + 1).select(col("id").as("nprobe"))
     val candL = cand.join(broadcast(lv), col("pr") <= col("nprobe"))
-    val wTop = Window.partitionBy(col("nprobe"), col("qid"))
-      .orderBy(col("dot").desc, col("cid").asc)
-    val ann = candL.withColumn("rank", row_number().over(wTop))
-      .where(col("rank") <= k).select(col("nprobe"), col("qid"), col("cid"))
+    val ann = Ivf.topK(candL, k, "nprobe").select(col("nprobe"), col("qid"), col("cid"))
     val nCand = candL.groupBy(col("nprobe")).agg(count(lit(1)).as("n_cand"))
     val hits = ann.join(truth, Seq("qid", "cid"))
       .groupBy(col("nprobe")).agg(count(lit(1)).as("n_hit"))
     val tot = truth.agg(count(lit(1)).as("n_truth"))
-    val curve = lv.join(nCand, Seq("nprobe"))
-      .crossJoin(broadcast(tot))
-      .join(hits, Seq("nprobe"), "left")
-      .withColumn("n_hit", coalesce(col("n_hit"), lit(0L)))
-      .withColumn("recall_ppm", expr("(1000000 * n_hit) div n_truth"))
+    val curve = Ivf.recall(lv.join(nCand, Seq("nprobe")).crossJoin(broadcast(tot)),
+      hits, "nprobe")
     val sel = curve.agg(coalesce(
       min(when(col("recall_ppm") >= targetPpm, col("nprobe"))),
       max(col("nprobe"))).as("sel"))
@@ -3594,23 +3251,16 @@ object Similarity {
     * occupancy per query, filtered map-side before the rank window. */
   def ivfTopKFiltered(s: SparkSession, d: String, k: Int = 10,
       nprobe: Int = 2): DataFrame = {
-    val qe = quantizedEmbeddings(s, d)
-    val cent = fixedCells(qe)
+    val qe = Ivf.quantizedEmbeddings(s, d)
+    val cent = Ivf.fixedCells(qe)
     val labels = Tables.embeddings(s, d).select(col("vec_id"), col("label"))
-    val assigned = assignCells(s, qe, cent)
+    val assigned = Ivf.assignCells(s, qe, cent)
       .join(labels, Seq("vec_id"))
       .select(col("vec_id"), col("q8"), col("cent_id"), col("label"))
-    val probes = assignCellsTopP(s, qe.where(col("vec_id") < 5), cent, nprobe)
+    val probes = Ivf.assignCellsTopP(s, Ivf.probes(qe), cent, nprobe)
       .select(col("vec_id").as("qid"), col("q8").as("qv"),
         explode(col("probe_cells")).as("qcell"))
-    val wTop = Window.partitionBy(col("qid")).orderBy(col("dot").desc, col("cid").asc)
-    assigned.where(col("label") % 2 === 0)
-      .join(broadcast(probes),
-        col("cent_id") === col("qcell") && col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("cid"),
-        vecDot(col("qv"), col("q8")).cast("long").as("dot"))
-      .withColumn("rank", row_number().over(wTop))
-      .where(col("rank") <= k)
+    Ivf.topK(Ivf.probeDots(assigned.where(col("label") % 2 === 0), probes), k)
       .orderBy(col("qid"), col("rank"))
   }
 
@@ -3677,8 +3327,8 @@ object Similarity {
     * q159's repair. All counts integer; DuckDB replays the routing,
     * bucketing, and signature-existence legs exactly. */
   def vectorErasure(s: SparkSession, d: String): DataFrame = {
-    val qe = quantizedEmbeddings(s, d)
-    val cent = fixedCells(qe)
+    val qe = Ivf.quantizedEmbeddings(s, d)
+    val cent = Ivf.fixedCells(qe)
     val fix = erasureFixture(s, d, cent)
     Scratch.withWorkDir("eraseq166") { work =>
       Seq("store", "index", "sig").foreach(t =>
@@ -3806,7 +3456,7 @@ object Similarity {
     * |probes| × k through the rank window's partial top-k. */
   def hammingTopK(s: SparkSession, d: String, k: Int = 10): DataFrame = {
     val sk = signSketch(Tables.embeddings(s, d))
-    val probes = sk.where(col("vec_id") < 5)
+    val probes = Ivf.probes(sk)
       .select(col("vec_id").as("qid"), col("s1").as("p1"), col("s2").as("p2"))
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("hamming").asc, col("cid").asc)
@@ -3873,7 +3523,7 @@ object Similarity {
   def twoStageTopK(s: SparkSession, d: String, k: Int = 10,
       shortlist: Int = 50): DataFrame = {
     val sk = signSketch(Tables.embeddings(s, d))
-    val probes = sk.where(col("vec_id") < 5)
+    val probes = Ivf.probes(sk)
       .select(col("vec_id").as("qid"), col("s1").as("p1"), col("s2").as("p2"))
     val wShort = Window.partitionBy(col("qid"))
       .orderBy(col("hamming").asc, col("cid").asc)
@@ -3884,17 +3534,13 @@ object Similarity {
       .withColumn("rh", row_number().over(wShort))
       .where(col("rh") <= shortlist)
       .select(col("qid"), col("cid"), col("hamming"))
-    val qe = quantizedEmbeddings(s, d)
-    val pq = qe.where(col("vec_id") < 5)
+    val qe = Ivf.quantizedEmbeddings(s, d)
+    val pq = Ivf.probes(qe)
       .select(col("vec_id").as("qid"), col("q8").as("qv"))
-    val wRank = Window.partitionBy(col("qid"))
-      .orderBy(col("dot").desc, col("cid").asc)
-    short.join(qe.select(col("vec_id").as("cid"), col("q8")), Seq("cid"))
+    Ivf.topK(short.join(qe.select(col("vec_id").as("cid"), col("q8")), Seq("cid"))
       .join(broadcast(pq), Seq("qid"))
       .select(col("qid"), col("cid"), col("hamming"),
-        vecDot(col("qv"), col("q8")).cast("long").as("dot"))
-      .withColumn("rank", row_number().over(wRank))
-      .where(col("rank") <= k)
+        vecDot(col("qv"), col("q8")).cast("long").as("dot")), k)
       .orderBy(col("qid"), col("rank"))
   }
 
@@ -3955,7 +3601,7 @@ object Similarity {
     * corpus size. In production the anchor set is the daily training
     * batch; cost stays one corpus scan per batch. */
   def contrastiveMine(s: SparkSession, d: String): DataFrame = {
-    val qe = quantizedEmbeddings(s, d)
+    val qe = Ivf.quantizedEmbeddings(s, d)
     val lab = qe.join(Tables.embeddings(s, d)
       .select(col("vec_id"), col("label")), Seq("vec_id"))
     // anchors BOUNDED in absolute terms (the q143/q169 convention):
@@ -4037,13 +3683,11 @@ object Similarity {
       stride: Int, cent: DataFrame): String =
     Scratch.artifact(
         s"ivfcor_v2_${stride}_${Tables.sourceFingerprint(d, "embeddings")}") { dir =>
-      assignCells(s, quantizedEmbeddings(s, d), cent)
+      Ivf.writeCells(Ivf.assignCells(s, Ivf.quantizedEmbeddings(s, d), cent)
         .select(
           when(pmod(col("vec_id"), lit(167)) === 5, -col("vec_id") - 1)
             .otherwise(col("vec_id")).as("vec_id"),
-          col("cent_id"))
-        .repartition(col("cent_id")).write.mode("overwrite")
-        .partitionBy("cent_id").parquet(s"$dir/index")
+          col("cent_id")), s"$dir/index")
     } + "/index"
 
   /** q184 — INDEX INTEGRITY DIGEST AUDIT: q99's Merkle-split
@@ -4067,8 +3711,9 @@ object Similarity {
     * localization free, repair ∝ diverged cells. */
   def ivfDigestAudit(s: SparkSession, d: String,
       centStride: Int = 0, indexDir: String = ""): DataFrame = {
-    val qe = quantizedEmbeddings(s, d)
-    val (stride, cent) = strideCells(s, d, qe, centStride)
+    val qe = Ivf.quantizedEmbeddings(s, d)
+    val stride = Ivf.stride(centStride, corpusCount(s, d))
+    val cent = Ivf.strideCells(qe, stride)
     val idx = s.read.parquet(
       if (indexDir.nonEmpty) indexDir
       else corruptedIndexArtifact(s, d, stride, cent))
@@ -4079,7 +3724,7 @@ object Similarity {
         .groupBy(col("cent_id"))
         .agg(count(lit(1)).as(n), expr("bit_xor(h)").as(g))
     val corpus = digestOf(
-      assignCells(s, qe, cent).select(col("vec_id"), col("cent_id")),
+      Ivf.assignCells(s, qe, cent).select(col("vec_id"), col("cent_id")),
       "n_corpus", "dig_corpus")
     val index = digestOf(
       idx.select(col("vec_id"), col("cent_id").cast("long").as("cent_id")),
@@ -4155,16 +3800,10 @@ object Similarity {
     * not a driver loop over collected data. */
   def mmrDiversify(s: SparkSession, d: String, poolK: Int = 20,
       select: Int = 3): DataFrame = {
-    val qe = quantizedEmbeddings(s, d)
-    val probes = qe.where(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("q8").as("qv"))
-    val wPool = Window.partitionBy(col("qid"))
-      .orderBy(col("dot").desc, col("cid").asc)
-    val cand = qe.join(broadcast(probes), col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("cid"), col("q8").as("cq"),
-        vecDot(col("qv"), col("q8")).cast("long").as("dot"))
-      .withColumn("rk", row_number().over(wPool))
-      .where(col("rk") <= poolK)
+    // the q48 exact top-k, carrying each candidate's codes for the
+    // greedy diversity term
+    val cand = Ivf.topK(
+        Ivf.exactDots(Ivf.quantizedEmbeddings(s, d), col("q8").as("cq")), poolK)
       .select(col("qid"), col("cid"), col("cq"), col("dot"))
       .localCheckpoint(true) // bounded pool; selections iterate over it
     val wPick = Window.partitionBy(col("qid"))
@@ -4273,10 +3912,10 @@ object Similarity {
     * A window formulation would sort n rows per probe; this shape
     * stays one pass at any corpus size. */
   def retrievalMrr(s: SparkSession, d: String): DataFrame = {
-    val qe = quantizedEmbeddings(s, d)
+    val qe = Ivf.quantizedEmbeddings(s, d)
     val lab = qe.join(Tables.embeddings(s, d)
       .select(col("vec_id"), col("label")), Seq("vec_id"))
-    val probes = lab.where(col("vec_id") < 5)
+    val probes = Ivf.probes(lab)
       .select(col("vec_id").as("qid"), col("q8").as("qv"),
         col("label").as("alabel"))
     val scored = lab.join(broadcast(probes), col("vec_id") =!= col("qid"))
@@ -4459,21 +4098,17 @@ object Similarity {
     * on the mutual-edge set (≤ 3n edges, degree ≤ 3), so closure
     * checks are degree-bounded joins, never quadratic. */
   def knnGraphStats(s: SparkSession, d: String, k: Int = 3): DataFrame = {
-    val qe = quantizedEmbeddings(s, d)
-    val cent = qe.where(col("vec_id") % 100 === 1)
-      .select(col("vec_id").as("cent_id"), col("q8").as("cq"))
-    val assigned = assignCells(s, qe, cent)
+    val qe = Ivf.quantizedEmbeddings(s, d)
+    val cent = Ivf.strideCells(qe, 100)
+    val assigned = Ivf.assignCells(s, qe, cent)
       .select(col("vec_id"), col("q8"), col("cent_id"))
-    val wTop = Window.partitionBy(col("a"))
-      .orderBy(col("dot").desc, col("b").asc)
-    val directed = assigned.as("x").join(assigned.as("y"),
+    // every vector queries its own cell: a = qid, b = cid
+    val directed = Ivf.topK(assigned.as("x").join(assigned.as("y"),
         col("x.cent_id") === col("y.cent_id") &&
           col("x.vec_id") =!= col("y.vec_id"))
-      .select(col("x.vec_id").as("a"), col("y.vec_id").as("b"),
-        vecDot(col("x.q8"), col("y.q8")).cast("long").as("dot"))
-      .withColumn("rk", row_number().over(wTop))
-      .where(col("rk") <= k)
-      .select(col("a"), col("b"))
+      .select(col("x.vec_id").as("qid"), col("y.vec_id").as("cid"),
+        vecDot(col("x.q8"), col("y.q8")).cast("long").as("dot")), k)
+      .select(col("qid").as("a"), col("cid").as("b"))
     val mutual = directed.as("f")
       .join(directed.as("r"),
         col("f.a") === col("r.b") && col("f.b") === col("r.a"))
@@ -4566,7 +4201,7 @@ object Similarity {
     * index and ~4× the scan throughput) — the answer decides whether
     * the cheap index is usable at all, per corpus, not per paper.
     *
-    * Exactness: everything rides the int8 grid ([[quantizedEmbeddings]]),
+    * Exactness: everything rides the int8 grid ([[Ivf.quantizedEmbeddings]]),
     * so every dot — full or prefix — is an exact integer (≤ 64·127²,
     * order-independent in double) and both rankings are deterministic
     * ((dot desc, cid asc), the q48 discipline). The d = 64 row is the
@@ -4582,35 +4217,23 @@ object Similarity {
     * Output: one row per (dims, qid) — n_hit of the full-dim top-k
     * recovered by the prefix-dim top-k, recall in integer ppm. */
   def matryoshkaRecall(s: SparkSession, d: String, k: Int = 10): DataFrame = {
-    val qe = quantizedEmbeddings(s, d)
-    val probes = qe.where(col("vec_id") < 5)
+    val qe = Ivf.quantizedEmbeddings(s, d)
+    val truth = quantizedTopK(s, d, k).select(col("qid"), col("cid"))
+    val probesD = Ivf.probes(qe)
       .select(col("vec_id").as("qid"), col("q8").as("qv"))
-    val wT = Window.partitionBy(col("qid"))
-      .orderBy(col("dot").desc, col("cid").asc)
-    val truth = qe.join(broadcast(probes), col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("cid"),
-        vecDot(col("qv"), col("q8")).cast("long").as("dot"))
-      .withColumn("rank", row_number().over(wT)).where(col("rank") <= k)
-      .select(col("qid"), col("cid"))
-    val probesD = probes.withColumn("dims",
-      explode(typedLit(Seq(8L, 16L, 32L, 64L))))
-    val wD = Window.partitionBy(col("dims"), col("qid"))
-      .orderBy(col("dot").desc, col("cid").asc)
-    val trunc = qe.join(broadcast(probesD), col("vec_id") =!= col("qid"))
+      .withColumn("dims", explode(typedLit(Seq(8L, 16L, 32L, 64L))))
+    val trunc = Ivf.topK(qe.join(broadcast(probesD), col("vec_id") =!= col("qid"))
       .select(col("dims"), col("qid"), col("vec_id").as("cid"),
         vecDot(slice(col("qv"), lit(1), col("dims")),
                slice(col("q8"), lit(1), col("dims")))
-          .cast("long").as("dot"))
-      .withColumn("rank", row_number().over(wD)).where(col("rank") <= k)
+          .cast("long").as("dot")), k, "dims")
       .select(col("dims"), col("qid"), col("cid"))
     val hits = trunc.join(truth, Seq("qid", "cid"))
       .groupBy(col("dims"), col("qid")).agg(count(lit(1)).as("n_hit"))
     val per = truth.groupBy(col("qid")).agg(count(lit(1)).as("n_truth"))
       .crossJoin(broadcast(
         s.range(1).select(explode(typedLit(Seq(8L, 16L, 32L, 64L))).as("dims"))))
-    per.join(hits, Seq("dims", "qid"), "left")
-      .withColumn("n_hit", coalesce(col("n_hit"), lit(0L)))
-      .withColumn("recall_ppm", expr("(1000000 * n_hit) div n_truth"))
+    Ivf.recall(per, hits, "dims", "qid")
       .select(col("dims"), col("qid"), col("n_truth"), col("n_hit"),
         col("recall_ppm"))
       .orderBy(col("dims"), col("qid"))
@@ -4771,8 +4394,8 @@ object Similarity {
     * per vector; the shuffle carries ≤ |centers| rows per partition).
     * Report is |centers|-bounded. */
   def kCenterCoreset(s: SparkSession, d: String, k: Int = 8): DataFrame = {
-    val qe = quantizedEmbeddings(s, d)
-    val cand = fixedCells(qe).collect()
+    val qe = Ivf.quantizedEmbeddings(s, d)
+    val cand = Ivf.fixedCells(qe).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).map(_.toLong).toArray))
       .sortBy(_._1)
     require(cand.nonEmpty, "kCenterCoreset: empty candidate pool")

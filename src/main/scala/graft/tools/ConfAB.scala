@@ -6,7 +6,8 @@ package graft.tools
   * default), mode B = conf set to the given value; run order alternates
   * AB/BA each round so linear box drift cancels. Full face evaluation
   * through the noop sink, under the bench's engine confs ([[graft.Session]]),
-  * each run printed with its [[graft.obs.Record]].
+  * each run printed with its build seconds ([[Profile.runFace]]) and
+  * its [[graft.obs.Record]].
   *
   * Usage: ConfAB <sfDir> <rounds> <confKey=value> <query>...
   *
@@ -28,8 +29,8 @@ object ConfAB {
     def runOne(name: String, mode: String, round: Int): Unit = {
       if (mode == "B") spark.conf.set(confKey, confVal)
       else shipped.fold(spark.conf.unset(confKey))(spark.conf.set(confKey, _))
-      val (dt, rec) = Profile.runFace(spark, sfDir, name)
-      println(f"[conf-ab] $name $mode round $round: $dt%.2fs ${rec.line}")
+      val (dt, build, rec) = Profile.runFace(spark, sfDir, name)
+      println(f"[conf-ab] $name $mode round $round: $dt%.2fs build=$build%.2fs ${rec.line}")
       results((name, mode)) = (dt, rec.jobs) :: results.getOrElse((name, mode), Nil)
     }
     for (name <- names; r <- 1 to rounds) {

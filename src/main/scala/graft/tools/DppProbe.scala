@@ -15,8 +15,7 @@ object DppProbe {
     val base = graft.Scratch.fresh("dpp_probe")
     val e = graft.Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), (col("vec_id") % 50).as("cent_id"))
-    e.repartition(col("cent_id")).write.partitionBy("cent_id")
-      .parquet(s"$base/index")
+    graft.ops.Ivf.writeCells(e, s"$base/index")
     val index = spark.read.parquet(s"$base/index")
     val batch = graft.Tables.embeddings(spark, sfDir)
       .where(col("vec_id") % 10 === 0)

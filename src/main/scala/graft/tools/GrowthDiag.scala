@@ -53,7 +53,7 @@ object GrowthDiag {
     val emb = graft.Tables.embeddings(spark, d)
     val nVec = emb.count()
     val tQuant = (1 to 3).map(_ => timed(noop(
-      graft.ops.Similarity.quantizeInt8(emb).select(col("vec_id"), col("q8")))))
+      graft.ops.Ivf.quantizeInt8(emb).select(col("vec_id"), col("q8")))))
       .drop(1).min
     val tProj = (1 to 3).map(_ => timed(noop(
       graft.ops.Similarity.randomProjectionGate(spark, d)))).drop(1).min

@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
-import graft.ops.Similarity
+import graft.ops.{Ivf, Similarity}
 
 /** Scale probe for q126 in its PRODUCTION configuration: the gate
   * face's fixed centStride (cells ∝ n) is the measured knee — routing
@@ -17,8 +17,7 @@ object IvfIncrProbe {
     val spark = graft.Session.tool(sfDir)
     val n = graft.Tables.embeddings(spark, sfDir)
       .where(col("vec_id") % 10 =!= 0).count()
-    val effStride = if (stride > 0) stride
-      else math.max(2, math.round(math.sqrt(n.toDouble)).toInt)
+    val effStride = Ivf.stride(stride, n)
     val cells = math.max(1L, n / effStride)
     println(s"[ivf-probe] n_existing=$n stride=$effStride" +
       (if (stride == 0) " (auto ~sqrt(n))" else "") +

@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
-import graft.ops.Similarity
+import graft.ops.{Ivf, Similarity}
 
 /** Scale probe for q115 in its PRODUCTION configuration: SemDeDup's
   * recipe holds expected cluster occupancy constant by growing k with
@@ -20,7 +20,7 @@ object SemDedupProbe {
     println(s"[semdedup-probe] n=$n k=$k expected-occupancy=${n / k}")
     for (i <- 1 to runs) {
       val t0 = System.nanoTime()
-      val qe = Similarity.quantizeInt8(graft.Tables.embeddings(spark, sfDir))
+      val qe = Ivf.quantizeInt8(graft.Tables.embeddings(spark, sfDir))
         .select(col("vec_id"), col("q8"))
       Similarity.semDedupOn(qe, k = k, iters = 2, tauNum = 2, tauDen = 5)
         .write.format("noop").mode("overwrite").save()
@@ -30,7 +30,7 @@ object SemDedupProbe {
     // candidate audit (r9 verdict item 5): the within-cluster pair join
     // generates Σ_c C(size_c, 2) candidates — report it per vector, with
     // the occupancy tail, measured on the REAL converged clusters
-    val qe = Similarity.quantizeInt8(graft.Tables.embeddings(spark, sfDir))
+    val qe = Ivf.quantizeInt8(graft.Tables.embeddings(spark, sfDir))
       .select(col("vec_id"), col("q8"))
     val cents = Similarity.kmeansFit(qe, k, 2)
     val sizes = Similarity.kmeansAssign(qe, cents, k > Similarity.KmeansMaxExprK)

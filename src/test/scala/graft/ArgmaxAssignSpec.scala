@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.{ArgmaxExprs, CentroidMatrix}
-import graft.ops.Similarity
+import graft.ops.{Ivf, Similarity}
 import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -23,7 +23,7 @@ class ArgmaxAssignSpec extends AnyFunSuite with SparkFixture {
       GraftBridge.expression(c), spark.sparkContext.broadcast(m)))
 
   test("ArgmaxDotCell matches the max_by fan-out formulation on real vectors") {
-    val qe = Similarity.quantizedEmbeddings(spark, sf)
+    val qe = Ivf.quantizedEmbeddings(spark, sf)
     val centRows = qe.where(col("vec_id") % 100 === 1)
       .select(col("vec_id"), col("q8")).collect().sortBy(_.getLong(0))
     val dims = centRows.head.getSeq[Double](1).length
@@ -56,7 +56,7 @@ class ArgmaxAssignSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("assignment plans as a codegen'd map: no Sort/Window/Join/Aggregate in the subtree") {
-    val qe = Similarity.quantizedEmbeddings(spark, sf)
+    val qe = Ivf.quantizedEmbeddings(spark, sf)
     val centRows = qe.where(col("vec_id") % 100 === 1)
       .select(col("vec_id"), col("q8")).collect().sortBy(_.getLong(0))
     val dims = centRows.head.getSeq[Double](1).length

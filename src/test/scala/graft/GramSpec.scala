@@ -40,7 +40,7 @@ class GramSpec extends AnyFunSuite with SparkFixture {
     val s = spark
     import s.implicits._
     // brute force over the same sf0.001 quantized vectors
-    val qe = graft.ops.Similarity.quantizeInt8(
+    val qe = graft.ops.Ivf.quantizeInt8(
       Tables.embeddings(spark, "/root/testdata/sf0.001"))
     // cheap local cross: collect is fine at sf0.001
     val vecs = qe.select(col("q8")).collect().map(_.getSeq[Double](0))

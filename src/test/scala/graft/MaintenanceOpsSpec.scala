@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{Dedup, Reconcile, Relational, Similarity}
+import graft.ops.{Dedup, Ivf, Reconcile, Relational, Similarity}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -473,14 +473,14 @@ class MaintenanceOpsSpec extends AnyFunSuite with SparkFixture {
     // read-only by contract (damaging it in place would corrupt every
     // later q156/q159 face in this checkout) — so the spec builds its
     // own copy of the same % 10 != 0 index.
-    val qe = Similarity.quantizedEmbeddings(spark, sf)
+    val qe = Ivf.quantizedEmbeddings(spark, sf)
     val cent = qe.where(col("vec_id") % 100 === 1)
       .select(col("vec_id").as("cent_id"), col("q8").as("cq"))
     val work = new java.io.File("target/tmp/ivfq156_spec")
     scala.reflect.io.Path(work).deleteRecursively()
     try {
       val idxDir = new java.io.File(work, "index")
-      Similarity.assignCells(spark, qe.where(col("vec_id") % 10 =!= 0), cent)
+      Ivf.assignCells(spark, qe.where(col("vec_id") % 10 =!= 0), cent)
         .select(col("vec_id"), col("cent_id"))
         .repartition(col("cent_id")).write.mode("overwrite")
         .partitionBy("cent_id").parquet(idxDir.getPath)
@@ -513,7 +513,7 @@ class MaintenanceOpsSpec extends AnyFunSuite with SparkFixture {
         workDir = work.getPath).collect().head
       assert(r.getAs[Long]("n_missing_after") == 0L)
       assert(r.getAs[Long]("n_missing_before") == r.getAs[Long]("n_repaired"))
-      val qe = Similarity.quantizedEmbeddings(spark, sf)
+      val qe = Ivf.quantizedEmbeddings(spark, sf)
       val idx = spark.read.parquet(s"${work.getPath}/index")
       assert(idx.count() == qe.count() && r.getAs[Long]("n_indexed_after") == qe.count())
       // the artifact's own per-cell audit agrees it is whole

@@ -392,16 +392,6 @@ class PipelineSparkSpec extends AnyFunSuite with SparkFixture {
     assert(wh != null)
   }
 
-  test("ivf topk returns ranked neighbors per probe") {
-    val rows = Similarity.ivfTopK(spark, sf).collect()
-    assert(rows.nonEmpty)
-    val byQ = rows.groupBy(_.getAs[Long]("qid"))
-    byQ.foreach { case (_, rs) =>
-      val ranks = rs.map(_.getAs[Int]("rank")).sorted
-      assert(ranks.head == 1 && ranks.length <= 10)
-    }
-  }
-
   test("quantized ivf topk: integer dots, ranked per probe, in-cell results only") {
     val rows = Similarity.ivfTopKQuantized(spark, sf).collect()
     assert(rows.nonEmpty)

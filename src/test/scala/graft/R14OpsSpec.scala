@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.{ArgmaxExprs, CentroidMatrix}
-import graft.ops.{Dedup, Sampling, Similarity}
+import graft.ops.{Dedup, Ivf, Sampling, Similarity}
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -38,7 +38,7 @@ class R14OpsSpec extends AnyFunSuite with SparkFixture {
   // -------------------------------------------------------------------
 
   test("TopPDotCells at p=1 degenerates to ArgmaxDotCell exactly") {
-    val qe = Similarity.quantizedEmbeddings(spark, sf)
+    val qe = Ivf.quantizedEmbeddings(spark, sf)
     val m = gridOf(qe)
     val both = qe.select(
       GraftBridge.column(ArgmaxExprs.ArgmaxDotCell(
@@ -50,7 +50,7 @@ class R14OpsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("TopPDotCells matches the fan-out row_number ranking at p=3") {
-    val qe = Similarity.quantizedEmbeddings(spark, sf)
+    val qe = Ivf.quantizedEmbeddings(spark, sf)
     val m = gridOf(qe)
     val got = qe.select(col("vec_id"),
         posexplode(topPCol(col("q8"), m, 3)).as(Seq("r", "cent_id")))
@@ -117,7 +117,7 @@ class R14OpsSpec extends AnyFunSuite with SparkFixture {
   // -------------------------------------------------------------------
 
   test("ivfCompactDir: file count collapses to |cells|, id set unchanged") {
-    val qe = Similarity.quantizedEmbeddings(spark, sf)
+    val qe = Ivf.quantizedEmbeddings(spark, sf)
     val cent = qe.where(col("vec_id") % 100 === 1)
       .select(col("vec_id").as("cent_id"), col("q8").as("cq"))
     val work = new java.io.File(
@@ -125,7 +125,7 @@ class R14OpsSpec extends AnyFunSuite with SparkFixture {
     try {
       val idx = s"${work.getPath}/index"
       def writeGen(rows: DataFrame, gen: Int): Unit =
-        Similarity.assignCells(spark, rows, cent)
+        Ivf.assignCells(spark, rows, cent)
           .select(col("vec_id"), col("cent_id"))
           .repartition(col("cent_id")).write.mode("overwrite")
           .partitionBy("cent_id").parquet(s"$idx/batch=$gen")
@@ -210,7 +210,7 @@ class R14OpsSpec extends AnyFunSuite with SparkFixture {
     assert(r.getAs[Long]("max_occ_after") <= r.getAs[Long]("max_occ_before"),
       "splitting can only shrink or hold the max cell")
     assert(r.getAs[Long]("n_vecs_after") ==
-      Similarity.quantizedEmbeddings(spark, sfSplit).count(),
+      Ivf.quantizedEmbeddings(spark, sfSplit).count(),
       "rebalance must conserve every row")
     assert(r.getAs[Long]("n_cells_after") >= r.getAs[Long]("n_cells_before"))
     // at the pinned 1.1x threshold the gate corpus has at least one hot
@@ -221,7 +221,7 @@ class R14OpsSpec extends AnyFunSuite with SparkFixture {
   test("vectorErasure receipt: zero residual and conserved index size") {
     val r = Similarity.vectorErasure(spark, sf).collect().head
     assert(r.getAs[Long]("n_residual_after") == 0L)
-    val n = Similarity.quantizedEmbeddings(spark, sf).count()
+    val n = Ivf.quantizedEmbeddings(spark, sf).count()
     assert(r.getAs[Long]("n_index_after") ==
       n - r.getAs[Long]("n_index_erased"))
     assert(r.getAs[Long]("n_store_erased") == r.getAs[Long]("n_index_erased"))
@@ -367,7 +367,7 @@ class R14OpsSpec extends AnyFunSuite with SparkFixture {
       r.getAs[Long]("n_vecs_a") + r.getAs[Long]("n_vecs_b"),
       "disjoint halves must union without loss or double-count")
     assert(r.getAs[Long]("n_vecs_merged") ==
-      Similarity.quantizedEmbeddings(spark, d).count())
+      Ivf.quantizedEmbeddings(spark, d).count())
     assert(r.getAs[Long]("n_missing_after") == 0L)
     assert(r.getAs[Long]("files_after") == r.getAs[Long]("n_cells_merged"),
       "the q126 layout rule: one physical file per merged cell")
@@ -383,7 +383,7 @@ class R14OpsSpec extends AnyFunSuite with SparkFixture {
   test("ivfRecenter: occupancies conserve the corpus on both sides; the Lloyd step moves vectors") {
     val d = "/root/testdata/sf0.01"
     val rows = Similarity.ivfRecenter(spark, d).collect()
-    val n = Similarity.quantizedEmbeddings(spark, d).count()
+    val n = Ivf.quantizedEmbeddings(spark, d).count()
     assert(rows.map(_.getAs[Long]("occ_before")).sum == n)
     assert(rows.map(_.getAs[Long]("occ_after")).sum == n)
     val moved = rows.map(_.getAs[Long]("n_moved")).distinct
@@ -399,7 +399,7 @@ class R14OpsSpec extends AnyFunSuite with SparkFixture {
   test("streamErasure: final index = corpus minus all subjects; replayed batch is bit-identical") {
     val d = sf // sf0.001: 5 subjects in 3 waves over one cell
     val rows = graft.ops.Pipelines.streamErasure(spark, d).collect()
-    val qe = Similarity.quantizedEmbeddings(spark, d)
+    val qe = Ivf.quantizedEmbeddings(spark, d)
     val nSubjects = qe.where(col("vec_id") % 10 === 0).count()
     assert(rows.map(_.getAs[Long]("n_subjects")).sum == nSubjects)
     assert(rows.forall(_.getAs[Long]("n_residual_after") == 0L))
@@ -529,7 +529,7 @@ class R14OpsSpec extends AnyFunSuite with SparkFixture {
       .collect()
       .map(r => (r.getAs[Long]("qid"), r.getAs[Int]("rank").toLong) ->
         r.getAs[Long]("cid")).toMap
-    val qe = Similarity.quantizedEmbeddings(spark, sf)
+    val qe = Ivf.quantizedEmbeddings(spark, sf)
     val pq = qe.where(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("q8").as("qv"))
     val w = org.apache.spark.sql.expressions.Window
@@ -554,7 +554,7 @@ class R14OpsSpec extends AnyFunSuite with SparkFixture {
     val d = "/root/testdata/sf0.01"
     val rows = graft.ops.Similarity.contrastiveMine(spark, d).collect()
     assert(rows.length == 5)
-    val qe = Similarity.quantizedEmbeddings(spark, d)
+    val qe = Ivf.quantizedEmbeddings(spark, d)
       .join(graft.Tables.embeddings(spark, d).select(col("vec_id"), col("label")),
         Seq("vec_id"))
       .collect()
@@ -704,17 +704,17 @@ class R14OpsSpec extends AnyFunSuite with SparkFixture {
       assert(r.getAs[Long]("dig_corpus") != r.getAs[Long]("dig_index"))
     }
     // diverged set == exactly the victims' cells
-    val qe = Similarity.quantizedEmbeddings(spark, d)
+    val qe = Ivf.quantizedEmbeddings(spark, d)
     val cent = qe.where(col("vec_id") % 100 === 1)
       .select(col("vec_id").as("cent_id"), col("q8").as("cq"))
-    val victimCells = Similarity.assignCells(spark,
+    val victimCells = Ivf.assignCells(spark,
         qe.where(pmod(col("vec_id"), lit(167)) === 5), cent)
       .select(col("cent_id")).collect().map(_.getLong(0)).toSet
     assert(rows.map(_.getAs[Long]("cent_id")).toSet == victimCells)
     // a pristine index passes: rebuild without corruption and re-audit
     val clean = s"target/tmp/q184clean"
     scala.reflect.io.Path(new java.io.File(clean)).deleteRecursively()
-    Similarity.assignCells(spark, qe, cent)
+    Ivf.assignCells(spark, qe, cent)
       .select(col("vec_id"), col("cent_id"))
       .repartition(col("cent_id")).write.mode("overwrite")
       .partitionBy("cent_id").parquet(clean)
@@ -830,7 +830,7 @@ class R14OpsSpec extends AnyFunSuite with SparkFixture {
       .map(r => (r.getAs[Long]("qid"), r.getAs[Int]("sel_rank")) ->
         (r.getAs[Long]("cid"), r.getAs[Long]("max_sim"),
           r.getAs[Long]("score"))).toMap
-    val qe = Similarity.quantizedEmbeddings(spark, d).collect()
+    val qe = Ivf.quantizedEmbeddings(spark, d).collect()
       .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
     def dot(a: Array[Double], b: Array[Double]): Long =
       a.zip(b).map { case (x, y) => x * y }.sum.toLong
@@ -893,7 +893,7 @@ class R14OpsSpec extends AnyFunSuite with SparkFixture {
     val d = "/root/testdata/sf0.01"
     val rows = Similarity.retrievalMrr(spark, d).collect()
     assert(rows.length == 5)
-    val qe = Similarity.quantizedEmbeddings(spark, d)
+    val qe = Ivf.quantizedEmbeddings(spark, d)
       .join(graft.Tables.embeddings(spark, d).select(col("vec_id"), col("label")),
         Seq("vec_id")).collect()
       .map(r => (r.getAs[Long]("vec_id"), r.getSeq[Double](r.fieldIndex("q8")).toArray,
@@ -923,7 +923,7 @@ class R14OpsSpec extends AnyFunSuite with SparkFixture {
   test("knnGraphStats: equals a plain-Scala graph replay, triangle-wedge " +
     "identity holds") {
     val row = Similarity.knnGraphStats(spark, sf).collect().head
-    val qe = Similarity.quantizedEmbeddings(spark, sf).collect()
+    val qe = Ivf.quantizedEmbeddings(spark, sf).collect()
       .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
     def dot(a: Array[Double], b: Array[Double]): Long =
       a.zip(b).map { case (x, y) => x * y }.sum.toLong

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{Curation, Sampling, Similarity}
+import graft.ops.{Curation, Ivf, Sampling, Similarity}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
@@ -199,7 +199,7 @@ class R16OpsSpec extends AnyFunSuite with SparkFixture {
     // Σ_vec (v_q·x)² = v_qᵀ S v_q — exact INTEGER identity between the
     // distributed projection and the driver's Gram-derived λ̂
     val dim = 64
-    val qe = Similarity.quantizeInt8(Tables.embeddings(spark, sf))
+    val qe = Ivf.quantizeInt8(Tables.embeddings(spark, sf))
       .select(col("vec_id"), col("q8"))
     val sMat = Similarity.gramCollectFrame(qe, dim)
     val rotRows = spark.read.parquet(Similarity.opqRotationDir(spark, sf))
@@ -254,7 +254,7 @@ class R16OpsSpec extends AnyFunSuite with SparkFixture {
     import org.apache.spark.sql.expressions.Window
     val fix = anisotropicFixture(256).cache()
     try {
-      val qe = Similarity.quantizeInt8(fix).select(col("vec_id"), col("q8"))
+      val qe = Ivf.quantizeInt8(fix).select(col("vec_id"), col("q8"))
       // exact ground truth: int8-dot top-10 for the 5 standard probes
       val probes = qe.where(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("q8").as("qv"))
@@ -296,7 +296,7 @@ class R16OpsSpec extends AnyFunSuite with SparkFixture {
     }
     // independent driver-side replay: collect the int8 grid, brute-force
     // every prefix ranking with the same (dot desc, cid asc) tie rule
-    val vecs = Similarity.quantizedEmbeddings(spark, sf)
+    val vecs = Ivf.quantizedEmbeddings(spark, sf)
       .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).map(_.toLong).toArray)
       .sortBy(_._1)
     def topk(qid: Long, d: Int): Seq[Long] = {
@@ -328,7 +328,7 @@ class R16OpsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("k-center coreset gate face replays against a plain-Scala reference") {
-    val vecs = Similarity.quantizedEmbeddings(spark, sf)
+    val vecs = Ivf.quantizedEmbeddings(spark, sf)
       .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).map(_.toLong).toArray)
       .sortBy(_._1)
     val cand = vecs.filter { case (id, _) => id % 100 == 0 && id < 6400 }

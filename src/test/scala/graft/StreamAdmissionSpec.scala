@@ -87,7 +87,7 @@ class StreamAdmissionSpec extends AnyFunSuite with SparkFixture {
       .listFiles().count(_.getName.endsWith(".parquet"))
     assert(inFiles >= 3)
     // the persisted index holds exactly the corpus id set
-    val qe = graft.ops.Similarity.quantizedEmbeddings(spark, sf)
+    val qe = graft.ops.Ivf.quantizedEmbeddings(spark, sf)
     val idxIds = spark.read.parquet("target/tmp/sim_q161/index")
       .select("vec_id").collect().map(_.getLong(0)).toSet
     val corpusIds = qe.select("vec_id").collect().map(_.getLong(0)).toSet

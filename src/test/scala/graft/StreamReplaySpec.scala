@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{Pipelines, Similarity}
+import graft.ops.{Ivf, Pipelines}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -60,7 +60,7 @@ class StreamReplaySpec extends AnyFunSuite with SparkFixture {
     val idxBefore = rowsOf(spark.read.parquet(s"$base/index"))
     val receipt1Before = rowsOf(spark.read.parquet(s"$base/stage/receipt_1"))
     assert(receipt1Before.nonEmpty, "fixture must have a wave-1 receipt")
-    val qe = Similarity.quantizedEmbeddings(spark, sf)
+    val qe = Ivf.quantizedEmbeddings(spark, sf)
     val existing = qe.where(col("vec_id") % 10 =!= 0)
     val cent = qe.where(col("vec_id") % 100 === 0 && col("vec_id") < 6400)
       .select(col("vec_id").as("cent_id"), col("q8").as("cq"))

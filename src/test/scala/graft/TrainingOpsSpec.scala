@@ -2,7 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
-import graft.ops.{Dedup, Sampling, Similarity, Temporal, TextAnalysis}
+import graft.ops.{Dedup, Ivf, Sampling, Similarity, Temporal, TextAnalysis}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -130,7 +130,7 @@ class TrainingOpsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("quantizeInt8: |q| <= 127, max component hits ±127, dequant error within half-step") {
-    val q = Similarity.quantizeInt8(Tables.embeddings(spark, sf))
+    val q = Ivf.quantizeInt8(Tables.embeddings(spark, sf))
       .select(col("vec_id"), col("embedding"), col("q8"))
       .collect()
     assert(q.nonEmpty)
@@ -152,7 +152,7 @@ class TrainingOpsSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("quantizedEmbeddings: served off a fingerprint-keyed on-disk artifact, lossless, multi-file (r11 verdict item 1)") {
-    val served = Similarity.quantizedEmbeddings(spark, sf)
+    val served = Ivf.quantizedEmbeddings(spark, sf)
     val dir = new java.io.File(
       s"target/tmp/quant8_${Tables.sourceFingerprint(sf, "embeddings")}")
     // the artifact physically exists, is committed, and carries enough
@@ -163,7 +163,7 @@ class TrainingOpsSpec extends AnyFunSuite with SparkFixture {
       .count(_.getName.startsWith("part-"))
     assert(parts > 1, s"artifact is $parts file(s) — downstream scans would serialize")
     // the disk leg is LOSSLESS: artifact contents == a live quantize
-    val live = Similarity.quantizeInt8(Tables.embeddings(spark, sf))
+    val live = Ivf.quantizeInt8(Tables.embeddings(spark, sf))
       .select(col("vec_id"), col("q8")).collect()
       .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
     val disk = served.collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
@@ -196,7 +196,7 @@ class TrainingOpsSpec extends AnyFunSuite with SparkFixture {
     val s = spark
     import s.implicits._
     val df = Seq((1L, Seq(0.0f, 0.0f, 0.0f))).toDF("vec_id", "embedding")
-    val q = Similarity.quantizeInt8(df).select(col("q8")).head.getSeq[Double](0)
+    val q = Ivf.quantizeInt8(df).select(col("q8")).head.getSeq[Double](0)
     assert(q == Seq(0.0, 0.0, 0.0))
   }
 
@@ -495,7 +495,7 @@ class TrainingOpsSpec extends AnyFunSuite with SparkFixture {
     // beat the mean projected dot over the whole corpus. Deterministic
     // data → deterministic assertion.
     val proj = out.map(r => r.getLong(0) -> (1 to 16).map(r.getLong).toArray).toMap
-    val q8 = Similarity.quantizeInt8(Tables.embeddings(spark, sf))
+    val q8 = Ivf.quantizeInt8(Tables.embeddings(spark, sf))
       .select(col("vec_id"), col("q8")).collect()
       .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
     var wins = 0
@@ -573,7 +573,7 @@ class TrainingOpsSpec extends AnyFunSuite with SparkFixture {
     // independent replay of the DEDUP layer (the clustering layer is
     // q94's oracle-checked pipeline): brute-force all pairs locally with
     // exact integer arithmetic against the operator's own assignment
-    val q8 = Similarity.quantizeInt8(Tables.embeddings(spark, sf))
+    val q8 = Ivf.quantizeInt8(Tables.embeddings(spark, sf))
       .select(col("vec_id"), col("q8")).collect()
       .map(r => r.getLong(0) -> r.getSeq[Double](1).map(_.toLong).toArray).toMap
     val cluster = res.map(t => t._1 -> t._2).toMap
@@ -594,7 +594,7 @@ class TrainingOpsSpec extends AnyFunSuite with SparkFixture {
     // a different physical layout must not move a single flag (every
     // compared value is an exact integer)
     val b = Similarity.semDedupOn(
-      Similarity.quantizeInt8(Tables.embeddings(spark, sf).repartition(13))
+      Ivf.quantizeInt8(Tables.embeddings(spark, sf).repartition(13))
         .select(col("vec_id"), col("q8")), k = 8, iters = 2, tauNum = 2, tauDen = 5)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getBoolean(2)))
     assert(res.toSeq == b.toSeq, "layout changed the semdedup output")
@@ -604,8 +604,7 @@ class TrainingOpsSpec extends AnyFunSuite with SparkFixture {
     val a = graft.ops.Similarity.labelCentroids(spark, sf).collect()
     assert(a.length == 640) // 10 labels × 64 dims
     // same aggregation over a different layout → bit-identical sums
-    val shuffled = graft.ops.Similarity
-      .quantizeInt8(Tables.embeddings(spark, sf).repartition(13))
+    val shuffled = Ivf.quantizeInt8(Tables.embeddings(spark, sf).repartition(13))
       .select(col("label"), posexplode(col("q8")).as(Seq("dim", "q")))
       .groupBy(col("label"), col("dim"))
       .agg(sum(col("q")).cast("long").as("sum_q"))

@@ -11,7 +11,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *  - [[fresh]]: a fixed per-query dir, cleared on entry;
   *  - [[artifact]]: a build-once dir, committed by an `_OK` marker;
   *  - [[withWorkDir]]: a private UUID-named dir, deleted after use;
-  *  - [[stageWaves]]: staged waves moved into a stream's input dir.
+  *  - [[stageWaves]]: staged waves moved into a stream's input dir;
+  *  - [[dataFiles]]: the data-file count of a written layout.
   * A dir name never changes with the code that writes it, so a warm
   * root keeps serving across builds; a format change bumps the
   * artifact key's version tag instead. */
@@ -134,6 +135,19 @@ object Scratch {
         throw new IOException(s"wave $i: move failed for $src")
       fs.setTimes(dst, WaveT0 + i * WaveStepMs, -1)
     }
+  }
+
+  /** The number of data files a reader of `dir` scans: the files under
+    * it, recursively, less hidden ones (a name starting with `_` or `.`:
+    * `_SUCCESS`, `_OK`, checksums, a `_spark_metadata` log), the rule of
+    * Spark's file index. The one rule behind every "files in this layout"
+    * number a receipt reports. */
+  def dataFiles(fs: FileSystem, dir: String): Long = {
+    def walk(p: Path): Long = fs.listStatus(p).iterator
+      .filterNot(st => st.getPath.getName.startsWith("_") || st.getPath.getName.startsWith("."))
+      .map(st => if (st.isDirectory) walk(st.getPath) else 1L)
+      .sum
+    walk(new Path(dir))
   }
 
   /** Deletes the whole root. */

@@ -5,9 +5,7 @@ import java.time.{Instant, OffsetDateTime}
 
 import graft.CopyConfig
 import graft.csv.RawCell
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.{Column, GraftBridge}
 
 /** The reference's per-cell type-inference cascade
   * (`/root/reference/write.go:207-223`; SURVEY.md §1.3) — 7 ordered rules:
@@ -26,10 +24,12 @@ import org.apache.spark.sql.types._
   * `withDoubles = true` adds rule 5.5 (double) as the engine's documented
   * extension, since the harness data is double-heavy.
   *
-  * Two implementations with identical semantics:
-  *  - [[inferCell]]: pure JVM, used by the local pipeline and tests;
-  *  - [[Exprs]]: Catalyst `Column` expressions (when/otherwise chain), so
-  *    the cascade runs inside whole-stage codegen on the cluster — no UDF.
+  * Two implementations:
+  *  - [[inferCell]]: pure JVM, the oracle the specs pin the engine to;
+  *  - [[Exprs.cell]]: the native [[InferCell]] expression, one rule walk
+  *    per cell inside whole-stage codegen on the cluster, no UDF. Rule 5
+  *    there is Catalyst's `try_to_timestamp` parse for the session zone,
+  *    where [[inferCell]] parses with `java.time` in UTC.
   */
 object TypeInference {
 
@@ -114,62 +114,14 @@ object TypeInference {
       case DoubleValue(d)    => ("double", null, null, null, null, d) // withDoubles ext
     }
 
-  /** Catalyst-expression form of the cascade over (value, quoted) columns.
-    * Produces the tagged struct; stays inside whole-stage codegen (no UDF).
-    * `javaTsPattern` from [[GoTimeFormat.toJavaPattern]].
-    */
+  /** Column face of the cascade over (value, quoted) columns: the
+    * native [[InferCell]] expression, which produces the tagged struct
+    * inside whole-stage codegen (no UDF). */
   object Exprs {
-    def longGuard(v: Column): Column = v.rlike("^[+-]?[0-9]+$")
-
-    /** Same shapes as [[doublePattern]] (decimal/exponent forms only). */
-    def doubleGuard(v: Column): Column =
-      v.rlike("^[+-]?([0-9]+\\.?[0-9]*|\\.[0-9]+)([eE][+-]?[0-9]+)?$")
-
-    /** try_to_timestamp equivalent: NULL unless the layout parses. */
-    def tryTs(v: Column, javaTsPattern: String): Column =
-      try_to_timestamp(v, lit(javaTsPattern))
-
-    /** Full tagged-union struct for one (value, quoted) pair.
-      *
-      * Shape matters for cost: the obvious encoding — compute the tag as
-      * its own cascade and reference it from every slot
-      * (`when(t === "ts", ...)`) — inlines the whole cascade (timestamp
-      * try-parse included) once PER SLOT,
-      * and codegen subexpression elimination does not rescue work hidden
-      * inside conditional branches. Profiled at 6× the per-row cost on
-      * the q50/q56 gate queries. Instead ONE when-cascade whose branches
-      * are complete structs: each row walks the rules once and the
-      * try-parse runs at most twice (condition + winning branch) instead
-      * of ~6×. */
-    def cell(value: Column, quoted: Column, cfg: CopyConfig): Column = {
-      val pat = GoTimeFormat.toJavaPattern(cfg.timeFormat)
-      val nullS = lit(null).cast(StringType)
-      val nullB = lit(null).cast(BooleanType)
-      val nullT = lit(null).cast(TimestampType)
-      val nullL = lit(null).cast(LongType)
-      val nullD = lit(null).cast(DoubleType)
-      def mk(tag: Column, s: Column = nullS, b: Column = nullB, t: Column = nullT,
-          l: Column = nullL, d: Column = nullD): Column =
-        struct(tag.as("tag"), s.as("s"), b.as("b"), t.as("t"), l.as("l"), d.as("d"))
-      val nullStruct = mk(lit("null"))
-      val stringStruct = mk(lit("string"), s = value)
-      val base = when(value.isNull, nullStruct)
-        .when(quoted, stringStruct)
-        .when(value === cfg.falseValue, mk(lit("bool"), b = lit(false)))
-        .when(value === cfg.trueValue, mk(lit("bool"), b = lit(true)))
-        .when(value === cfg.nullValue, nullStruct)
-        .when(tryTs(value, pat).isNotNull, mk(lit("ts"), t = tryTs(value, pat)))
-        // try_cast: an int64-overflow digit string passes the guard but
-        // must fall through to rule 7; a plain cast throws on it under ANSI
-        .when(longGuard(value) && value.try_cast(LongType).isNotNull,
-          mk(lit("long"), l = value.try_cast(LongType)))
-      val withExt =
-        if (cfg.withDoubles)
-          base.when(!longGuard(value) && doubleGuard(value) &&
-              value.cast(DoubleType).isNotNull,
-            mk(lit("double"), d = value.cast(DoubleType)))
-        else base
-      withExt.otherwise(stringStruct)
-    }
+    def cell(value: Column, quoted: Column, cfg: CopyConfig): Column =
+      GraftBridge.column(InferCell(
+        GraftBridge.expression(value), GraftBridge.expression(quoted),
+        cfg.falseValue, cfg.trueValue, cfg.nullValue,
+        GoTimeFormat.toJavaPattern(cfg.timeFormat), cfg.withDoubles))
   }
 }

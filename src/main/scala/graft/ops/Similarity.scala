@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.{Scratch, Tables}
 import graft.functions.VectorExprs.{vecDot, vecNorm}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -2364,15 +2365,6 @@ object Similarity {
   // q165: IVF index compaction (merge accreted batch generations)
   // ---------------------------------------------------------------------
 
-  /** Count of parquet data files under a dir (recursive) — the physical
-    * read-amplification number a compaction receipt reports. */
-  private[graft] def parquetFileCount(dir: String): Long = {
-    def walk(f: java.io.File): Long =
-      if (f.isFile) { if (f.getName.endsWith(".parquet")) 1L else 0L }
-      else Option(f.listFiles()).map(_.map(walk).sum).getOrElse(0L)
-    walk(new java.io.File(dir))
-  }
-
   /** Rewrite a `batch=N/cent_id=M` accreted index into ONE generation —
     * the missing maintenance verb behind [[ivfCompactGate]]; exposed for
     * the spec, which compacts a real q161-shaped stream layout and
@@ -2456,7 +2448,8 @@ object Similarity {
       val nRowsBefore = beforeAgg.getLong(0)
       val nGenerations = beforeAgg.getLong(1)
       val nCells = beforeAgg.getLong(2)
-      val nFilesBefore = parquetFileCount(idx)
+      val fs = new Path(idx).getFileSystem(s.sparkContext.hadoopConfiguration)
+      val nFilesBefore = Scratch.dataFiles(fs, idx)
       val compacted = s"$work/compacted"
       ivfCompactDir(s, idx, compacted)
       // re-audit OFF DISK: fresh read of the compacted artifact
@@ -2465,7 +2458,7 @@ object Similarity {
         countDistinct(col("cent_id"))).collect().head
       val nRowsAfter = afterAgg.getLong(0)
       val nCellsAfter = afterAgg.getLong(1)
-      val nFilesAfter = parquetFileCount(compacted)
+      val nFilesAfter = Scratch.dataFiles(fs, compacted)
       val nMissingAfter = qe.select(col("vec_id"))
         .join(after.select(col("vec_id")), Seq("vec_id"), "left_anti").count()
       s.range(1).select(
@@ -2807,11 +2800,8 @@ object Similarity {
         .unionAll(b.select(col("vec_id"), col("cent_id").cast("long").as("cent_id"))), merged)
       val m = s.read.parquet(merged)
       val mAgg = m.agg(count(lit(1)), countDistinct(col("cent_id"))).collect().head
-      val filesAfter = Option(new java.io.File(merged).listFiles())
-        .getOrElse(Array.empty[java.io.File])
-        .filter(_.getName.startsWith("cent_id="))
-        .map(cd => cd.listFiles().count(_.getName.startsWith("part-")).toLong)
-        .sum
+      val filesAfter = Scratch.dataFiles(
+        new Path(merged).getFileSystem(s.sparkContext.hadoopConfiguration), merged)
       val nMissing = ivfCoverageByCell(s, qe, cent, m)
         .agg(coalesce(sum(col("n_missing")), lit(0L))).collect().head.getLong(0)
       s.range(1).select(

@@ -24,9 +24,10 @@ import org.apache.spark.util.LongAccumulator
   *    (`maxRecordsPerFile` from `cfg.chunkSize`); the final partial batch
   *    is flushed (fixes reference bug #1, the dropped tail batch).
   *
-  * Only the record split runs as a JVM lambda (ingestion seam); the whole
-  * inference cascade is Catalyst `when/otherwise` expressions inside
-  * whole-stage codegen ([[TypeInference.Exprs]]).
+  * Only the record split runs as a JVM lambda (ingestion seam); the
+  * inference cascade is one native Catalyst expression per column
+  * ([[graft.infer.InferCell]] via [[TypeInference.Exprs.cell]]) inside
+  * whole-stage codegen.
   */
 object CopyWrite {
 

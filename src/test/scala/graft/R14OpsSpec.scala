@@ -2,6 +2,8 @@ package graft
 
 import graft.functions.{ArgmaxExprs, CentroidMatrix}
 import graft.ops.{Dedup, Ivf, Sampling, Similarity}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -20,6 +22,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class R14OpsSpec extends AnyFunSuite with SparkFixture {
 
   private val sf = "/root/testdata/sf0.001"
+  private val localFs = FileSystem.getLocal(new Configuration())
 
   private def topPCol(c: Column, m: CentroidMatrix, p: Int): Column =
     GraftBridge.column(ArgmaxExprs.TopPDotCells(
@@ -134,7 +137,7 @@ class R14OpsSpec extends AnyFunSuite with SparkFixture {
       val before = spark.read.parquet(idx)
       val idsBefore = before.select(col("vec_id")).collect()
         .map(_.getLong(0)).sorted.toSeq
-      val filesBefore = Similarity.parquetFileCount(idx)
+      val filesBefore = Scratch.dataFiles(localFs, idx)
       val out = s"${work.getPath}/compacted"
       Similarity.ivfCompactDir(spark, idx, out)
       val after = spark.read.parquet(out)
@@ -142,7 +145,7 @@ class R14OpsSpec extends AnyFunSuite with SparkFixture {
         .map(_.getLong(0)).sorted.toSeq
       val nCells = after.select(col("cent_id")).distinct().count()
       assert(idsAfter == idsBefore, "compaction must conserve the id set")
-      assert(Similarity.parquetFileCount(out) == nCells,
+      assert(Scratch.dataFiles(localFs, out) == nCells,
         "post-compaction file count must equal |cells|")
       assert(filesBefore > nCells,
         "fixture must actually be accreted (more files than cells)")

@@ -9,7 +9,8 @@ import org.apache.hadoop.fs.{FileSystem, Path, RawLocalFileSystem}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The build-once protocol of [[Scratch.artifact]], the private dir of
-  * [[Scratch.withWorkDir]] and the wave moves of [[Scratch.stageWaves]].
+  * [[Scratch.withWorkDir]], the wave moves of [[Scratch.stageWaves]] and
+  * the file count of [[Scratch.dataFiles]].
   * No session: the protocol is plain files. */
 class ScratchSpec extends AnyFunSuite {
 
@@ -144,6 +145,20 @@ class ScratchSpec extends AnyFunSuite {
       val e = intercept[IOException](Scratch.stageWaves(localFs, staged, in))
       assert(e.getMessage.startsWith("wave 1: expected one part file"), e.getMessage)
       assert(!new File(in).exists(), "a wave was moved before the check")
+    }
+  }
+
+  test("dataFiles: counts the files a reader scans, in every subdir, none hidden") {
+    withKey { key =>
+      val dir = Scratch.path(key)
+      touch(dir, "_SUCCESS")
+      touch(dir, "_OK")
+      touch(dir, ".part-00000.parquet.crc")
+      touch(s"$dir/cent_id=1", "part-00000.parquet")
+      touch(s"$dir/cent_id=1", "part-00001.parquet")
+      touch(s"$dir/batch=0/cent_id=2", "part-00000.parquet")
+      touch(s"$dir/_spark_metadata", "0")
+      assert(Scratch.dataFiles(localFs, dir) == 3L)
     }
   }
 }

@@ -8,6 +8,7 @@ approximating the driver's compare so mismatches surface before round end.
 Usage: python3 scripts/check.py [sfDir] [--skip-verify]
        python3 scripts/check.py --bench-diff [old.json new.json]
        python3 scripts/check.py --correctness-diff [old.json new.json]
+       python3 scripts/check.py --oracle-diff old.json new.json [sfDir]
 
 --bench-diff compares per-query medians between two driver bench files
 (default: the two highest BENCH_r*.json rounds) and flags regressions
@@ -22,6 +23,15 @@ change between the two per-query median records.
 two highest rounds): a query silently DROPPING OUT of the gate, newly
 failing, or downgrading from hash-checked to rows-only is flagged —
 the r8 verdict noted nothing watches for that class automatically.
+
+--oracle-diff takes two `oracle_sql.json` dumps from graft.Verify (say,
+of a parent commit and of a change that only respells oracle SQL). The
+two must hold the same query names. Every string whose text differs is
+run on both sides in DuckDB over the SF's parquet views (default: the
+gate run's), and the two results must be equal: the same
+column names and types, and the same rows once sorted, compared by exact
+`repr`, with no `canon` rounding. It prints how many strings it checked
+and how many matched, and exits 1 at the first mismatch.
 """
 import sys, os, json, subprocess, glob, math, hashlib
 
@@ -269,17 +279,57 @@ def correctness_diff(argv):
         print(f"  no drops or downgrades; {n_hash}/{len(new)} hash-checked")
     return 1 if (dropped or bad) else 0
 
+def duck(sf):
+    """A DuckDB connection with one view per testdata table of `sf`."""
+    import duckdb
+    con = duckdb.connect()
+    for t in ["region","nation","customer","supplier","part","orders","lineitem","events","documents","embeddings"]:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
+    return con
+
+def oracle_diff(argv):
+    args = [a for a in argv if not a.startswith("--")]
+    if len(args) not in (2, 3):
+        print("oracle-diff: need old.json new.json [sfDir]"); return 2
+    old, new = json.load(open(args[0])), json.load(open(args[1]))
+    sf = os.path.abspath(args[2]) if len(args) == 3 else SF
+    if set(old) != set(new):
+        print(f"oracle-diff: KEY SETS DIFFER: only old {sorted(set(old) - set(new))}, "
+              f"only new {sorted(set(new) - set(old))}")
+        return 1
+    con = duck(sf)
+    def run(sql):
+        rel = con.sql(sql)
+        head = list(zip(rel.columns, map(str, rel.types)))
+        return head, sorted(repr(r) for r in rel.fetchall())
+    changed = sorted(k for k in old if old[k] != new[k])
+    matched = 0
+    for name in changed:
+        try:
+            (ho, ro), (hn, rn) = run(old[name]), run(new[name])
+            why = None if (ho, ro) == (hn, rn) else \
+                f"columns {ho} -> {hn}, rows {len(ro)} -> {len(rn)}"
+        except Exception as e:
+            why = f"SQL ERROR {e}"
+        if why:
+            print(f"  {name}: MISMATCH {why}")
+            print(f"oracle-diff: {len(old)} strings, {matched + 1} checked, {matched} matched")
+            return 1
+        matched += 1
+        print(f"  {name}: same ({len(ro)} rows)")
+    print(f"oracle-diff: {len(old)} strings, {len(changed)} checked, {matched} matched")
+    return 0
+
 def main():
     if "--bench-diff" in sys.argv:
         sys.exit(bench_diff(sys.argv[2:]))
     if "--correctness-diff" in sys.argv:
         sys.exit(correctness_diff(sys.argv[2:]))
+    if "--oracle-diff" in sys.argv:
+        sys.exit(oracle_diff(sys.argv[2:]))
     if "--skip-verify" not in sys.argv:
         run_verify()
-    import duckdb
-    con = duckdb.connect()
-    for t in ["region","nation","customer","supplier","part","orders","lineitem","events","documents","embeddings"]:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
+    con = duck(SF)
     oracle = json.load(open(f"{OUT}/oracle_sql.json"))
     ok = fail = 0
     queries = sorted(os.listdir(OUT))

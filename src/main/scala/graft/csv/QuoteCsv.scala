@@ -98,7 +98,8 @@ object QuoteCsv {
     out.toIndexedSeq
   }
 
-  private def needsQuoting(s: String): Boolean =
+  /** Does `s` hold a character RFC 4180 allows only inside quotes? */
+  private[graft] def needsQuoting(s: String): Boolean =
     s.exists(c => c == ',' || c == '"' || c == '\n' || c == '\r')
 
   /** Render one cell per the reference's typed-quoting rule: quote iff the

@@ -3,6 +3,7 @@ package graft.ops
 import graft.{CopyConfig, Scratch, Tables}
 import graft.infer.TypeInference
 import graft.pipeline.{CopyRead, CopyWrite}
+import graft.ops.Similarity.{centCte, fixedGrid, quantizeCtes, routed}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -1643,26 +1644,12 @@ object Pipelines {
     * SQL — per-wave size, distinct argmax cells (the q143 grid), the
     * cumulative index size, and the zero-missing invariant. */
   def streamIndexMaintenanceSql: String =
-    """WITH base AS (
-      |  SELECT vec_id, embedding,
-      |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS ma
-      |  FROM embeddings),
-      | q8 AS (
-      |  SELECT vec_id,
-      |    list_transform(embedding, x -> CASE WHEN ma > 0
-      |      THEN floor(CAST(x AS DOUBLE) * 127.0 / ma + 0.5) ELSE 0.0 END) AS q
-      |  FROM base),
-      | cent AS (SELECT vec_id AS cent_id, q AS cq FROM q8
-      |          WHERE vec_id % 100 = 0 AND vec_id < 6400),
+    s"""WITH ${quantizeCtes()},
+      | ${centCte(fixedGrid)},
       | waves AS (SELECT vec_id, q, vec_id % 3 AS wave FROM q8
       |           WHERE vec_id % 10 = 0),
       | assigned AS (
-      |  SELECT wave, vec_id, cent_id FROM (
-      |    SELECT w.wave, w.vec_id, c.cent_id,
-      |      row_number() OVER (PARTITION BY w.vec_id
-      |        ORDER BY CAST(list_dot_product(w.q, c.cq) AS BIGINT) DESC,
-      |                 c.cent_id ASC) AS rn
-      |    FROM waves w CROSS JOIN cent c) WHERE rn = 1),
+      |  SELECT wave, vec_id, cent_id FROM (${routed("waves")})),
       | per AS (
       |  SELECT wave, CAST(count(*) AS BIGINT) AS n_batch,
       |    CAST(count(DISTINCT cent_id) AS BIGINT) AS n_cells_touched
@@ -1807,24 +1794,10 @@ object Pipelines {
     * whose entire static membership is the wave's subjects, residual
     * identically zero. */
   def streamErasureSql: String =
-    """WITH base AS (
-      |  SELECT vec_id, embedding,
-      |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS ma
-      |  FROM embeddings),
-      | q8 AS (
-      |  SELECT vec_id,
-      |    list_transform(embedding, x -> CASE WHEN ma > 0
-      |      THEN floor(CAST(x AS DOUBLE) * 127.0 / ma + 0.5) ELSE 0.0 END) AS q
-      |  FROM base),
-      | cent AS (SELECT vec_id AS cent_id, q AS cq FROM q8
-      |          WHERE vec_id % 100 = 0 AND vec_id < 6400),
+    s"""WITH ${quantizeCtes()},
+      | ${centCte(fixedGrid)},
       | assigned AS (
-      |  SELECT vec_id, cent_id FROM (
-      |    SELECT v.vec_id, c.cent_id,
-      |      row_number() OVER (PARTITION BY v.vec_id
-      |        ORDER BY CAST(list_dot_product(v.q, c.cq) AS BIGINT) DESC,
-      |                 c.cent_id ASC) AS rn
-      |    FROM q8 v CROSS JOIN cent c) WHERE rn = 1),
+      |  SELECT vec_id, cent_id FROM (${routed("q8")})),
       | occ AS (SELECT cent_id, CAST(count(*) AS BIGINT) AS occ
       |         FROM assigned GROUP BY 1),
       | waves AS (

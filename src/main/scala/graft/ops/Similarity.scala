@@ -383,6 +383,59 @@ object Similarity {
        |ORDER BY id1, id2""".stripMargin
   }
 
+  // The int8 index replayed in DuckDB: each of its decisions is written
+  // once here as DuckDB text, and every ANN oracle string composes it. The
+  // text reads nothing from the Scala index code, not even its constants,
+  // so the replay stays an independent check of it.
+
+  /** Quantize: CTEs `base` and `q8` (`vec_id`, the `keep` columns, `q`),
+    * each component rounded half up onto its own vector's ±127 grid. */
+  private[graft] def quantizeCtes(keep: String = ""): String = {
+    val k = if (keep.isEmpty) "" else s" $keep,"
+    s"""base AS (
+       |  SELECT vec_id,$k embedding,
+       |    ${maxAbs("embedding")} AS ma
+       |  FROM embeddings),
+       | q8 AS (
+       |  SELECT vec_id,$k
+       |    ${int8("embedding")} AS q
+       |  FROM base)""".stripMargin
+  }
+
+  /** The largest |component| of the list column `v`: its grid's scale. */
+  private def maxAbs(v: String): String =
+    s"list_max(list_transform($v, x -> abs(CAST(x AS DOUBLE))))"
+
+  /** The list column `v` on the int8 grid of scale `ma`. */
+  private def int8(v: String): String =
+    s"""list_transform($v, x -> CASE WHEN ma > 0
+       |      THEN floor(CAST(x AS DOUBLE) * 127.0 / ma + 0.5) ELSE 0.0 END)""".stripMargin
+
+  /** The fixed grid: the 64 anchors `vec_id % 100 = 0` below 6400. */
+  private[graft] val fixedGrid = "vec_id % 100 = 0 AND vec_id < 6400"
+
+  /** The stride grid at the gate's corpus sizes (stride 100). */
+  private[graft] val strideGrid = "vec_id % 100 = 1"
+
+  /** CTE `cent` (`cent_id`, `cq`): the cells of a grid over `q8`. */
+  private[graft] def centCte(grid: String): String =
+    s"cent AS (SELECT vec_id AS cent_id, q AS cq FROM q8 WHERE $grid)"
+
+  /** Argmax routing: every row of `rows` (a relation with `vec_id` and `q`)
+    * with its `p` best cells of `cells` (`cent_id`, `cq`), ranked by int8
+    * dot desc, then `cent_id` asc; `rn = 1` is the routed cell. */
+  private[graft] def routed(rows: String, p: Int = 1, cells: String = "cent"): String =
+    s"""SELECT * FROM (
+       |    SELECT v.*, c.cent_id,
+       |      row_number() OVER (PARTITION BY v.vec_id
+       |        ORDER BY CAST(list_dot_product(v.q, c.cq) AS BIGINT) DESC,
+       |                 c.cent_id ASC) AS rn
+       |    FROM $rows v CROSS JOIN $cells c) WHERE rn <= $p""".stripMargin
+
+  /** The exact top-k rank: per `qid`, `dot` desc, then `cid` asc. */
+  private[graft] val topKRank =
+    "row_number() OVER (PARTITION BY qid ORDER BY dot DESC, cid ASC) AS rank"
+
   /** IVF on the int8-QUANTIZED corpus (q43's gate face): the corpus is
     * routed to its argmax cell of the bounded [[Ivf.fixedCells]] grid,
     * each probe searches only its own cell, and the in-cell ranking is
@@ -403,24 +456,10 @@ object Similarity {
   }
 
   val ivfTopKQuantizedSql: String =
-    """WITH base AS (
-      |  SELECT vec_id, embedding,
-      |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS ma
-      |  FROM embeddings),
-      | q8 AS (
-      |  SELECT vec_id,
-      |    list_transform(embedding, x -> CASE WHEN ma > 0
-      |      THEN floor(CAST(x AS DOUBLE) * 127.0 / ma + 0.5) ELSE 0.0 END) AS q
-      |  FROM base),
-      | cent AS (SELECT vec_id AS cent_id, q AS cq FROM q8
-      |         WHERE vec_id % 100 = 0 AND vec_id < 6400),
+    s"""WITH ${quantizeCtes()},
+      | ${centCte(fixedGrid)},
       | assigned AS (
-      |  SELECT vec_id, q, cent_id FROM (
-      |    SELECT v.vec_id, v.q, c.cent_id,
-      |      row_number() OVER (PARTITION BY v.vec_id
-      |        ORDER BY CAST(list_dot_product(v.q, c.cq) AS BIGINT) DESC,
-      |                 c.cent_id ASC) AS rn
-      |    FROM q8 v CROSS JOIN cent c) WHERE rn = 1),
+      |  SELECT vec_id, q, cent_id FROM (${routed("q8")})),
       | probes AS (
       |  SELECT vec_id AS qid, q AS qv, cent_id AS qcell
       |  FROM assigned WHERE vec_id < 5),
@@ -431,7 +470,7 @@ object Similarity {
       |    ON a.cent_id = p.qcell AND a.vec_id <> p.qid),
       | ranked AS (
       |  SELECT qid, cid, dot,
-      |    row_number() OVER (PARTITION BY qid ORDER BY dot DESC, cid ASC) AS rank
+      |    $topKRank
       |  FROM dots)
       |SELECT qid, cid, dot, rank FROM ranked WHERE rank <= 10
       |ORDER BY qid, rank""".stripMargin
@@ -478,31 +517,13 @@ object Similarity {
   /** Oracle for [[ivfTopKMultiProbe]] at nprobe = 3: the q43 CTEs with
     * the probe routing widened to `rn <= 3`. */
   val ivfTopKMultiProbeSql: String =
-    """WITH base AS (
-      |  SELECT vec_id, embedding,
-      |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS ma
-      |  FROM embeddings),
-      | q8 AS (
-      |  SELECT vec_id,
-      |    list_transform(embedding, x -> CASE WHEN ma > 0
-      |      THEN floor(CAST(x AS DOUBLE) * 127.0 / ma + 0.5) ELSE 0.0 END) AS q
-      |  FROM base),
-      | cent AS (SELECT vec_id AS cent_id, q AS cq FROM q8
-      |         WHERE vec_id % 100 = 0 AND vec_id < 6400),
+    s"""WITH ${quantizeCtes()},
+      | ${centCte(fixedGrid)},
       | assigned AS (
-      |  SELECT vec_id, q, cent_id FROM (
-      |    SELECT v.vec_id, v.q, c.cent_id,
-      |      row_number() OVER (PARTITION BY v.vec_id
-      |        ORDER BY CAST(list_dot_product(v.q, c.cq) AS BIGINT) DESC,
-      |                 c.cent_id ASC) AS rn
-      |    FROM q8 v CROSS JOIN cent c) WHERE rn = 1),
+      |  SELECT vec_id, q, cent_id FROM (${routed("q8")})),
       | probes AS (
-      |  SELECT vec_id AS qid, q AS qv, cent_id AS qcell FROM (
-      |    SELECT v.vec_id, v.q, c.cent_id,
-      |      row_number() OVER (PARTITION BY v.vec_id
-      |        ORDER BY CAST(list_dot_product(v.q, c.cq) AS BIGINT) DESC,
-      |                 c.cent_id ASC) AS rn
-      |    FROM q8 v CROSS JOIN cent c WHERE v.vec_id < 5) WHERE rn <= 3),
+      |  SELECT vec_id AS qid, q AS qv, cent_id AS qcell
+      |  FROM (${routed("(SELECT * FROM q8 WHERE vec_id < 5)", 3)})),
       | dots AS (
       |  SELECT p.qid, a.vec_id AS cid,
       |    CAST(list_dot_product(p.qv, a.q) AS BIGINT) AS dot
@@ -510,7 +531,7 @@ object Similarity {
       |    ON a.cent_id = p.qcell AND a.vec_id <> p.qid),
       | ranked AS (
       |  SELECT qid, cid, dot,
-      |    row_number() OVER (PARTITION BY qid ORDER BY dot DESC, cid ASC) AS rank
+      |    $topKRank
       |  FROM dots)
       |SELECT qid, cid, dot, rank FROM ranked WHERE rank <= 10
       |ORDER BY qid, rank""".stripMargin
@@ -554,13 +575,7 @@ object Similarity {
       .orderBy(col("label"), col("dim"))
 
   val labelCentroidsSql: String =
-    """WITH q8 AS (
-      |  SELECT vec_id, label,
-      |    list_transform(embedding, x -> CASE WHEN ma > 0
-      |      THEN floor(CAST(x AS DOUBLE) * 127.0 / ma + 0.5) ELSE 0.0 END) AS q
-      |  FROM (SELECT vec_id, label, embedding,
-      |          list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS ma
-      |        FROM embeddings)),
+    s"""WITH ${quantizeCtes("label")},
       | ex AS (
       |  SELECT label, generate_subscripts(q, 1) - 1 AS dim, unnest(q) AS qv
       |  FROM q8)
@@ -612,15 +627,7 @@ object Similarity {
   val randomProjectionSql: String = {
     val pivots = (0 until 16).map(j =>
       s"  CAST(max(CASE WHEN j = $j THEN p END) AS BIGINT) AS p$j").mkString(",\n")
-    s"""WITH base AS (
-       |  SELECT vec_id, embedding,
-       |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS ma
-       |  FROM embeddings),
-       | q8 AS (
-       |  SELECT vec_id,
-       |    list_transform(embedding, x -> CASE WHEN ma > 0
-       |      THEN floor(CAST(x AS DOUBLE) * 127.0 / ma + 0.5) ELSE 0.0 END) AS q
-       |  FROM base),
+    s"""WITH ${quantizeCtes()},
        | dims AS (SELECT unnest(range(0, 64)) AS i),
        | outs AS (SELECT unnest(range(0, 16)) AS j),
        | signs AS (
@@ -793,15 +800,7 @@ object Similarity {
     * first-8 seeds → two Lloyd iterations → final assignment ranking
     * (`afin`, filter rk = 1 to read it). Consumers append CTEs/SELECT. */
   private def kmeansCoreSql: String =
-    s"""WITH base AS (
-       |  SELECT vec_id, embedding,
-       |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS ma
-       |  FROM embeddings),
-       | q8 AS (
-       |  SELECT vec_id,
-       |    list_transform(embedding, x -> CASE WHEN ma > 0
-       |      THEN floor(CAST(x AS DOUBLE) * 127.0 / ma + 0.5) ELSE 0.0 END) AS q
-       |  FROM base),
+    s"""WITH ${quantizeCtes()},
        | c0 AS (
        |  SELECT CAST(vec_id AS INT) AS cluster,
        |    list_transform(q, x -> CAST(x AS BIGINT)) AS cent
@@ -904,22 +903,14 @@ object Similarity {
        |ORDER BY a.vec_id""".stripMargin
 
   val quantizedTopKSql: String =
-    """WITH base AS (
-      |  SELECT vec_id, embedding,
-      |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS ma
-      |  FROM embeddings),
-      | q8 AS (
-      |  SELECT vec_id,
-      |    list_transform(embedding, x -> CASE WHEN ma > 0
-      |      THEN floor(CAST(x AS DOUBLE) * 127.0 / ma + 0.5) ELSE 0.0 END) AS q
-      |  FROM base),
+    s"""WITH ${quantizeCtes()},
       | dots AS (
       |  SELECT p.vec_id AS qid, c.vec_id AS cid,
       |    CAST(list_dot_product(p.q, c.q) AS BIGINT) AS dot
       |  FROM q8 p JOIN q8 c ON p.vec_id < 5 AND c.vec_id <> p.vec_id),
       | ranked AS (
       |  SELECT qid, cid, dot,
-      |    row_number() OVER (PARTITION BY qid ORDER BY dot DESC, cid ASC) AS rank
+      |    $topKRank
       |  FROM dots)
       |SELECT qid, cid, dot, rank FROM ranked WHERE rank <= 5
       |ORDER BY qid, rank""".stripMargin
@@ -1001,14 +992,14 @@ object Similarity {
   }
 
   /** The PQ encode→ADC→rank pipeline as oracle CTE text, parameterized
-    * only by an upstream CTE named `q8` with (vec_id, q) — shared
+    * only by the upstream CTE `q8` with (vec_id, q) it encodes — shared
     * verbatim by q106 (raw int8 grid) and q200 (OPQ-rotated grid), so
     * the two faces provably replay the same quantizer. */
-  private val pqPipelineCtes: String =
+  private def pqPipelineCtes(q8: String = "q8"): String =
     s""" subs AS (
        |  SELECT vec_id, CAST(m AS INT) AS m,
        |    list_slice(q, m * $PqSub + 1, m * $PqSub + $PqSub) AS sub
-       |  FROM q8, range($PqM) t(m)),
+       |  FROM $q8, range($PqM) t(m)),
        | seeds AS (
        |  SELECT m, CAST(vec_id AS INT) AS j, sub AS cent
        |  FROM subs WHERE vec_id < $PqK),
@@ -1042,16 +1033,8 @@ object Similarity {
        |ORDER BY qid, rank""".stripMargin
 
   val pqTopKSql: String =
-    s"""WITH base AS (
-       |  SELECT vec_id, embedding,
-       |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS ma
-       |  FROM embeddings),
-       | q8 AS (
-       |  SELECT vec_id,
-       |    list_transform(embedding, x -> CASE WHEN ma > 0
-       |      THEN floor(CAST(x AS DOUBLE) * 127.0 / ma + 0.5) ELSE 0.0 END) AS q
-       |  FROM base),
-       |$pqPipelineCtes
+    s"""WITH ${quantizeCtes()},
+       |${pqPipelineCtes()}
        |$pqSelect""".stripMargin
 
   /** q200 — OPQ-PQ RETRIEVAL (the quantization ladder's last rung AS A
@@ -1072,17 +1055,10 @@ object Similarity {
     pqTopK(rotatedEmbeddings(s, d))
 
   /** Oracle for [[opqPqTopK]] — rotation replayed from `__Q199_ROT__`,
-    * then the shared PQ pipeline CTEs verbatim. */
+    * the rotated vectors re-quantized by the same grid text as
+    * [[quantizeCtes]], then the shared PQ pipeline CTEs verbatim. */
   val opqPqTopKSql: String =
-    s"""WITH base0 AS (
-       |  SELECT vec_id, embedding,
-       |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS ma
-       |  FROM embeddings),
-       | q8r AS (
-       |  SELECT vec_id,
-       |    list_transform(embedding, x -> CASE WHEN ma > 0
-       |      THEN floor(CAST(x AS DOUBLE) * 127.0 / ma + 0.5) ELSE 0.0 END) AS q
-       |  FROM base0),
+    s"""WITH ${quantizeCtes()},
        | rot AS (
        |  SELECT comp, dim, r FROM read_parquet('__Q199_ROT__/*.parquet')),
        | rv AS (
@@ -1090,19 +1066,18 @@ object Similarity {
        |  FROM rot GROUP BY comp),
        | yv AS (
        |  SELECT t.vec_id, rv.comp, list_dot_product(rv.rvec, t.q) AS y
-       |  FROM q8r t CROSS JOIN rv),
+       |  FROM q8 t CROSS JOIN rv),
        | ye AS (
        |  SELECT vec_id, list(y ORDER BY comp) AS emb FROM yv GROUP BY vec_id),
        | b2 AS (
        |  SELECT vec_id, emb,
-       |    list_max(list_transform(emb, x -> abs(CAST(x AS DOUBLE)))) AS ma
+       |    ${maxAbs("emb")} AS ma
        |  FROM ye),
-       | q8 AS (
+       | rq8 AS (
        |  SELECT vec_id,
-       |    list_transform(emb, x -> CASE WHEN ma > 0
-       |      THEN floor(CAST(x AS DOUBLE) * 127.0 / ma + 0.5) ELSE 0.0 END) AS q
+       |    ${int8("emb")} AS q
        |  FROM b2),
-       |$pqPipelineCtes
+       |${pqPipelineCtes("rq8")}
        |$pqSelect""".stripMargin
 
   /** q120 — corpus Gram/scatter matrix over the int8-quantized
@@ -1138,15 +1113,7 @@ object Similarity {
   }
 
   val gramMatrixSql: String =
-    """WITH base AS (
-      |  SELECT vec_id, embedding,
-      |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS ma
-      |  FROM embeddings),
-      | q8 AS (
-      |  SELECT vec_id,
-      |    list_transform(embedding, x -> CASE WHEN ma > 0
-      |      THEN floor(CAST(x AS DOUBLE) * 127.0 / ma + 0.5) ELSE 0.0 END) AS q
-      |  FROM base),
+    s"""WITH ${quantizeCtes()},
       | ex AS (
       |  SELECT vec_id, unnest(q) AS x, generate_subscripts(q, 1) AS i
       |  FROM q8)
@@ -1398,15 +1365,7 @@ object Similarity {
     * recomputed INDEPENDENTLY from DuckDB's own Gram (HUGEINT
     * intermediates), not read back from the engine. */
   val opqRotateSql: String =
-    """WITH base AS (
-      |  SELECT vec_id, embedding,
-      |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS ma
-      |  FROM embeddings),
-      | q8 AS (
-      |  SELECT vec_id,
-      |    list_transform(embedding, x -> CASE WHEN ma > 0
-      |      THEN floor(CAST(x AS DOUBLE) * 127.0 / ma + 0.5) ELSE 0.0 END) AS q
-      |  FROM base),
+    s"""WITH ${quantizeCtes()},
       | rot AS (
       |  SELECT comp, dim, r FROM read_parquet('__Q199_ROT__/*.parquet')),
       | rn AS (
@@ -1555,40 +1514,21 @@ object Similarity {
   }
 
   val ivfIncrementalSql: String =
-    """WITH base AS (
-      |  SELECT vec_id, embedding,
-      |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS ma
-      |  FROM embeddings),
-      | q8 AS (
-      |  SELECT vec_id,
-      |    list_transform(embedding, x -> CASE WHEN ma > 0
-      |      THEN floor(CAST(x AS DOUBLE) * 127.0 / ma + 0.5) ELSE 0.0 END) AS q
-      |  FROM base),
+    s"""WITH ${quantizeCtes()},
       | existing AS (SELECT * FROM q8 WHERE vec_id % 10 <> 0),
       | newb AS (SELECT * FROM q8 WHERE vec_id % 10 = 0),
-      | cent AS (SELECT vec_id AS cent_id, q AS cq
-      |          FROM existing WHERE vec_id % 100 = 1),
+      | ${centCte(strideGrid)},
       | idx AS (
-      |  SELECT vec_id, q, cent_id FROM (
-      |    SELECT e.vec_id, e.q, c.cent_id,
-      |      row_number() OVER (PARTITION BY e.vec_id
-      |        ORDER BY CAST(list_dot_product(e.q, c.cq) AS BIGINT) DESC,
-      |                 c.cent_id ASC) AS rn
-      |    FROM existing e CROSS JOIN cent c) WHERE rn = 1),
+      |  SELECT vec_id, q, cent_id FROM (${routed("existing")})),
       | probes AS (
-      |  SELECT vec_id AS qid, q AS qv, cent_id AS qcell FROM (
-      |    SELECT n.vec_id, n.q, c.cent_id,
-      |      row_number() OVER (PARTITION BY n.vec_id
-      |        ORDER BY CAST(list_dot_product(n.q, c.cq) AS BIGINT) DESC,
-      |                 c.cent_id ASC) AS rn
-      |    FROM newb n CROSS JOIN cent c) WHERE rn = 1),
+      |  SELECT vec_id AS qid, q AS qv, cent_id AS qcell FROM (${routed("newb")})),
       | dots AS (
       |  SELECT p.qid, i.vec_id AS cid,
       |    CAST(list_dot_product(p.qv, i.q) AS BIGINT) AS dot
       |  FROM idx i JOIN probes p ON i.cent_id = p.qcell),
       | ranked AS (
       |  SELECT qid, cid, dot,
-      |    row_number() OVER (PARTITION BY qid ORDER BY dot DESC, cid ASC) AS rank
+      |    $topKRank
       |  FROM dots)
       |SELECT qid, cid, dot, rank FROM ranked WHERE rank <= 3
       |ORDER BY qid, rank""".stripMargin
@@ -1699,23 +1639,10 @@ object Similarity {
 
   /** Oracle for the pinned-stride gate face of [[ivfBalanceAudit]]. */
   val ivfBalanceAuditSql: String =
-    """WITH base AS (
-      |  SELECT vec_id, embedding,
-      |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS ma
-      |  FROM embeddings),
-      | q8 AS (
-      |  SELECT vec_id,
-      |    list_transform(embedding, x -> CASE WHEN ma > 0
-      |      THEN floor(CAST(x AS DOUBLE) * 127.0 / ma + 0.5) ELSE 0.0 END) AS q
-      |  FROM base),
-      | cent AS (SELECT vec_id AS cent_id, q AS cq FROM q8 WHERE vec_id % 100 = 1),
+    s"""WITH ${quantizeCtes()},
+      | ${centCte(strideGrid)},
       | assign AS (
-      |  SELECT vec_id, cent_id FROM (
-      |    SELECT e.vec_id, c.cent_id,
-      |      row_number() OVER (PARTITION BY e.vec_id
-      |        ORDER BY CAST(list_dot_product(e.q, c.cq) AS BIGINT) DESC,
-      |                 c.cent_id ASC) AS rn
-      |    FROM q8 e CROSS JOIN cent c) WHERE rn = 1),
+      |  SELECT vec_id, cent_id FROM (${routed("q8")})),
       | occ AS (SELECT cent_id, CAST(count(*) AS BIGINT) AS occ
       |         FROM assign GROUP BY 1),
       | tot AS (SELECT CAST(count(*) AS BIGINT) AS n_cells,
@@ -1781,24 +1708,10 @@ object Similarity {
     * (the q43 CTEs) + the conditional snapshot aggregate, ppm by `//`
     * (positive operands — floor-identical to Spark's `div`). */
   val embeddingDriftSql: String =
-    """WITH base AS (
-      |  SELECT vec_id, embedding,
-      |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS ma
-      |  FROM embeddings),
-      | q8 AS (
-      |  SELECT vec_id,
-      |    list_transform(embedding, x -> CASE WHEN ma > 0
-      |      THEN floor(CAST(x AS DOUBLE) * 127.0 / ma + 0.5) ELSE 0.0 END) AS q
-      |  FROM base),
-      | cent AS (SELECT vec_id AS cent_id, q AS cq FROM q8
-      |         WHERE vec_id % 100 = 0 AND vec_id < 6400),
+    s"""WITH ${quantizeCtes()},
+      | ${centCte(fixedGrid)},
       | assigned AS (
-      |  SELECT vec_id, cent_id FROM (
-      |    SELECT v.vec_id, c.cent_id,
-      |      row_number() OVER (PARTITION BY v.vec_id
-      |        ORDER BY CAST(list_dot_product(v.q, c.cq) AS BIGINT) DESC,
-      |                 c.cent_id ASC) AS rn
-      |    FROM q8 v CROSS JOIN cent c) WHERE rn = 1),
+      |  SELECT vec_id, cent_id FROM (${routed("q8")})),
       | cells AS (
       |  SELECT cent_id,
       |    CAST(sum(CASE WHEN vec_id % 10 <> 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
@@ -1847,15 +1760,7 @@ object Similarity {
   /** Oracle for [[annRecallAudit]]: one quantize, the exact brute top-k
     * and the IVF top-k side by side, intersect, ppm by `//`. */
   val annRecallAuditSql: String =
-    """WITH base AS (
-      |  SELECT vec_id, embedding,
-      |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS ma
-      |  FROM embeddings),
-      | q8 AS (
-      |  SELECT vec_id,
-      |    list_transform(embedding, x -> CASE WHEN ma > 0
-      |      THEN floor(CAST(x AS DOUBLE) * 127.0 / ma + 0.5) ELSE 0.0 END) AS q
-      |  FROM base),
+    s"""WITH ${quantizeCtes()},
       | probes0 AS (SELECT vec_id AS qid, q AS qv FROM q8 WHERE vec_id < 5),
       | truth AS (
       |  SELECT qid, cid FROM (
@@ -1864,15 +1769,9 @@ object Similarity {
       |        ORDER BY CAST(list_dot_product(p.qv, v.q) AS BIGINT) DESC,
       |                 v.vec_id ASC) AS rank
       |    FROM q8 v JOIN probes0 p ON v.vec_id <> p.qid) WHERE rank <= 10),
-      | cent AS (SELECT vec_id AS cent_id, q AS cq FROM q8
-      |         WHERE vec_id % 100 = 0 AND vec_id < 6400),
+      | ${centCte(fixedGrid)},
       | assigned AS (
-      |  SELECT vec_id, q, cent_id FROM (
-      |    SELECT v.vec_id, v.q, c.cent_id,
-      |      row_number() OVER (PARTITION BY v.vec_id
-      |        ORDER BY CAST(list_dot_product(v.q, c.cq) AS BIGINT) DESC,
-      |                 c.cent_id ASC) AS rn
-      |    FROM q8 v CROSS JOIN cent c) WHERE rn = 1),
+      |  SELECT vec_id, q, cent_id FROM (${routed("q8")})),
       | iprobes AS (
       |  SELECT vec_id AS qid, q AS qv, cent_id AS qcell
       |  FROM assigned WHERE vec_id < 5),
@@ -1961,24 +1860,11 @@ object Similarity {
     * quantize, the stride-100 grid, the % 10 split, row_number argmax
     * routing of the missing slice, integer roll-up. */
   val ivfCoverageAuditSql: String =
-    """WITH base AS (
-      |  SELECT vec_id, embedding,
-      |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS ma
-      |  FROM embeddings),
-      | q8 AS (
-      |  SELECT vec_id,
-      |    list_transform(embedding, x -> CASE WHEN ma > 0
-      |      THEN floor(CAST(x AS DOUBLE) * 127.0 / ma + 0.5) ELSE 0.0 END) AS q
-      |  FROM base),
-      | cent AS (SELECT vec_id AS cent_id, q AS cq FROM q8 WHERE vec_id % 100 = 1),
+    s"""WITH ${quantizeCtes()},
+      | ${centCte(strideGrid)},
       | missing AS (SELECT vec_id, q FROM q8 WHERE vec_id % 10 = 0),
       | assigned AS (
-      |  SELECT vec_id, cent_id FROM (
-      |    SELECT m.vec_id, c.cent_id,
-      |      row_number() OVER (PARTITION BY m.vec_id
-      |        ORDER BY CAST(list_dot_product(m.q, c.cq) AS BIGINT) DESC,
-      |                 c.cent_id ASC) AS rn
-      |    FROM missing m CROSS JOIN cent c) WHERE rn = 1),
+      |  SELECT vec_id, cent_id FROM (${routed("missing")})),
       | per AS (SELECT cent_id, CAST(count(*) AS BIGINT) AS n_missing
       |         FROM assigned GROUP BY 1)
       |SELECT
@@ -2086,15 +1972,7 @@ object Similarity {
   /** Oracle for [[fusionDiagnostics]]: the q160 CTEs at k = 10 plus the
     * membership aggregates. */
   val fusionDiagnosticsSql: String =
-    """WITH base AS (
-      |  SELECT vec_id, embedding,
-      |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS ma
-      |  FROM embeddings),
-      | q8 AS (
-      |  SELECT vec_id,
-      |    list_transform(embedding, x -> CASE WHEN ma > 0
-      |      THEN floor(CAST(x AS DOUBLE) * 127.0 / ma + 0.5) ELSE 0.0 END) AS q
-      |  FROM base),
+    s"""WITH ${quantizeCtes()},
       | probes AS (SELECT vec_id AS qid, q AS qv FROM q8 WHERE vec_id < 5),
       | vec AS (
       |  SELECT qid, cid, rank_vec FROM (
@@ -2159,15 +2037,7 @@ object Similarity {
     * (the q48 CTEs), shingle-intersection rank, full-outer fusion with
     * the identical integer RRF. */
   val hybridRetrievalRrfSql: String =
-    """WITH base AS (
-      |  SELECT vec_id, embedding,
-      |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS ma
-      |  FROM embeddings),
-      | q8 AS (
-      |  SELECT vec_id,
-      |    list_transform(embedding, x -> CASE WHEN ma > 0
-      |      THEN floor(CAST(x AS DOUBLE) * 127.0 / ma + 0.5) ELSE 0.0 END) AS q
-      |  FROM base),
+    s"""WITH ${quantizeCtes()},
       | probes AS (SELECT vec_id AS qid, q AS qv FROM q8 WHERE vec_id < 5),
       | vec AS (
       |  SELECT qid, cid, rank_vec FROM (
@@ -2335,24 +2205,11 @@ object Similarity {
     * the q156 routing CTEs; after a correct repair the after-audit is
     * identically zero and the index holds the whole corpus. */
   val ivfCoverageRepairSql: String =
-    """WITH base AS (
-      |  SELECT vec_id, embedding,
-      |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS ma
-      |  FROM embeddings),
-      | q8 AS (
-      |  SELECT vec_id,
-      |    list_transform(embedding, x -> CASE WHEN ma > 0
-      |      THEN floor(CAST(x AS DOUBLE) * 127.0 / ma + 0.5) ELSE 0.0 END) AS q
-      |  FROM base),
-      | cent AS (SELECT vec_id AS cent_id, q AS cq FROM q8 WHERE vec_id % 100 = 1),
+    s"""WITH ${quantizeCtes()},
+      | ${centCte(strideGrid)},
       | missing AS (SELECT vec_id, q FROM q8 WHERE vec_id % 10 = 0),
       | assigned AS (
-      |  SELECT vec_id, cent_id FROM (
-      |    SELECT m.vec_id, c.cent_id,
-      |      row_number() OVER (PARTITION BY m.vec_id
-      |        ORDER BY CAST(list_dot_product(m.q, c.cq) AS BIGINT) DESC,
-      |                 c.cent_id ASC) AS rn
-      |    FROM missing m CROSS JOIN cent c) WHERE rn = 1)
+      |  SELECT vec_id, cent_id FROM (${routed("missing")}))
       |SELECT
       |  CAST((SELECT count(*) FROM missing) AS BIGINT) AS n_missing_before,
       |  CAST((SELECT count(*) FROM missing) AS BIGINT) AS n_repaired,
@@ -2478,24 +2335,10 @@ object Similarity {
     * replay from the one-file-per-(generation, touched-cell) layout
     * discipline. */
   val ivfCompactGateSql: String =
-    """WITH base AS (
-      |  SELECT vec_id, embedding,
-      |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS ma
-      |  FROM embeddings),
-      | q8 AS (
-      |  SELECT vec_id,
-      |    list_transform(embedding, x -> CASE WHEN ma > 0
-      |      THEN floor(CAST(x AS DOUBLE) * 127.0 / ma + 0.5) ELSE 0.0 END) AS q
-      |  FROM base),
-      | cent AS (SELECT vec_id AS cent_id, q AS cq FROM q8
-      |         WHERE vec_id % 100 = 0 AND vec_id < 6400),
+    s"""WITH ${quantizeCtes()},
+      | ${centCte(fixedGrid)},
       | assigned AS (
-      |  SELECT vec_id, cent_id FROM (
-      |    SELECT v.vec_id, c.cent_id,
-      |      row_number() OVER (PARTITION BY v.vec_id
-      |        ORDER BY CAST(list_dot_product(v.q, c.cq) AS BIGINT) DESC,
-      |                 c.cent_id ASC) AS rn
-      |    FROM q8 v CROSS JOIN cent c) WHERE rn = 1),
+      |  SELECT vec_id, cent_id FROM (${routed("q8")})),
       | gens AS (
       |  SELECT vec_id, cent_id,
       |    CASE WHEN vec_id % 10 <> 0 THEN -1
@@ -2703,24 +2546,10 @@ object Similarity {
     * pinned at 1.1× mean): q43 routing, q152's ppm inequality names the
     * hot cells, min/max-id seeds, two-seed integer-dot re-route. */
   val ivfRebalanceSplitSql: String =
-    """WITH base AS (
-      |  SELECT vec_id, embedding,
-      |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS ma
-      |  FROM embeddings),
-      | q8 AS (
-      |  SELECT vec_id,
-      |    list_transform(embedding, x -> CASE WHEN ma > 0
-      |      THEN floor(CAST(x AS DOUBLE) * 127.0 / ma + 0.5) ELSE 0.0 END) AS q
-      |  FROM base),
-      | cent AS (SELECT vec_id AS cent_id, q AS cq FROM q8
-      |         WHERE vec_id % 100 = 0 AND vec_id < 6400),
+    s"""WITH ${quantizeCtes()},
+      | ${centCte(fixedGrid)},
       | assigned AS (
-      |  SELECT vec_id, q, cent_id FROM (
-      |    SELECT v.vec_id, v.q, c.cent_id,
-      |      row_number() OVER (PARTITION BY v.vec_id
-      |        ORDER BY CAST(list_dot_product(v.q, c.cq) AS BIGINT) DESC,
-      |                 c.cent_id ASC) AS rn
-      |    FROM q8 v CROSS JOIN cent c) WHERE rn = 1),
+      |  SELECT vec_id, q, cent_id FROM (${routed("q8")})),
       | occ AS (SELECT cent_id, CAST(count(*) AS BIGINT) AS occ
       |         FROM assigned GROUP BY 1),
       | tot AS (SELECT CAST(count(*) AS BIGINT) AS n_cells,
@@ -2820,24 +2649,10 @@ object Similarity {
     * by layout algebra (files_after = |merged cells| — the one-file-
     * per-cell rule), zero-missing by construction. */
   val ivfMergeIndexesSql: String =
-    """WITH base AS (
-      |  SELECT vec_id, embedding,
-      |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS ma
-      |  FROM embeddings),
-      | q8 AS (
-      |  SELECT vec_id,
-      |    list_transform(embedding, x -> CASE WHEN ma > 0
-      |      THEN floor(CAST(x AS DOUBLE) * 127.0 / ma + 0.5) ELSE 0.0 END) AS q
-      |  FROM base),
-      | cent AS (SELECT vec_id AS cent_id, q AS cq FROM q8
-      |         WHERE vec_id % 100 = 0 AND vec_id < 6400),
+    s"""WITH ${quantizeCtes()},
+      | ${centCte(fixedGrid)},
       | assigned AS (
-      |  SELECT vec_id, cent_id FROM (
-      |    SELECT v.vec_id, c.cent_id,
-      |      row_number() OVER (PARTITION BY v.vec_id
-      |        ORDER BY CAST(list_dot_product(v.q, c.cq) AS BIGINT) DESC,
-      |                 c.cent_id ASC) AS rn
-      |    FROM q8 v CROSS JOIN cent c) WHERE rn = 1)
+      |  SELECT vec_id, cent_id FROM (${routed("q8")}))
       |SELECT
       |  CAST((SELECT count(*) FROM assigned WHERE vec_id % 2 = 0) AS BIGINT)
       |    AS n_vecs_a,
@@ -2921,24 +2736,10 @@ object Similarity {
     * (DuckDB `//` — the engine-pinned semantics), carry via left join,
     * re-routing, full-outer occupancy compare + global moved count. */
   val ivfRecenterSql: String =
-    """WITH base AS (
-      |  SELECT vec_id, embedding,
-      |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS ma
-      |  FROM embeddings),
-      | q8 AS (
-      |  SELECT vec_id,
-      |    list_transform(embedding, x -> CASE WHEN ma > 0
-      |      THEN floor(CAST(x AS DOUBLE) * 127.0 / ma + 0.5) ELSE 0.0 END) AS q
-      |  FROM base),
-      | cent AS (SELECT vec_id AS cent_id, q AS cq FROM q8
-      |         WHERE vec_id % 100 = 0 AND vec_id < 6400),
+    s"""WITH ${quantizeCtes()},
+      | ${centCte(fixedGrid)},
       | assigned AS (
-      |  SELECT vec_id, q, cent_id FROM (
-      |    SELECT v.vec_id, v.q, c.cent_id,
-      |      row_number() OVER (PARTITION BY v.vec_id
-      |        ORDER BY CAST(list_dot_product(v.q, c.cq) AS BIGINT) DESC,
-      |                 c.cent_id ASC) AS rn
-      |    FROM q8 v CROSS JOIN cent c) WHERE rn = 1),
+      |  SELECT vec_id, q, cent_id FROM (${routed("q8")})),
       | comp AS (
       |  SELECT cent_id, i, CAST(sum(x) AS BIGINT) AS s,
       |    CAST(count(*) AS BIGINT) AS n
@@ -2951,13 +2752,10 @@ object Similarity {
       | newcent AS (
       |  SELECT c.cent_id, coalesce(m.cq, c.cq) AS cq
       |  FROM cent c LEFT JOIN means m USING (cent_id)),
+      | prior AS (SELECT vec_id, q, cent_id AS old_cell FROM assigned),
       | reassigned AS (
-      |  SELECT vec_id, old_cell, cent_id AS new_cell FROM (
-      |    SELECT a.vec_id, a.cent_id AS old_cell, c.cent_id,
-      |      row_number() OVER (PARTITION BY a.vec_id
-      |        ORDER BY CAST(list_dot_product(a.q, c.cq) AS BIGINT) DESC,
-      |                 c.cent_id ASC) AS rn
-      |    FROM assigned a CROSS JOIN newcent c) WHERE rn = 1),
+      |  SELECT vec_id, old_cell, cent_id AS new_cell
+      |  FROM (${routed("prior", cells = "newcent")})),
       | occ_old AS (SELECT old_cell AS cent_id, CAST(count(*) AS BIGINT)
       |             AS occ_before FROM reassigned GROUP BY 1),
       | occ_new AS (SELECT new_cell AS cent_id, CAST(count(*) AS BIGINT)
@@ -3033,7 +2831,7 @@ object Similarity {
     * the q48 integer-dot rank over the same candidates, Kendall pair
     * count between the two tie-broken orders. */
   val quantFidelitySql: String =
-    """WITH ex AS (
+    s"""WITH ex AS (
       |  SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS v,
       |         generate_subscripts(embedding, 1) AS i
       |  FROM embeddings),
@@ -3052,15 +2850,7 @@ object Similarity {
       |     FROM dots d
       |     JOIN norms nq ON nq.vec_id = d.qid
       |     JOIN norms nc ON nc.vec_id = d.cid) WHERE rf <= 20),
-      | base AS (
-      |  SELECT vec_id, embedding,
-      |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS ma
-      |  FROM embeddings),
-      | q8 AS (
-      |  SELECT vec_id,
-      |    list_transform(embedding, x -> CASE WHEN ma > 0
-      |      THEN floor(CAST(x AS DOUBLE) * 127.0 / ma + 0.5) ELSE 0.0 END) AS q
-      |  FROM base),
+      | ${quantizeCtes()},
       | ranked AS (
       |  SELECT c.qid, c.cid, c.rf,
       |    row_number() OVER (PARTITION BY c.qid
@@ -3151,24 +2941,10 @@ object Similarity {
     * the q164 CTEs with ranked probe cells kept per-level, the q144
     * truth rule, and the min-meeting-target selection. */
   val nprobeSelectSql: String =
-    """WITH base AS (
-      |  SELECT vec_id, embedding,
-      |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS ma
-      |  FROM embeddings),
-      | q8 AS (
-      |  SELECT vec_id,
-      |    list_transform(embedding, x -> CASE WHEN ma > 0
-      |      THEN floor(CAST(x AS DOUBLE) * 127.0 / ma + 0.5) ELSE 0.0 END) AS q
-      |  FROM base),
-      | cent AS (SELECT vec_id AS cent_id, q AS cq FROM q8
-      |         WHERE vec_id % 100 = 0 AND vec_id < 6400),
+    s"""WITH ${quantizeCtes()},
+      | ${centCte(fixedGrid)},
       | assigned AS (
-      |  SELECT vec_id, q, cent_id FROM (
-      |    SELECT v.vec_id, v.q, c.cent_id,
-      |      row_number() OVER (PARTITION BY v.vec_id
-      |        ORDER BY CAST(list_dot_product(v.q, c.cq) AS BIGINT) DESC,
-      |                 c.cent_id ASC) AS rn
-      |    FROM q8 v CROSS JOIN cent c) WHERE rn = 1),
+      |  SELECT vec_id, q, cent_id FROM (${routed("q8")})),
       | probes0 AS (SELECT vec_id AS qid, q AS qv FROM q8 WHERE vec_id < 5),
       | truth AS (
       |  SELECT qid, cid FROM (
@@ -3178,12 +2954,8 @@ object Similarity {
       |                 v.vec_id ASC) AS rank
       |    FROM q8 v JOIN probes0 p ON v.vec_id <> p.qid) WHERE rank <= 10),
       | pcells AS (
-      |  SELECT qid, qv, cent_id AS qcell, rn AS pr FROM (
-      |    SELECT p.qid, p.qv, c.cent_id,
-      |      row_number() OVER (PARTITION BY p.qid
-      |        ORDER BY CAST(list_dot_product(p.qv, c.cq) AS BIGINT) DESC,
-      |                 c.cent_id ASC) AS rn
-      |    FROM probes0 p CROSS JOIN cent c) WHERE rn <= 3),
+      |  SELECT vec_id AS qid, q AS qv, cent_id AS qcell, rn AS pr
+      |  FROM (${routed("(SELECT * FROM q8 WHERE vec_id < 5)", 3)})),
       | cand AS (
       |  SELECT pc.qid, a.vec_id AS cid, pc.pr,
       |    CAST(list_dot_product(pc.qv, a.q) AS BIGINT) AS dot
@@ -3256,31 +3028,13 @@ object Similarity {
 
   /** Oracle for [[ivfTopKFiltered]] (k=10, nprobe=2, label % 2 = 0). */
   val ivfTopKFilteredSql: String =
-    """WITH base AS (
-      |  SELECT vec_id, embedding, label,
-      |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS ma
-      |  FROM embeddings),
-      | q8 AS (
-      |  SELECT vec_id, label,
-      |    list_transform(embedding, x -> CASE WHEN ma > 0
-      |      THEN floor(CAST(x AS DOUBLE) * 127.0 / ma + 0.5) ELSE 0.0 END) AS q
-      |  FROM base),
-      | cent AS (SELECT vec_id AS cent_id, q AS cq FROM q8
-      |         WHERE vec_id % 100 = 0 AND vec_id < 6400),
+    s"""WITH ${quantizeCtes("label")},
+      | ${centCte(fixedGrid)},
       | assigned AS (
-      |  SELECT vec_id, label, q, cent_id FROM (
-      |    SELECT v.vec_id, v.label, v.q, c.cent_id,
-      |      row_number() OVER (PARTITION BY v.vec_id
-      |        ORDER BY CAST(list_dot_product(v.q, c.cq) AS BIGINT) DESC,
-      |                 c.cent_id ASC) AS rn
-      |    FROM q8 v CROSS JOIN cent c) WHERE rn = 1),
+      |  SELECT vec_id, label, q, cent_id FROM (${routed("q8")})),
       | pcells AS (
-      |  SELECT qid, qv, cent_id AS qcell FROM (
-      |    SELECT p.vec_id AS qid, p.q AS qv, c.cent_id,
-      |      row_number() OVER (PARTITION BY p.vec_id
-      |        ORDER BY CAST(list_dot_product(p.q, c.cq) AS BIGINT) DESC,
-      |                 c.cent_id ASC) AS rn
-      |    FROM q8 p CROSS JOIN cent c WHERE p.vec_id < 5) WHERE rn <= 2),
+      |  SELECT vec_id AS qid, q AS qv, cent_id AS qcell
+      |  FROM (${routed("(SELECT * FROM q8 WHERE vec_id < 5)", 2)})),
       | cand AS (
       |  SELECT pc.qid, a.vec_id AS cid,
       |    CAST(list_dot_product(pc.qv, a.q) AS BIGINT) AS dot
@@ -3289,7 +3043,7 @@ object Similarity {
       |  WHERE a.label % 2 = 0),
       | ranked AS (
       |  SELECT qid, cid, dot,
-      |    row_number() OVER (PARTITION BY qid ORDER BY dot DESC, cid ASC) AS rank
+      |    $topKRank
       |  FROM cand)
       |SELECT qid, cid, dot, rank FROM ranked WHERE rank <= 10
       |ORDER BY qid, rank""".stripMargin
@@ -3366,25 +3120,11 @@ object Similarity {
     * relationally; residual is identically zero after a correct
     * erasure. */
   def vectorErasureSql: String =
-    s"""WITH base AS (
-       |  SELECT vec_id, embedding,
-       |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS ma
-       |  FROM embeddings),
-       | q8 AS (
-       |  SELECT vec_id,
-       |    list_transform(embedding, x -> CASE WHEN ma > 0
-       |      THEN floor(CAST(x AS DOUBLE) * 127.0 / ma + 0.5) ELSE 0.0 END) AS q
-       |  FROM base),
-       | cent AS (SELECT vec_id AS cent_id, q AS cq FROM q8
-       |         WHERE vec_id % 100 = 0 AND vec_id < 6400),
+    s"""WITH ${quantizeCtes()},
+       | ${centCte(fixedGrid)},
        | victims AS (SELECT vec_id, q FROM q8 WHERE vec_id % 97 = 3),
        | vcells AS (
-       |  SELECT vec_id, cent_id FROM (
-       |    SELECT v.vec_id, c.cent_id,
-       |      row_number() OVER (PARTITION BY v.vec_id
-       |        ORDER BY CAST(list_dot_product(v.q, c.cq) AS BIGINT) DESC,
-       |                 c.cent_id ASC) AS rn
-       |    FROM victims v CROSS JOIN cent c) WHERE rn = 1),
+       |  SELECT vec_id, cent_id FROM (${routed("victims")})),
        | sh AS (${graft.ops.Dedup.shinglesSqlCte}),
        | signed AS (SELECT DISTINCT doc_id FROM sh),
        | sigvic AS (SELECT doc_id FROM signed WHERE doc_id % 97 = 3)
@@ -3549,15 +3289,7 @@ object Similarity {
        |        ORDER BY bit_count(xor(t.s1, p.p1)) + bit_count(xor(t.s2, p.p2)) ASC,
        |                 t.vec_id ASC) AS rh
        |    FROM sk t JOIN probes p ON t.vec_id <> p.qid) WHERE rh <= 50),
-       | base AS (
-       |  SELECT vec_id, embedding,
-       |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS ma
-       |  FROM embeddings),
-       | q8 AS (
-       |  SELECT vec_id,
-       |    list_transform(embedding, x -> CASE WHEN ma > 0
-       |      THEN floor(CAST(x AS DOUBLE) * 127.0 / ma + 0.5) ELSE 0.0 END) AS q
-       |  FROM base),
+       | ${quantizeCtes()},
        | rerank AS (
        |  SELECT sh.qid, sh.cid, sh.hamming,
        |    CAST(list_dot_product(pq.q, cq.q) AS BIGINT) AS dot
@@ -3566,8 +3298,7 @@ object Similarity {
        |  JOIN q8 cq ON cq.vec_id = sh.cid),
        | ranked AS (
        |  SELECT qid, cid, hamming, dot,
-       |    row_number() OVER (PARTITION BY qid
-       |      ORDER BY dot DESC, cid ASC) AS rank
+       |    $topKRank
        |  FROM rerank)
        |SELECT qid, cid, hamming, dot, rank FROM ranked WHERE rank <= 10
        |ORDER BY qid, rank""".stripMargin
@@ -3630,15 +3361,7 @@ object Similarity {
   /** Oracle for [[contrastiveMine]]: quantize + the two class-filtered
     * nearest-neighbor rankings, replayed with rank windows. */
   val contrastiveMineSql: String =
-    """WITH base AS (
-      |  SELECT vec_id, embedding, label,
-      |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS ma
-      |  FROM embeddings),
-      | q8 AS (
-      |  SELECT vec_id, label,
-      |    list_transform(embedding, x -> CASE WHEN ma > 0
-      |      THEN floor(CAST(x AS DOUBLE) * 127.0 / ma + 0.5) ELSE 0.0 END) AS q
-      |  FROM base),
+    s"""WITH ${quantizeCtes("label")},
       | anchors AS (SELECT vec_id AS aid, q AS aq, label AS alabel
       |             FROM q8 WHERE vec_id % 100 = 7 AND vec_id < 6400),
       | scored AS (
@@ -3734,23 +3457,10 @@ object Similarity {
     * routing, the planted −id−1 corruption, per-cell count + bit_xor
     * digests, diverged cells only. */
   val ivfDigestAuditSql: String =
-    """WITH base AS (
-      |  SELECT vec_id, embedding,
-      |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS ma
-      |  FROM embeddings),
-      | q8 AS (
-      |  SELECT vec_id,
-      |    list_transform(embedding, x -> CASE WHEN ma > 0
-      |      THEN floor(CAST(x AS DOUBLE) * 127.0 / ma + 0.5) ELSE 0.0 END) AS q
-      |  FROM base),
-      | cent AS (SELECT vec_id AS cent_id, q AS cq FROM q8 WHERE vec_id % 100 = 1),
+    s"""WITH ${quantizeCtes()},
+      | ${centCte(strideGrid)},
       | assigned AS (
-      |  SELECT vec_id, cent_id FROM (
-      |    SELECT v.vec_id, c.cent_id,
-      |      row_number() OVER (PARTITION BY v.vec_id
-      |        ORDER BY CAST(list_dot_product(v.q, c.cq) AS BIGINT) DESC,
-      |                 c.cent_id ASC) AS rn
-      |    FROM q8 v CROSS JOIN cent c) WHERE rn = 1),
+      |  SELECT vec_id, cent_id FROM (${routed("q8")})),
       | corpus AS (
       |  SELECT cent_id, CAST(count(*) AS BIGINT) AS n_corpus,
       |    CAST(bit_xor(CAST('0x' || substr(md5('ivd|' ||
@@ -3831,15 +3541,7 @@ object Similarity {
     * greedy cascade unrolled — every step's argmax replayed with the
     * same integer score and tie-break. */
   val mmrDiversifySql: String =
-    """WITH base AS (
-      |  SELECT vec_id, embedding,
-      |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS ma
-      |  FROM embeddings),
-      | q8 AS (
-      |  SELECT vec_id,
-      |    list_transform(embedding, x -> CASE WHEN ma > 0
-      |      THEN floor(CAST(x AS DOUBLE) * 127.0 / ma + 0.5) ELSE 0.0 END) AS q
-      |  FROM base),
+    s"""WITH ${quantizeCtes()},
       | probes AS (SELECT vec_id AS qid, q AS qv FROM q8 WHERE vec_id < 5),
       | cand AS (
       |  SELECT qid, cid, cq, dot FROM (
@@ -3930,15 +3632,7 @@ object Similarity {
   /** Oracle for [[retrievalMrr]]: quantize + the same-label argmax +
     * the count-before rank rule, replayed exactly. */
   val retrievalMrrSql: String =
-    """WITH base AS (
-      |  SELECT vec_id, embedding, label,
-      |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS ma
-      |  FROM embeddings),
-      | q8 AS (
-      |  SELECT vec_id, label,
-      |    list_transform(embedding, x -> CASE WHEN ma > 0
-      |      THEN floor(CAST(x AS DOUBLE) * 127.0 / ma + 0.5) ELSE 0.0 END) AS q
-      |  FROM base),
+    s"""WITH ${quantizeCtes("label")},
       | probes AS (SELECT vec_id AS qid, q AS qv, label AS alabel
       |            FROM q8 WHERE vec_id < 5),
       | scored AS (
@@ -4027,15 +3721,7 @@ object Similarity {
   /** Oracle for [[retrievalNdcg]]: quantize → probe dots → top-10 →
     * graded gains → the 6-div-ilog2 exact discount, replayed verbatim. */
   val retrievalNdcgSql: String =
-    """WITH base AS (
-      |  SELECT vec_id, embedding, label,
-      |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS ma
-      |  FROM embeddings),
-      | q8 AS (
-      |  SELECT vec_id, label,
-      |    list_transform(embedding, x -> CASE WHEN ma > 0
-      |      THEN floor(CAST(x AS DOUBLE) * 127.0 / ma + 0.5) ELSE 0.0 END) AS q
-      |  FROM base),
+    s"""WITH ${quantizeCtes("label")},
       | dots AS (
       |  SELECT p.vec_id AS qid, p.label AS alabel,
       |    c.vec_id AS cid, c.label AS clabel,
@@ -4129,23 +3815,10 @@ object Similarity {
     * argmax routing + in-cell top-3 + mutual edges + wedge/triangle
     * counts, replayed exactly. */
   val knnGraphStatsSql: String =
-    """WITH base AS (
-      |  SELECT vec_id, embedding,
-      |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS ma
-      |  FROM embeddings),
-      | q8 AS (
-      |  SELECT vec_id,
-      |    list_transform(embedding, x -> CASE WHEN ma > 0
-      |      THEN floor(CAST(x AS DOUBLE) * 127.0 / ma + 0.5) ELSE 0.0 END) AS q
-      |  FROM base),
-      | cent AS (SELECT vec_id AS cent_id, q AS cq FROM q8 WHERE vec_id % 100 = 1),
+    s"""WITH ${quantizeCtes()},
+      | ${centCte(strideGrid)},
       | assigned AS (
-      |  SELECT vec_id, q, cent_id FROM (
-      |    SELECT v.vec_id, v.q, c.cent_id,
-      |      row_number() OVER (PARTITION BY v.vec_id
-      |        ORDER BY CAST(list_dot_product(v.q, c.cq) AS BIGINT) DESC,
-      |                 c.cent_id ASC) AS rn
-      |    FROM q8 v CROSS JOIN cent c) WHERE rn = 1),
+      |  SELECT vec_id, q, cent_id FROM (${routed("q8")})),
       | directed AS (
       |  SELECT a, b FROM (
       |    SELECT x.vec_id AS a, y.vec_id AS b,
@@ -4234,15 +3907,7 @@ object Similarity {
     * (dims, qid), ppm by `//`. `list_slice(q, 1, d)` ≡ Spark's
     * `slice(q, 1, d)` (1-based, d elements). */
   val matryoshkaRecallSql: String =
-    """WITH base AS (
-      |  SELECT vec_id, embedding,
-      |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS ma
-      |  FROM embeddings),
-      | q8 AS (
-      |  SELECT vec_id,
-      |    list_transform(embedding, x -> CASE WHEN ma > 0
-      |      THEN floor(CAST(x AS DOUBLE) * 127.0 / ma + 0.5) ELSE 0.0 END) AS q
-      |  FROM base),
+    s"""WITH ${quantizeCtes()},
       | probes0 AS (SELECT vec_id AS qid, q AS qv FROM q8 WHERE vec_id < 5),
       | truth AS (
       |  SELECT qid, cid FROM (
@@ -4445,17 +4110,8 @@ object Similarity {
     * (‖x‖² + ‖c‖² − 2x·c), every term an exact integer on the grid. */
   val kCenterCoresetSql: String = {
     val head =
-      """WITH base AS (
-        |  SELECT vec_id, embedding,
-        |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS ma
-        |  FROM embeddings),
-        | q8 AS (
-        |  SELECT vec_id,
-        |    list_transform(embedding, x -> CASE WHEN ma > 0
-        |      THEN floor(CAST(x AS DOUBLE) * 127.0 / ma + 0.5) ELSE 0.0 END) AS q
-        |  FROM base),
-        | cand AS (SELECT vec_id, q FROM q8
-        |          WHERE vec_id % 100 = 0 AND vec_id < 6400),
+      s"""WITH ${quantizeCtes()},
+        | cand AS (SELECT vec_id, q FROM q8 WHERE $fixedGrid),
         | sel1 AS (SELECT vec_id, q, CAST(1 AS BIGINT) AS step
         |          FROM cand ORDER BY vec_id LIMIT 1),
         | selu1 AS MATERIALIZED (SELECT * FROM sel1)""".stripMargin
@@ -4480,14 +4136,14 @@ object Similarity {
         | assigned AS (
         |  SELECT step, cent_id, d2 FROM (
         |    SELECT c.step, c.cent_id,
-        |      CAST(list_dot_product(v.q, v.q) + list_dot_product(c.cq, c.cq)
-        |           - 2 * list_dot_product(v.q, c.cq) AS BIGINT) AS d2,
-        |      row_number() OVER (PARTITION BY v.vec_id
-        |        ORDER BY CAST(list_dot_product(v.q, v.q)
+        |      CAST(list_dot_product(e.q, e.q) + list_dot_product(c.cq, c.cq)
+        |           - 2 * list_dot_product(e.q, c.cq) AS BIGINT) AS d2,
+        |      row_number() OVER (PARTITION BY e.vec_id
+        |        ORDER BY CAST(list_dot_product(e.q, e.q)
         |                 + list_dot_product(c.cq, c.cq)
-        |                 - 2 * list_dot_product(v.q, c.cq) AS BIGINT) ASC,
+        |                 - 2 * list_dot_product(e.q, c.cq) AS BIGINT) ASC,
         |                 c.cent_id ASC) AS rn
-        |    FROM q8 v CROSS JOIN centers c) WHERE rn = 1)
+        |    FROM q8 e CROSS JOIN centers c) WHERE rn = 1)
         |SELECT step, cent_id, CAST(count(*) AS BIGINT) AS n,
         |  CAST(max(d2) AS BIGINT) AS radius2, CAST(sum(d2) AS BIGINT) AS sum_d2
         |FROM assigned GROUP BY step, cent_id ORDER BY step""".stripMargin

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.{CopyConfig, Identifiers}
+import graft.csv.{QuoteCsv, RawCell}
 import graft.infer.GoTimeFormat
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -41,29 +42,40 @@ object CopyRead {
     * documented: this makes read→write round-trips re-infer correctly).
     * Tagged-union cells (exact-compat mode) render by their tag — the
     * faithful mirror of the reference's `quote iff *string`
-    * (`read.go:183-185`). */
+    * (`read.go:183-185`). A configured literal (the layout's literal
+    * characters, the bool and NULL values) that holds a comma, quote, CR
+    * or LF is quoted, as [[QuoteCsv.renderCell]] quotes content-forced
+    * cells, so every line keeps its column count; the choice is made
+    * here, at plan time, from `cfg` alone. */
   def renderCell(c: Column, dt: DataType, cfg: CopyConfig): Column = {
     val pat = GoTimeFormat.toJavaPattern(cfg.timeFormat)
+    val ts: Column => Column =
+      if (QuoteCsv.needsQuoting(cfg.timeFormat)) t => quoted(date_format(t, pat))
+      else date_format(_, pat)
+    val bool = (b: Column) => when(b, literal(cfg.trueValue)).otherwise(literal(cfg.falseValue))
     val rendered: Column = dt match {
       case StringType => quoted(c)
-      case BooleanType => when(c, cfg.trueValue).otherwise(cfg.falseValue)
-      case TimestampType => date_format(c, pat)
+      case BooleanType => bool(c)
+      case TimestampType => ts(c)
       // parquet ms/us timestamps with isAdjustedToUTC=false surface as NTZ;
       // render them as session-TZ (UTC-pinned) instants so the zoned layout
       // round-trips
-      case TimestampNTZType => date_format(c.cast(TimestampType), pat)
+      case TimestampNTZType => ts(c.cast(TimestampType))
       case st if isTaggedCell(st) =>
         when(c.getField("tag") === "string", quoted(c.getField("s")))
-          .when(c.getField("tag") === "bool",
-            when(c.getField("b"), cfg.trueValue).otherwise(cfg.falseValue))
-          .when(c.getField("tag") === "ts", date_format(c.getField("t"), pat))
+          .when(c.getField("tag") === "bool", bool(c.getField("b")))
+          .when(c.getField("tag") === "ts", ts(c.getField("t")))
           .when(c.getField("tag") === "long", c.getField("l").cast(StringType))
           .when(c.getField("tag") === "double", c.getField("d").cast(StringType))
-          .otherwise(lit(cfg.nullValue))
+          .otherwise(literal(cfg.nullValue))
       case _ => c.cast(StringType)
     }
-    when(c.isNull, lit(cfg.nullValue)).otherwise(rendered)
+    when(c.isNull, literal(cfg.nullValue)).otherwise(rendered)
   }
+
+  /** A configured literal as a CSV cell: bare unless its content forces
+    * quoting. */
+  private def literal(s: String): Column = lit(QuoteCsv.renderCell(RawCell(s, quoted = false)))
 
   /** Typed DataFrame → Dataset of CSV lines (whole projection codegen'd).
     * Each cell is coalesced to the NULL literal before joining — a NULL
@@ -71,7 +83,7 @@ object CopyRead {
     * shifting every later column left. */
   def toCsvLines(df: DataFrame, cfg: CopyConfig): Dataset[String] = {
     val cells = df.schema.fields.map(f =>
-      coalesce(renderCell(col(f.name), f.dataType, cfg), lit(cfg.nullValue)))
+      coalesce(renderCell(col(f.name), f.dataType, cfg), literal(cfg.nullValue)))
     val spark = df.sparkSession
     import spark.implicits._
     df.select(concat_ws(",", cells.toSeq: _*).as("line")).as[String]

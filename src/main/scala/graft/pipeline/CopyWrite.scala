@@ -105,9 +105,11 @@ object CopyWrite {
         case TimestampType => when(!quoted, try_to_timestamp(v, lit(pat)))
         // try_cast, not cast: a mismatched cell (int64 overflow, `abc` in
         // a double column) decodes to NULL in every session mode instead
-        // of failing the job under ANSI
+        // of failing the job under ANSI. `\z`, not `$`: `$` also matches
+        // before a final line terminator, which try_cast then trims, so
+        // `7\r` would decode where rule 6 rejects it
         case LongType =>
-          when(!quoted && v.rlike("^[+-]?[0-9]+$"), v.try_cast(LongType))
+          when(!quoted && v.rlike("^[+-]?[0-9]+\\z"), v.try_cast(LongType))
         case DoubleType => when(!quoted, v.try_cast(DoubleType)) // engine ext (no float in ref)
         case dt => v.try_cast(dt)
       }

@@ -187,6 +187,23 @@ class InferCellSpec extends AnyFunSuite with SparkFixture with AdaptiveSparkPlan
     assert(tags == Set(Seq("long", "null", "null"), Seq("string", "string", "string")))
   }
 
+  test("declared long: inferSchemad decodes a cell exactly when rule 6 tags it long") {
+    val s = spark
+    import s.implicits._
+    val cells = Seq("7\r", "123\u000b", "+5", "-0", "007")
+    val (parsed, _) = CopyWrite.parseRecords(
+      cells.zipWithIndex.map { case (c, i) => s"$i,$c" }.toDS(), CopyConfig())
+    val schema = StructType(Seq(StructField("i", LongType), StructField("v", LongType)))
+    val decoded = CopyWrite.inferSchemad(parsed, schema, CopyConfig()).collect()
+      .map(r => cells(r.getLong(0).toInt) -> Option(r.get(1))).toMap
+    assert(decoded == Map("7\r" -> None, "123\u000b" -> None,
+      "+5" -> Some(5L), "-0" -> Some(0L), "007" -> Some(7L)))
+    val tags = CopyWrite.inferTagged(parsed, Seq("i", "v"), CopyConfig())
+      .select(col("i.l"), col("v.tag")).collect()
+      .map(r => cells(r.getLong(0).toInt) -> r.getString(1)).toMap
+    decoded.foreach { case (c, v) => assert(v.isDefined == (tags(c) == "long"), c) }
+  }
+
   /** Rule 5's parser for `pat`, counting its calls. */
   private final class Counting(pat: String) extends (String => Long) {
     private val fmt = TimestampFormatter(pat, ZoneOffset.UTC,

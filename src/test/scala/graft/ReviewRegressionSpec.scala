@@ -1,6 +1,6 @@
 package graft
 
-import graft.csv.RawCell
+import graft.csv.{QuoteCsv, RawCell}
 import graft.infer.{GoTimeFormat, TypeInference}
 import graft.pipeline.{CopyRead, CopyWrite}
 import org.apache.spark.sql.functions._
@@ -99,6 +99,24 @@ class ReviewRegressionSpec extends AnyFunSuite with SparkFixture {
     val back = spark.read.text(out)
     assert(back.count() == 2) // NULL-key row exported, rendered as NULL literal
     assert(back.where(col("value") === "NULL,\"b\"").count() == 1)
+  }
+
+  test("read verb: a comma layout and a comma NULL keep every line's column count") {
+    val cfg = CopyConfig(timeFormat = "Jan 2, 2006 15:04:05", nullValue = "n,a")
+    val s = spark
+    import s.implicits._
+    val ts = java.sql.Timestamp.from(java.time.Instant.parse("2024-01-02T03:04:05Z"))
+    val typed = Seq((Option(1L), Option(true), Option(ts), Option("a,b")), (None, None, None, None))
+      .toDF("l", "b", "t", "s")
+    val (parsed, _) = CopyWrite.parseRecords(
+      Seq("1,true,2024-01-02 03:04:05+0000,NULL,\"s\"", "2,false,NULL,7,x").toDS(), CopyConfig())
+    val tagged = CopyWrite.inferTagged(parsed, Seq("a", "b", "c", "d", "e"), CopyConfig())
+    for (df <- Seq(typed, tagged)) {
+      val rows = CopyRead.toCsvLines(df, cfg).collect().map(QuoteCsv.parseRecord(_))
+      assert(rows.length == 2 && rows.forall(_.length == df.columns.length), rows.toSeq)
+      assert(rows.flatten.contains(RawCell("n,a", quoted = true)))
+      assert(rows.flatten.contains(RawCell("Jan 2, 2024 03:04:05", quoted = true)))
+    }
   }
 
   test("declared-schema read: inference + quote dominance + multiline quotes") {

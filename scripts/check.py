@@ -31,9 +31,13 @@ run on both sides in DuckDB over the SF's parquet views (default: the
 gate run's), and the two results must be equal: the same
 column names and types, and the same rows once sorted, compared by exact
 `repr`, with no `canon` rounding. It prints how many strings it checked
-and how many matched, and exits 1 at the first mismatch.
+and how many matched, and exits 1 at the first mismatch. Verify resolves
+the artifact placeholders to `<outDir>_qNNN_artifact` paths, so before it
+compares, each dump's own `<outDir>` prefix maps back to one placeholder:
+two dumps of the same code check 0 strings. The strings it runs keep
+their resolved paths.
 """
-import sys, os, json, subprocess, glob, math, hashlib
+import sys, os, json, subprocess, glob, math, hashlib, re
 
 SF = os.path.abspath(sys.argv[1] if len(sys.argv) > 1 and not sys.argv[1].startswith("--") else "/root/testdata/sf0.01")
 # Targeted iteration (builder-local, never the gate): GRAFT_ONLY="q178_x
@@ -287,6 +291,14 @@ def duck(sf):
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
     return con
 
+# an artifact path Verify resolved: `<outDir>_qNNN_artifact`
+ARTIFACT = re.compile(r"[^'\"\s]*_(q\d+_artifact)")
+
+def unresolved(sql):
+    """`sql` with every `<outDir>_qNNN_artifact` path prefix mapped back to
+    one placeholder, so dumps written to different outDirs compare equal."""
+    return ARTIFACT.sub(r"<outDir>_\1", sql)
+
 def oracle_diff(argv):
     args = [a for a in argv if not a.startswith("--")]
     if len(args) not in (2, 3):
@@ -302,7 +314,7 @@ def oracle_diff(argv):
         rel = con.sql(sql)
         head = list(zip(rel.columns, map(str, rel.types)))
         return head, sorted(repr(r) for r in rel.fetchall())
-    changed = sorted(k for k in old if old[k] != new[k])
+    changed = sorted(k for k in old if unresolved(old[k]) != unresolved(new[k]))
     matched = 0
     for name in changed:
         try:

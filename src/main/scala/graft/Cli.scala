@@ -18,6 +18,13 @@ import org.apache.spark.sql.SparkSession
   * all are accepted and ignored. The table argument resolves to parquet
   * here and to a catalog table in production (see Tables).
   *
+  * What the worker and batch flags map to: `--num-processes` is the verb
+  * session's task-slot count (`local[n]`, the reference's worker
+  * goroutines). `--chunk-size` and `--max-batch-size` bound JDBC batches
+  * only. A parquet `--out` is written by one job with no shuffle, one
+  * file per non-empty task, the tail rows with the rest, and the row
+  * count it prints is counted inside that job.
+  *
   * TYPED COLUMNS: a column may carry a declared type —
   * `s_suppkey:long,s_name:string,s_acctbal:double` — playing exactly the
   * role Cassandra's server-side schema plays for the reference (the
@@ -126,8 +133,8 @@ object Cli {
           // declared types → schema'd decode (typed parquet); bare names
           // → reference-compat tagged cells
           val (typed, errs) = CopyWrite.read(spark, in, cols, cfg, schema = declared)
-          CopyWrite.sink(typed, out, cfg, errs)
-          System.err.println(s"[graft] wrote ${spark.read.parquet(out).count()} rows to $out")
+          val written = CopyWrite.sink(typed, out, errs)
+          System.err.println(s"[graft] wrote $written rows to $out")
         }
       case "read" =>
         val raw =

@@ -168,9 +168,8 @@ object Curation {
     * linear in corpus tokens — the q32 postings shape without its
     * quadratic pair step. */
   /** The (doc, bigram)-distinct postings table [[ngramNovelty]] is built
-    * on — exposed for the growth-decomposition probe (GrowthDiag), which
-    * attributes q89's wall-clock to postings volume. */
-  private[graft] def bigramPostings(df: DataFrame, idCol: Column, text: Column): DataFrame = {
+    * on. */
+  private def bigramPostings(df: DataFrame, idCol: Column, text: Column): DataFrame = {
     val toks = df.select(idCol.as("doc_id"), TextAnalysis.words(text).as("toks"))
     toks.select(col("doc_id"),
       array_distinct(zip_with(

@@ -3,7 +3,7 @@ package graft.pipeline
 import graft.{CopyConfig, Identifiers}
 import graft.csv.{CsvParseException, QuoteCsv, RawCell}
 import graft.infer.{GoTimeFormat, TypeInference}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.util.LongAccumulator
@@ -14,15 +14,18 @@ import org.apache.spark.util.LongAccumulator
   *
   * Spark-first mapping of the reference's moving parts (SURVEY.md §2A):
   *  - reader loop + 8 worker goroutines (#9)  → task parallelism over
-  *    input splits; `cfg.numProcesses` maps to an optional repartition.
+  *    input splits; `cfg.numProcesses` is the verb session's task-slot
+  *    count (`local[n]`, [[graft.Session.verb]]), so no shuffle is needed.
   *  - parse-error budget (#11)                → accumulator counted in the
   *    parse map, enforced by [[ParseErrors.check]] after the action.
   *  - insert-error budget (#12) + retry (#10) → Spark task retry +
   *    commit protocol; budget enforcement actually aborts (fixes the
   *    reference bug where "Aborting" only logs, SURVEY.md §3.4).
-  *  - batching thresholds (#8)                → sink file sizing
-  *    (`maxRecordsPerFile` from `cfg.chunkSize`); the final partial batch
-  *    is flushed (fixes reference bug #1, the dropped tail batch).
+  *  - batching thresholds (#8)                → JDBC batches only
+  *    (`cfg.chunkSize`, `cfg.maxBatchSizeKb` in
+  *    [[graft.pipeline.BatchingSink]]). The parquet sink commits per task
+  *    and writes one file per non-empty task; the tail rows are written
+  *    with the rest (fixes reference bug #1, the dropped tail batch).
   *
   * Only the record split runs as a JVM lambda (ingestion seam); the
   * inference cascade is one native Catalyst expression per column
@@ -147,16 +150,14 @@ object CopyWrite {
     (typed, errs)
   }
 
-  /** Sink with the reference's batching knobs mapped to file sizing and
-    * the error budget enforced (and the tail batch flushed — both §3.4
-    * fixes). numProcesses>0 repartitions to mirror the worker fan-out;
-    * pass 0 to keep the natural partitioning (preferred at scale). */
-  def sink(df: DataFrame, outPath: String, cfg: CopyConfig, errs: ParseErrors): Unit = {
-    val out = if (cfg.numProcesses > 0) df.repartition(cfg.numProcesses) else df
-    out.write
-      .option("maxRecordsPerFile", cfg.chunkSize.toLong)
-      .mode("overwrite")
-      .parquet(outPath)
+  /** The parquet sink: one write job with no exchange, one file per
+    * non-empty task. The row count rides the write itself as an observed
+    * metric, so no second job reads the output back; the parse-error
+    * budget is enforced after the action. Returns the rows written. */
+  def sink(df: DataFrame, outPath: String, errs: ParseErrors): Long = {
+    val written = new Observation("graft_write_rows")
+    df.observe(written, count(lit(1)).as("rows")).write.mode("overwrite").parquet(outPath)
     errs.check()
+    written.get("rows").asInstanceOf[Long]
   }
 }

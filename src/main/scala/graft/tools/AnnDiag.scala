@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
   * width, per-band bucket occupancy stats, and the implied candidate-pair
   * volume Σ occ·(occ−1)/2 — the join cost the probe actually pays. One
   * SF dir per run, so the session is sized from the data it measures.
+  * It stays because bucket occupancy is a property of the data, which no
+  * `Profile` record carries.
   * Usage: graft.tools.AnnDiag <sfDir> */
 object AnnDiag {
   def main(args: Array[String]): Unit = {

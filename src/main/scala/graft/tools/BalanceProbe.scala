@@ -4,7 +4,8 @@ package graft.tools
   * configuration: the gate face pins centStride = 100 for oracle parity
   * (cells ∝ n — the known fixed-stride knee), the default self-sizes to
   * ≈ √n. Also probes q151 (LSH quality audit) on the same dir in its
-  * default self-sized-sample configuration. Usage:
+  * default self-sized-sample configuration. It stays because `Profile`
+  * runs only the gate faces, which pin the stride. Usage:
   * BalanceProbe <sfDir> <centStride> <runs>. */
 object BalanceProbe {
   def main(args: Array[String]): Unit = {

@@ -5,7 +5,8 @@ package graft.tools
   * faces pin stride 100 for oracle parity, which makes cells ∝ n and
   * the cell-partitioned index write a small-files tax at decade SFs
   * (the q126 lesson); the default recipe is the scale path and is what
-  * this probe times. Usage: CoverageProbe <sfDir> [reps]
+  * this probe times. It stays because `Profile` runs only the gate
+  * faces, which pin the stride. Usage: CoverageProbe <sfDir> [reps]
   */
 object CoverageProbe {
   def main(args: Array[String]): Unit = {

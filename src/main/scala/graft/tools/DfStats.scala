@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
   * ratio, max df, and the count of shingles above half the cap — the
   * numbers that separate "operator superlinear" from "synthetic corpus
   * grows its own tail" in BASELINE.md. Run it once per decade: the
-  * session is sized from the dir it measures.
+  * session is sized from the dir it measures. It stays because Σ C(df,2)
+  * is a property of the corpus, which no `Profile` record carries.
   * Usage: DfStats <sfDir> */
 object DfStats {
   def main(args: Array[String]): Unit = {

@@ -8,14 +8,14 @@ import org.apache.spark.sql.types._
 /** Ingest-throughput parity check against the reference's one published
   * number: "easily does 50k inserts per second" (`README.md:8`,
   * BASELINE.md). Times the full write verb — CSV text → quote-preserving
-  * parse → inference → typed parquet sink — at the reference's default
-  * worker count (8), and prints rows/sec.
+  * parse → inference → typed parquet sink — with the tool session's
+  * task slots as the workers, and prints rows/sec.
   */
 object IngestBench {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val spark = graft.Session.tool(sfDir)
-    val cfg = CopyConfig() // reference defaults incl. numProcesses=8
+    val cfg = CopyConfig() // reference defaults
     val base = graft.Scratch.path(s"ingestbench_${System.nanoTime()}")
 
     // materialize the CSV input (not timed - the reference reads stdin)
@@ -34,11 +34,10 @@ object IngestBench {
     val t0 = System.nanoTime()
     val (typed, errs) = CopyWrite.read(spark, s"$base/csv", schema.fieldNames.toSeq,
       cfg, Some(schema))
-    CopyWrite.sink(typed, s"$base/out", cfg, errs)
+    val written = CopyWrite.sink(typed, s"$base/out", errs)
     val secs = (System.nanoTime() - t0) / 1e9
-    val written = spark.read.parquet(s"$base/out").count()
     require(written == n, s"row loss: $written != $n")
-    println(f"""{"metric":"ingest_rows_per_sec","value":${n / secs}%.0f,"rows":$n,"sec":$secs%.2f,"workers":8}""")
+    println(f"""{"metric":"ingest_rows_per_sec","value":${n / secs}%.0f,"rows":$n,"sec":$secs%.2f,"workers":${spark.sparkContext.defaultParallelism}}""")
     spark.stop()
   }
 }
